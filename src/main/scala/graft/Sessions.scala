@@ -33,6 +33,18 @@ object Sessions {
     ext.injectOptimizerRule(_ => RewriteCosineTopKToProbes)
   }
 
+  /** Spark's codegen cache size (`spark.sql.codegen.cache.maxEntries`,
+    * default 100). One full `graft.Verify` pass over all 130 queries at
+    * sf0.01, with the cache unbounded, compiles 1,063 distinct classes,
+    * which hold about 30 KB of heap each. At 100 entries the cache
+    * evicts classes a later query needs again, so a repeated query or
+    * search request pays Janino and JIT compiles for code it already
+    * had. The constant is that working set plus about 40 % headroom.
+    * It is a static conf: Spark reads it once per JVM, when the code
+    * generator first initializes, so the first session that generates
+    * code fixes it for the process. */
+  private val CodegenCacheEntries = 1500L
+
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -111,6 +123,7 @@ object Sessions {
       // (SPARK_GRAFT_SCHED=FIFO restores the default for A/B runs)
       .config("spark.scheduler.mode", sys.env.getOrElse("SPARK_GRAFT_SCHED", "FAIR"))
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

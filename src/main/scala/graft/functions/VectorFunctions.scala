@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   * DuckDB's list functions for oracle parity.
   *
   * Scale notes: all row-local; the query vector in a k-NN scan is a
-  * `lit` array (broadcast as part of the serialized plan, not a
-  * shuffle). For 1024-dim floats at 100 TB the scan is bandwidth-bound
-  * — see operators.VectorSearch for the pruned-scan/LSH paths.
+  * `lit` array. It ships with the plan (not a shuffle), and generated
+  * code reads it as a reference object rather than inlining its
+  * values, so one compiled class serves every query vector. For
+  * 1024-dim floats at 100 TB the scan is bandwidth-bound — see
+  * operators.VectorSearch for the pruned-scan/LSH paths.
   */
 object VectorFunctions {
 

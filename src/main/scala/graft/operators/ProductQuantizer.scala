@@ -182,7 +182,7 @@ object ProductQuantizer {
       s
     })
     index
-      .filter(col("cluster").isin(probes: _*))
+      .filter(VectorIndex.probeFilter(col("cluster"), probes))
       .select(col(idCol), adc(col(codeCol)).as("adc"))
       .orderBy(desc("adc"), col(idCol))
       .limit(rerank)
@@ -201,7 +201,8 @@ object ProductQuantizer {
         .collect().map(_.get(0)).toSeq
     // stage 2: exact rerank of R rows (id filter pushes down)
     index
-      .filter(col("cluster").isin(probes: _*) && col(idCol).isin(candidateIds: _*))
+      .filter(VectorIndex.probeFilter(col("cluster"), probes) &&
+        col(idCol).isin(candidateIds: _*))
       .select(col(idCol),
         VectorFunctions.cosineFast(col(embCol), lit(query)).as("score"))
       .orderBy(desc("score"), col(idCol))

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{ArrayContains, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
 import graft.functions.VectorFunctions
 
@@ -19,7 +22,9 @@ import graft.functions.VectorFunctions
   *    only nprobe partitions (partition pruning, never a full scan);
   *  - **query**: rank centroids on the driver (k × dim floats —
   *    trivially small), probe the top `nprobe` clusters, exact
-  *    cosine rerank inside them.
+  *    cosine rerank inside them. The query vector and the probe set
+  *    enter the plan as array literals, which generated code reads as
+  *    referenced objects, so one compiled plan serves every query.
   *
   * Recall/latency trade is nprobe/k: nprobe = k degrades to exact
   * search. At 100 TB the same layout holds — clusters are directories,
@@ -28,34 +33,35 @@ import graft.functions.VectorFunctions
 object VectorIndex {
 
   final case class Model(centroids: Array[Array[Float]]) {
+    /** Squared L2 distance from centroid `c` to `v`. */
+    private def distance(c: Int, v: Array[Float]): Double = {
+      val ctr = centroids(c)
+      var d = 0.0
+      var i = 0
+      while (i < math.min(ctr.length, v.length)) {
+        val t = ctr(i) - v(i); d += t * t; i += 1
+      }
+      d
+    }
+
     def nearest(v: Array[Float]): Int = {
       var best = 0
       var bestD = Double.MaxValue
       var c = 0
       while (c < centroids.length) {
-        var d = 0.0
-        val ctr = centroids(c)
-        var i = 0
-        while (i < math.min(ctr.length, v.length)) {
-          val t = ctr(i) - v(i); d += t * t; i += 1
-        }
+        val d = distance(c, v)
         if (d < bestD) { bestD = d; best = c }
         c += 1
       }
       best
     }
 
-    /** Centroid ids ranked by distance to `v` (for probing). */
-    def ranked(v: Array[Float]): Seq[Int] =
-      centroids.indices.sortBy { c =>
-        val ctr = centroids(c)
-        var d = 0.0
-        var i = 0
-        while (i < math.min(ctr.length, v.length)) {
-          val t = ctr(i) - v(i); d += t * t; i += 1
-        }
-        d
-      }
+    /** Centroid ids ranked by distance to `v` (for probing); ties keep
+      * id order (the sort is stable). */
+    def ranked(v: Array[Float]): Seq[Int] = {
+      val d = Array.tabulate(centroids.length)(distance(_, v))
+      centroids.indices.sortBy(d(_))(Ordering.Double.TotalOrdering)
+    }
   }
 
   /** Train k centroids (fixed seed → deterministic) on a seeded
@@ -219,6 +225,19 @@ object VectorIndex {
     assign(df, embCol, model).write.mode("overwrite")
       .partitionBy("cluster").parquet(path)
 
+  /** The probe predicate `cluster ∈ probes`. The probe set is one
+    * array literal, which generated code reads through a reference
+    * object, so every probe set runs the same compiled class. An
+    * `isin` of integers inlines its values into the generated source
+    * (as an `In` up to Spark's InSet threshold of 10, as a `switch`
+    * above it), so each probe set would compile its own classes. The
+    * predicate references only `cluster`, so a cluster-partitioned
+    * file index still prunes to the probed directories. */
+  def probeFilter(cluster: Column, probes: Seq[Int]): Column =
+    ColumnBridge.column(ArrayContains(
+      Literal.create(probes.toArray, ArrayType(IntegerType, containsNull = false)),
+      ColumnBridge.expression(cluster)))
+
   /** Approximate top-k: probe the `nprobe` nearest clusters, exact
     * cosine rerank within them. `index` must carry a `cluster`
     * column (from [[assign]] or the partitioned parquet). */
@@ -226,7 +245,7 @@ object VectorIndex {
                    embCol: String, query: Array[Float], k: Int,
                    nprobe: Int): DataFrame = {
     val probes = model.ranked(query).take(nprobe)
-    index.filter(col("cluster").isin(probes: _*))
+    index.filter(probeFilter(col("cluster"), probes))
       .select(col(idCol),
         VectorFunctions.cosineFast(col(embCol), lit(query)).as("score"))
       .orderBy(desc("score"), col(idCol))

@@ -13,9 +13,11 @@ import graft.functions.VectorFunctions._
   *
   * Scale design:
   *  - Brute-force k-NN is a single pruned parquet scan (id + embedding
-  *    columns only) with the query vector inlined as a literal in the
-  *    plan — no shuffle, no driver collect; `TakeOrderedAndProject`
-  *    does a per-partition top-k then a k-row merge on the driver.
+  *    columns only) with the query vector an array literal in the
+  *    plan, which generated code reads as a reference object, so every
+  *    query runs the same compiled class — no shuffle, no driver
+  *    collect; `TakeOrderedAndProject` does a per-partition top-k then
+  *    a k-row merge on the driver.
   *    At 100 TB this is the exact/oracle path; `VectorIndex` (IVF
   *    partition pruning) is the approximate scale path.
   *  - All post-k-NN stages operate on ≤ fetch_k rows (tens), so their

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.operators.VectorIndex
 
@@ -29,12 +30,13 @@ object VectorIndexRegistry {
 
 /** Optimizer rule: rewrite `ORDER BY cosine(emb, <literal query>) DESC
   * LIMIT k` over a REGISTERED cluster-partitioned table into an
-  * IVF probe — inject `cluster IN (<nprobe nearest centroids>)`, which
-  * predicate pushdown turns into partition pruning, so the scan reads
-  * nprobe cluster directories instead of the corpus. The exact cosine
-  * rerank inside the probed clusters is untouched: this is precisely
-  * [[VectorIndex.searchApprox]], reached from the declarative query
-  * shape (`sql_knn`-style) without the caller calling it.
+  * IVF probe — inject [[VectorIndex.probeFilter]] over the nprobe
+  * nearest centroids, which predicate pushdown turns into partition
+  * pruning, so the scan reads nprobe cluster directories instead of
+  * the corpus. The exact cosine rerank inside the probed clusters is
+  * untouched: this is precisely [[VectorIndex.searchApprox]], reached
+  * from the declarative query shape (`sql_knn`-style) without the
+  * caller calling it.
   *
   * The swap changes results (approximate!), so it NEVER fires on its
   * own: only tables explicitly registered in [[VectorIndexRegistry]]
@@ -103,8 +105,8 @@ object RewriteCosineTopKToProbes extends Rule[LogicalPlan] {
         }
       } yield {
         val probes = model.ranked(qvec).take(nprobe)
-        sort.copy(child = Filter(
-          In(clusterAttr, probes.map(p => Literal(p, IntegerType))), child))
+        val probe = VectorIndex.probeFilter(ColumnBridge.column(clusterAttr), probes)
+        sort.copy(child = Filter(ColumnBridge.expression(probe), child))
       }
     case _ => None
   }

@@ -51,4 +51,32 @@ class LocalKMeansSpec extends AnyFunSuite {
     assert(centroids.length == 1)
     assert(centroids(0).sameElements(Array(4f, 5f)))
   }
+
+  test("ranked orders centroids by distance exactly as a per-comparison sort, ties included") {
+    // the reference recomputes each centroid's distance inside the
+    // sort key, as ranked once did; ranked computes it once per centroid
+    def reference(centroids: Array[Array[Float]], v: Array[Float]): Seq[Int] =
+      centroids.indices.sortBy { c =>
+        val ctr = centroids(c)
+        var d = 0.0
+        var i = 0
+        while (i < math.min(ctr.length, v.length)) {
+          val t = ctr(i) - v(i); d += t * t; i += 1
+        }
+        d
+      }(Ordering.Double.TotalOrdering) // what the implicit Ordering[Double] was
+    val rnd = new java.util.Random(11L)
+    // a coarse grid makes many centroids tie, and the 8 duplicates tie
+    // exactly for every query
+    val base = Array.fill(24)(Array.fill(4)(rnd.nextInt(3).toFloat))
+    val centroids = base ++ base.take(8)
+    val m = VectorIndex.Model(centroids)
+    val queries = Array.fill(200)(Array.fill(4)(rnd.nextInt(3).toFloat)) ++
+      Array.fill(50)(Array.fill(4)(rnd.nextFloat() * 2f))
+    queries.foreach { v =>
+      val got = m.ranked(v)
+      assert(got == reference(centroids, v), s"query ${v.mkString(",")}")
+      assert(got.head == m.nearest(v))
+    }
+  }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import graft.Tables
 import graft.fixtures.Fixtures
+import graft.plans.ScanFiles
 import org.apache.spark.sql.functions._
 
 class VectorIndexSpec extends SparkSpec {
@@ -49,11 +50,14 @@ class VectorIndexSpec extends SparkSpec {
     val approx = VectorIndex.searchApprox(back, model, "vec_id", "embedding",
       query, k = 5, nprobe = 16).select("vec_id").as[Long].collect().toSeq
     assert(approx == exactTop(5))
-    // physical pruning: the filtered plan reads only the probed partitions
+    // physical pruning: the probe reads only the probed partitions
     val probes = model.ranked(query).take(2)
-    val plan = back.filter($"cluster".isin(probes: _*)).queryExecution
-      .executedPlan.toString
-    assert(plan.contains("PartitionFilters") || !plan.contains("cluster="))
+    val probe = VectorIndex.searchApprox(back, model, "vec_id", "embedding",
+      query, k = 5, nprobe = 2)
+    assert(ScanFiles.read(probe) == ScanFiles.under(path, probes))
+    val plan = probe.queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\n]*array_contains\\([^\\]]*\\], cluster#".r
+      .findFirstIn(plan).isDefined, plan)
   }
 
   test("sampled train (maxTrainSamples < corpus) still yields usable recall") {

@@ -32,13 +32,19 @@ class RewriteCosineTopKToProbesSpec extends SparkSpec {
     df.select(col("vec_id"), cosineFast(col("embedding"), lit(q)).as("score"))
       .orderBy(desc("score"), col("vec_id")).limit(5)
 
+  /** The injected probe predicate, as the plan prints it. */
+  private val probePred = "array_contains\\(\\[[0-9, ]*\\], cluster#".r
+  private def probed(plan: String): Boolean = probePred.findFirstIn(plan).isDefined
+
   test("registered table: probe filter injected and partition-pruned") {
     val df = topk(spark.read.parquet(indexPath))
     val optimized = df.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("cluster") && optimized.contains(" IN "), optimized)
-    df.collect()
+    assert(probed(optimized), optimized)
+    // the scan lists exactly the nprobe = 2 nearest clusters' files
+    val probes = model.ranked(q).take(2)
+    assert(ScanFiles.read(df) == ScanFiles.under(indexPath, probes))
     val physical = df.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cluster[^\\]]*IN".r
+    assert(s"PartitionFilters: \\[[^\\n]*${probePred.regex}".r
       .findFirstIn(physical).isDefined, physical)
   }
 
@@ -48,7 +54,7 @@ class RewriteCosineTopKToProbesSpec extends SparkSpec {
     // the trailing select reproduces the pruning-inserted Project
     // between the limit and the sort that hid the round-6 near-miss
     val swapped = topk(idx).select("vec_id")
-    assert(swapped.queryExecution.optimizedPlan.toString.contains(" IN "),
+    assert(probed(swapped.queryExecution.optimizedPlan.toString),
       swapped.queryExecution.optimizedPlan.toString)
     val viaSwap = swapped.as[Long].collect().toSeq
     val viaApi = VectorIndex.searchApprox(idx, model, "vec_id", "embedding",
@@ -62,27 +68,30 @@ class RewriteCosineTopKToProbesSpec extends SparkSpec {
     val copy = java.nio.file.Files.createTempDirectory("graft_swapspec_un_").toString
     plain.write.mode("overwrite").partitionBy("cluster").parquet(copy)
     val df = topk(spark.read.parquet(copy))
-    assert(!df.queryExecution.optimizedPlan.toString.contains(" IN "),
-      df.queryExecution.optimizedPlan.toString)
+    val optimized = df.queryExecution.optimizedPlan.toString
+    assert(!probed(optimized) && !optimized.contains("Filter"), optimized)
     val exact = plain
       .select(col("vec_id"), cosineFast(col("embedding"), lit(q)).as("s"))
       .orderBy(desc("s"), col("vec_id")).limit(5)
       .select("vec_id").as[Long].collect().toSeq
     assert(df.select("vec_id").as[Long].collect().toSeq == exact)
+    // every cluster directory is read
+    assert(ScanFiles.read(df) == ScanFiles.under(copy, 0 until 4))
   }
 
   test("an explicit cluster predicate blocks the swap") {
     val df = topk(spark.read.parquet(indexPath).filter(col("cluster") === 0))
     val optimized = df.queryExecution.optimizedPlan.toString
-    // the user's own equality survives; no IN-probe list is stacked
-    assert(!optimized.contains(" IN "), optimized)
+    // the user's own equality survives; no probe filter is stacked
+    assert(!probed(optimized) && optimized.contains("(cluster#"), optimized)
+    assert(ScanFiles.read(df) == ScanFiles.under(indexPath, Seq(0)))
   }
 
   test("ascending order never swaps (probing nearest clusters would be wrong)") {
     val df = spark.read.parquet(indexPath)
       .select(col("vec_id"), cosineFast(col("embedding"), lit(q)).as("score"))
       .orderBy(asc("score"), col("vec_id")).limit(5)
-    assert(!df.queryExecution.optimizedPlan.toString.contains(" IN "),
+    assert(!probed(df.queryExecution.optimizedPlan.toString),
       df.queryExecution.optimizedPlan.toString)
   }
 }
