@@ -14,7 +14,8 @@ a bare count(*) at 38 s) to a physical-layout cause:
                     per-split, D is mostly healthy; if it is per-group
                     reader setup, D stays slow)
 
-Hypotheses the A/B discriminates (graft.ProfileScanFloor measures):
+Hypotheses the A/B discriminates (r15 footer-parse and scan timings
+over these layouts are in SCANFLOOR.json):
   H1 footer-per-split: Spark parses the ENTIRE file footer once per
      input split (~89 splits x 30k-rowgroup thrift footer), DuckDB
      once per file -> A slow in Spark only, B/C/D healthy, and the

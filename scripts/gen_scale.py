@@ -74,8 +74,8 @@ for table, repl in plans.items():
     # 600 M-row lineitem wrote ~30,000 row groups into ONE 11 GB file,
     # and Spark's per-split footer parse (full-footer thrift, once per
     # input split) collapsed the x1000 scan floor to 223 MB/s / 18.8x
-    # DuckDB (r15 weak set; root-caused by graft.ProfileScanFloor's
-    # layout A/B in SCANFLOOR.json). Production rule: target >=256 row
+    # DuckDB (r15 weak set; root-caused by the r15 layout A/B in
+    # SCANFLOOR.json). Production rule: target >=256 row
     # groups per table for parallelism, clamp to [20k, 122,880] rows,
     # and cap files at 512 MB so no footer ever describes more than a
     # few hundred row groups. The old layout is kept as a disclosed

@@ -39,10 +39,10 @@ SPARK_GRAFT_CLUSTER_PROBE=1 run_point /tmp/scale/x100 /tmp/scale/bench_x100.json
 idle_wait
 # x1000 (~17 GB, r15): the point where the dense probe contracts BREAK
 # on purpose — the 150 M-key orders span exceeds denseLookupJoin's
-# maxCodesBytes, so salted_join/dense_lookup_ab run the out-of-contract
-# fallback for real (probe_paths discloses which plan each probe query
-# took; since the r16 budget it should read shuffle_hash_fallback, not
-# broadcast_join_fallback), and SPARK_GRAFT_PROBE_DEGRADE exercises the
+# maxCodesBytes, so salted_join runs the out-of-contract fallback for
+# real (since the r16 budget a shuffle-hash join, not a broadcast
+# join; `graft.ProfileQuery salted_join` shows the executed plan), and
+# SPARK_GRAFT_PROBE_DEGRADE exercises the
 # dense->sparse->bloom degradation chain of bitmapSemiJoin on the real
 # 30 M-key urgent set with count-equality asserted. REDUCED suite,
 # disclosed in-artifact: range_join's pair enumeration grows
@@ -62,7 +62,7 @@ idle_wait
 SPARK_DRIVER_MEM=32g \
 SPARK_GRAFT_PROBE_DEGRADE=1 \
 SPARK_GRAFT_EXCLUDE=range_join,contamination,doc_fingerprint,langid_confusion,quality_scores \
-SPARK_GRAFT_SKIP_BLOCKS=vector,skew_join_planted,proximity_count_ab,segmenter_sustained,streaming_state_sustained,tail_attribution \
+SPARK_GRAFT_SKIP_BLOCKS=vector,skew_join_planted,segmenter_sustained,streaming_state_sustained,tail_attribution \
   run_point /tmp/scale/x1000 /tmp/scale/bench_x1000.json
 
 # x2000 (~34 GB, r19): the BIGGER-THAN-HEAP point (r17/r18 wishlist
@@ -73,13 +73,12 @@ SPARK_GRAFT_SKIP_BLOCKS=vector,skew_join_planted,proximity_count_ab,segmenter_su
 # 130-query suite's DuckDB side would run for hours at 34 GB, and the
 # point exists to exercise the heavy operators' memory posture, not to
 # re-measure the fixed-cost tail. Data: scripts/gen_scale.py x2000
-# (same production layout); floor blocks kept (q3/dedup stage floors,
-# probe_paths); everything else skipped.
+# (same production layout); every extra block skipped.
 if [ -d /tmp/scale/x2000 ]; then
   idle_wait
   SPARK_DRIVER_MEM=32g \
   SPARK_GRAFT_ONLY=salted_join,q3_shipping,pack_sequences,minhash_neardups,simhash_neardups,minhash_bands,dedup_clusters,lang_stopwords,sessionize,a6_pricing_summary,heavy_hitters,a1_sum \
-  SPARK_GRAFT_SKIP_BLOCKS=vector,skew_join_planted,proximity_count_ab,segmenter_sustained,streaming_state_sustained,tail_attribution,ts_decode_ab,a8_fixed_cost,asof_floor,join_floor_profile,dense_lookup_ab,a6_floor_ab \
+  SPARK_GRAFT_SKIP_BLOCKS=vector,skew_join_planted,segmenter_sustained,streaming_state_sustained,tail_attribution \
     run_point /tmp/scale/x2000 /tmp/scale/bench_x2000.json
   X2000_POINT="2000x sf0.1 (34 GB, heavy family, input > heap)=/tmp/scale/bench_x2000.json"
 else

@@ -70,15 +70,23 @@ object Bench {
     .filterNot(q => excluded(q._1))
     .filter(q => onlySel.forall(_.contains(q._1)))
 
-  /** Extra-measurement blocks skipped via SPARK_GRAFT_SKIP_BLOCKS
-    * (comma list of block keys). The x1000 point skips the
-    * events-quadratic proximity A/B and the scale-independent
+  /** Keys of the extra-measurement blocks SPARK_GRAFT_SKIP_BLOCKS can
+    * skip. The scale sweep skips the scale-independent vector and
     * streaming re-measurements; the artifact discloses the list. */
-  private val skippedBlocks: Set[String] =
-    sys.env.get("SPARK_GRAFT_SKIP_BLOCKS").map(_.split(",").map(_.trim)
-      .filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+  val BlockKeys: Set[String] = Set("vector", "skew_join_planted",
+    "segmenter_sustained", "streaming_state_sustained", "tail_attribution")
 
-  private def blockOn(name: String): Boolean = !skippedBlocks(name)
+  /** Parses a SPARK_GRAFT_SKIP_BLOCKS value (comma list of block keys).
+    * A key that names no block fails the run at start-up: a silently
+    * ignored key would leave a script believing it skipped a block. */
+  def parseSkipBlocks(spec: Option[String]): Set[String] = {
+    val keys = spec.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = keys -- BlockKeys
+    require(unknown.isEmpty,
+      s"SPARK_GRAFT_SKIP_BLOCKS names unknown block(s) ${unknown.toSeq.sorted.mkString(",")}; " +
+        s"known: ${BlockKeys.toSeq.sorted.mkString(",")}")
+    keys
+  }
 
   private def timeSuite(spark: SparkSession, sfDir: String, par: Int,
                         order: Seq[String]): (Double, Seq[QRun]) = {
@@ -295,6 +303,8 @@ object Bench {
   } catch { case _: Throwable => true }
 
   def main(args: Array[String]): Unit = {
+    val skippedBlocks = parseSkipBlocks(sys.env.get("SPARK_GRAFT_SKIP_BLOCKS"))
+    def blockOn(name: String): Boolean = !skippedBlocks(name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val par = sys.env.getOrElse("SPARK_GRAFT_PAR", "8").toInt
@@ -368,15 +378,7 @@ object Bench {
     val (wallSeq, outSeq1) =
       try timeSuite(spark, sfDir, 1, heavy)
       finally {
-        try {
-          val sc = spark.sparkContext
-          val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-          bus.getClass.getMethods.filter(_.getName == "waitUntilEmpty")
-            .sortBy(_.getParameterCount).headOption.foreach { m =>
-              if (m.getParameterCount == 0) m.invoke(bus)
-              else m.invoke(bus, java.lang.Long.valueOf(10000L))
-            }
-        } catch { case _: Throwable => Thread.sleep(300) }
+        Sessions.drainListenerBus(spark)
         spark.sparkContext.removeSparkListener(suiteJobListener)
       }
     val suiteJobsSeq = suiteJobs.get()
@@ -534,7 +536,7 @@ object Bench {
     // them across 8 salt buckets. Broadcast is disabled (at scale
     // both sides exceed the budget — that case is exactly what
     // salting is FOR; the driver-fit dim case is the scan-fused
-    // probe family, A/B'd in dense_lookup_ab below) and AQE
+    // probe family) and AQE
     // is off: AQE's skew-split is the first line of defense, salting
     // the explicit second for plans AQE can't re-split. Second of two
     // runs reported (first warms codegen for both shapes). The A/B
@@ -574,459 +576,6 @@ object Bench {
       }
     } catch { case e: Throwable =>
       System.err.println(s"[bench] skew bench FAILED: ${e.getMessage}"); ""
-    }
-
-    // Aggregate-pushdown A/B for the time-proximity join (round-10
-    // item #7: the 6.8× win lived only in a commit message — now the
-    // artifact carries it at every bench point): the ENUMERATING plan
-    // (proximity join → count) vs the COUNTING plan (proximityCount)
-    // on the same purchases×errors corpus the suite's range_join uses.
-    // Second of two runs reported (first warms codegen for both).
-    val pcAb = if (!blockOn("proximity_count_ab")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      val ev = Tables.load(spark, sfDir, "events")
-      def purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("ts").as("p_ts"))
-      def errors = ev.filter(col("event_type") === "error")
-        .select(col("ts").as("e_ts"))
-      def timed(df: => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      def enumS = timed(graft.operators.TemporalJoin
-        .proximity(purchases,
-          ev.filter(col("event_type") === "error")
-            .select(col("event_id").as("e_id"), col("ts").as("e_ts")),
-          "p_ts", "e_ts", tolSec = 300L)
-        .groupBy(to_date(col("p_ts")).as("day"))
-        .agg(count(lit(1)).as("n_pairs"),
-          count_distinct(col("p_id")).as("n_purchases")))
-      def countS = timed(graft.operators.TemporalJoin
-        .proximityCount(purchases, errors, "p_ts", "e_ts", tolSec = 300L)
-        .filter(col("n_matches") > 0)
-        .groupBy(to_date(col("p_ts")).as("day"))
-        .agg(sum("n_matches").as("n_pairs"),
-          count(col("p_id")).as("n_purchases")))
-      enumS; countS // warm pass, discarded
-      val (e, c) = (enumS, countS)
-      s""","proximity_count_ab":{"enumerate_then_count_sec":${"%.3f".format(e)},"count_pushdown_sec":${"%.3f".format(c)},"speedup":${"%.2f".format(e / c)}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] proximity-count A/B FAILED: ${e.getMessage}"); ""
-    }
-
-    // Scan-throughput floor (round-12 judge item #6): q3_shipping's
-    // profile says "fact-scan-job-dominated" and a6/date_parts say
-    // "parquet-decode-bound" — one number makes those claims
-    // commensurable across queries AND engines: the wall of a bare
-    // 2-column aggregate scan over the same files, here and (via
-    // bench_oracle.py's scan_floor block) in DuckDB. Queries whose
-    // plan is already minimal carry this as their attribution: their
-    // residual vs DuckDB is the vectorized-parquet-decode gap, not a
-    // plan defect. Min-of-3 after one warm pass.
-    var sparkScanWalls = Map.empty[String, Double]
-    val scanFloor = if (!blockOn("scan_floor")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def dirMb(tab: String): Double = {
-        val p = Paths.get(sfDir, s"$tab.parquet")
-        val f = p.toFile
-        val bytes = if (f.isDirectory) f.listFiles().map(_.length()).sum else f.length()
-        bytes / 1e6
-      }
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      def block(tab: String, mk: => org.apache.spark.sql.DataFrame,
-                colsRead: Int): String = {
-        val rows = Tables.load(spark, sfDir, tab).count()
-        val w = timed3(mk)
-        sparkScanWalls += tab -> w
-        val mb = dirMb(tab)
-        s""""$tab":{"file_mb":${"%.1f".format(mb)},"rows":$rows,"cols_read":$colsRead,"wall_s":${"%.3f".format(w)},"mrows_per_s":${"%.1f".format(rows / w / 1e6)},"mb_per_s":${"%.0f".format(mb / w)}}"""
-      }
-      val li = block("lineitem",
-        Tables.load(spark, sfDir, "lineitem")
-          .agg(sum("l_extendedprice"), avg("l_quantity"), count(lit(1))), 2)
-      val ev = block("events",
-        Tables.load(spark, sfDir, "events")
-          .agg(count(col("ts")), sum("value")), 2)
-      s""","scan_floor":{$li,$ev}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] scan-floor FAILED: ${e.getMessage}"); ""
-    }
-
-    // denseLookupJoin A/B (round-12 judge item #5): salted_join's old
-    // broadcast-hash-join plan — whose x100 attribution was 0.80 s
-    // serial HashedRelation build + 0.26 s transmit of 254 MB — vs the
-    // scan-fused dict-coded byte-array lookup that replaced it. Both
-    // shapes share the warm scan cache; min-of-2 after a warm pass.
-    val dljAb = if (!blockOn("dense_lookup_ab")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def big = Tables.load(spark, sfDir, "lineitem")
-        .select("l_orderkey", "l_extendedprice")
-      def small = Tables.load(spark, sfDir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      def aggTail(df: org.apache.spark.sql.DataFrame) = df
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 2).as("revenue"))
-        .orderBy("o_orderpriority")
-      def oldPlan = aggTail(big.join(broadcast(small),
-        big("l_orderkey") === small("o_orderkey")).drop("o_orderkey"))
-      def newPlan = aggTail(graft.operators.Relational.denseLookupJoin(
-        big, small, "l_orderkey", "o_orderkey", "o_orderpriority"))
-      def timed(mk: => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        mk.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      timed(oldPlan); timed(newPlan) // warm pass, discarded
-      val o = (1 to 2).map(_ => timed(oldPlan)).min
-      val n = (1 to 2).map(_ => timed(newPlan)).min
-      // disclose which plan the "new" side actually took at THIS scale:
-      // past maxCodesBytes (the x1000 point's 150 M-key orders span)
-      // denseLookupJoin legitimately falls back to the broadcast join,
-      // and the A/B then measures fallback-vs-broadcast (~1.0x), not a
-      // silent win
-      val newPath = {
-        val ps = newPlan.queryExecution.executedPlan.toString
-        if (ps.contains("dense_lookup")) "dense_lookup"
-        // r16: the out-of-contract fallback is budgeted — above
-        // maxFallbackBroadcastBytes it is a SHUFFLE_HASH join, not a
-        // driver-mediated broadcast (r15 judge item #2)
-        else if (ps.contains("ShuffledHashJoin")) "shuffle_hash_fallback"
-        else "broadcast_join_fallback"
-      }
-      s""","dense_lookup_ab":{"broadcast_hash_join_sec":${"%.3f".format(o)},"dense_lookup_sec":${"%.3f".format(n)},"speedup":${"%.2f".format(o / n)},"new_plan_path":"$newPath"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] dense-lookup A/B FAILED: ${e.getMessage}"); ""
-    }
-
-    // Events timestamp-decode A/B (r13 judge item #2): four weak
-    // entries (date_functions, a8_interpolate, asof_join, date_parts)
-    // shared an "events decode floor" story quantified only as a
-    // ratio. This decomposes it inside the artifact: a no-file range
-    // job prices Spark's fixed job cost, a zero-column count prices
-    // the scan machinery (row-group metadata + task round-trips), and
-    // the plain-INT64 vs TIMESTAMP column reads price the decode
-    // itself, with the datetimeRebaseModeInRead=CORRECTED variant
-    // pricing the per-value julian-cutoff check the default EXCEPTION
-    // mode runs on non-Spark-written files. r14 idle-box result at
-    // x100: the ts read adds ~0.02 s over the zero-column floor and
-    // CORRECTED is within noise — a NEGATIVE A/B. The events-family
-    // ratio vs DuckDB is fixed job+scan cost on a small file (DuckDB's
-    // fixed cost is ~1 ms), not a decode defect; the scale sweep shows
-    // exactly this cost amortizing away (suite ratio 1.14→0.44→0.04).
-    val tsDecodeAb = if (!blockOn("ts_decode_ab")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      def ev = spark.read.parquet(s"$sfDir/events.parquet")
-      val jobFloor = timed3(spark.range(10000000L).agg(sum("id")))
-      val zeroCol = timed3(ev.agg(count(lit(1))))
-      val plainInt = timed3(ev.agg(count(col("event_id")), sum(col("value"))))
-      val tsDefault = timed3(ev.agg(count(col("ts")), sum(col("value"))))
-      val modeKey = "spark.sql.parquet.datetimeRebaseModeInRead"
-      val prevMode = spark.conf.getOption(modeKey)
-      val tsCorrected = try {
-        spark.conf.set(modeKey, "CORRECTED")
-        timed3(ev.agg(count(col("ts")), sum(col("value"))))
-      } finally prevMode match {
-        case Some(m) => spark.conf.set(modeKey, m)
-        case None => spark.conf.unset(modeKey)
-      }
-      s""","ts_decode_ab":{"job_floor_range10m_s":${"%.3f".format(jobFloor)},"events_zero_col_scan_s":${"%.3f".format(zeroCol)},"events_int64_plus_double_s":${"%.3f".format(plainInt)},"events_ts_plus_double_s":${"%.3f".format(tsDefault)},"events_ts_rebase_corrected_s":${"%.3f".format(tsCorrected)},"verdict":"ts decode adds ${"%.3f".format(math.max(0, tsDefault - plainInt))} s over the int64 read; rebase CORRECTED delta ${"%.3f".format(tsDefault - tsCorrected)} s — events-family ratios are fixed job+scan cost, not decode"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ts-decode A/B FAILED: ${e.getMessage}"); ""
-    }
-
-    // Dedup/packing stage floors (r17 judge item #2): the three
-    // real-work weak entries at x1000 (simhash_neardups 4.1×,
-    // minhash_bands 3.4×, pack_sequences 5.4×) carried material wall
-    // with no in-artifact decomposition. Each is cut at its natural
-    // stage boundaries — sketch/tokenize-only scan, + the first
-    // shuffle (groups / bands-distinct / window), full committed
-    // query — so the dominant stage is named by measurement, not
-    // guess. Min-of-3 after one warm pass, same instrument as the
-    // other floor blocks.
-    val dedupStage = if (!blockOn("dedup_stage_floor")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      def docs = Tables.loadParallel(spark, sfDir, "documents")
-      // pack_sequences: scan+token-count (no window) vs committed
-      val packScan = timed3(docs.select(col("doc_id"),
-          pmod(col("doc_id"), lit(8)).as("shard"),
-          (graft.plans.StringCount.countChar(col("text"), ' ') + 1).as("toks"))
-        .agg(count(lit(1)), bit_xor(col("toks"))))
-      val packFull = timed3(SparkEntry.queries("pack_sequences")(spark, sfDir))
-      // the rejected blocked-prefix-sum alternative, priced every run
-      // (r18 A/B: exchange + WindowExec row cost dominate, not sort
-      // parallelism — see Packing.packSequencesBlocked scaladoc)
-      val packBlocked = timed3 {
-        val d2 = docs.select(col("doc_id"),
-          pmod(col("doc_id"), lit(8)).as("shard"),
-          (graft.plans.StringCount.countChar(col("text"), ' ') + 1).as("toks"))
-        graft.operators.Packing.packSequencesBlocked(d2, col("shard"),
-            col("doc_id"), col("toks"), 2048L)
-          .groupBy("shard", "seq_id")
-          .agg(count(lit(1)).as("n_docs"), sum("toks").as("n_tokens"))
-          .coalesce(1).sortWithinPartitions(col("shard"), col("seq_id"))
-      }
-      // simhash: sketch-only scan, + distinct-sketch groups, committed
-      val simSketch = timed3(docs.select(
-          graft.operators.Dedup.simhash(col("text")).as("sk"))
-        .agg(count(lit(1)), bit_xor(col("sk"))))
-      val simGroups = timed3(docs.select(col("doc_id").as("id"),
-          graft.operators.Dedup.simhash(col("text")).as("sk"))
-        .groupBy("sk").agg(min("id"), count(lit(1)))
-        .agg(count(lit(1))))
-      val simFull = timed3(SparkEntry.queries("simhash_neardups")(spark, sfDir))
-      // minhash_bands: bands-UDF explode (no distinct agg) vs committed
-      val mbUdf = graft.operators.Dedup.lshBandBucketsUdf(3, 16, 4)
-      val mbSketch = timed3(docs
-        .select(explode(mbUdf(col("text"))).as("b"))
-        .agg(count(lit(1)), bit_xor(col("b._2"))))
-      val mbFull = timed3(SparkEntry.queries("minhash_bands")(spark, sfDir))
-      def pct(stage: Double, full: Double): String =
-        "%.0f".format(100.0 * math.min(stage, full) / math.max(full, 1e-9))
-      s""","dedup_stage_floor":{"pack_scan_tokencount_s":${"%.3f".format(packScan)},"pack_full_s":${"%.3f".format(packFull)},"pack_blocked_alternative_s":${"%.3f".format(packBlocked)},"simhash_sketch_scan_s":${"%.3f".format(simSketch)},"simhash_plus_groups_s":${"%.3f".format(simGroups)},"simhash_full_s":${"%.3f".format(simFull)},"minhash_bands_udf_scan_s":${"%.3f".format(mbSketch)},"minhash_bands_full_s":${"%.3f".format(mbFull)},"verdict":"sketch/tokenize scan share: pack ${pct(packScan, packFull)}%, simhash ${pct(simSketch, simFull)}%, minhash ${pct(mbSketch, mbFull)}% — pack residual is exchange+WindowExec (blocked alternative priced above, rejected), sketch residuals are shuffle/join work"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] dedup stage floor FAILED: ${e.getMessage}"); ""
-    }
-
-    // a6_pricing_summary floor probe (r14 judge item #3): the entry's
-    // "scan-bound" story was asserted, never priced — scan_floor reads
-    // 2 columns, a6 reads 7. Three walls over the SAME filtered file:
-    // the 5 aggregated columns ungrouped, the full 7-column set
-    // ungrouped (group cols read but not grouped), and the committed
-    // 6-group query. grouped − bare7 prices the HashAggregate itself;
-    // bare7 − bare5 prices decoding the two group strings. The DuckDB
-    // side of the same bare-7 scan is in scan_floor ("lineitem7", via
-    // bench_oracle.py), so the cross-engine gap is attributable to
-    // scan vs agg inside one artifact. Min-of-3 after one warm pass.
-    val a6Floor = if (!blockOn("a6_floor_ab")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      def li = Tables.load(spark, sfDir, "lineitem")
-        .filter(col("l_shipdate") <= lit("2000-12-01").cast("date"))
-      val aggCols = Seq(sum("l_quantity"), sum("l_extendedprice"),
-        sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))),
-        count(lit(1)))
-      val bare5 = timed3(li.agg(aggCols.head, aggCols.tail: _*))
-      val with7 = aggCols ++ Seq(count(col("l_returnflag")),
-        count(col("l_linestatus")))
-      val bare7 = timed3(li.agg(with7.head, with7.tail: _*))
-      val grouped = timed3(SparkEntry.queries("a6_pricing_summary")(spark, sfDir))
-      // r17: the "dictionary-code the group columns" candidate fix,
-      // measured in-artifact. Packing the two 1-char strings into one
-      // int key (ascii*256+ascii) measured ~1.2x SLOWER than the
-      // committed string keys at sf0.1 (ProfileAdhoc: 0.417 vs 0.346
-      // min-of-5) — the string-key 6-group HashAggregate already takes
-      // the generated fast-hash-map path, and the packing adds two
-      // per-row ascii() calls for nothing. Kept here so the rejected
-      // alternative stays priced at every point.
-      val groupedInt = timed3 {
-        li.groupBy((ascii(col("l_returnflag")) * 256 +
-            ascii(col("l_linestatus"))).as("_code"))
-          .agg(sum("l_quantity"), sum("l_extendedprice"),
-            sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))),
-            avg("l_quantity"), avg("l_extendedprice"), count(lit(1)))
-      }
-      s""","a6_floor_ab":{"bare_5col_scan_s":${"%.3f".format(bare5)},"bare_7col_scan_s":${"%.3f".format(bare7)},"grouped_a6_s":${"%.3f".format(grouped)},"grouped_packed_intkey_s":${"%.3f".format(groupedInt)},"group_agg_overhead_s":${"%.3f".format(grouped - bare7)},"group_col_decode_s":${"%.3f".format(bare7 - bare5)},"verdict":"a6 adds ${"%.3f".format(grouped - bare7)} s over its own bare 7-col scan — ${if (grouped - bare7 <= 0.2 * grouped) "floor-certified: the 6-group HashAggregate runs at scan speed; the DuckDB gap is the lineitem7 scan_floor ratio" else "the grouped agg adds materially over the scan — plan headroom remains"}; packed-int-key alternative ${if (groupedInt < grouped) "faster — revisit" else "not faster (rejected r17 A/B)"}"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] a6 floor A/B FAILED: ${e.getMessage}"); ""
-    }
-
-    // q3 per-stage floor (r14 judge item #4): accounts for the
-    // residual between q3's wall and DuckDB's — four cumulative
-    // shapes over the same files, min-of-3 each, so every increment
-    // (bitmap probe, keyed agg+top10, attach+builds) is a named delta
-    // over the previous one, anchored at the bare 4-column filtered
-    // scan that is the plan's physical floor.
-    val q3Floor = if (!blockOn("q3_stage_floor")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      val cut = lit("1995-03-15").cast("date")
-      def l = Tables.load(spark, sfDir, "lineitem")
-        .filter(col("l_shipdate") > cut)
-      def o = Tables.load(spark, sfDir, "orders")
-        .filter(col("o_orderdate") < cut)
-      def c = Tables.load(spark, sfDir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-      // r19 honesty fix (r18 judge read "eager per-run builds" off this
-      // block's note): the committed q3 memoizes both probe structures
-      // (reuse = true since r15), so the floor's stages now probe the
-      // SAME way — the builds are priced SEPARATELY below as the
-      // one-time cold cost, not smeared into every delta.
-      def ocKeys = graft.operators.Relational
-        .bitmapSemiJoin(o, c, "o_custkey", "c_custkey", reuse = true)
-        .select(col("o_orderkey"))
-      def probed = graft.operators.Relational
-        .bitmapSemiJoin(l, ocKeys, "l_orderkey", "o_orderkey", reuse = true)
-      val sums = Seq(sum("l_extendedprice"), sum("l_discount"), count(lit(1)))
-      // cold build cost: construct both probes WITHOUT the cache once
-      val buildCold = {
-        val t0 = System.nanoTime()
-        graft.operators.Relational
-          .bitmapSemiJoin(l,
-            graft.operators.Relational
-              .bitmapSemiJoin(o, c, "o_custkey", "c_custkey")
-              .select(col("o_orderkey")),
-            "l_orderkey", "o_orderkey")
-          .queryExecution.executedPlan // force both eager builds
-        (System.nanoTime() - t0) / 1e9
-      }
-      val bareScan = timed3(l.agg(sums.head, sums.tail: _*))
-      val plusProbe = timed3(probed.agg(sums.head, sums.tail: _*))
-      val plusAgg = timed3(probed.groupBy(col("l_orderkey"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(desc("revenue"), col("l_orderkey")).limit(10))
-      val full = timed3(SparkEntry.queries("q3_shipping")(spark, sfDir))
-      s""","q3_stage_floor":{"bare_4col_filtered_scan_s":${"%.3f".format(bareScan)},"plus_bitmap_probe_s":${"%.3f".format(plusProbe)},"plus_keyed_agg_top10_s":${"%.3f".format(plusAgg)},"full_q3_s":${"%.3f".format(full)},"eager_build_cold_s":${"%.3f".format(buildCold)},"delta_probe_s":${"%.3f".format(plusProbe - bareScan)},"delta_agg_s":${"%.3f".format(plusAgg - plusProbe)},"delta_attach_s":${"%.3f".format(full - plusAgg)},"note":"probe/agg stages use the SAME memoized probes as the committed query (reuse=true); eager_build_cold_s prices the one-time cache-miss build pair separately; the bare scan is the plan's physical floor — the residual vs DuckDB decomposes into these deltas"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] q3 stage floor FAILED: ${e.getMessage}"); ""
-    }
-
-    // asof_join stage floor (r15 judge item #4: back on the weak set
-    // at 3.3× isolated with the tail block saying "not explained").
-    // r16 rebuilt the query on TemporalJoin.asofFused — ONE events
-    // scan instead of two plus a pre-agg shuffle — so the floor story
-    // changes shape: three cumulative walls over the same file, the
-    // bare 4-column filtered scan (the exact pushdown the fused form
-    // installs), scan + key window + payload projection (no final
-    // sort), and the committed query. Every residual vs DuckDB is a
-    // named delta; the bare scan is the physical floor.
-    val asofFloor = if (!blockOn("asof_floor")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 120)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once // warm
-        (1 to 3).map(_ => once).min
-      }
-      def ev = Tables.load(spark, sfDir, "events")
-        .filter(col("user_id") < 4 &&
-          col("event_type").isin("purchase", "click"))
-      def fused = graft.operators.TemporalJoin.asofFused(ev,
-        isLeft = col("event_type") === "purchase",
-        isRight = col("event_type") === "click",
-        keys = Seq("user_id"), ts = col("ts"),
-        lPayload = Seq("event_id" -> col("event_id"), "ts" -> col("ts")),
-        rPayload = Seq("click_id" -> col("event_id"), "c_ts" -> col("ts")),
-        rTieBreak = Seq(col("event_id")))
-      val bare = timed3(ev.agg(count(lit(1)), max("event_id"),
-        max("user_id"), max("ts")))
-      val window = timed3(fused.select(col("event_id"), col("user_id"),
-        col("click_id"),
-        expr("(unix_micros(ts) - unix_micros(c_ts)) div 1000000").as("lag_s")))
-      val full = timed3(SparkEntry.queries("asof_join")(spark, sfDir))
-      s""","asof_floor":{"bare_4col_filtered_scan_s":${"%.3f".format(bare)},"plus_key_window_s":${"%.3f".format(window)},"full_asof_join_s":${"%.3f".format(full)},"delta_window_s":${"%.3f".format(window - bare)},"delta_final_sort_s":${"%.3f".format(full - window)},"note":"r16 fused single-scan form (TemporalJoin.asofFused) — the r14 two-table form paid this scan twice plus a pre-agg shuffle; the bare scan reads the same 4 columns with the same pushed filter"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] asof floor FAILED: ${e.getMessage}"); ""
-    }
-
-    // a8 fixed-cost certificate (r14 judge item #5): the r15 spine
-    // fusion removed the bounds-agg and spine-join jobs (4 -> 3 at
-    // x100, and one of the three is AQE materializing the final
-    // stage). The block counts the jobs of one committed a8 execution
-    // and prices them against the same no-file job floor ts_decode_ab
-    // uses, so the remaining fixed cost is a named number, not an
-    // asserted story.
-    val a8Fixed = if (!blockOn("a8_fixed_cost")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 120)
-      def timed3(mk: => org.apache.spark.sql.DataFrame): Double = {
-        def once = {
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        once
-        (1 to 3).map(_ => once).min
-      }
-      val jobFloor = timed3(spark.range(10000000L).agg(sum("id")))
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      // the bus is private[spark]; package-private is public at the
-      // JVM level, so reflection drains it deterministically
-      def drainBus(): Unit = try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods.filter(_.getName == "waitUntilEmpty")
-          .sortBy(_.getParameterCount).headOption.foreach { m =>
-            if (m.getParameterCount == 0) m.invoke(bus)
-            else m.invoke(bus, java.lang.Long.valueOf(10000L))
-          }
-      } catch { case _: Throwable => Thread.sleep(300) }
-      val wall = {
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          val w = timed3(SparkEntry.queries("a8_interpolate")(spark, sfDir))
-          drainBus()
-          jobs.set(0)
-          SparkEntry.queries("a8_interpolate")(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-          drainBus()
-          w
-        } finally spark.sparkContext.removeSparkListener(listener)
-      }
-      val n = jobs.get()
-      s""","a8_fixed_cost":{"jobs":$n,"job_floor_s":${"%.3f".format(jobFloor)},"priced_fixed_s":${"%.3f".format(n * jobFloor)},"wall_s":${"%.3f".format(wall)},"note":"r15 spine fusion: lead+explode replaces bounds-agg + spine-join (4 jobs -> $n); the priced fixed cost is jobs x the no-file job floor"}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] a8 fixed-cost FAILED: ${e.getMessage}"); ""
     }
 
     // Suite-level fixed-cost pricing (r16 judge item #4): the warm seq
@@ -1077,43 +626,6 @@ object Bench {
       System.err.println(s"[bench] suite fixed-cost FAILED: ${e.getMessage}"); ""
     }
 
-    // Probe-path disclosure (r14 judge item #1 supporting evidence):
-    // which scan-fused-probe (or fallback) plan each probe-family
-    // query actually took AT THIS SCALE. At sf0.1..x100 all four are
-    // dense/bitmap; at x1000 the 150 M-key orders span exceeds
-    // denseLookupJoin's maxCodesBytes (96 MB of codes) so
-    // salted_join/j1-class dims legitimately fall back to the
-    // broadcast hash join — the artifact names the path instead of a
-    // pin silently meaning something different per point.
-    val probePaths = if (!blockOn("probe_paths")) "" else try {
-      val targets = Seq("j1_equijoin", "j4_semijoin", "salted_join",
-        "q3_shipping").filterNot(excluded)
-      val per = targets.map { n =>
-        val p = SparkEntry.queries(n)(spark, sfDir)
-          .queryExecution.executedPlan.toString
-        val path =
-          if (p.contains("dense_lookup")) "dense_lookup"
-          else if (p.contains("bitmap_contains")) "bitmap_contains"
-          else if (p.contains("longset_contains")) "longset_contains"
-          else if (p.contains("bloom_might_contain")) "bloom_prefilter"
-          else if (p.contains("ShuffledHashJoin")) "shuffle_hash_fallback"
-          // r16 q3: the probes run EAGERLY at construction and the
-          // returned plan is the ten-key In-pushdown attach — that In
-          // marker, not a probe expression, is its healthy signature
-          else if (n == "q3_shipping" && (p.contains("In(o_orderkey") ||
-            p.contains("in(o_orderkey"))) "eager_probes_plus_ten_row_attach"
-          else if (p.contains("BroadcastHashJoin")) "broadcast_join_fallback"
-          else "other"
-        // q3 keeps its tiny 10-row attach BroadcastHashJoin by design;
-        // join_free reports whether the FACT side is join-free, i.e.
-        // the probe marker fired at all
-        s""""$n":{"path":"$path","has_join_operator":${p.contains("Join")}}"""
-      }
-      s""","probe_paths":{${per.mkString(",")}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] probe-path dump FAILED: ${e.getMessage}"); ""
-    }
-
     // Probe-family degradation chain run FOR REAL (r14 judge item #1:
     // "the sparse/bloom degradation paths ... currently proven only by
     // unit specs"): on the ACTUAL urgent-orders key side at this
@@ -1154,44 +666,6 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] probe degradation FAILED: ${e.getMessage}"); ""
       }
-
-    // Join-family wall attribution (round-11 judge item #1: the
-    // q3/j4/j1/salted/asof gap vs DuckDB was ATTRIBUTED to "the
-    // broadcast build floor" for two rounds without a measurement).
-    // Per query: job-interval union (cluster work) vs driver-only time,
-    // with the BroadcastExchange driver chain (collect+build+transmit)
-    // measured from the executed plan's own metrics — at the x100
-    // point the serial driver-side hash-relation build is 60-70% of
-    // j4/salted/j1's wall. The SHUFFLE_HASH counterfactual (parallel
-    // partitioned build, fact exchanged) is timed next to it: it loses
-    // 2-4×, so the broadcast form IS the right local plan and the
-    // build is a floor, not a defect. Best-of-2 attributed runs.
-    // a8_interpolate joined the target list in r13 (judge item #2: the
-    // only weak entry with no measurement behind its floor note) — its
-    // attribution separates the events-scan job from the tiny
-    // window-chain tail, making it commensurable with the scan_floor
-    // block above.
-    val joinFloor = if (!blockOn("join_floor_profile")) "" else try {
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      val targets = Seq("j1_equijoin", "j4_semijoin", "q3_shipping",
-        "salted_join", "asof_join", "a8_interpolate")
-      val perQuery = targets.map { n =>
-        val q = SparkEntry.queries(n)
-        q(spark, sfDir).write.mode("overwrite").format("noop").save() // warm
-        val best = (1 to 2).map(_ => ProfileJoin.attribute(spark)(q(spark, sfDir)))
-          .minBy(_.wallSec)
-        s""""$n":${best.json}"""
-      }
-      val shj = ProfileJoin.shjVariants(spark, sfDir).map { case (n, mk) =>
-        mk().write.mode("overwrite").format("noop").save() // warm
-        val best = (1 to 2).map(_ => ProfileJoin.attribute(spark)(mk()))
-          .minBy(_.wallSec)
-        s""""$n":${"%.3f".format(best.wallSec)}"""
-      }
-      s""","join_floor_profile":{${perQuery.mkString(",")},"shuffle_hash_counterfactual_wall_s":{${shj.mkString(",")}}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] join-floor profile FAILED: ${e.getMessage}"); ""
-    }
 
     // Segmenter throughput under sustained load (r9 judge item #7):
     // a ~20 s rate-source run over 10k live sessions, 1% of which
@@ -1440,20 +914,7 @@ object Bench {
         } catch { case e: Throwable =>
           System.err.println(s"[bench] tail attribution FAILED: ${e.getMessage}"); ""
         }
-        // scan-floor ratio: the same bare 2-column scans timed in
-        // DuckDB by bench_oracle.py, joined here so the decode-gap
-        // claim is one number inside one artifact
-        val duckScan = "\"scan_floor\"\\s*:\\s*\\{([^}]*)\\}".r
-          .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
-        val duckScanPer = "\"([a-z_]+)\"\\s*:\\s*([0-9.]+)".r
-          .findAllMatchIn(duckScan).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        val scanRatio = sparkScanWalls.flatMap { case (tab, w) =>
-          duckScanPer.get(tab).map(d =>
-            s""""$tab":${"%.2f".format(w / math.max(d, 1e-9))}""")
-        }.mkString(",")
-        val scanBlock = if (scanRatio.nonEmpty)
-          s""","scan_floor_ratio_vs_duckdb":{$scanRatio}""" else ""
-        s""","duckdb_oracle":$json,"ratio_wall_par_vs_duckdb":$ratioPar,"ratio_wall_seq_vs_duckdb":$ratioSeq$subset$weakBlock$isolatedBlock$tailBlock$scanBlock"""
+        s""","duckdb_oracle":$json,"ratio_wall_par_vs_duckdb":$ratioPar,"ratio_wall_seq_vs_duckdb":$ratioSeq$subset$weakBlock$isolatedBlock$tailBlock"""
       case None => ""
     }
 
@@ -1706,7 +1167,7 @@ object Bench {
     val headline =
       s""""value":${"%.3f".format(wallPar)},"unit":"sec","schema_version":8,"run_head":${runHead.map("\"" + _ + "\"").getOrElse("null")},"run_tree_dirty":$treeDirty,"wall_par${par}_postwarm_sec":${"%.3f".format(wallPar)},"wall_par${par}_coldplans_sec":${"%.3f".format(wallParCold)},"wall_seq_warm_sec":${"%.3f".format(wallSeq)},"sum_query_sec":${"%.3f".format(good.map(_.sec).sum)},"parallelism":$par,"n_queries":${outSeq.size},"queries_methodology":"seq_warm_par1_min2_min3_top15_and_ge0p8","jvm_max_heap_mb":${Runtime.getRuntime.maxMemory() >> 20},"idle_gate":$gate,"load_before":$loadBefore,"load_after":$loadAfter"""
     val json =
-      s"""{"metric":"total",$headline,"queries":$qs,"errors":$errs,"errors_par_only":$parOnlyErrs,"excluded_queries":$excludedJson$onlyJson,"skipped_blocks":${skippedBlocks.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}$duck$vector$skew$pcAb$scanFloor$dljAb$a6Floor$q3Floor$asofFloor$a8Fixed$probePaths$probeDegrade$tsDecodeAb$dedupStage$joinFloor$segTp$stState$clusterProbe$suiteFixedCost$priorCmp,"sf":"$sfDir"}"""
+      s"""{"metric":"total",$headline,"queries":$qs,"errors":$errs,"errors_par_only":$parOnlyErrs,"excluded_queries":$excludedJson$onlyJson,"skipped_blocks":${skippedBlocks.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}$duck$vector$skew$probeDegrade$segTp$stState$clusterProbe$suiteFixedCost$priorCmp,"sf":"$sfDir"}"""
     Files.writeString(
       Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")), json)
     // committed full-artifact sidecar (r16 judge item #3): the driver's

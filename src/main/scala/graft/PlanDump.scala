@@ -19,8 +19,8 @@ object PlanDump {
       "OR into local long[] + treeReduce, so the driver never holds a key " +
       "row — only the range/8-byte bitset it torrent-broadcasts. Replaces " +
       "the broadcast LEFT SEMI whose serial driver-side HashedRelation " +
-      "build was 75% of the wall at the 100x point (join_floor_profile " +
-      "r12); the r12 eager driver collect (~0.85 s of j4's wall) is gone " +
+      "build was 75% of the wall at the 100x point (r12 bench " +
+      "attribution); the r12 eager driver collect (~0.85 s of j4's wall) is gone " +
       "too. Sparse/overflow key spans switch to an exact open-addressing " +
       "long set (`longset_contains`) — still join-free, count-guarded by " +
       "maxKeys; beyond driver memory: bloomSemiJoin (distributed build + " +
@@ -34,9 +34,9 @@ object PlanDump {
       "span that previously fell back to a shuffle join), " +
       "fused into the lineitem scan — NO join operator, no fact shuffle, no " +
       "254 MB UnsafeRow broadcast, no serial HashedRelation build (the r12 " +
-      "join_floor_profile measured that chain at 0.80 s build + 0.26 s " +
-      "transmit, ~60% of the broadcast join's wall at the 100x point; " +
-      "dense_lookup_ab in the bench artifact carries the A/B). The codes " +
+      "bench attribution measured that chain at 0.80 s build + 0.26 s " +
+      "transmit, ~60% of the broadcast join's wall at the 100x point). " +
+      "The codes " +
       "array AND the dictionary are built in ONE distributed pass (r14; " +
       "r13 ran a sizing aggregate + a distinct() dictionary job + a fill " +
       "pass): per-partition local codes arrays with insertion-order local " +
@@ -61,16 +61,14 @@ object PlanDump {
       "AND the r15 broadcast-exchange collect are gone. Since r16 the two " +
       "eager bitmap builds are memoized per canonicalized keys plan " +
       "(reuse=true, LRU 8), so re-executions of the same logical query " +
-      "stop re-paying them. BENCH's q3_stage_floor prices every stage " +
-      "(bare 4-col filtered scan -> +probe -> +agg/top10 -> full) at " +
-      "every sweep point."),
+      "stop re-paying them."),
     "j1_equijoin" -> ("Dense dictionary-lookup join on the reference J1 shape " +
       "(r14): attaching c_mktsegment (5 values) to orders on the dense " +
       "customer PK plans as a codegen `dense_lookup` probe of a " +
       "span-packed dictionary-code array (r19 bit-packing: 4 bits for the " +
       "5-value segment dictionary) inside the orders scan — NO join " +
       "operator, neither side shuffles, no 146 MB unfiltered customer " +
-      "broadcast (r13 join_floor_profile measured that serial driver " +
+      "broadcast (r13 bench attribution measured that serial driver " +
       "chain at 0.59 s, 8.6x DuckDB at the 100x point)."),
     "url_canonical" -> ("Single-pass URL canonicalization (r14): ONE projection " +
       "with the codegen `url_canonical` byte-scan expression where r13 " +
@@ -87,8 +85,7 @@ object PlanDump {
       "interpolation window share a single shuffle — plan-pinned <=1 " +
       "Exchange by PlanSpec. Map-side combine moves post-shuffle, " +
       "acceptable behind the ~99.5%-selective filter and documented at " +
-      "the call site. BENCH's a8_fixed_cost prices the remaining 2 jobs " +
-      "against the no-file job floor (at sf0.1 a8 sits AT the floor)."),
+      "the call site."),
     "range_join" -> ("No-equi-key time-proximity COUNT: both sides collapse to " +
       "one row per tolerance bucket (sorted timestamp array / density-" +
       "bounded probe chunks of <=maxProbesPerChunk rows each), " +
@@ -114,8 +111,7 @@ object PlanDump {
       "second scan and its pre-agg shuffle are gone. Equal-(key, ts) " +
       "right rows resolve via rTieBreak sort columns inside the same " +
       "window; disjointness of the side predicates is raise_error-" +
-      "enforced per row (r17). BENCH's asof_floor prices bare scan -> " +
-      "+window -> full at every sweep point."),
+      "enforced per row (r17)."),
     "ann_autoswap" -> ("Plan-level ANN auto-swap: the query is the declarative " +
       "sql_knn shape (ORDER BY cosine DESC LIMIT k, no cluster predicate); " +
       "RewriteCosineTopKToProbes injects `cluster IN (nprobe nearest " +

@@ -45,6 +45,15 @@ object Sessions {
     * code fixes it for the process. */
   private val CodegenCacheEntries = 1500L
 
+  /** Waits until the async listener bus has delivered every event
+    * posted so far, so a SparkListener's counters are complete once an
+    * action has returned (Spark posts a job's end event before the
+    * action returns). Fails with a TimeoutException rather than
+    * reading partial counters. */
+  def drainListenerBus(spark: SparkSession, timeoutMillis: Long = 10000L): Unit =
+    org.apache.spark.graftbridge.ListenerBusBridge
+      .waitUntilEmpty(spark.sparkContext, timeoutMillis)
+
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

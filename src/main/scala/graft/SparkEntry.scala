@@ -435,12 +435,12 @@ object SparkEntry {
       // fact on a dense PK — exactly the scan-fused lookup shape.
       // The r13 broadcast-hash version shipped the UNFILTERED 1.5 M-row
       // customer table (146 MB, 0.59 s serial driver HashedRelation
-      // chain at x100, 8.6× DuckDB — r13 join_floor_profile);
+      // chain at x100, 8.6× DuckDB — r13 bench attribution);
       // denseLookupJoin replaces it with a span-bytes dictionary-code
       // array built in one distributed pass and probed inside the
       // orders scan — no join operator, no shuffle of either side
-      // (PlanSpec-pinned; dense_lookup_ab measured the same conversion
-      // at 1.87× on a 3 M-row dim).
+      // (PlanSpec-pinned; the r13 bench A/B measured the same
+      // conversion at 1.87× on a 3 M-row dim).
       val o = t(s, d, "orders")
       val c = t(s, d, "customer")
       Relational.denseLookupJoin(o, c, "o_custkey", "c_custkey", "c_mktsegment")
@@ -460,7 +460,7 @@ object SparkEntry {
     }),
     "j4_semijoin" -> ((s, d) => {
       // semi-join existence check via broadcast BITMAP
-      // (Relational.bitmapSemiJoin): the r12 join_floor_profile showed
+      // (Relational.bitmapSemiJoin): the r12 bench attribution showed
       // the broadcast semi join's wall was 75% driver chain — collect
       // 0.14 s + SINGLE-THREADED 3M-row LongHashedRelation build
       // 1.00 s + 254 MB transmit 0.26 s at x100 (and the SHUFFLE_HASH
@@ -545,11 +545,12 @@ object SparkEntry {
       // top-10; the payload then attaches by broadcasting the TEN
       // aggregated rows into one cheap orders re-scan. This replaces
       // r14's 88,800-row / 12.6 MB oc broadcast (0.105 s driver
-      // collect + serial HashedRelation build per join_floor_profile)
+      // collect + serial HashedRelation build, r14 bench attribution)
       // with a bitmap that builds distributed and ships
       // executor-once. The r13 attach-after A/B that lost (1.29 s vs
       // 1.24 s) predated the bitmap fact cut — re-tried per the r14
-      // brief with the probe doing the semi, it now wins (ProfileQ3).
+      // brief with the probe doing the semi, it now wins (r14 stage
+      // timings, HISTORY.md round 14).
       // Scale posture: both bitmaps grow with the key SPAN (bits),
       // not row count; past maxBitmapBytes the build degrades
       // sparse→loud guard, and the orderkey side beyond that belongs
@@ -562,7 +563,7 @@ object SparkEntry {
       // reuse = true (r15 judge item #3): the two probe structures are
       // memoized per canonicalized keys plan, so re-executions of a
       // re-CONSTRUCTED q3 (every bench timing pass) stop re-paying the
-      // two eager build jobs — the q3_stage_floor block priced them at
+      // two eager build jobs — the r15 q3 stage cuts priced them at
       // most of the +0.58 s probe-stage residual over the bare scan
       val ocKeys = Relational.bitmapSemiJoin(o, c, "o_custkey", "c_custkey",
           reuse = true)
@@ -727,7 +728,7 @@ object SparkEntry {
       // two (year() and month() each run their own epoch-day→LocalDate
       // walk). (y, m) ↔ month-truncated date is a bijection, so the
       // groups and their aggregates are identical (R20FormsSpec pin;
-      // ProfileAdhoc x1000 A/B: 3.25 vs 3.39 / 3.02 vs 3.76 s across
+      // x1000 same-JVM A/B, OPTIMIZATION_r20.md: 3.25 vs 3.39 / 3.02 vs 3.76 s across
       // two runs; the raw-date two-level variant measured WORSE —
       // dp_raw_date_key_2level — so per-row calendar work, not agg
       // fan-in, is the knob here).
@@ -1059,7 +1060,7 @@ object SparkEntry {
     }),
     "salted_join" -> ((s, d) => {
       // skewed fact⋈dim with a payload column — three plans, picked by
-      // measurement (r12 join_floor_profile + judge item #5):
+      // measurement (r12 bench attribution + judge item #5):
       //  (a) profile-gated SALTING (Relational.skewJoin) when BOTH
       //      sides must shuffle — the 100 TB big⋈big posture, timed on
       //      a planted-skew corpus in the bench artifact
@@ -1077,8 +1078,8 @@ object SparkEntry {
       //      lineitem scan: NO join operator, no fact shuffle, skew
       //      cannot exist because nothing shuffles (PlanSpec pins the
       //      join-free plan). Result equals the plain inner join
-      //      (RelationalSpec); the old-vs-new walls are A/B'd in the
-      //      bench artifact (dense_lookup_ab).
+      //      (RelationalSpec); the r13-r18 bench artifacts A/B the
+      //      old-vs-new walls (bench_history/BENCH_FULL_r18.json).
       val big = t(s, d, "lineitem").select("l_orderkey", "l_extendedprice")
       val small = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_orderpriority"))
@@ -1100,7 +1101,7 @@ object SparkEntry {
       // in place by the codegen CountByte loop; the earlier
       // length(translate(·,' ','')) arithmetic allocated a rewritten
       // copy of every document just to subtract lengths (~40% of the
-      // scan job at x100, ProfileJoin r12)
+      // scan job at x100, r12 job timeline)
       val docs = tp(s, d, "documents")
         .select(col("doc_id"), pmod(col("doc_id"), lit(8)).as("shard"),
           (graft.plans.StringCount.countChar(col("text"), ' ') + 1).as("toks"))
@@ -1108,14 +1109,14 @@ object SparkEntry {
       // rows) → orderedSmall for the presentation sort; a final global
       // orderBy re-ran the whole window+agg chain for range sampling
       // r18 A/B kept the PLAIN window form: the blocked two-level
-      // prefix sum (packSequencesBlocked) was built on the hypothesis
+      // prefix sum (see the Packing header) was built on the hypothesis
       // that the 8-shard window serializes the sort — measured FALSE
       // at x1000 (probe: exchange 1.2 s + WindowExec row processing
       // 1.6 s dominate; sortWithinPartitions after the exchange is
       // +0.04 s because scan order is already near-sorted, and a
       // 97×-finer window partitioning made it SLOWER). The blocked
       // form pays the exchange class twice and measured 5.3 s vs
-      // 3.8 s — dedup_stage_floor prices both every run.
+      // 3.8 s (bench_history/BENCH_FULL_r18.json).
       // r20 §2.1: PIN the pack exchange's partition count. The window's
       // ENSURE_REQUIREMENTS exchange is AQE-coalescible, and at the
       // GB points the ~120 MB shuffle coalesces to ~2 partitions under

@@ -284,7 +284,7 @@ object Dedup {
     * TextScanSpec); [[simhashUdf]] above stays as the reference
     * semantics. At x1000 the UDF's per-token 64-iteration counter loop
     * plus the String decode was 95 % of simhash_neardups' 3.9 s
-    * (dedup_stage_floor). */
+    * (r18 stage cuts, bench_history/BENCH_FULL_r18.json). */
   def simhash(text: Column): Column =
     // coalesce preserves the UDF's null contract (null text → sketch 0)
     coalesce(graft.plans.TextScan.simhash(text), lit(0L))

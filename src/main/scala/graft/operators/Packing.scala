@@ -18,6 +18,14 @@ import org.apache.spark.sql.functions._
   * unpartitioned window over the corpus; shards are how a 100 TB
   * corpus packs on 1000 executors, and per-shard sequence ids are
   * globally unique once prefixed with the shard id.
+  *
+  * Two-level prefix sums (per-shard value-range blocks plus broadcast
+  * block offsets) buy window parallelism when shards are few. Both
+  * forms tried measured slower than this one at the 17 GB point: the
+  * blocked form 5.3 s vs 3.8 s (r18, commit 4664fea), the
+  * single-exchange fused form 4.37 s vs 3.49 s (r20,
+  * OPTIMIZATION_r20.md §5). There the wall is the exchange plus
+  * WindowExec's per-row cost, not sort parallelism.
   */
 object Packing {
 
@@ -36,147 +44,5 @@ object Packing {
     df.withColumn("_before", coalesce(sum(tokenCol).over(w), lit(0L)))
       .withColumn("seq_id", floor(col("_before") / budget).cast("long"))
       .drop("_before")
-  }
-
-  /** [[packSequences]] with the prefix sum computed in TWO LEVELS over
-    * ONE exchange (r20). Blocks are fixed-width `orderCol` ranges
-    * (`blk = floor(order / blockWidth)` — constant width, so no bounds
-    * pass and block count grows with the data: scale-adaptive
-    * parallelism without a tuned constant, guide §2). One
-    * `repartition(shard, blk)` is the only wide exchange; both
-    * consumers — the per-(shard, blk) local prefix window and the
-    * per-block sum aggregate — need exactly that clustering, so the
-    * plan reuses the exchange (ReusedExchange; PlanSpec-checkable) and
-    * the input is scanned ONCE. The per-shard block offsets are an
-    * exclusive running sum over the tiny (shard, blk) sum table
-    * (its own #blocks-row exchange) broadcast-joined back. Identity:
-    * blocks are monotone in `orderCol`, so local exclusive prefix +
-    * offset == the global per-shard exclusive prefix — plain long
-    * addition, exact; PackingSpec pins fused == plain on fuzzed
-    * inputs.
-    *
-    * vs [[packSequencesBlocked]] (r18, kept below as the measured
-    * reference): that form paid a bounds aggregation plus a SECOND
-    * full input scan for the block sums — the double exchange class
-    * that made it 5.3 s vs 3.8 s at the 17 GB point. This form has no
-    * bounds job and one scan; the window parallelism is
-    * min(#partitions, shards × blocks) instead of `shards`.
-    *
-    * `orderCol` must be integral with |orderCol| < 2⁵³ (block ids come
-    * from an exact pmod-aligned floor division — exact for negatives
-    * too, same domain bound as [[packSequencesBlocked]]).
-    *
-    * MEASURED NEGATIVE at the 17 GB x1000 point (r20 ProfileAdhoc,
-    * same-JVM A/B, two iterations): v1 with block sums off the
-    * exchanged frame 5.25 s vs plain 3.31 s — the executed plan shows
-    * NO ReusedExchange (the join's pushed null-filters differentiate
-    * the exchange subtrees), so it paid two full-row exchanges; v2
-    * (this code — block sums map-side-partial-aggregated off the
-    * unexchanged scan, tiny shuffle) 4.37 s vs plain 3.49 s — the
-    * second tokenize scan + per-row broadcast-join probe still cost
-    * more than the window parallelism they buy. Kept as the
-    * documented alternative for few-shards × huge-shard corpora; the
-    * committed pack_sequences query keeps the plain form with its
-    * exchange pinned (see SparkEntry). */
-  def packSequencesFused(df: DataFrame, shardCol: Column, orderCol: Column,
-                         tokenCol: Column, budget: Long,
-                         blockWidth: Long = 1L << 16): DataFrame = {
-    require(blockWidth >= 1, "blockWidth must be >= 1")
-    val o = orderCol.cast("long")
-    val blk = ((o - pmod(o, lit(blockWidth))) / blockWidth).cast("long")
-    val withBlk = df.withColumn("_blk", blk)
-    val parted = withBlk.repartition(shardCol, col("_blk"))
-    val wLocal = Window.partitionBy(shardCol, col("_blk")).orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOffset = Window.partitionBy("_shard_key").orderBy(col("_blk_r"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // right side gets fresh names — same ambiguity note as the r18 form.
-    // The block sums aggregate the UNexchanged scan: the map-side
-    // partial agg collapses each task to ≤ #blocks rows, so this
-    // branch's exchange is tiny (vs hanging it off `parted`, where the
-    // join's pushed null-filters make the branches differ and defeat
-    // ReuseExchange — observed live: two full-row exchanges).
-    val blockSums = withBlk
-      .groupBy(shardCol.as("_shard_key"), col("_blk").as("_blk_r"))
-      .agg(sum(tokenCol).as("_bsum"))
-      .withColumn("_off", coalesce(sum("_bsum").over(wOffset), lit(0L)))
-      .drop("_bsum")
-    parted
-      .join(broadcast(blockSums),
-        shardCol === col("_shard_key") && col("_blk") === col("_blk_r"))
-      .drop("_blk_r", "_shard_key")
-      .withColumn("_before",
-        coalesce(sum(tokenCol).over(wLocal), lit(0L)) + col("_off"))
-      .withColumn("seq_id", floor(col("_before") / budget).cast("long"))
-      .drop("_before", "_off", "_blk")
-  }
-
-  /** [[packSequences]] with the prefix sum computed in TWO LEVELS —
-    * the distributed-scan pattern — for corpora whose shard count is
-    * far below the cluster's parallelism. The plain form's window
-    * sorts each whole shard in one task: with the bench contract's 8
-    * shards, a 33 M-doc corpus packs on 8 of 32 cores (x1000 probe:
-    * 3.45 s of the 3.73 s wall was that window; the scan+token-count
-    * is 0.27 s). Here each shard splits into `buckets` value-range
-    * blocks of `orderCol` (blocks are monotone in the pack order, so
-    * per-block local prefix + per-shard block offset == the global
-    * per-shard prefix — plain long addition, exact): the big window
-    * then partitions by (shard, block) at shards×buckets-way
-    * parallelism, the block-sum table is tiny (shards × buckets rows)
-    * and broadcast-joins back. Two passes over the input (block sums,
-    * then the windowed pass) — the trade is one extra scan+exchange
-    * for a sort that no longer serializes on shard count.
-    * `orderCol` must be integral (block bounds come from min/max over
-    * a long cast); PackingSpec pins blocked == plain on fuzzed
-    * inputs. Row-count note: the min/max agg is one bounded driver
-    * scalar (2 longs), same class as the other floor probes.
-    *
-    * MEASURED NEGATIVE at the 17 GB point (r18, dedup_stage_floor
-    * prices it every run): 5.3 s vs the plain form's 3.8 s — there the
-    * wall is exchange + WindowExec per-row cost, NOT sort parallelism
-    * (sortWithinPartitions after the exchange adds only 0.04 s), so
-    * the second exchange+join buys nothing. The committed
-    * pack_sequences query keeps the plain form; this one is the
-    * documented alternative for the regime it was designed for —
-    * few shards × huge per-shard row counts where the single-task
-    * sort actually spills. */
-  def packSequencesBlocked(df: DataFrame, shardCol: Column, orderCol: Column,
-                           tokenCol: Column, budget: Long,
-                           buckets: Int = 32): DataFrame = {
-    require(buckets >= 1, "buckets must be >= 1")
-    val bounds = df.agg(min(orderCol.cast("long")),
-      max(orderCol.cast("long"))).head()
-    if (bounds.isNullAt(0)) return packSequences(df, shardCol, orderCol,
-      tokenCol, budget) // empty (or all-null order) input: trivial either way
-    val lo = bounds.getLong(0)
-    val hi = bounds.getLong(1)
-    // ceil((hi-lo+1)/buckets), floored at 1; (o-lo) fits a non-negative
-    // long, so the pmod-aligned division is an exact floor
-    val width = math.max(1L, (hi - lo) / buckets + 1L)
-    def blockOf(o: Column): Column = {
-      val x = o.cast("long") - lit(lo)
-      ((x - pmod(x, lit(width))) / width).cast("long")
-    }
-    val withBlock = df.withColumn("_blk", blockOf(orderCol))
-    val wLocal = Window.partitionBy(shardCol, col("_blk")).orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOffset = Window.partitionBy("_shard_key").orderBy(col("_blk_r"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // right side gets fresh column NAMES (_shard_key/_blk_r) — a
-    // same-name join condition on a self-derived frame resolves to a
-    // trivially-true predicate under Spark's ambiguity rules
-    val blockSums = withBlock
-      .groupBy(shardCol.as("_shard_key"), col("_blk").as("_blk_r"))
-      .agg(sum(tokenCol).as("_bsum"))
-      .withColumn("_off", coalesce(sum("_bsum").over(wOffset), lit(0L)))
-      .drop("_bsum")
-    withBlock
-      .join(broadcast(blockSums),
-        shardCol === col("_shard_key") && col("_blk") === col("_blk_r"))
-      .drop("_blk_r", "_shard_key")
-      .withColumn("_before",
-        coalesce(sum(tokenCol).over(wLocal), lit(0L)) + col("_off"))
-      .withColumn("seq_id", floor(col("_before") / budget).cast("long"))
-      .drop("_before", "_off", "_blk")
   }
 }

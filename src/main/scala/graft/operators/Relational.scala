@@ -163,7 +163,7 @@ object Relational {
     * Why: existence-only semantics don't need a hash table. The
     * broadcast semi join's driver chain at the 100× bench point —
     * collect 0.14 s + SINGLE-THREADED 3 M-row HashedRelation build
-    * 1.00 s + 254 MB transmit 0.26 s (`join_floor_profile`) — was
+    * 1.00 s + 254 MB transmit 0.26 s (r12 bench attribution) — was
     * 75% of `j4_semijoin`'s wall. Here the keys side feeds a `long[]`
     * bitset OR-built distributed, the broadcast is range/8 bytes
     * (7.5 MB for a 60 M-key span), and the probe is a codegen filter
@@ -707,7 +707,7 @@ object Relational {
     * and builds a LongHashedRelation SERIALLY on the driver — measured
     * 0.80 s build + 0.26 s transmit of 254 MB for a 3 M-row
     * (long, string) dim at the x100 bench point (r12
-    * join_floor_profile on salted_join), ~60% of the join's wall.
+    * bench attribution on salted_join), ~60% of the join's wall.
     * Dict-coding the payload ships span bytes (60 MB for the same
     * dim) built in one ~30 ms array fill, and the probe is O(1)
     * branch-free inside whole-stage codegen — no join operator, no
@@ -742,9 +742,9 @@ object Relational {
     * `maxFallbackBroadcastBytes` broadcasts (the r13 behaviour);
     * above it the dim is SHUFFLE_HASH-hinted instead — the r15 x1000
     * sweep proved the unconditional broadcast wrong at scale
-    * (`join_floor_profile`: a 30 M-row / 3.2 GB dim meant a 13.7 s
+    * (its join attribution: a 30 M-row / 3.2 GB dim meant a 13.7 s
     * SERIAL driver HashedRelation build + 4.0 s transmit, while the
-    * same run's `shuffle_hash_counterfactual` priced the shuffle-hash
+    * same run's shuffle-hash counterfactual priced the shuffle-hash
     * plan at half the total wall; it also forced a 64 GiB driver
     * heap). A build side that big is a shuffle join's job at any
     * scale — on a 1000-executor cluster the driver-mediated broadcast

@@ -183,9 +183,6 @@ object TemporalJoin {
     * for every probe (measured 92 GB of array copies / 11.7 s at the
     * 100× point vs ~3 s for this shape). Null/empty neighbor array →
     * all zeros. */
-  /** Exposed for ProfileAdhoc plan A/Bs only. */
-  private[graft] def windowCountsUdfForBench = windowCountsUdf
-
   private val windowCountsUdf =
     udf((probes: Seq[Long], arr: Seq[Long], tolUs: Long) => {
       if (probes == null) Seq.empty[Long]

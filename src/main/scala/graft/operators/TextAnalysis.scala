@@ -314,9 +314,6 @@ object TextAnalysis {
 
   private val tfPairsUdf = udf(tfProfile _)
 
-  /** Profile column for dev benchmarking (ProfileAdhoc). */
-  private[graft] def tfPairsCol(text: Column): Column = tfPairsUdf(text)
-
   /** Vocabulary fold over per-doc tf profiles as a typed Aggregator:
     * ONE corpus pass builds the full (token → Σtf) or (token → df)
     * map with NO pair explode, no wide shuffle (per-partition map
@@ -365,8 +362,8 @@ object TextAnalysis {
       ExpressionEncoder[Map[String, Long]]()
   }
 
-  /** Vocab fold as a bare aggregate column (dev profiling only —
-    * ProfileAdhoc prices the fold stage of the row-local tf-idf). */
+  /** Vocab fold as a bare aggregate column: the reference semantics
+    * TfidfKernelSpec pins the kernel fold against. */
   private[graft] def vocabFoldCol(text: Column, maxVocab: Int,
                                   weighted: Boolean): Column =
     udaf(new VocabFold(maxVocab, weighted), Encoders.STRING)(text)

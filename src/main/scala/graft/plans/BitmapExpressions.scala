@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
   * Why this exists: a broadcast LEFT SEMI join on a long key pays a
   * SINGLE-THREADED driver-side HashedRelation build — measured 1.0 s
   * for 3 M keys (254 MB as UnsafeRows) at the 100× bench point, 60-75%
-  * of the join's wall (`join_floor_profile`). When the key range is
+  * of the join's wall (r12 bench attribution). When the key range is
   * dense enough for a bitset, existence-only semantics need none of
   * that: the same collected keys OR into a `long[]` in ~15 ms, the
   * broadcast payload shrinks to range/8 bytes, and the "join" becomes
@@ -148,7 +148,7 @@ case class LongSetContains(child: Expression,
   * land inside the last allocated word read stored 0 → −1, so the
   * range check only guards the array index. Null keys yield null
   * (inner joins never match null). `toString` stays "dense_lookup"
-  * — the plan pins (PlanSpec, probe_paths) key on that marker, and
+  * — the plan pins (PlanSpec) key on that marker, and
   * the packed form IS the same probe. */
 case class DensePackedLookup(child: Expression,
                              codes: Broadcast[Array[Long]],

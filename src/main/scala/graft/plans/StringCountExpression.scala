@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * queries used is exact but ALLOCATES: `translate` materializes a
   * rewritten copy of every document (and walks a codepoint iterator)
   * just so `length` can subtract. On the x100 documents corpus that
-  * copy was ~40% of `pack_sequences`' scan job (ProfileJoin round-12:
-  * 0.52 s scan job → 0.33 s with the counting loop). This expression
+  * copy was ~40% of `pack_sequences`' scan job (round-12 x100 job
+  * timeline: 0.52 s scan job → 0.33 s with the counting loop). This expression
   * counts matching bytes in place — zero allocation, a tight JIT'able
   * loop over the UTF-8 buffer.
   *

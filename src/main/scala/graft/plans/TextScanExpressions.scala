@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * UTF-8 buffer IN PLACE: the UDF forms paid a full UTF8String→String
   * decode-copy per row before doing any work — at the 17 GB sweep
   * point that boundary was ~all of lang_stopwords' 4.8 s (6.2×) and
-  * the dominant residual of simhash's 3.9 s (95 % sketch scan per
-  * `dedup_stage_floor`).
+  * the dominant residual of simhash's 3.9 s (95 % sketch scan in the
+  * r18 x1000 stage cuts, bench_history/BENCH_FULL_r18.json).
   *
   * LOCALE: non-ASCII fallbacks lower with Locale.ROOT, same contract
   * as [[graft.operators.Dedup.tokenHashes]] (r18 advisory) and the

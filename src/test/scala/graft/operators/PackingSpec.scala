@@ -37,46 +37,4 @@ class PackingSpec extends SparkSpec {
     assert(rows.count(_ == 0L) == 5)
     assert(rows.max == 19L)
   }
-
-  test("packSequencesBlocked equals packSequences on fuzzed sparse ids") {
-    val rnd = new scala.util.Random(19)
-    // sparse, negative-spanning ids; uneven shards; zero-token docs
-    val ids = (0 until 500).map(_ => rnd.nextLong() % 100000L).distinct
-    val docs = ids.map(i => (i, math.floorMod(i, 5L),
-        if (rnd.nextInt(10) == 0) 0L else rnd.nextInt(900).toLong + 1))
-      .toDF("id", "shard", "toks")
-    for (buckets <- Seq(1, 3, 32)) {
-      val plain = Packing.packSequences(docs, $"shard", $"id", $"toks", 777L)
-        .select($"shard", $"id", $"seq_id").as[(Long, Long, Long)]
-        .collect().sorted.toSeq
-      val blocked = Packing.packSequencesBlocked(docs, $"shard", $"id",
-          $"toks", 777L, buckets)
-        .select($"shard", $"id", $"seq_id").as[(Long, Long, Long)]
-        .collect().sorted.toSeq
-      assert(blocked == plain, s"buckets=$buckets")
-    }
-    // empty input falls back cleanly
-    assert(Packing.packSequencesBlocked(docs.filter($"id" > 999999L),
-      $"shard", $"id", $"toks", 777L).count() == 0)
-  }
-
-  test("packSequencesFused equals packSequences on fuzzed sparse ids") {
-    val rnd = new scala.util.Random(20)
-    val ids = (0 until 500).map(_ => rnd.nextLong() % 100000L).distinct
-    val docs = ids.map(i => (i, math.floorMod(i, 5L),
-        if (rnd.nextInt(10) == 0) 0L else rnd.nextInt(900).toLong + 1))
-      .toDF("id", "shard", "toks")
-    val plain = Packing.packSequences(docs, $"shard", $"id", $"toks", 777L)
-      .select($"shard", $"id", $"seq_id").as[(Long, Long, Long)]
-      .collect().sorted.toSeq
-    for (width <- Seq(1L, 509L, 1L << 16)) {
-      val fused = Packing.packSequencesFused(docs, $"shard", $"id",
-          $"toks", 777L, width)
-        .select($"shard", $"id", $"seq_id").as[(Long, Long, Long)]
-        .collect().sorted.toSeq
-      assert(fused == plain, s"blockWidth=$width")
-    }
-    assert(Packing.packSequencesFused(docs.filter($"id" > 999999L),
-      $"shard", $"id", $"toks", 777L).count() == 0)
-  }
 }
