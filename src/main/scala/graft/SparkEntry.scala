@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.operators.{Dedup, Multimodal, Pii, Relational, TextAnalysis, TimeSeriesOps, VectorSearch}
 import graft.functions.TextFunctions
@@ -193,30 +194,34 @@ object SparkEntry {
         graft.operators.Forecast.predictLinear(feats, beta))
   }
 
-  /** Top-k cosine neighbors of vec 0 with the raw score kept (shared
-    * prefix of the vector-pipeline queries). */
-  private def knnTop(s: SparkSession, dir: String, k: Int): DataFrame = {
+  /** (vec_id, label, s = cosine against vec 0) of every other vector
+    * (shared prefix of the vector-pipeline queries). */
+  private def knnScores(s: SparkSession, dir: String): DataFrame = {
     val q = lit(queryVec(s, dir, 0L))
     t(s, dir, "embeddings").filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("label"),
         VectorFunctions.cosineFast(col("embedding"), q).as("s"))
-      .orderBy(desc("s"), col("vec_id")).limit(k)
   }
 
-  /** Flagship: the §3.1 vector-QA pipeline (k-NN → normalize → margin
-    * → diversify → context budget) on sf0.001. */
+  /** The top-k neighbors of vec 0 through a post-top-k stage `f`. */
+  private def overKnn(s: SparkSession, dir: String, k: Int)
+                     (f: Seq[Row] => Seq[Row]): DataFrame =
+    VectorSearch.overTopK(knnScores(s, dir), Seq(desc("s"), col("vec_id")), k)(f)
+
+  /** Flagship: the §3.1 vector-QA pipeline (k-NN → margin → diversify
+    * → context budget) on sf0.001. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val top = knnTop(spark, dir, 50)
+    val div = overKnn(spark, dir, 50)(rows => VectorSearch.diversify(
+        VectorSearch.marginFilter(rows, 2, margin = 0.5, simFloor = 0.0),
+        _.get(1), 2, 0, perGroupCap = 3, topK = 10))
       .withColumnRenamed("s", "score")
-    val cut = VectorSearch.marginFilter(top, margin = 0.5, simFloor = 0.0)
-    val div = VectorSearch.diversify(cut, col("label"), col("vec_id"),
-      perGroupCap = 3, topK = 10)
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val joined = div.join(broadcast(docs), div("vec_id") === docs("doc_id"))
-    VectorSearch.contextBudget(joined,
-      Seq(desc("score"), col("vec_id")), col("text"), budget = 2000)
+    val text = joined.schema.fieldIndex("text")
+    VectorSearch.overTopK(joined, Seq(desc("score"), col("vec_id")), 10,
+        _.add("kept_text", StringType))(VectorSearch.contextBudget(_, text, budget = 2000))
       .select("vec_id", "score", "kept_text")
   }
 
@@ -363,12 +368,11 @@ object SparkEntry {
         .select("user_id", "run_len", "run_start"), "user_id")
     }),
     "a14_budget" -> ((s, d) =>
-      // budget fold runs POST-limit (top-100 by length) — the
-      // unpartitioned window is bounded by the limit, never the table
-      Relational.cumulativeBudget(
-        t(s, d, "documents").select("doc_id", "n_chars")
-          .orderBy(desc("n_chars"), col("doc_id")).limit(100),
-        Seq(desc("n_chars"), col("doc_id")), col("n_chars"), 5000L)
+      // budget walk over the top-100 by length (its one partition)
+      VectorSearch.overTopK(t(s, d, "documents").select("doc_id", "n_chars"),
+          Seq(desc("n_chars"), col("doc_id")), 100)(rows =>
+          VectorSearch.spendBudget(rows,
+            r => Option(r.getAs[Number](1)).fold(0L)(_.longValue), 5000L).map(_._1))
         .orderBy(desc("n_chars"), col("doc_id"))),
   )
 
@@ -856,20 +860,20 @@ object SparkEntry {
   /** §2.10 vector-search pipeline stages (J5/W1, A12, P8, A10). */
   private val vectorOps: Map[String, Q] = Map(
     "v1_knn" -> ((s, d) =>
-      knnTop(s, d, 10).select(col("vec_id"), round(col("s"), 4).as("score"))
+      knnScores(s, d).orderBy(desc("s"), col("vec_id")).limit(10)
+        .select(col("vec_id"), round(col("s"), 4).as("score"))
         .orderBy(desc("score"), col("vec_id"))),
     "v2_knn_norm" -> ((s, d) =>
-      VectorSearch.normalizeScoresIP(knnTop(s, d, 20), "s")
+      overKnn(s, d, 20)(VectorSearch.normalizeScoresIP(_, 2))
         .select(col("vec_id"), round(col("s"), 4).as("norm_score"))
         .orderBy(desc("norm_score"), col("vec_id"))),
     "v3_margin" -> ((s, d) =>
-      VectorSearch.marginFilter(knnTop(s, d, 20), margin = 0.12, simFloor = 0.1,
-          scoreCol = "s")
+      overKnn(s, d, 20)(VectorSearch.marginFilter(_, 2, margin = 0.12, simFloor = 0.1))
         .select(col("vec_id"), round(col("s"), 4).as("score"))
         .orderBy(desc("score"), col("vec_id"))),
     "v4_diversify" -> ((s, d) =>
-      VectorSearch.diversify(knnTop(s, d, 20), col("label"), col("vec_id"),
-          perGroupCap = 2, topK = 8, scoreCol = "s")
+      overKnn(s, d, 20)(VectorSearch.diversify(_, _.get(1), 2, 0,
+          perGroupCap = 2, topK = 8))
         .select(col("vec_id"), col("label"), round(col("s"), 4).as("score"))),
   )
 

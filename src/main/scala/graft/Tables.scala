@@ -82,18 +82,11 @@ object Tables {
     // per-row pipelines keep real parallelism) and still caps at
     // defaultParallelism; at the GB scale points bytes/64 KB far
     // exceeds the cap, so nothing changes where data is large.
+    val df = load(spark, sfDir, name)
     val n =
       if (parts > 0) parts
-      else {
-        val f = new java.io.File(s"$sfDir/$name.parquet")
-        val bytes =
-          if (f.isDirectory)
-            Option(f.listFiles()).map(_.map(_.length()).sum).getOrElse(0L)
-          else f.length()
-        math.min(spark.sparkContext.defaultParallelism.toLong,
-          math.max(8L, bytes / 65536L)).toInt
-      }
-    val df = load(spark, sfDir, name)
+      else math.min(spark.sparkContext.defaultParallelism.toLong,
+        math.max(8L, inputBytes(spark, sfDir, name) / 65536L)).toInt
     // layout-aware: when the file layout already yields enough scan
     // tasks (multi-row-group files under the 128 KB open-cost floor),
     // the round-robin repartition is pure waste — it shuffles the full
@@ -101,6 +94,14 @@ object Tables {
     // already has. Only single-row-group layouts take the shuffle.
     val natural = df.rdd.getNumPartitions
     if (natural * 2 >= n) df else df.repartition(n)
+  }
+
+  /** Bytes under a table's parquet path, through Hadoop's FileSystem
+    * (a `file:` URI or a non-local store sizes as a local path does). */
+  private[graft] def inputBytes(spark: SparkSession, sfDir: String, name: String): Long = {
+    val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(path).getLength
   }
 
   /** Register every table as a temp view (for spark.sql entry points). */

@@ -140,21 +140,6 @@ object Relational {
     }
   }
 
-  /** Cumulative-budget prefix filter (A14: keep ordered rows while the
-    * running sum of `cost` stays under `budget`; the row that crosses
-    * the boundary is kept — mirrors the reference's truncate-last
-    * behavior at enhanced_internal_db_service.py:796-809). Window is
-    * unpartitioned by design: result sets here are tiny (top-k docs),
-    * never a full table. */
-  def cumulativeBudget(df: DataFrame, order: Seq[Column], cost: Column,
-                       budget: Long): DataFrame = {
-    val w = Window.orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn("_spent", coalesce(sum(cost).over(w), lit(0L)))
-      .filter(col("_spent") < budget)
-      .drop("_spent")
-  }
-
   /** Exact semi-join on an integral key via a broadcast BITMAP instead
     * of a broadcast hash relation. Result equals
     * `fact.join(broadcast(keys), fact(factKey) === keys(keyCol), "left_semi")`
@@ -320,9 +305,7 @@ object Relational {
           probeCacheGet(ck, () => buildProbe())
         }
       } catch {
-        case e: IllegalArgumentException
-            if autoDegrade && e.getMessage != null &&
-              e.getMessage.contains("exceeds maxKeys") =>
+        case _: SparseKeysExceeded if autoDegrade =>
           // next rung (r15 judge item #2): the key side outgrew the
           // broadcast-class hash set — degrade to the distributed
           // bloom build + exact verify join instead of failing. One
@@ -390,20 +373,14 @@ object Relational {
       else { val v = build(); probeCache.put(k, v); v }
     }
 
-  /** Re-throws the first IllegalArgumentException carrying THIS
-    * operator family's guard signature found in a thrown exception's
-    * cause chain (Spark wraps task-side guard failures in
-    * SparkException layers); anything else propagates unchanged —
-    * an unrelated IAE nested inside a Spark task failure (config and
-    * codec errors often wrap them) must keep its SparkException
-    * context (r15 advisory). */
+  /** Re-throws the first [[SparseKeysExceeded]] in a thrown exception's
+    * cause chain (Spark wraps task-side failures in SparkExceptions);
+    * anything else propagates unchanged, with its SparkException. */
   private def unwrapGuardIAE[T](body: => T): T =
     try body catch {
       case e: Throwable =>
         var c: Throwable = e
-        while (c != null && !(c.isInstanceOf[IllegalArgumentException] &&
-            c.getMessage != null && c.getMessage.contains("bitmapSemiJoin")))
-          c = c.getCause
+        while (c != null && !c.isInstanceOf[SparseKeysExceeded]) c = c.getCause
         throw (if (c != null) c else e)
     }
 
@@ -420,12 +397,13 @@ object Relational {
   private final case class KeysPartial(count: Long, mn: Long, mx: Long,
       keys: Array[Long]) extends KeyPartial
 
-  private def sparseGuardError(maxKeys: Int): Nothing =
-    throw new IllegalArgumentException(
-      s"bitmapSemiJoin: sparse key side exceeds maxKeys=$maxKeys — " +
-        "the hash-set probe is broadcast-class (16 bytes/key); for key " +
-        "sides beyond driver memory use bloomSemiJoin (distributed " +
-        "build) or a plain shuffle semi join")
+  /** [[bitmapSemiJoin]]'s sparse-path guard, typed so the bloom degrade
+    * and the task-failure unwrap match it without reading its message. */
+  final class SparseKeysExceeded(val maxKeys: Int) extends IllegalArgumentException(
+    s"bitmapSemiJoin: sparse key side exceeds maxKeys=$maxKeys — " +
+      "the hash-set probe is broadcast-class (16 bytes/key); for key " +
+      "sides beyond driver memory use bloomSemiJoin (distributed " +
+      "build) or a plain shuffle semi join")
 
   /** Sorts `a[0, n)` and compacts it to distinct values in place;
     * returns the distinct count. Guard-path helper: the maxKeys
@@ -480,7 +458,7 @@ object Relational {
         val d = compactDistinct(sk, skN)
         val floor = math.min(math.max(16, maxKeys >>> 4),
           math.max(1, maxKeys >>> 2))
-        if (maxKeys - d < floor) sparseGuardError(maxKeys)
+        if (maxKeys - d < floor) throw new SparseKeysExceeded(maxKeys)
         skN = d
       }
       if (skN == sk.length) sk = java.util.Arrays.copyOf(sk,
@@ -575,7 +553,7 @@ object Relational {
         System.arraycopy(ka, 0, u, 0, ka.length)
         System.arraycopy(kb, 0, u, ka.length, kb.length)
         val d = compactDistinct(u, u.length)
-        if (d > maxKeys) sparseGuardError(maxKeys)
+        if (d > maxKeys) throw new SparseKeysExceeded(maxKeys)
         KeysPartial(cnt, cmn, cmx, java.util.Arrays.copyOf(u, d))
       } else KeysPartial(cnt, cmn, cmx, ka ++ kb)
     }

@@ -2,24 +2,27 @@ package graft.search
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.TextFunctions.nfkc
 import graft.functions.VectorFunctions.cosineFast
 import graft.ingest.HashEmbedder
 import graft.operators.VectorSearch
 
 /** The flagship vector-QA read path (SURVEY §3.1, ref
-  * enhanced_internal_db_service.py:634-816) as one composable Spark
-  * pipeline: fetch_k k-NN → IP score normalization → margin+floor cut
-  * → strong-anchor filter (P9) → per-title cap + round-robin diversify
-  * → marker assignment → marked-context assembly (A14).
+  * enhanced_internal_db_service.py:634-816): fetch_k k-NN → IP score
+  * normalization → margin+floor cut → strong-anchor filter (P9) →
+  * per-title cap + round-robin diversify → marker assignment →
+  * marked-context assembly (A14).
   *
   * Scale: the k-NN is a pruned scan + TakeOrderedAndProject (top
-  * fetch_k, merge on driver); everything after operates on ≤ fetch_k
-  * rows. The index DataFrame is partitioned by save_name, so the
-  * save-name filter is partition pruning, not a scan.
+  * fetch_k); everything after is one Scala pass over those rows
+  * ([[VectorSearch.overTopK]]). The index DataFrame is partitioned by
+  * save_name, so the save-name filter is partition pruning, not a scan.
   */
 object SearchPipeline {
 
@@ -62,10 +65,7 @@ object SearchPipeline {
     * corpus) takes a zero-allocation case-insensitive scan — NFKC is
     * the identity there and ASCII lowercasing is per-char, so the scan
     * equals the normalize→lower→contains composition exactly; anything
-    * non-ASCII falls back to that literal composition. The earlier
-    * column formulation rebuilt the document three times
-    * (regexp_replace, nfkc, lower) per row — 12× DuckDB at the 100×
-    * point (r6 audit). */
+    * non-ASCII falls back to that literal composition. */
   def strongAnchorPredicate(content: Column, title: Column,
                             strong: Set[String]): Column =
     if (strong.isEmpty) lit(false)
@@ -120,34 +120,36 @@ object SearchPipeline {
   /** Full retrieval: returns the kept (≤ topK) chunks with normalized
     * scores and S1.. markers, ordered as the reference's round-robin
     * emits them. Config defaults mirror backend_config.yaml
-    * (margin 0.12, sim_floor 0.35, per_title_cap 3, fetch ×4). */
+    * (margin 0.12, sim_floor 0.35, per_title_cap 3, fetch ×4). Lazy:
+    * a plan over `index`. Title group key: NFKC then Spark's `lower`. */
   def search(index: DataFrame, question: String, topK: Int = 5,
              margin: Double = 0.12, simFloor: Double = 0.35,
              perTitleCap: Int = 3, fetchMultiplier: Int = 4,
              dim: Int = HashEmbedder.DefaultDim): DataFrame = {
     val fetchK = math.max(topK * fetchMultiplier, topK + 5)
     val qvec = HashEmbedder.embed("query: " + question.trim, dim)
-    val top = index
+    val scored = index
       .select(col("chunk_id"), col("doc_id"), col("title"), col("oo"),
         col("content"), col("metadata"),
         cosineFast(col("embedding"), lit(qvec)).as("score"))
-      .orderBy(desc("score"), col("chunk_id"))
-      .limit(fetchK)
-    val normalized = VectorSearch.normalizeScoresIP(top)
-    val cut = VectorSearch.marginFilter(normalized, margin, simFloor)
-    val anchors = anchorsFromQuery(question)
-    val anchored =
-      if (anchors.strong.isEmpty) cut
-      else cut.filter(strongAnchorPredicate(col("content"), col("title"), anchors.strong))
-    val groupKey = lower(nfkc(coalesce(
-      when(length(col("title")) > 0, col("title")), col("oo"), lit("unknown"))))
-    val kept = VectorSearch.diversify(
-      anchored.withColumn("_g", groupKey), col("_g"), col("chunk_id"),
-      perTitleCap, topK).drop("_g")
-    // markers come from the diversify rank itself — an explicit column,
-    // deterministic on any partitioning (physical row ids are not)
-    kept.withColumn("marker", concat(lit("S"), col("div_rank")))
-      .drop("div_rank")
+    val Seq(id, title, oo, content, score) =
+      Seq("chunk_id", "title", "oo", "content", "score").map(scored.schema.fieldIndex)
+    val anchors = anchorsFromQuery(question).strong.toSeq.sorted
+    val icuLower = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+    def groupKey(r: Row): String = CollationSupport.Lower.exec(UTF8String.fromString(
+      Normalizer.normalize(Option(r.getString(title)).filter(_.nonEmpty)
+        .orElse(Option(r.getString(oo))).getOrElse("unknown"), Normalizer.Form.NFKC)),
+      CollationFactory.UTF8_BINARY_COLLATION_ID, icuLower).toString
+    VectorSearch.overTopK(scored, Seq(desc("score"), col("chunk_id")), fetchK,
+        _.add("marker", StringType, nullable = false)) { rows =>
+      val cut = VectorSearch.marginFilter(
+        VectorSearch.normalizeScoresIP(rows, score), score, margin, simFloor)
+      val anchored = if (anchors.isEmpty) cut else cut.filter(r =>
+        anchorHit(r.getString(content), anchors, blankPassage = true) ||
+          anchorHit(Option(r.getString(title)).getOrElse(""), anchors, blankPassage = false))
+      VectorSearch.diversify(anchored, groupKey, score, id, perTitleCap, topK)
+        .zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ s"S${i + 1}") }
+    }
   }
 
   /** Marked-context assembly (ref :796-809): 900-char snippets inside

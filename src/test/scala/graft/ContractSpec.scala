@@ -21,6 +21,12 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("entry runs end to end: at most 10 rows, kept text within the 2000-char budget") {
+    val rows = SparkEntry.entry(spark).collect()
+    assert(rows.nonEmpty && rows.length <= 10)
+    assert(rows.map(r => r.getString(2).codePointCount(0, r.getString(2).length)).sum <= 2000)
+  }
+
   test("every VALUES-pinned oracle has a derivation row in PINNED.md") {
     // the pinned class must stay auditable in O(1): a new pin landing
     // without its derivation/falsification entry fails here, not in a

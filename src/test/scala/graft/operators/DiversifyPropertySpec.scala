@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Row
 
 /** Property test: VectorSearch.diversify must reproduce the
   * reference's procedural round-robin (_diversify_results, ref
@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * appearance (best-score) order, per-group cap, rank-major
   * interleave, top-k cut — on randomized inputs, not just the
   * hand-computed example. */
-class DiversifyPropertySpec extends SparkSpec {
-  import spark.implicits._
+class DiversifyPropertySpec extends AnyFunSuite {
 
   /** The reference algorithm, transliterated as the test oracle:
     * sort desc, group in insertion order, cap, round-robin. */
@@ -44,9 +43,9 @@ class DiversifyPropertySpec extends SparkSpec {
       val cap = 1 + rnd.nextInt(3)
       val topK = 1 + rnd.nextInt(10)
       val expected = referenceDiversify(rows, cap, topK)
-      val got = VectorSearch.diversify(rows.toDF("id", "g", "score"),
-          $"g", $"id", cap, topK)
-        .select("id").as[Long].collect().toSeq
+      val got = VectorSearch.diversify(rows.map(Row.fromTuple), _.get(1),
+          score = 2, id = 0, cap, topK)
+        .map(_.getLong(0))
       assert(got == expected,
         s"trial $trial cap=$cap topK=$topK rows=$rows")
     }

@@ -1,16 +1,16 @@
 package graft.operators
 
-import graft.SparkSpec
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Row
 
 /** Property test: normalizeScoresIP + marginFilter must reproduce the
   * reference's procedural IP branch (_similarity_search_with_margin,
   * ref enhanced_internal_db_service.py:697-727) on random score sets. */
-class MarginPropertySpec extends SparkSpec {
-  import spark.implicits._
+class MarginPropertySpec extends AnyFunSuite {
 
   /** Reference IP branch as the oracle: sort desc, min-max normalize
     * with hi=max(1,max) lo=min(-1,min), cut at max(best−m, best·(1−m))
-    * and the floor. (The reference divides by hi−lo+1e-9; the window
+    * and the floor. (The reference divides by hi−lo+1e-9; the engine
     * version divides by hi−lo — hi≥1 and lo≤−1 keep the denominator
     * ≥2, so the 1e-9 guard is dead code there; we compare kept-sets,
     * which the 5e-10 relative shift cannot flip at these magnitudes.) */
@@ -36,9 +36,9 @@ class MarginPropertySpec extends SparkSpec {
       val floor = rnd.nextDouble() * 0.6
       val expected = referenceKept(scores, margin, floor)
       val got = VectorSearch.marginFilter(
-          VectorSearch.normalizeScoresIP(scores.toDF("id", "score")),
-          margin, floor)
-        .select("id").as[Long].collect().toSet
+          VectorSearch.normalizeScoresIP(scores.map(Row.fromTuple), score = 1),
+          score = 1, margin, floor)
+        .map(_.getLong(0)).toSet
       assert(got == expected, s"trial $trial margin=$margin floor=$floor scores=$scores")
     }
   }

@@ -151,10 +151,11 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
-  test("cumulativeBudget keeps the boundary row (truncate-last semantics)") {
-    val docs = Seq((1L, 500L), (2L, 400L), (3L, 300L), (4L, 200L)).toDF("id", "len")
-    val out = Relational.cumulativeBudget(docs, Seq(desc("len"), $"id"), $"len", 1000L)
-      .select("id").as[Long].collect().toSet
+  test("spendBudget keeps the boundary row (truncate-last semantics)") {
+    val docs = Seq((1L, 500L), (2L, 400L), (3L, 300L), (4L, 200L))
+      .map(org.apache.spark.sql.Row.fromTuple)
+    val out = VectorSearch.spendBudget(docs, _.getLong(1), 1000L)
+      .map(_._1.getLong(0)).toSet
     // spent-before: id1=0, id2=500, id3=900 (kept, crosses), id4=1200 (dropped)
     assert(out == Set(1L, 2L, 3L))
   }
