@@ -677,7 +677,7 @@ object Bench {
     val segTp = if (!blockOn("segmenter_sustained")) "" else try {
       import org.apache.spark.sql.functions._
       import spark.implicits._
-      val ck = Files.createTempDirectory("graft_segbench_ck_").toString
+      val ck = EngineState.of(spark).newDir("segbench_ck_")
       val src = spark.readStream.format("rate")
         .option("rowsPerSecond", "300000").option("numPartitions", "8").load()
         .select(
@@ -716,7 +716,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       def run(name: String, mode: String)
              (build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
-        val ck = Files.createTempDirectory(s"graft_stbench_$name").toString
+        val ck = EngineState.of(spark).newDir(s"stbench_$name")
         val src = spark.readStream.format("rate")
           .option("rowsPerSecond", "50000").option("numPartitions", "4").load()
         val q = build(src).writeStream.format("noop")

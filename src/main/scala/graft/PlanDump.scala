@@ -58,10 +58,12 @@ object PlanDump {
       "In-pushdown (`isin` of the ten orderkeys reaches the orders scan " +
       "as a pushed filter, r16) + a 10-row broadcast join — the r14 " +
       "88.8k-row/12.6 MB oc broadcast, its serial HashedRelation build, " +
-      "AND the r15 broadcast-exchange collect are gone. Since r16 the two " +
-      "eager bitmap builds are memoized per canonicalized keys plan " +
-      "(reuse=true, LRU 8), so re-executions of the same logical query " +
-      "stop re-paying them."),
+      "AND the r15 broadcast-exchange collect are gone. The two eager " +
+      "bitmap builds are memoized in the session's EngineState per " +
+      "canonicalized keys plan plus a snapshot of the keys' input files " +
+      "(reuse=true, 8 least-recently-used entries), so a re-constructed " +
+      "query over unchanged tables does not re-pay them, and a rewritten " +
+      "table rebuilds them."),
     "j1_equijoin" -> ("Dense dictionary-lookup join on the reference J1 shape " +
       "(r14): attaching c_mktsegment (5 values) to orders on the dense " +
       "customer PK plans as a codegen `dense_lookup` probe of a " +

@@ -30,7 +30,7 @@ object Sessions {
       new ExpressionInfo(classOf[L2Distance].getName, "graft_l2dist"),
       (children: Seq[Expression]) => L2Distance(children.head, children(1))))
     ext.injectOptimizerRule(_ => RewriteHofCosine)
-    ext.injectOptimizerRule(_ => RewriteCosineTopKToProbes)
+    ext.injectOptimizerRule(RewriteCosineTopKToProbes(_))
   }
 
   /** Spark's codegen cache size (`spark.sql.codegen.cache.maxEntries`,
@@ -75,11 +75,8 @@ object Sessions {
       // Spark 4 whitelists CSV charsets; the reference's fruit CSVs
       // are cp949 (S4), which needs the full JVM charset set
       .config("spark.sql.legacy.javaCharsets", "true")
-      // AQE stays ON by default (runtime skew/coalesce is the 100 TB
-      // posture); SPARK_GRAFT_AQE=false lets the bench quantify its
-      // per-query stage-materialization overhead at tiny scale factors
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE stays ON (runtime skew/coalesce is the 100 TB posture)
+      .config("spark.sql.adaptive.enabled", "true")
       // coalesce post-shuffle partitions by SIZE, not parallelism:
       // sub-100-row shuffle outputs collapse to one partition instead
       // of scheduling 32 near-empty tasks per stage — the fixed-cost
@@ -107,11 +104,9 @@ object Sessions {
       // walls is FALSE — a6_pricing_summary min-of-3 is 0.96/1.04/0.96 s
       // across 32/64/96 and finer splits regress a9_longest_run
       // 0.47→0.69 s (per-task row-group open cost). Scan-bound walls
-      // here are parquet-decode-bound, so the default stays =cores
-      // (the session's actual cpu count, not a literal — r12 advisory);
-      // env override kept for re-measurement.
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SPLITS", cpus))
+      // here are parquet-decode-bound, so it stays =cores (the
+      // session's actual cpu count, not a literal — r12 advisory).
+      .config("spark.sql.files.minPartitionNum", cpus)
       // shuffle joins: build a hash table instead of sorting both
       // sides when one side is small enough (Spark still requires the
       // size asymmetry before it picks SHJ, and AQE can re-plan).
@@ -129,8 +124,7 @@ object Sessions {
       // the right mechanism for "broadcast it when it actually fits".
       // concurrent-suite fairness: FIFO lets one query's wide stage
       // block every other submitted query's tiny tasks; FAIR interleaves
-      // (SPARK_GRAFT_SCHED=FIFO restores the default for A/B runs)
-      .config("spark.scheduler.mode", sys.env.getOrElse("SPARK_GRAFT_SCHED", "FAIR"))
+      .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .getOrCreate()

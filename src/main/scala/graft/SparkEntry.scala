@@ -31,48 +31,37 @@ object SparkEntry {
   private def tp(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.loadParallel(s, dir, name)
 
+  /** Embeddings path of `dir`: the input of every entry derived from it. */
+  private def embeddingsPath(dir: String): String = s"$dir/embeddings.parquet"
+
   /** Query embedding looked up once on the driver (single-row lookup,
     * then inlined as a plan literal — broadcast-by-plan, no shuffle).
-    * Memoized per (dir, id): several queries share the same probe
-    * vector and must not each pay a lookup job. */
-  private val vecCache = scala.collection.concurrent.TrieMap.empty[(String, Long), Array[Float]]
+    * Several queries share the same probe vector and must not each pay
+    * a lookup job. */
   private def queryVec(s: SparkSession, dir: String, id: Long): Array[Float] =
-    vecCache.getOrElseUpdate((dir, id),
+    EngineState.of(s).getOrBuild(("queryVec", dir, id), Seq(embeddingsPath(dir))) {
       t(s, dir, "embeddings").filter(col("vec_id") === id)
-        .select("embedding").head.getSeq[Float](0).toArray)
+        .select("embedding").head.getSeq[Float](0).toArray
+    }
 
-  /** Hot-key table statistics for the skew join: the top keys by
-    * frequency from one seeded, column-pruned sample job per
-    * (dir, table, key) — computed once and reused by every query over
-    * the table, the way a catalog keeps column histograms. Keeps the
-    * per-query plan at exactly one scan+shuffle of the big side
-    * (Relational.skewJoin's `hotKeys` production path). */
-  /** One cluster-partitioned IVF index build per sf dir (ann_autoswap
-    * — written to a temp dir and registered for the plan-level probe
-    * swap; the build is the one-time indexing cost, not query work). */
-  private val annIndexCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** ann_pq's trained (IVF centroids, PQ codebooks) per dataset dir —
-    * same one-time-build policy as [[annIndexCache]]. */
-  private val annPqCache = scala.collection.concurrent.TrieMap.empty[
-    String, (graft.operators.VectorIndex.Model,
-      graft.operators.ProductQuantizer.PQModel)]
-
-  /** The declarative top-k-cosine query over the registered IVF index
-    * dir for `d` (built+registered on first use). The plan carries NO
-    * cluster predicate in source form; RewriteCosineTopKToProbes
+  /** The declarative top-k-cosine query over `d`'s cluster-partitioned
+    * IVF index, built once per embeddings snapshot into the session's
+    * temp root and registered for the plan-level probe swap (the build
+    * is the one-time indexing cost, not query work). The plan carries
+    * NO cluster predicate in source form; RewriteCosineTopKToProbes
     * injects the probe filter — used by ann_autoswap's recall check
     * and dumped by PlanDump as the pruning evidence. */
   def annSwappedSearch(s: SparkSession, d: String): DataFrame = {
-    val path = annIndexCache.getOrElseUpdate(d, {
+    val state = EngineState.of(s)
+    val path = state.getOrBuild(("annIndex", d), Seq(embeddingsPath(d))) {
       val emb = t(s, d, "embeddings").filter(col("vec_id") =!= 0)
       val model = graft.operators.VectorIndex.train(emb, "embedding", k = 16,
         maxIter = 10, maxTrainSamples = 5000)
-      val dir = java.nio.file.Files.createTempDirectory("graft_annidx_").toString
+      val dir = state.newDir("annidx_")
       graft.operators.VectorIndex.buildAndWrite(emb, "embedding", model, dir)
-      graft.plans.VectorIndexRegistry.register(dir, model, nprobe = 4)
+      state.registerIndex(dir, model, nprobe = 4)
       dir
-    })
+    }
     val q = queryVec(s, d, 0L)
     s.read.parquet(path)
       .select(col("vec_id"),
@@ -80,18 +69,23 @@ object SparkEntry {
       .orderBy(desc("score"), col("vec_id")).limit(10)
   }
 
-  private val hotKeyCache = scala.collection.concurrent.TrieMap.empty[(String, String, String), Seq[Any]]
-  /** Cached per-(dir, table, key) hot-key profile, gated on measured
-    * skew exactly like [[graft.operators.Relational.skewJoin]]'s
-    * in-line sampler: a key is hot only at ≥4× the mean sampled key
-    * frequency AND ≥16 sampled occurrences (the absolute floor is
-    * what keeps a near-unique key space from faking hot keys out of
-    * sample noise), so a uniform corpus (the bench testdata) profiles
-    * to EMPTY and salted consumers fall through to the plain join
-    * plan. See the skewJoin Scaladoc for the rare-hot-key caveat. */
-  private def hotKeyProfile(s: SparkSession, dir: String, table: String,
-                            key: String): Seq[Any] =
-    hotKeyCache.getOrElseUpdate((dir, table, key), {
+  /** Hot-key table statistics for the skew join: the top keys by
+    * frequency from one seeded, column-pruned sample job per
+    * (dir, table, key) — computed once per table snapshot and reused
+    * by every query over the table, the way a catalog keeps column
+    * histograms (Relational.skewJoin's `hotKeys` production path).
+    * Gated on measured skew exactly like
+    * [[graft.operators.Relational.skewJoin]]'s in-line sampler: a key
+    * is hot only at ≥4× the mean sampled key frequency AND ≥16 sampled
+    * occurrences (the absolute floor is what keeps a near-unique key
+    * space from faking hot keys out of sample noise), so a uniform
+    * corpus (the bench testdata) profiles to EMPTY and salted consumers
+    * fall through to the plain join plan. See the skewJoin Scaladoc for
+    * the rare-hot-key caveat. */
+  private[graft] def hotKeyProfile(s: SparkSession, dir: String, table: String,
+                                   key: String): Seq[Any] =
+    EngineState.of(s).getOrBuild(("hotKeys", dir, table, key),
+        Seq(s"$dir/$table.parquet")) {
       val prof = t(s, dir, table).sample(withReplacement = false, 0.05, 42L)
         .groupBy(key).count()
       val mean = prof.agg(avg("count")).collect().headOption
@@ -101,24 +95,21 @@ object SparkEntry {
         .orderBy(desc("count"), col(key))
         .limit(8)
         .select(key).collect().map(_.get(0)).toSeq
-    })
+    }
 
-  private val forecastFixtureCache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, DataFrame]
   /** The trained-model queries' shared input — cp949 fruit CSV →
     * daily resample → dense spine → gap-limited interpolation(14) —
     * computed ONCE per session and pinned as a LOCAL relation
     * (~1.2k rows of (fruit, day, avg_value): a bounded driver
     * scalar). forecast_ridge and forecast_ar both consume this
     * chain; re-deriving it per query re-ran ~6 exchange-
-    * materialization jobs of pure fixed cost per invocation
-    * (forecast_ar: 11 single-task jobs, r9 judge item #1). Planning
-    * from a LocalRelation leaves each query measuring its MODEL fit
-    * + scoring, which is the thing the query exists to measure.
-    * forecast_pipeline keeps deriving the chain live — it IS the
-    * pipeline query, so the prep is its payload. */
+    * materialization jobs of pure fixed cost per invocation.
+    * Planning from a LocalRelation leaves each query measuring its
+    * MODEL fit + scoring, which is the thing the query exists to
+    * measure. forecast_pipeline keeps deriving the chain live — it IS
+    * the pipeline query, so the prep is its payload. */
   private def forecastInterp(s: SparkSession): DataFrame =
-    forecastFixtureCache.getOrElseUpdate(s, {
+    EngineState.of(s).getOrBuild("forecastInterp") {
       val daily = TimeSeriesOps.dailyResample(
         Fixtures.fruitPrices(s).withColumn("fruit", lit("banana")),
         Seq(col("fruit")), col("date").cast("timestamp"), col("price"))
@@ -128,7 +119,7 @@ object SparkEntry {
         .filter(col("avg_value").isNotNull)
       val rows = interp.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), interp.schema)
-    })
+    }
 
   /** Deterministic output order for SMALL (group-summary) results
     * without the range-exchange a global orderBy schedules: a global
@@ -1772,14 +1763,15 @@ object SparkEntry {
       val emb = t(s, d, "embeddings").filter(col("vec_id") =!= 0)
       val q = queryVec(s, d, 0L)
       import s.implicits._
-      // train once per dataset dir (annIndexCache policy): codebook /
-      // centroid training is one-time index-build cost — charging it
-      // to every query run misstates the query-time economics
-      val (ivf, pqm) = annPqCache.getOrElseUpdate(d, {
+      // train once per embeddings snapshot (as annSwappedSearch's
+      // index): codebook / centroid training is one-time index-build
+      // cost — charging it to every query run misstates the query-time
+      // economics
+      val (ivf, pqm) = EngineState.of(s).getOrBuild(("annPq", d), Seq(embeddingsPath(d))) {
         (graft.operators.VectorIndex.train(emb, "embedding", k = 16,
           maxIter = 10, maxTrainSamples = 5000),
           graft.operators.ProductQuantizer.train(emb, "embedding", m = 8))
-      })
+      }
       val indexed = graft.operators.ProductQuantizer.encodeDf(
         graft.operators.VectorIndex.assign(emb, "embedding", ivf),
         "embedding", pqm)
@@ -1967,8 +1959,7 @@ object SparkEntry {
     "s10_append" -> ((s, _) => {
       // S10: append-mode embedding-index sink — two insertRows batches
       // land additively (ref rag_service.py:86-95 incremental add)
-      val dir = java.nio.file.Files.createTempDirectory("graft_s10_")
-        .toString + "/idx"
+      val dir = EngineState.of(s).newDir("s10_") + "/idx"
       val k = Fixtures.knowledge(s)
       val schema = Ingest.inferSchema(k.columns.toSeq)
       val idx = Ingest.buildIndex(k, schema, "knowledge", dim = 64)
@@ -1981,8 +1972,7 @@ object SparkEntry {
       // S11: insert → update-where → ownership-predicate delete
       // (ref tool_executor.py:239-285,471-511,525-545)
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_s11_")
-        .toString + "/rows"
+      val dir = EngineState.of(s).newDir("s11_") + "/rows"
       val rows = Seq((1L, "u1", 10L), (2L, "u1", 20L), (3L, "u2", 30L),
         (4L, "u2", 40L), (5L, "u1", 50L)).toDF("id", "owner", "qty")
       graft.sources.Sinks.insertRows(s, dir, rows)
@@ -1997,8 +1987,7 @@ object SparkEntry {
       // embedded Derby (ref enhanced_internal_db_service.py:475-510);
       // the numeric predicate is pushed to the database (PlanSpec
       // asserts PushedFilters on this exact shape)
-      val dir = java.nio.file.Files.createTempDirectory("graft_derby_").toString
-      val url = graft.sources.JdbcSource.derbyUrl(dir)
+      val url = EngineState.of(s).newDerbyUrl("s2_jdbc_")
       graft.sources.JdbcSource.writeTable(t(s, d, "nation"), url, "nation")
       graft.sources.JdbcSource.readTable(s, url, "nation")
         .filter(col("n_regionkey") < 3)
@@ -2092,8 +2081,7 @@ object SparkEntry {
     "index_append_dedup" -> ((s, _) => {
       // incremental add then idempotent re-ingest: append a re-ingested
       // subset, exact-dedup by content hash (ref rag_service.py:86-95)
-      val dir = java.nio.file.Files.createTempDirectory("graft_apdedup_")
-        .toString + "/idx"
+      val dir = EngineState.of(s).newDir("apdedup_") + "/idx"
       val k = Fixtures.knowledge(s)
       val schema = Ingest.inferSchema(k.columns.toSeq)
       val idx = Ingest.buildIndex(k, schema, "knowledge", dim = 64)

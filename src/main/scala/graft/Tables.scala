@@ -19,30 +19,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // loaded-table memo: spark.read.parquet re-lists the directory and
-  // re-reads footers on every call, a fixed ~50-100 ms tax per query
-  // that a 100+-query suite pays once per query. DataFrames are
-  // immutable plans, so sharing one per (session, dir, table) is free.
-  // The map holds STRONG references — a stopped session stays pinned
-  // until [[invalidate]] — acceptable for the one-session-per-process
-  // mains and the shared test session; an embedding app cycling many
-  // sessions should call invalidate(spark) on teardown.
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  /** Drop every memoized plan for `spark` (call when stopping a
-    * session the process will outlive). */
-  def invalidate(spark: SparkSession): Unit =
-    memo.keys.filter(_._1 eq spark).foreach(memo.remove)
-
   /** Sessions must set `spark.sql.legacy.parquet.nanosAsLong=true`
     * (see [[Sessions.builder]]): the testdata's `events.ts` is
     * TIMESTAMP(NANOS), which the vectorized reader otherwise rejects.
     * The nanos-long column is converted back to a microsecond
-    * timestamp here so downstream operators see a real TimestampType. */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    memo.getOrElseUpdate((spark, sfDir, name), {
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    * timestamp here so downstream operators see a real TimestampType.
+    * The plan is built once per table snapshot: `spark.read.parquet`
+    * lists the files and reads footers on every call. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    EngineState.of(spark).getOrBuild(("table", path), Seq(path)) {
+      val df = spark.read.parquet(path)
       df.schema.fields.find(_.name == "ts").map(_.dataType) match {
         case Some(LongType) =>
           // integer division: `/` is double division in Spark and nanos
@@ -57,7 +44,8 @@ object Tables {
           df.withColumn("ts", col("ts").cast("timestamp"))
         case _ => df
       }
-    })
+    }
+  }
 
   /** Load with a parallelism floor for CPU-bound per-row operators
     * (hashing, sketching, language-ID): the testdata tables are

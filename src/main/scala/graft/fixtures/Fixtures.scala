@@ -182,24 +182,18 @@ object Fixtures {
 
   /** The medication table exactly as it ARRIVES from JDBC (Derby
     * standing in for MariaDB with the same Spark arrival types) —
-    * pre-coercion. Memoized PER JVM (r15 advisory): the bench's
-    * timing passes call this on every `s2_mysql_types` execution, and
-    * the old per-call form booted a fresh embedded Derby instance in
-    * a new temp dir each time and never shut one down — instances and
-    * temp dirs accumulated in the long-lived bench JVM. One Derby
-    * boot per JVM; the returned DataFrame is a lazy JDBC scan (each
-    * execution still re-reads through JDBC — only the DATABASE is
-    * shared, and its DDL is fixed, so fixture semantics are
-    * unchanged). */
-  private val medicationUrlCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * pre-coercion. One Derby database per session, booted on first use
+    * and shut down with the session's [[graft.EngineState]]; the
+    * returned DataFrame is a lazy JDBC scan (each execution re-reads
+    * through JDBC — only the DATABASE is shared, and its DDL is fixed,
+    * so fixture semantics are unchanged). */
   def medicationArrival(spark: SparkSession): DataFrame = {
-    val url = medicationUrlCache.getOrElseUpdate("derby", {
-      val dir = Files.createTempDirectory("graft_derby_med_").toString
-      val u = graft.sources.JdbcSource.derbyUrl(dir)
+    val state = graft.EngineState.of(spark)
+    val url = state.getOrBuild("medicationDb") {
+      val u = state.newDerbyUrl("medication_db_")
       graft.sources.JdbcSource.execute(u, medicationDdl)
       u
-    })
+    }
     graft.sources.JdbcSource.readTable(spark, url, "medication")
   }
 

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -8,25 +9,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
+import graft.EngineState
 import graft.operators.VectorIndex
-
-/** Session registry of IVF-indexed table locations (SURVEY §4 ANN
-  * auto-swap). Registering a path is the caller's opt-in: "top-k
-  * cosine queries over this cluster-partitioned table may be answered
-  * approximately by probing". [[RewriteCosineTopKToProbes]] consults
-  * it at optimization time. */
-object VectorIndexRegistry {
-  private val reg = scala.collection.concurrent.TrieMap.empty[String, (VectorIndex.Model, Int)]
-
-  private def norm(path: String): String =
-    new org.apache.hadoop.fs.Path(path).toUri.getPath
-
-  def register(path: String, model: VectorIndex.Model, nprobe: Int): Unit =
-    reg.put(norm(path), (model, nprobe))
-  def unregister(path: String): Unit = reg.remove(norm(path))
-  def lookup(rootPaths: Seq[String]): Option[(VectorIndex.Model, Int)] =
-    rootPaths.flatMap(p => reg.get(norm(p))).headOption
-}
 
 /** Optimizer rule: rewrite `ORDER BY cosine(emb, <literal query>) DESC
   * LIMIT k` over a REGISTERED cluster-partitioned table into an
@@ -39,14 +23,17 @@ object VectorIndexRegistry {
   * caller calling it.
   *
   * The swap changes results (approximate!), so it NEVER fires on its
-  * own: only tables explicitly registered in [[VectorIndexRegistry]]
-  * participate — registration is the recall opt-in, and the recall is
-  * pinned by the `ann_autoswap` oracle exactly like `ann_ivf`'s.
+  * own: only tables registered in the session's engine state
+  * ([[graft.EngineState.registerIndex]]) participate — registration is
+  * the recall opt-in, and the recall is pinned by the `ann_autoswap`
+  * oracle exactly like `ann_ivf`'s. A registration is visible to its
+  * own session only.
   *
-  * Injected by `Sessions.extensions` via `injectOptimizerRule` (runs
-  * in the fixed-point operator batch; the injected Filter is pushed to
-  * the scan by the surrounding PushDownPredicates iterations). */
-object RewriteCosineTopKToProbes extends Rule[LogicalPlan] {
+  * Injected per session by `Sessions.extensions` via
+  * `injectOptimizerRule` (runs in the fixed-point operator batch; the
+  * injected Filter is pushed to the scan by the surrounding
+  * PushDownPredicates iterations). */
+final case class RewriteCosineTopKToProbes(session: SparkSession) extends Rule[LogicalPlan] {
 
   /** Strip order-preserving wrappers (round/cast keep DESC order up to
     * rounding ties — and the probe restriction is the approximation
@@ -125,6 +112,6 @@ object RewriteCosineTopKToProbes extends Rule[LogicalPlan] {
           .asInstanceOf[AttributeReference]
         (cluster, fs.location.rootPaths.map(_.toUri.getPath))
     }.flatMap { case (cluster, roots) =>
-      VectorIndexRegistry.lookup(roots).map { case (m, np) => (cluster, m, np) }
+      EngineState.of(session).indexFor(roots).map { case (m, np) => (cluster, m, np) }
     }
 }

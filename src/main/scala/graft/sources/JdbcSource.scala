@@ -22,23 +22,20 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object JdbcSource {
 
-  /** Derby reads `derby.system.home` ONCE at engine boot, so it must
-    * be set process-wide before the first connection — a per-call
-    * setProperty is ignored for later callers and races under
-    * concurrent benches/specs. One scratch dir per JVM keeps the
-    * derby.log out of the repo for every caller. */
-  private lazy val derbyHome: String = {
-    val home = java.nio.file.Files
-      .createTempDirectory("graft_derby_home_").toString
-    System.setProperty("derby.system.home", home)
-    home
-  }
+  /** Derby's error log goes to [[derbyLog]] instead of a `derby.log`
+    * file in the working dir. Derby reads the setting once, when its
+    * engine boots, so it is set before the first connection. */
+  private lazy val quietDerby: Unit =
+    System.setProperty("derby.stream.error.method", "graft.sources.JdbcSource.derbyLog")
 
-  /** Embedded-Derby URL rooted at `dir` (created on first use). The
-    * database directory is caller-scoped; the engine-wide log home is
-    * initialized once via [[derbyHome]]. */
+  /** Derby's error log sink (named by [[quietDerby]]; Derby calls it by
+    * reflection): discarded, since every failure also reaches the
+    * caller as a `SQLException`. */
+  def derbyLog: java.io.OutputStream = java.io.OutputStream.nullOutputStream()
+
+  /** Embedded-Derby URL rooted at `dir` (created on first use). */
   def derbyUrl(dir: String): String = {
-    derbyHome // force the one-time process-scoped init
+    quietDerby
     s"jdbc:derby:$dir/db;create=true"
   }
 

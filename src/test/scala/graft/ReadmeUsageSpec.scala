@@ -21,12 +21,13 @@ class ReadmeUsageSpec extends SparkSpec {
     val schema = Ingest.inferSchema(docs.columns.toSeq) // finds id/title/text cols
     val index = Ingest.buildIndex(docs, schema, saveName = "kb", dim = 256)
     val hits = SearchPipeline.search(index, "climate research data", topK = 5, dim = 256)
-    // hits: (save_name, chunk_id, doc_id, ..., content, score, marker "S1"..)
+    // hits: (chunk_id, doc_id, title, oo, content, metadata, score, marker "S1"..)
     // --- end README ---
     assert(index.columns.contains("embedding"))
     val rows = hits.collect()
     assert(rows.length <= 5)
-    assert(hits.columns.contains("marker"))
+    assert(hits.columns.toSeq == Seq("chunk_id", "doc_id", "title", "oo", "content",
+      "metadata", "score", "marker"))
   }
 
   test("README example 2: near-duplicate detection and dedup clusters") {

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * table answers `ORDER BY cosine DESC LIMIT k` by probing — the rule
   * must inject the cluster predicate (→ partition pruning at the
   * scan), produce exactly searchApprox's results, and never fire
-  * without registration or over an explicit cluster predicate. */
+  * without registration (in this session) or over an explicit cluster
+  * predicate. */
 class RewriteCosineTopKToProbesSpec extends SparkSpec {
 
   private lazy val dim = 8
@@ -23,7 +24,7 @@ class RewriteCosineTopKToProbesSpec extends SparkSpec {
     val m = VectorIndex.train(corpus.toDF(), "embedding", k = 4, maxIter = 10)
     val dir = java.nio.file.Files.createTempDirectory("graft_swapspec_").toString
     VectorIndex.buildAndWrite(corpus.toDF(), "embedding", m, dir)
-    VectorIndexRegistry.register(dir, m, nprobe = 2)
+    graft.EngineState.of(spark).registerIndex(dir, m, nprobe = 2)
     (dir, m)
   }
   private lazy val q = graft.ingest.HashEmbedder.embed("doc 7", dim)
@@ -85,6 +86,24 @@ class RewriteCosineTopKToProbesSpec extends SparkSpec {
     // the user's own equality survives; no probe filter is stacked
     assert(!probed(optimized) && optimized.contains("(cluster#"), optimized)
     assert(ScanFiles.read(df) == ScanFiles.under(indexPath, Seq(0)))
+  }
+
+  test("a registration is per session: a newSession() does not swap") {
+    import spark.implicits._
+    val other = spark.newSession()
+    val df = topk(other.read.parquet(indexPath))
+    val optimized = df.queryExecution.optimizedPlan.toString
+    assert(!probed(optimized), optimized)
+    // and still answers exactly (top 5 of all scores, sorted on the
+    // driver), over every cluster directory
+    val exact = other.read.parquet(indexPath)
+      .select(col("vec_id"), cosineFast(col("embedding"), lit(q)).as("s"))
+      .as[(Long, Double)].collect().toSeq
+      .sortBy { case (id, sc) => (-sc, id) }.take(5).map(_._1)
+    assert(df.select("vec_id").as[Long].collect().toSeq == exact)
+    assert(ScanFiles.read(df) == ScanFiles.under(indexPath, 0 until 4))
+    // the registering session still swaps
+    assert(probed(topk(spark.read.parquet(indexPath)).queryExecution.optimizedPlan.toString))
   }
 
   test("ascending order never swaps (probing nearest clusters would be wrong)") {
