@@ -5,7 +5,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -19,9 +20,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Usage: sbt "runMain graft.ProfileQuery q1 q2 ..."
   *
   * Per rep it prints the wall (DataFrame construction included),
-  * construction time, Spark jobs, the union of the job intervals and
-  * tasks. Construction is timed on its own because eager operators
-  * (bitmapSemiJoin, denseLookupJoin) collect and build at construction.
+  * construction time, Spark jobs, the union of the job intervals,
+  * stages and tasks. Construction is timed on its own because eager
+  * operators (bitmapSemiJoin, denseLookupJoin) collect and build at
+  * construction.
   * `wall - job_union` is driver-only time: planning, eager builds
   * between jobs, broadcast collect/build, commit. On the last rep it
   * prints the executed plan with every operator's non-zero SQL metrics.
@@ -31,7 +33,7 @@ object ProfileQuery {
   /** One measured run. `plan` is the physical plan of the write that
     * actually executed, as reported to a QueryExecutionListener. */
   final case class Rep(wallSec: Double, constructSec: Double, jobs: Int,
-                       jobUnionSec: Double, tasks: Int, plan: SparkPlan)
+                       jobUnionSec: Double, stages: Int, tasks: Int, plan: SparkPlan)
 
   /** Total time covered by the union of `[start, end]` intervals, in
     * the intervals' unit. Jobs overlap when broadcast stages run
@@ -50,12 +52,14 @@ object ProfileQuery {
     * construction. */
   def measure(spark: SparkSession)(mk: => DataFrame): Rep = {
     val jobs = new ConcurrentHashMap[Int, (Long, Long)]()
-    val tasks = new AtomicInteger
+    val stages, tasks = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.put(j.jobId, (j.time, -1L))
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
         jobs.computeIfPresent(j.jobId, (_, v) => (v._1, j.time))
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         tasks.incrementAndGet()
     }
@@ -80,7 +84,7 @@ object ProfileQuery {
       val qe = Option(executed.get).getOrElse(
         sys.error("no finished query execution was reported for the write"))
       Rep(wallSec, constructSec, jobs.size, unionLength(ended) / 1e3,
-        tasks.get, qe.executedPlan)
+        stages.get, tasks.get, qe.executedPlan)
     } finally {
       spark.listenerManager.unregister(qeListener)
       spark.sparkContext.removeSparkListener(listener)
@@ -144,7 +148,7 @@ object ProfileQuery {
         val r = measure(spark)(fn(spark, sfDir))
         println(f"[profile] $name rep$i: wall=${r.wallSec}%.3f s " +
           f"construct=${r.constructSec}%.3f s jobs=${r.jobs} " +
-          f"job_union=${r.jobUnionSec}%.3f s tasks=${r.tasks}")
+          f"job_union=${r.jobUnionSec}%.3f s stages=${r.stages} tasks=${r.tasks}")
         r
       }
       val times = runs.map(_.wallSec).sorted

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.plans.{CosineSimilarity, DotProduct, L2Distance, RewriteCosineTopKToProbes, RewriteHofCosine}
+import graft.plans.{CosineSimilarity, DotProduct, L2Distance, RewriteCosineTopKToProbes, RewriteHofCosine,
+  TopKTailCollect}
 
 /** Single place for the engine's session config so Verify, Bench and
   * tests agree: UTC (hash parity with the DuckDB oracle), shuffle
@@ -15,7 +16,9 @@ import graft.plans.{CosineSimilarity, DotProduct, L2Distance, RewriteCosineTopKT
 object Sessions {
 
   /** Engine extensions: native codegen expressions registered into the
-    * function registry (callable from SQL and via `call_function`). */
+    * function registry (callable from SQL and via `call_function`), the
+    * two optimizer rules, and the top-k stage's one-stage collect
+    * ([[TopKTailCollect]]). */
   val extensions: SparkSessionExtensions => Unit = { ext =>
     ext.injectFunction((
       FunctionIdentifier("graft_cosine"),
@@ -31,6 +34,7 @@ object Sessions {
       (children: Seq[Expression]) => L2Distance(children.head, children(1))))
     ext.injectOptimizerRule(_ => RewriteHofCosine)
     ext.injectOptimizerRule(RewriteCosineTopKToProbes(_))
+    ext.injectColumnar(_ => TopKTailCollect)
   }
 
   /** Spark's codegen cache size (`spark.sql.codegen.cache.maxEntries`,

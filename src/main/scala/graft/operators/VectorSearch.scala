@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.VectorFunctions._
+import graft.plans.TopKTail
 
 /** The vector-QA read path (SURVEY.md §2.10 / §3.1): k-NN top-k, then
   * Scala stages over its rows: metric normalization (A12) → margin+floor
@@ -26,8 +27,11 @@ import graft.functions.VectorFunctions._
   *    At 100 TB this is the exact/oracle path; `VectorIndex` (IVF
   *    partition pruning) is the approximate scale path.
   *  - Only the top-k is distributed: [[overTopK]] runs a stage over
-  *    its one partition. Stages order scores as Spark SQL does (NaN
-  *    highest, -0.0 = 0.0, null last under desc).
+  *    its rows. Collected, that is one stage of light tasks (a partial
+  *    top-k per partition) merged on the driver, where the stage runs;
+  *    under another plan or a write it runs in the top-k's one
+  *    partition. Stages order scores as Spark SQL does (NaN highest,
+  *    -0.0 = 0.0, null last under desc).
   */
 object VectorSearch {
 
@@ -45,12 +49,20 @@ object VectorSearch {
   /** `df`'s top `k` rows by `order`, as one local Seq in that order,
     * through `f`: the rows `f` returns, under `schema(df.schema)`. A lazy
     * plan over `df`'s scan (`inputFiles` is `df`'s); `coalesce(1)` keeps
-    * one partition where the optimizer drops a limit, so `f` runs once. */
+    * one partition where the optimizer drops a limit, so `f` runs once.
+    *
+    * `f` goes in as a [[graft.plans.TopKTail]], the mark of the
+    * `Sessions.extensions` rule [[graft.plans.TopKTailCollect]]: with
+    * it, `collect()` on this plan runs the top-k as one stage (a
+    * partial top-k per task, merged on the driver) and `f` on the
+    * driver, through the same row encoders. Any plan above it, a write
+    * or a session without the extension runs the two-stage form: the
+    * top-k shuffled to one partition and `f` in its task. */
   def overTopK(df: DataFrame, order: Seq[Column], k: Int,
                schema: StructType => StructType = identity)
               (f: Seq[Row] => Seq[Row]): DataFrame =
     df.orderBy(order: _*).limit(k).coalesce(1).as(rowEncoder(df.schema))
-      .mapPartitions(rows => f(rows.toVector).iterator)(rowEncoder(schema(df.schema)))
+      .mapPartitions(TopKTail(f))(rowEncoder(schema(df.schema)))
 
   /** Spark's Row encoder with maps read as ListMaps, which keep their
     * entry order (a plain immutable Map past four entries does not). */

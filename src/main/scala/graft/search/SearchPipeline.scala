@@ -21,8 +21,11 @@ import graft.operators.VectorSearch
   *
   * Scale: the k-NN is a pruned scan + TakeOrderedAndProject (top
   * fetch_k); everything after is one Scala pass over those rows
-  * ([[VectorSearch.overTopK]]). The index DataFrame is partitioned by
-  * save_name, so the save-name filter is partition pruning, not a scan.
+  * ([[VectorSearch.overTopK]]). `search(...).collect()` is one stage of
+  * one light task per index partition: each takes its partition's
+  * top fetch_k, the driver merges them and runs the pass. The index
+  * DataFrame is partitioned by save_name, so the save-name filter is
+  * partition pruning, not a scan.
   */
 object SearchPipeline {
 

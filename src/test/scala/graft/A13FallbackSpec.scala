@@ -15,7 +15,7 @@ class A13FallbackSpec extends SparkSpec {
   private def runA13(dir: String) = SparkEntry.queries("a13_metrics")(spark, dir)
 
   test("map-literal path and broadcast-join fallback agree on the group-mean metrics") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_a13_").toString
+    val dir = tempDir("graft_a13_")
     // 1500 distinct event types forces the fallback; value = f(type)
     // exactly, so the group-mean predictor is perfect → rmse 0, smape 0
     (0 until 6000).map { i =>
@@ -28,7 +28,7 @@ class A13FallbackSpec extends SparkSpec {
 
     // same data collapsed to 3 types → fast path; same perfect-predictor
     // invariant must hold there too
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_a13_").toString
+    val dir2 = tempDir("graft_a13_")
     (0 until 6000).map { i =>
       (s"type_${i % 3}", (i % 3).toDouble * 0.5)
     }.toDF("event_type", "value")
@@ -38,7 +38,7 @@ class A13FallbackSpec extends SparkSpec {
   }
 
   test("fallback keeps null-handling semantics: null event_type rows dropped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_a13_").toString
+    val dir = tempDir("graft_a13_")
     val typed = (0 until 3000).map { i =>
       (s"type_${i % 1200}", (i % 1200).toDouble)
     }

@@ -24,7 +24,7 @@ class EngineStateSpec extends SparkSpec {
   }
 
   test("a table rewritten under the same dir gives new results from every cached path") {
-    val dir = Files.createTempDirectory("engine_state_spec_").toString
+    val dir = tempDir("engine_state_spec_")
     try withSession { s =>
       import s.implicits._
       val emb = s.read.parquet(s"$sf/embeddings.parquet")

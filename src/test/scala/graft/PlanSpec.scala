@@ -144,7 +144,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("JDBC scan pushes the numeric predicate to the database (s2)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_derby_plan_").toString
+    val tmp = tempDir("graft_derby_plan_")
     val url = graft.sources.JdbcSource.derbyUrl(tmp)
     graft.sources.JdbcSource.writeTable(
       Tables.load(spark, dir, "nation"), url, "nation")

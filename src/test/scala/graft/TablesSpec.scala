@@ -6,7 +6,7 @@ package graft
 class TablesSpec extends SparkSpec {
 
   test("inputBytes: a plain path and a file:// URI give equal, non-zero sizes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables_").toString
+    val dir = tempDir("graft_tables_")
     spark.range(2000).write.parquet(s"$dir/t.parquet")
     val local = new java.io.File(s"$dir/t.parquet").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length()).sum

@@ -64,7 +64,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("index round-trips through partitioned parquet (S9/S10)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_").toString
+    val dir = tempDir("graft_idx_")
     val schema = Ingest.inferSchema(Fixtures.knowledge(spark).columns.toSeq)
     Ingest.buildIndex(Fixtures.knowledge(spark), schema, "knowledge", dim = 64)
       .write.mode("overwrite").partitionBy("save_name").parquet(dir)

@@ -1,7 +1,5 @@
 package graft.ingest
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.fixtures.Fixtures
 import org.apache.spark.sql.functions._
@@ -16,9 +14,9 @@ class StreamingIngestSpec extends SparkSpec {
   import spark.implicits._
 
   test("file-stream ingest appends chunks+embeddings to the index") {
-    val inDir = Files.createTempDirectory("graft_sin_").toString
-    val outDir = Files.createTempDirectory("graft_sout_").toString + "/index"
-    val ckDir = Files.createTempDirectory("graft_sck_").toString
+    val inDir = tempDir("graft_sin_")
+    val outDir = tempDir("graft_sout_") + "/index"
+    val ckDir = tempDir("graft_sck_")
 
     val schema = StructType(Seq(
       StructField("id", IntegerType), StructField("term", StringType),

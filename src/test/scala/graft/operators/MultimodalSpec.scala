@@ -77,7 +77,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("metadata-only queries prune the blob column out of the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mm_").toString
+    val dir = tempDir("graft_mm_")
     assets.write.mode("overwrite").parquet(dir)
     val p = spark.read.parquet(dir).select("asset_id", "media_type")
       .queryExecution.executedPlan.toString

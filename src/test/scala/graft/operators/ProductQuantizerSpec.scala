@@ -109,7 +109,7 @@ class ProductQuantizerSpec extends SparkSpec {
   test("ADC candidate scan never reads the vector column") {
     val ivf = VectorIndex.train(planted, "embedding", k = 8)
     val pqm = ProductQuantizer.train(planted, "embedding", m = 4)
-    val path = java.nio.file.Files.createTempDirectory("pqidx").toString
+    val path = tempDir("pqidx")
     ProductQuantizer.encodeDf(
         VectorIndex.assign(planted, "embedding", ivf), "embedding", pqm)
       .write.mode("overwrite").partitionBy("cluster").parquet(path)

@@ -174,7 +174,7 @@ class RelationalSpec extends SparkSpec {
     // and the bitmap plan contains NO join operator — the probe is a
     // scan-fused filter (the whole point of the operator). A parquet
     // fact keeps Catalyst from constant-folding the LocalRelation.
-    val tmp = java.nio.file.Files.createTempDirectory("bsj").toString + "/fact"
+    val tmp = tempDir("bsj") + "/fact"
     fact.write.mode("overwrite").parquet(tmp)
     val plan = Relational.bitmapSemiJoin(spark.read.parquet(tmp), keys, "k", "kk")
       .queryExecution.executedPlan.toString
@@ -194,7 +194,7 @@ class RelationalSpec extends SparkSpec {
     assert(out.select("p").as[String].collect().toSet == Set("a", "b"))
     // plan pin needs a parquet fact (a LocalRelation would be
     // constant-folded through the filter at optimization time)
-    val tmp = java.nio.file.Files.createTempDirectory("lsj").toString + "/fact"
+    val tmp = tempDir("lsj") + "/fact"
     fact.write.mode("overwrite").parquet(tmp)
     val plan = Relational.bitmapSemiJoin(spark.read.parquet(tmp), keys, "k", "kk")
       .queryExecution.executedPlan.toString
@@ -316,7 +316,7 @@ class RelationalSpec extends SparkSpec {
     assert(viaLookup == viaJoin)
     assert(viaLookup.nonEmpty)
     // join-free plan pin on a parquet fact
-    val tmp = java.nio.file.Files.createTempDirectory("dlj").toString + "/fact"
+    val tmp = tempDir("dlj") + "/fact"
     fact.write.mode("overwrite").parquet(tmp)
     val plan = Relational.denseLookupJoin(spark.read.parquet(tmp), dim, "k", "dk", "tag")
       .queryExecution.executedPlan.toString
@@ -500,7 +500,7 @@ class RelationalSpec extends SparkSpec {
     }
     // parquet-backed keys: the realistic shape (two spark.read calls
     // canonicalize to the same plan via attribute-id normalization)
-    val dir = java.nio.file.Files.createTempDirectory("bsjc").toString
+    val dir = tempDir("bsjc")
     spark.range(50).select(col("id").as("kk")).write.parquet(dir + "/keys")
     spark.sparkContext.addSparkListener(listener)
     try {

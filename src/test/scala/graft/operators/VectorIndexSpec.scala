@@ -44,7 +44,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("partitioned round-trip preserves cluster pruning") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
+    val path = tempDir("graft_ivf_")
     VectorIndex.buildAndWrite(emb.filter($"vec_id" =!= 0), "embedding", model, path)
     val back = spark.read.parquet(path)
     val approx = VectorIndex.searchApprox(back, model, "vec_id", "embedding",

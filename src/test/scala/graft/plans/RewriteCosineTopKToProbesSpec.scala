@@ -22,7 +22,7 @@ class RewriteCosineTopKToProbesSpec extends SparkSpec {
         graft.ingest.HashEmbedder.embedUdf(dim)(
           concat(lit("doc "), col("id"))).as("embedding"))
     val m = VectorIndex.train(corpus.toDF(), "embedding", k = 4, maxIter = 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft_swapspec_").toString
+    val dir = tempDir("graft_swapspec_")
     VectorIndex.buildAndWrite(corpus.toDF(), "embedding", m, dir)
     graft.EngineState.of(spark).registerIndex(dir, m, nprobe = 2)
     (dir, m)
@@ -66,15 +66,17 @@ class RewriteCosineTopKToProbesSpec extends SparkSpec {
   test("no registration, no swap: unregistered copy returns exact top-k") {
     import spark.implicits._
     val plain = spark.read.parquet(indexPath)
-    val copy = java.nio.file.Files.createTempDirectory("graft_swapspec_un_").toString
+    val copy = tempDir("graft_swapspec_un_")
     plain.write.mode("overwrite").partitionBy("cluster").parquet(copy)
     val df = topk(spark.read.parquet(copy))
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(!probed(optimized) && !optimized.contains("Filter"), optimized)
-    val exact = plain
+    // the baseline reads the registered index where it is not registered
+    val baseline = spark.newSession().read.parquet(indexPath)
       .select(col("vec_id"), cosineFast(col("embedding"), lit(q)).as("s"))
       .orderBy(desc("s"), col("vec_id")).limit(5)
-      .select("vec_id").as[Long].collect().toSeq
+    assert(!probed(baseline.queryExecution.optimizedPlan.toString))
+    val exact = baseline.select("vec_id").as[Long].collect().toSeq
     assert(df.select("vec_id").as[Long].collect().toSeq == exact)
     // every cluster directory is read
     assert(ScanFiles.read(df) == ScanFiles.under(copy, 0 until 4))

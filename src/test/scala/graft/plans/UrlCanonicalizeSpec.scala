@@ -97,7 +97,7 @@ class UrlCanonicalizeSpec extends SparkSpec {
     val out = df.select(UrlCanonical.canonicalCol(col("url")).as("c")).collect()
     assert(out.map(_.isNullAt(0)).toSeq == Seq(false, true))
     // plan pin on a parquet input (LocalRelation would constant-fold)
-    val tmp = java.nio.file.Files.createTempDirectory("urlc").toString + "/u"
+    val tmp = tempDir("urlc") + "/u"
     Seq("https://www.A.com/x?utm_a=1").toDF("url")
       .write.mode("overwrite").parquet(tmp)
     val plan = spark.read.parquet(tmp)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class IndexPruningSpec extends SparkSpec {
 
   test("save_name filter prunes partitions in the physical scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_").toString
+    val dir = tempDir("graft_pr_")
     val k = Fixtures.knowledge(spark)
     val schema = Ingest.inferSchema(k.columns.toSeq)
     Seq("col_a", "col_b").foreach { name =>

@@ -18,7 +18,7 @@ import graft.ingest.Ingest
 class SearchLazinessSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("search over a parquet index is lazy, reads the index's files, runs no Window or ScalaUDF") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lazy_").toString + "/index"
+    val dir = tempDir("graft_lazy_") + "/index"
     val k = Fixtures.knowledge(spark)
     Ingest.buildIndex(k, Ingest.inferSchema(k.columns.toSeq), "knowledge", dim = 64)
       .write.partitionBy("save_name").parquet(dir)

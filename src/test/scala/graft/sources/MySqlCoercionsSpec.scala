@@ -99,7 +99,7 @@ class MySqlCoercionsSpec extends SparkSpec {
   }
 
   test("Derby round trip: TIME/SMALLINT/DATE arrive and coerce like the MariaDB contract") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_derby_spec_").toString
+    val dir = tempDir("graft_derby_spec_")
     val url = JdbcSource.derbyUrl(dir)
     JdbcSource.execute(url, Seq(
       "CREATE TABLE med (id INT, t TIME, f SMALLINT, d DATE)",

@@ -7,7 +7,7 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val path = java.nio.file.Files.createTempDirectory("graft_sink_").toString + "/t"
+    val path = tempDir("graft_sink_") + "/t"
     Seq((1L, "u1", "a", 10.0), (2L, "u1", "b", 20.0), (3L, "u2", "c", 30.0))
       .toDF("id", "user_id", "name", "amount")
       .write.parquet(path)

@@ -49,7 +49,7 @@ class StreamingDedupSpec extends SparkSpec {
     val q = deduped.writeStream.format("memory").queryName("dedup_out_rocks")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("rocks_ckpt").toString)
+        tempDir("rocks_ckpt"))
       .start()
     try {
       def t(m: Int) = java.sql.Timestamp.valueOf(f"2025-01-01 10:$m%02d:00")
