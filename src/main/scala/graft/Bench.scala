@@ -498,9 +498,7 @@ object Bench {
       }.mkString("{", ",", "}")
       mog.unpersist(); mIdx.unpersist()
 
-      // 100k point (round-11 judge item #4: VectorBench computes
-      // N ∈ {10k, 100k} and BASELINE.md promises both, but no
-      // committed artifact ever carried the 100k number) — same
+      // 100k point (BASELINE.md promises N ∈ {10k, 100k}) — same
       // corpus construction and measurements at 10× the rows.
       val corpus1e5 = spark.range(100000)
         .select(col("id").as("vec_id"),
@@ -795,13 +793,8 @@ object Bench {
         // and `n` reports that intersection.
         val sideEffecting = Set("s2_jdbc", "s10_append", "s11_crud",
           "index_append_dedup", "ingest_chunks", "ingest_bulk")
-        // real = not a VALUES pin; a WITH-prefixed oracle may still
-        // carry a VALUES table as an auxiliary CTE (SketchOracleSql's
-        // LSH seed table) and is a genuine recomputation
-        val realNames = SparkEntry.oracleSql
-          .filterNot { case (_, sql) =>
-            sql.contains("FROM (VALUES") && !sql.startsWith("WITH") }
-          .keySet -- sideEffecting
+        val realNames =
+          SparkEntry.specs.filterNot(_.pinned).map(_.name).toSet -- sideEffecting
         val sparkPer = good.map(r => r.name -> r.sec).toMap
         val duckPer = "\"([a-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r
           .findAllMatchIn("\"queries\":\\s*\\{([^}]*)\\}".r

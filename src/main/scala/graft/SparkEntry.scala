@@ -1,19 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-import graft.operators.{Dedup, Multimodal, Pii, Relational, TextAnalysis, TimeSeriesOps, VectorSearch}
-import graft.functions.TextFunctions
-import graft.functions.VectorFunctions
-import graft.fixtures.Fixtures
-import graft.ingest.Ingest
-import graft.search.SearchPipeline
-import graft.streaming.SentenceSegmenter
+import graft.operators.{TextAnalysis, VectorSearch}
+import graft.catalog._
+import graft.catalog.Helpers.{embeddingsPath, overKnn, queryVec, t, tp}
 
-/** Driver contract (see /root/repo/SURVEY.md §2 for operator IDs).
+/** Driver contract (see SURVEY.md §2 for operator IDs).
   *
   * Every query is deterministic: explicit ORDER BY with unique
   * tie-breakers, doubles rounded, timestamps cast to DATE — required
@@ -21,29 +16,6 @@ import graft.streaming.SentenceSegmenter
   * oracle SQL exactly (driver sorts columns by name before hashing).
   */
 object SparkEntry {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Parallel-floor load for CPU-bound per-row pipelines (hashing,
-    * sketching, chunking, language-ID): the testdata parquet is
-    * single-row-group, i.e. a one-task scan — see
-    * [[Tables.loadParallel]]. */
-  private def tp(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.loadParallel(s, dir, name)
-
-  /** Embeddings path of `dir`: the input of every entry derived from it. */
-  private def embeddingsPath(dir: String): String = s"$dir/embeddings.parquet"
-
-  /** Query embedding looked up once on the driver (single-row lookup,
-    * then inlined as a plan literal — broadcast-by-plan, no shuffle).
-    * Several queries share the same probe vector and must not each pay
-    * a lookup job. */
-  private def queryVec(s: SparkSession, dir: String, id: Long): Array[Float] =
-    EngineState.of(s).getOrBuild(("queryVec", dir, id), Seq(embeddingsPath(dir))) {
-      t(s, dir, "embeddings").filter(col("vec_id") === id)
-        .select("embedding").head.getSeq[Float](0).toArray
-    }
-
   /** The declarative top-k-cosine query over `d`'s cluster-partitioned
     * IVF index, built once per embeddings snapshot into the session's
     * temp root and registered for the plan-level probe swap (the build
@@ -96,41 +68,6 @@ object SparkEntry {
         .limit(8)
         .select(key).collect().map(_.get(0)).toSeq
     }
-
-  /** The trained-model queries' shared input — cp949 fruit CSV →
-    * daily resample → dense spine → gap-limited interpolation(14) —
-    * computed ONCE per session and pinned as a LOCAL relation
-    * (~1.2k rows of (fruit, day, avg_value): a bounded driver
-    * scalar). forecast_ridge and forecast_ar both consume this
-    * chain; re-deriving it per query re-ran ~6 exchange-
-    * materialization jobs of pure fixed cost per invocation.
-    * Planning from a LocalRelation leaves each query measuring its
-    * MODEL fit + scoring, which is the thing the query exists to
-    * measure. forecast_pipeline keeps deriving the chain live — it IS
-    * the pipeline query, so the prep is its payload. */
-  private def forecastInterp(s: SparkSession): DataFrame =
-    EngineState.of(s).getOrBuild("forecastInterp") {
-      val daily = TimeSeriesOps.dailyResample(
-        Fixtures.fruitPrices(s).withColumn("fruit", lit("banana")),
-        Seq(col("fruit")), col("date").cast("timestamp"), col("price"))
-      val spine = TimeSeriesOps.toDailySpine(daily, Seq("fruit"), "day", "avg_value")
-      val interp = TimeSeriesOps.interpolateGapLimited(
-        spine, Seq("fruit"), "day", "avg_value", maxGap = 14)
-        .filter(col("avg_value").isNotNull)
-      val rows = interp.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), interp.schema)
-    }
-
-  /** Deterministic output order for SMALL (group-summary) results
-    * without the range-exchange a global orderBy schedules: a global
-    * sort runs an extra boundary-sampling job plus a range shuffle,
-    * pure fixed cost when the result is an enum-sized summary
-    * (~0.1 s/query at the x100 point). One output partition, sorted
-    * within, is the identical row order when the sort keys are the
-    * (unique) group keys. ONLY for results bounded by a small key
-    * space — never for row-scale output. */
-  private def orderedSmall(df: DataFrame, cols: String*): DataFrame =
-    df.coalesce(1).sortWithinPartitions(cols.map(col): _*)
 
   /** Pre-computes the per-table key statistics a production corpus
     * load would build at registration time (the catalog-histogram
@@ -185,20 +122,6 @@ object SparkEntry {
         graft.operators.Forecast.predictLinear(feats, beta))
   }
 
-  /** (vec_id, label, s = cosine against vec 0) of every other vector
-    * (shared prefix of the vector-pipeline queries). */
-  private def knnScores(s: SparkSession, dir: String): DataFrame = {
-    val q = lit(queryVec(s, dir, 0L))
-    t(s, dir, "embeddings").filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("label"),
-        VectorFunctions.cosineFast(col("embedding"), q).as("s"))
-  }
-
-  /** The top-k neighbors of vec 0 through a post-top-k stage `f`. */
-  private def overKnn(s: SparkSession, dir: String, k: Int)
-                     (f: Seq[Row] => Seq[Row]): DataFrame =
-    VectorSearch.overTopK(knnScores(s, dir), Seq(desc("s"), col("vec_id")), k)(f)
-
   /** Flagship: the §3.1 vector-QA pipeline (k-NN → margin → diversify
     * → context budget) on sf0.001. */
   def entry(spark: SparkSession): DataFrame = {
@@ -220,2514 +143,17 @@ object SparkEntry {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** §2.4 aggregates (A1–A7, A13) + TPC-H-Q1-style pricing summary. */
-  private val aggregates: Map[String, Q] = Map(
-    "a1_sum" -> ((s, d) =>
-      t(s, d, "lineitem").agg(
-        round(sum("l_extendedprice"), 2).as("total_revenue"),
-        round(sum("l_quantity"), 2).as("total_qty"))),
-    "a2_count" -> ((s, d) =>
-      t(s, d, "lineitem").agg(count(lit(1)).as("n_rows"))),
-    "a3_group_count" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n")).orderBy("l_returnflag")),
-    "a4_minmaxavg" -> ((s, d) =>
-      t(s, d, "part").agg(
-        round(min("p_retailprice"), 2).as("min_price"),
-        round(max("p_retailprice"), 2).as("max_price"),
-        round(avg("p_retailprice"), 2).as("avg_price"))),
-    "a5_histogram" -> ((s, d) =>
-      t(s, d, "part")
-        .withColumn("bucket", Relational.bucketize(col("p_size"), Seq(
-          "small" -> (col("p_size") < 10),
-          "medium" -> (col("p_size") < 25)), "large"))
-        .groupBy("bucket").agg(count(lit(1)).as("n")).orderBy("bucket")),
-    "a6_pricing_summary" -> ((s, d) => orderedSmall(
-      // r18 plan-headroom attempt (r17 judge item #5: the grouped agg
-      // added 1.92 s over its own bare scan at x1000): the two avg()s
-      // each carried their own (sum, count) buffer pair next to sums
-      // of the SAME columns — 8 aggregate buffer slots / 8 per-row
-      // update expressions for what is arithmetically 4. avg is
-      // derived post-agg as sum/count, value-identical to Average's
-      // own finish (same double accumulation, same null-skipping —
-      // lineitem qty/price are never null, and the sf0.01 hash gate
-      // re-proves it every round).
-      t(s, d, "lineitem").filter(col("l_shipdate") <= lit("2000-12-01").cast("date"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum("l_quantity").as("_sq"),
-          sum("l_extendedprice").as("_sp"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-            .as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .select(col("l_returnflag"), col("l_linestatus"),
-          round(col("_sq"), 2).as("sum_qty"),
-          round(col("_sp"), 2).as("sum_base_price"),
-          col("sum_disc_price"),
-          round(col("_sq") / col("count_order"), 4).as("avg_qty"),
-          round(col("_sp") / col("count_order"), 4).as("avg_price"),
-          col("count_order")),
-      "l_returnflag", "l_linestatus")),
-    "a7_daily_resample" -> ((s, d) =>
-      TimeSeriesOps.dailyResample(t(s, d, "events"), Seq.empty, col("ts"), col("value"))
-        .select(col("day"), round(col("avg_value"), 4).as("avg_value"))
-        .orderBy("day")),
-    "a13_metrics" -> ((s, d) => {
-      // group-mean predictor scored in TWO jobs: the per-type means
-      // are a bounded driver scalar (event taxonomies are enum-sized;
-      // loud require at 1000) folded into the scoring scan as a
-      // literal map, so the second pass is a bare scan+agg with no
-      // broadcast-exchange/join stages — measured 2.4× faster than
-      // the broadcast-join form at the 100× point (1.05 s → 0.44 s).
-      // High-cardinality key spaces (>1000 groups) fall back to the
-      // join form below — same semantics, one more exchange —
-      // instead of failing; the map-literal path stays the fast
-      // case. The fallback probes the aggregate's cardinality under a
-      // short-lived cache, then UNPERSISTS before returning — the
-      // probe cache must not outlive the call (bench reruns each
-      // query; a leaked MEMORY_AND_DISK copy per invocation
-      // accumulates for the session lifetime). Driver-safe group
-      // counts (≤1M rows of (string, double) ≈ tens of MB) collect
-      // to a local relation that broadcasts with zero recompute;
-      // beyond that it degrades to a plain shuffle join against the
-      // uncached aggregate — never an unbounded broadcast, never a
-      // leaked cache. Semantics match the inner join exactly: null
-      // event_type rows are dropped, null group means fall out of
-      // the map and yield null preds.
-      val e = t(s, d, "events")
-      val meansDf = e.groupBy("event_type").agg(avg("value").as("pred"))
-      val probed = meansDf.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val means = probed.limit(1001).collect()
-      val scored =
-        if (means.length > 1000) {
-          val cnt = probed.count()
-          val right =
-            if (cnt <= 1000000L) {
-              // driver-safe: pin the means as a LOCAL relation so the
-              // probe cache can be dropped now, not at session end
-              val local = probed.filter(col("event_type").isNotNull).collect()
-              probed.unpersist()
-              broadcast(s.createDataFrame(
-                java.util.Arrays.asList(local: _*), probed.schema))
-            } else {
-              // too big to hold anywhere but the cluster: shuffle-join
-              // the uncached aggregate (recomputed once at execution —
-              // the price of not leaking a session-lifetime cache)
-              probed.unpersist()
-              meansDf.filter(col("event_type").isNotNull)
-            }
-          e.filter(col("event_type").isNotNull)
-            .join(right, Seq("event_type"))
-            .select(col("value"), col("pred"))
-        } else {
-          probed.unpersist() // map literal already holds the groups
-          val entries = means.toSeq
-            .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-            .flatMap(r => Seq(lit(r.getString(0)), lit(r.getDouble(1))))
-          val predOf =
-            if (entries.isEmpty) lit(null).cast("double")
-            else map(entries: _*)(col("event_type"))
-          e.filter(col("event_type").isNotNull)
-            .select(col("value"), predOf.as("pred"))
-        }
-      scored
-        .agg(
-          round(TimeSeriesOps.rmse(col("value"), col("pred")), 4).as("rmse"),
-          round(TimeSeriesOps.r2Agg(col("value"), col("pred")), 6).as("r2"),
-          round(TimeSeriesOps.smape(col("value"), col("pred")), 4).as("smape"))
-    }),
-    "a9_longest_run" -> ((s, d) => {
-      // fused gaps-and-islands (no spine): ONE events scan — the
-      // spine-based form scanned+aggregated the corpus twice (bounds
-      // agg + calendar join) for identical results at daily grain;
-      // TimeSeriesOpsSpec pins the two forms equal
-      // r19, the a8 subset-partitioning trick: repartition on user_id
-      // BEFORE the daily agg — HashPartitioning(user_id) satisfies the
-      // aggregation's ClusteredDistribution(user_id, day), so the agg,
-      // the islands window, the island groupBy and the best-run window
-      // all ride ONE exchange (was two: agg on (user_id, day), then
-      // the window's re-shuffle on user_id). Map-side combine moves
-      // post-shuffle; acceptable behind the ~1 %-selective
-      // purchase × user_id<50 filter, same argument as a8.
-      val daily = t(s, d, "events")
-        .filter(col("event_type") === "purchase" && col("user_id") < 50)
-        .repartition(col("user_id"))
-        .groupBy(col("user_id"), TimeSeriesOps.utcDay(col("ts")).as("day"))
-        .agg(count(lit(1)).as("v"))
-      orderedSmall(TimeSeriesOps.longestConsecutiveRun(daily, Seq("user_id"), "day")
-        .select("user_id", "run_len", "run_start"), "user_id")
-    }),
-    "a14_budget" -> ((s, d) =>
-      // budget walk over the top-100 by length (its one partition)
-      VectorSearch.overTopK(t(s, d, "documents").select("doc_id", "n_chars"),
-          Seq(desc("n_chars"), col("doc_id")), 100)(rows =>
-          VectorSearch.spendBudget(rows,
-            r => Option(r.getAs[Number](1)).fold(0L)(_.longValue), 5000L).map(_._1))
-        .orderBy(desc("n_chars"), col("doc_id"))),
-  )
+  /** Every registered query, one record each (name, body, oracle SQL),
+    * family by family. A def, like the two views below: SparkEntry's
+    * initializer touches no family object, so no initialization cycle
+    * can form between them. */
+  def specs: Seq[QuerySpec] =
+    Aggregates.specs ++ Filters.specs ++ Joins.specs ++ Windows.specs ++
+      ScalarsAndSets.specs ++ LlmOps.specs ++ VectorOps.specs ++
+      TimeSeries.specs ++ EngineOps.specs ++ FixtureOps.specs ++
+      PipelineOps.specs ++ SourcesAndScalars.specs ++ SinksAndJdbc.specs
 
-  /** §2.1/§2.2 scans, projections, filters (S1, P1–P11). */
-  private val filters: Map[String, Q] = Map(
-    "s1_scan" -> ((s, d) =>
-      t(s, d, "customer").na.fill("", Seq("c_name"))
-        .select(col("c_custkey"), col("c_name").as("name"), col("c_mktsegment"))
-        .orderBy("c_custkey").limit(500)),
-    "p1_projection" -> ((s, d) =>
-      t(s, d, "customer")
-        .select(col("c_name"), round(col("c_acctbal"), 2).as("acctbal"))
-        .orderBy("c_name")),
-    "p2_rename" -> ((s, d) =>
-      t(s, d, "orders").filter(col("o_custkey") < 50)
-        .select(col("o_orderkey").as("order_id"), col("o_orderpriority").as("priority"))
-        .orderBy("order_id")),
-    "p3_eq_filter" -> ((s, d) =>
-      t(s, d, "orders").filter(col("o_orderstatus") === "F")
-        .select(col("o_orderkey"), col("o_custkey"),
-          round(col("o_totalprice"), 2).as("total_price"))
-        .orderBy("o_orderkey")),
-    "p4_conjunction" -> ((s, d) =>
-      t(s, d, "orders")
-        .filter(col("o_orderstatus") === "O" && col("o_totalprice") > 200000)
-        .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("total_price"))
-        .orderBy("o_orderkey")),
-    "p5_date_range" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .filter(col("l_shipdate") >= lit("1998-01-01").cast("date") &&
-          col("l_shipdate") < lit("1999-01-01").cast("date"))
-        .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 2).as("revenue"))),
-    "p6_keyword_or" -> ((s, d) =>
-      // r18: in-place case-folding scan (plans/ContainsIgnoreCase) —
-      // `contains(lower(text), kw)` materialized a lowered copy of the
-      // whole text corpus per keyword test (~most of the 1.3 s x1000
-      // wall); the codegen expression scans the original buffer,
-      // equivalence argued + fuzzed in ContainsIgnoreCaseSpec
-      t(s, d, "documents")
-        .filter(graft.plans.ContainsIgnoreCase.column(col("text"), "join") ||
-          graft.plans.ContainsIgnoreCase.column(col("text"), "window"))
-        .groupBy("lang").agg(count(lit(1)).as("n")).orderBy("lang")),
-    "p7_regex_parse" -> ((s, d) =>
-      t(s, d, "part")
-        .withColumn("brand_num",
-          regexp_extract(col("p_brand"), "([0-9]+)", 1).cast("int"))
-        .groupBy("brand_num").agg(count(lit(1)).as("n")).orderBy("brand_num")),
-    "p10_null_mask" -> ((s, d) =>
-      t(s, d, "events")
-        .filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy("event_type").agg(count(lit(1)).as("n")).orderBy("event_type")),
-    "p11_length_guard" -> ((s, d) =>
-      t(s, d, "documents").filter(col("n_chars") > 200)
-        .groupBy("source").agg(count(lit(1)).as("n"),
-          round(avg("n_chars"), 4).as("avg_chars"))
-        .orderBy("source")),
-  )
+  def queries: Map[String, Q] = specs.map(q => q.name -> q.run).toMap
 
-  /** §2.3 joins (J1–J4) incl. the generated date-spine join. */
-  private val joins: Map[String, Q] = Map(
-    "j1_equijoin" -> ((s, d) => {
-      // the reference's J1 (db_llm_service.py:144-147) attaches ONE
-      // low-cardinality dim column (c_mktsegment, 5 values) to the
-      // fact on a dense PK — exactly the scan-fused lookup shape.
-      // The r13 broadcast-hash version shipped the UNFILTERED 1.5 M-row
-      // customer table (146 MB, 0.59 s serial driver HashedRelation
-      // chain at x100, 8.6× DuckDB — r13 bench attribution);
-      // denseLookupJoin replaces it with a span-bytes dictionary-code
-      // array built in one distributed pass and probed inside the
-      // orders scan — no join operator, no shuffle of either side
-      // (PlanSpec-pinned; the r13 bench A/B measured the same
-      // conversion at 1.87× on a 3 M-row dim).
-      val o = t(s, d, "orders")
-      val c = t(s, d, "customer")
-      Relational.denseLookupJoin(o, c, "o_custkey", "c_custkey", "c_mktsegment")
-        .groupBy(col("c_mktsegment").as("segment"))
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("revenue"))
-        .orderBy("segment")
-    }),
-    "j2_multiway" -> ((s, d) => {
-      val c = t(s, d, "customer")
-      val n = broadcast(t(s, d, "nation"))
-      val r = broadcast(t(s, d, "region"))
-      c.join(n, c("c_nationkey") === n("n_nationkey"))
-        .join(r, n("n_regionkey") === r("r_regionkey"))
-        .groupBy("r_name").agg(count(lit(1)).as("n_customers"))
-        .orderBy("r_name")
-    }),
-    "j4_semijoin" -> ((s, d) => {
-      // semi-join existence check via broadcast BITMAP
-      // (Relational.bitmapSemiJoin): the r12 bench attribution showed
-      // the broadcast semi join's wall was 75% driver chain — collect
-      // 0.14 s + SINGLE-THREADED 3M-row LongHashedRelation build
-      // 1.00 s + 254 MB transmit 0.26 s at x100 (and the SHUFFLE_HASH
-      // alternative loses 2.3×: the 60M-row fact exchange dwarfs the
-      // build). Existence needs no hash table: the same collect feeds
-      // a ~15 ms bitset OR-build, the broadcast is 7.5 MB, and the
-      // probe fuses into the fact scan as a codegen filter — no join
-      // operator, fact never shuffled. Sparse key spaces fall back to
-      // the broadcast semi join inside the operator.
-      val li = t(s, d, "lineitem")
-      val urgent = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
-        .select("o_orderkey")
-      Relational.bitmapSemiJoin(li, urgent, "l_orderkey", "o_orderkey")
-        .agg(count(lit(1)).as("n"))
-    }),
-    "asof_join" -> ((s, d) => {
-      // J6: backward as-of join — attribute each purchase to the most
-      // recent click by the same user at-or-before it (classic
-      // last-touch attribution). One shuffle on user_id via the
-      // union+running-window shape; the oracle recomputes it with
-      // DuckDB's native ASOF LEFT JOIN — a cross-algorithm check.
-      // Both sides are the SAME events table, so the fused single-
-      // source form applies: ONE scan (event_type ∈ {purchase, click}
-      // and user_id < 4 push down as one disjunction-free filter),
-      // ONE shuffle on user_id, and the click side's (user, ts)
-      // max(event_id) pre-aggregation folds into the window tie-break
-      // instead of costing its own shuffle. The r14 two-table form
-      // (asof(purchases, clicks, …) with a groupBy'd right side)
-      // scanned events twice — at the 100× point those two scans WERE
-      // the 3.3× residual (r15 weak set). The user_id < 4 cut stays
-      // on both sides for the same reason as before: it is the
-      // equi-key constraint a native as-of node would propagate
-      // (21× DuckDB without it, r6 audit).
-      val ev = t(s, d, "events")
-        .filter(col("user_id") < 4 &&
-          col("event_type").isin("purchase", "click"))
-      operators.TemporalJoin.asofFused(ev,
-          isLeft = col("event_type") === "purchase",
-          isRight = col("event_type") === "click",
-          keys = Seq("user_id"), ts = col("ts"),
-          lPayload = Seq("event_id" -> col("event_id"), "ts" -> col("ts")),
-          rPayload = Seq("click_id" -> col("event_id"), "c_ts" -> col("ts")),
-          rTieBreak = Seq(col("event_id")))
-        .select(col("event_id"), col("user_id"), col("click_id"),
-          expr("(unix_micros(ts) - unix_micros(c_ts)) div 1000000").as("lag_s"))
-        .orderBy("event_id")
-    }),
-    "range_join" -> ((s, d) => {
-      // J7: temporal proximity join with NO equi key (errors within
-      // ±5 min of any purchase) — naively a cross join; executed as a
-      // time-bucketed equi-join (TemporalJoin.proximity). This query
-      // consumes only COUNTS, so the aggregate pushes through the
-      // join (proximityCount: sorted per-bucket arrays + two binary
-      // searches per probe) — work scales with |events| log density,
-      // not with the ~8G qualifying pairs the enumerating plan
-      // materialized for 26 s at the 100× point. n_matches = 0 rows
-      // are dropped to match the inner join's "no pair, no row".
-      val ev = t(s, d, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("ts").as("p_ts"))
-      val e = ev.filter(col("event_type") === "error")
-        .select(col("ts").as("e_ts"))
-      operators.TemporalJoin.proximityCount(p, e, "p_ts", "e_ts", tolSec = 300L)
-        .filter(col("n_matches") > 0)
-        .groupBy(TimeSeriesOps.utcDay(col("p_ts")).as("day"))
-        .agg(sum("n_matches").as("n_pairs"),
-          count(col("p_id")).as("n_purchases"))
-        .orderBy("day")
-    }),
-    "q3_shipping" -> ((s, d) => {
-      // TPC-H-Q3 shape: selective dim filters on both join sides, FK
-      // chain customer→orders→lineitem, revenue agg, top-10. The fact
-      // (lineitem) is NEVER shuffled — and since r15 it is never
-      // JOINED either: both dim cuts are scan-fused bitmap probes
-      // (customer→orders: c_custkey is a unique PK so inner ≡ semi;
-      // qualifying-orderkey set→lineitem likewise, because the
-      // (o_orderdate, o_orderpriority) payload is only needed for the
-      // 10 SURVIVING rows, not per fact row). ATTACH-AFTER-AGG: the
-      // fact job is a bare 3-column probe-scan + narrow groupBy on
-      // l_orderkey (the orders PK — identical groups to the old
-      // 3-column key, minus the payload bytes through the exchange) +
-      // top-10; the payload then attaches by broadcasting the TEN
-      // aggregated rows into one cheap orders re-scan. This replaces
-      // r14's 88,800-row / 12.6 MB oc broadcast (0.105 s driver
-      // collect + serial HashedRelation build, r14 bench attribution)
-      // with a bitmap that builds distributed and ships
-      // executor-once. The r13 attach-after A/B that lost (1.29 s vs
-      // 1.24 s) predated the bitmap fact cut — re-tried per the r14
-      // brief with the probe doing the semi, it now wins (r14 stage
-      // timings, HISTORY.md round 14).
-      // Scale posture: both bitmaps grow with the key SPAN (bits),
-      // not row count; past maxBitmapBytes the build degrades
-      // sparse→loud guard, and the orderkey side beyond that belongs
-      // to bloomSemiJoin — x1000 sweep exercises exactly that edge.
-      val c = t(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = t(s, d, "orders")
-        .filter(col("o_orderdate") < lit("1995-03-15").cast("date"))
-      val l = t(s, d, "lineitem")
-        .filter(col("l_shipdate") > lit("1995-03-15").cast("date"))
-      // reuse = true (r15 judge item #3): the two probe structures are
-      // memoized per canonicalized keys plan, so re-executions of a
-      // re-CONSTRUCTED q3 (every bench timing pass) stop re-paying the
-      // two eager build jobs — the r15 q3 stage cuts priced them at
-      // most of the +0.58 s probe-stage residual over the bare scan
-      val ocKeys = Relational.bitmapSemiJoin(o, c, "o_custkey", "c_custkey",
-          reuse = true)
-        .select(col("o_orderkey"))
-      val top = Relational.bitmapSemiJoin(l, ocKeys, "l_orderkey", "o_orderkey",
-          reuse = true)
-        .groupBy(col("l_orderkey"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(desc("revenue"), col("l_orderkey"))
-        .limit(10)
-      // ten-row attach (r15 advisory sweep: the x1000 broadcast-collect
-      // of `top` cost 2.03 s for 10 rows — a broadcast-exchange stage
-      // plus its scheduling): collect the limit-10 result ONCE
-      // (bounded, limit-gated) and attach via an isin probe that
-      // PUSHES INTO the orders scan (PushedFilters In(o_orderkey, …) →
-      // row-group pruning at scale) joined to a 10-row LocalRelation —
-      // no exchange, no driver HashedRelation stage. The collect makes
-      // the attach eager, consistent with the probes' documented
-      // eager-snapshot posture.
-      val topRows = top.collect()
-      val keys10 = topRows.map(_.get(0)).toSeq
-      // r19: the ten aggregated revenues attach as a LITERAL MAP
-      // (orderkey → revenue) evaluated inside the orders scan — the
-      // r18 form joined a broadcast 10-row LocalRelation, paying a
-      // BroadcastExchange stage + a join operator per run for ten
-      // rows. element_at on a 10-entry map literal is a codegen
-      // lookup; the isin probe still PUSHES INTO the orders scan
-      // (PushedFilters In(o_orderkey, …) → row-group pruning at
-      // scale). No exchange, no join, one scan job.
-      val revCol =
-        if (topRows.isEmpty) lit(null).cast("double")
-        else element_at(
-          map(topRows.flatMap(r => Seq(lit(r.get(0)), lit(r.get(1)))): _*),
-          col("o_orderkey"))
-      o.select(col("o_orderkey"),
-          to_date(col("o_orderdate")).as("order_date"), col("o_orderpriority"))
-        .filter(if (keys10.isEmpty) lit(false)
-                else col("o_orderkey").isin(keys10: _*))
-        // TakeOrdered for the final 10-row sort — NOT coalesce(1): a
-        // coalesce here would pull the whole attach scan into one task
-        // (measured +0.86 s at x100)
-        .select(col("o_orderkey").as("l_orderkey"), col("order_date"),
-          col("o_orderpriority"), revCol.as("revenue"))
-        .orderBy(desc("revenue"), col("l_orderkey"))
-        .limit(10)
-    }),
-    "j3_date_spine" -> ((s, d) => {
-      // keyless spine: after the (map-side-combined) daily agg the
-      // data is one user's calendar — coalesce(1) makes every later
-      // step (the fused lead+explode spine, final order) ride
-      // SinglePartition with zero further exchanges (7 jobs → ~3 at
-      // the x100 point, r9 judge item #6; the r15 spine fusion also
-      // removed the bounds-agg/join sub-tree entirely)
-      val daily = t(s, d, "events").filter(col("user_id") === 1)
-        .groupBy(TimeSeriesOps.utcDay(col("ts")).as("day")).agg(count(lit(1)).as("cnt"))
-        .coalesce(1)
-      val spine = TimeSeriesOps.toDailySpine(daily, Seq.empty[String], "day", "cnt")
-      orderedSmall(
-        spine.select(col("day"), coalesce(col("cnt"), lit(0L)).as("n")), "day")
-    }),
-  )
-
-  /** §2.5/§2.6 windows, ranks, sorts, limits (W1–W7). */
-  private val windows: Map[String, Q] = Map(
-    "w1_topk" -> ((s, d) =>
-      t(s, d, "orders")
-        .orderBy(desc("o_totalprice"), col("o_orderkey"))
-        .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("total_price"))
-        .limit(10)),
-    "w2_topn_docs" -> ((s, d) =>
-      t(s, d, "documents").orderBy(desc("n_chars"), col("doc_id"))
-        .select("doc_id", "n_chars").limit(10)),
-    "w3_latest_per_key" -> ((s, d) =>
-      Relational.latestPerKey(
-        t(s, d, "orders").filter(col("o_custkey") < 100),
-        Seq(col("o_custkey")), Seq(desc("o_orderdate"), desc("o_orderkey")))
-        .select(col("o_custkey"), col("o_orderkey"),
-          to_date(col("o_orderdate")).as("order_date"))
-        .orderBy("o_custkey")),
-    "w4_recent_n" -> ((s, d) =>
-      Relational.topNPerGroup(
-        t(s, d, "orders").filter(col("o_custkey") < 30),
-        Seq(col("o_custkey")), Seq(desc("o_orderdate"), desc("o_orderkey")), 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("rn").cast("bigint").as("rn"))
-        .orderBy("o_custkey", "rn")),
-    "w5_sliding" -> ((s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("event_id")
-        .rowsBetween(-6, 0)
-      t(s, d, "events").filter(col("user_id") < 5)
-        .select(col("user_id"), col("event_id"),
-          round(avg("value").over(w), 4).as("ma7"))
-        .orderBy("user_id", "event_id")
-    }),
-    "w6_lag_trend" -> ((s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(TimeSeriesOps.utcDay(col("ts")).as("day")).agg(avg("value").as("v"))
-      // global window is bounded BY CONSTRUCTION: input is the
-      // daily-grain aggregate (≤ calendar days of the corpus), never
-      // the events table
-      val prev = lag("v", 1).over(Window.orderBy("day"))
-      daily.withColumn("prev", prev)
-        .select(col("day"), round(col("v"), 4).as("avg_value"),
-          when(col("prev").isNull, "new")
-            .when(col("v") > col("prev"), "up")
-            .when(col("v") < col("prev"), "down")
-            .otherwise("flat").as("trend"))
-        .orderBy("day")
-    }),
-    "w7_rank_per_group" -> ((s, d) =>
-      Relational.topNPerGroup(t(s, d, "part"),
-        Seq(col("p_brand")), Seq(desc("p_retailprice"), col("p_partkey")), 3)
-        .select(col("p_brand"), col("p_partkey"),
-          round(col("p_retailprice"), 2).as("price"),
-          col("rn").cast("bigint").as("rn"))
-        .orderBy("p_brand", "rn")),
-    "sort_multikey" -> ((s, d) =>
-      t(s, d, "orders")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .select(col("o_orderkey"), to_date(col("o_orderdate")).as("order_date"),
-          col("o_orderstatus"))
-        .limit(50)),
-    "w9_distribution" -> ((s, d) => {
-      // distribution window functions: ntile / percent_rank / cume_dist
-      // per key — one shuffle on the partition key
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      t(s, d, "orders").filter(col("o_custkey") < 10)
-        .select(col("o_custkey"), col("o_orderkey"),
-          ntile(4).over(w).cast("bigint").as("quartile"),
-          round(percent_rank().over(w), 6).as("pct_rank"),
-          round(cume_dist().over(w), 6).as("cdist"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-  )
-
-  /** §2.7 set ops + §2.8 scalar-function queries. */
-  private val scalarsAndSets: Map[String, Q] = Map(
-    "set_distinct" -> ((s, d) =>
-      t(s, d, "documents").select("lang", "source").dropDuplicates()
-        .orderBy("lang", "source")),
-    "set_union" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val a = docs.filter(col("lang") === "en").select("doc_id", "lang")
-      val b = docs.filter(col("n_chars") > 300 && col("lang") =!= "en")
-        .select("doc_id", "lang")
-      a.unionByName(b).groupBy("lang").agg(count(lit(1)).as("n")).orderBy("lang")
-    }),
-    "json_extract" -> ((s, d) =>
-      // codegen byte scanner (plans/JsonExpressions.scala) instead of
-      // regexp_extract: ~50 ns/row keeps the extraction cheaper than
-      // the scan itself, so no parallelism floor (tp) is needed — the
-      // repartition shuffle it paid was the round-5 bottleneck
-      t(s, d, "events")
-        .withColumn("k", graft.functions.JsonFunctions
-          .jsonGet(col("props"), "k").cast("int"))
-        .groupBy("event_type").agg(round(avg("k"), 4).as("avg_k"))
-        .orderBy("event_type")),
-    "date_parts" -> ((s, d) => orderedSmall(
-      // r20 §4: group on trunc-to-month, extract y/m from the ~84
-      // groups post-agg — ONE calendar conversion per row instead of
-      // two (year() and month() each run their own epoch-day→LocalDate
-      // walk). (y, m) ↔ month-truncated date is a bijection, so the
-      // groups and their aggregates are identical (R20FormsSpec pin;
-      // x1000 same-JVM A/B, OPTIMIZATION_r20.md: 3.25 vs 3.39 / 3.02 vs 3.76 s across
-      // two runs; the raw-date two-level variant measured WORSE —
-      // dp_raw_date_key_2level — so per-row calendar work, not agg
-      // fan-in, is the knob here).
-      t(s, d, "lineitem")
-        .groupBy(trunc(col("l_shipdate"), "month").as("_ms"))
-        .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("qty"))
-        .select(year(col("_ms")).cast("bigint").as("y"),
-          month(col("_ms")).cast("bigint").as("m"), col("n"), col("qty")),
-      "y", "m")),
-    "seasonal_features" -> ((s, d) => {
-      val days = t(s, d, "events").select(TimeSeriesOps.utcDay(col("ts")).as("day")).distinct()
-      TimeSeriesOps.calendarFeatures(days, "day")
-        .select(col("day"),
-          round(col("doy_sin"), 6).as("doy_sin"),
-          round(col("doy_cos"), 6).as("doy_cos"))
-        .orderBy("day")
-    }),
-  )
-
-  /** LLM-data-pipeline operators: dedup, text analysis, chunking. */
-  private val llmOps: Map[String, Q] = Map(
-    "dedup_exact" -> ((s, d) =>
-      // hash in the scan stage, shuffle only the distinct digests:
-      // the partial aggregate dedups map-side, so the exchange carries
-      // 32-char hashes, never document text (~20× narrower; the round-5
-      // audit flagged the earlier repartition-first shape for shuffling
-      // the full text column)
-      t(s, d, "documents").agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(Dedup.contentHash(col("text"))).as("n_unique"))),
-    "percentiles" -> ((s, d) =>
-      // exact interpolated quantiles (corpus length stats); Spark
-      // percentile == DuckDB quantile_cont by definition
-      t(s, d, "documents").groupBy("lang")
-        .agg(round(expr("percentile(n_chars, 0.5)"), 4).as("p50"),
-          round(expr("percentile(n_chars, 0.9)"), 4).as("p90"))
-        .orderBy("lang")),
-    "rollup_stats" -> ((s, d) =>
-      // multi-granularity corpus stats (grouping-sets family — the
-      // 100 TB training-data reporting shape)
-      t(s, d, "documents")
-        .rollup("lang", "source")
-        .agg(count(lit(1)).as("n"), sum("n_chars").as("chars"))
-        .orderBy(asc_nulls_first("lang"), asc_nulls_first("source"))),
-    "cube_stats" -> ((s, d) =>
-      // full cube: every (lang, source) marginal in one pass — the
-      // other grouping-sets family member
-      t(s, d, "documents")
-        .cube("lang", "source")
-        .agg(count(lit(1)).as("n"),
-          round(avg("n_chars"), 4).as("avg_chars"))
-        .orderBy(asc_nulls_first("lang"), asc_nulls_first("source"))),
-    "text_tokens" -> ((s, d) =>
-      // r19: token count as pure length arithmetic — the same
-      // `#separators + 1 == size(split(text,' '))` identity
-      // pack_sequences and text_quality already ride (split keeps
-      // empty fields, so the identity is exact for empty strings,
-      // leading/trailing and consecutive spaces; both forms
-      // null-propagate). The split form allocated a UTF8String array
-      // per document just to take its size — the in-place codegen
-      // CountByte loop counts the 0x20 bytes with zero allocation
-      // (ASCII bytes never occur inside multi-byte UTF-8 sequences).
-      // sum(long) == sum(int widened) — column type unchanged.
-      tp(s, d, "documents")
-        .groupBy("lang")
-        .agg(sum(graft.plans.StringCount.countChar(col("text"), ' ') + 1)
-          .as("n_tokens"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("lang")),
-    "text_quality" -> ((s, d) => {
-      // mean word length via pure length arithmetic — no regex, no
-      // array allocation: space count from the in-place codegen
-      // CountByte loop (ASCII bytes never occur inside multi-byte
-      // UTF-8 sequences, so byte count == codepoint count), non-space
-      // chars = length - #spaces, and split-on-' ' token count =
-      // #spaces + 1 (split keeps empty fields, so the identity is
-      // exact, not approximate). Same values as the
-      // regexp_replace/split form, zero per-row allocation.
-      val nSpaces = graft.plans.StringCount.countChar(col("text"), ' ')
-      val nonSpace = length(col("text")) - nSpaces
-      val nTokens = nSpaces + 1
-      orderedSmall(tp(s, d, "documents")
-        .groupBy("source")
-        .agg(round(sum(nonSpace).cast("double") /
-            sum(nTokens).cast("double"), 6)
-          .as("mean_word_len")),
-        "source")
-    }),
-    "lang_stopwords" -> ((s, d) =>
-      tp(s, d, "documents")
-        .groupBy("lang")
-        .agg(sum(TextAnalysis.stopwordHits(col("text"), "en")).as("en_hits"))
-        .orderBy("lang")),
-    "chunk_count" -> ((s, d) => {
-      val chunk = TextFunctions.chunkTextUdf(200, 40)
-      tp(s, d, "documents")
-        .select(col("source"), explode(chunk(col("text"))).as("c"))
-        .groupBy("source").agg(count(lit(1)).as("total_chunks"))
-        .orderBy("source")
-    }),
-    "doc_fingerprint" -> ((s, d) => // real oracle: HUGEINT mod-2^64 hash
-      tp(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")),
-    "simhash_sketch" -> ((s, d) => // real oracle: DuckDB HUGEINT recompute (SketchOracleSql)
-      // sort-early shape (the pii_scrub treatment): order on doc_id is
-      // established BEFORE the sketch UDF, so the range sampler probes
-      // only the scan, not the UDF chain, and the explicit partition
-      // count keeps the UDF stage wide under AQE
-      tp(s, d, "documents")
-        .repartitionByRange(
-          s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .select(col("doc_id"), Dedup.simhash(col("text")).as("sketch"))),
-    "minhash_bands" -> ((s, d) => { // real oracle: DuckDB HUGEINT recompute (SketchOracleSql)
-      val bandsUdf = Dedup.lshBandBucketsUdf(3, 16, 4)
-      orderedSmall(tp(s, d, "documents")
-        .select(col("doc_id"), explode(bandsUdf(col("text"))).as("b"))
-        .groupBy(col("b._1").as("band"))
-        .agg(countDistinct(col("b._2")).as("n_buckets"),
-          count(lit(1)).as("n_docs")), "band")
-    }),
-  )
-
-  /** §2.10 vector-search pipeline stages (J5/W1, A12, P8, A10). */
-  private val vectorOps: Map[String, Q] = Map(
-    "v1_knn" -> ((s, d) =>
-      knnScores(s, d).orderBy(desc("s"), col("vec_id")).limit(10)
-        .select(col("vec_id"), round(col("s"), 4).as("score"))
-        .orderBy(desc("score"), col("vec_id"))),
-    "v2_knn_norm" -> ((s, d) =>
-      overKnn(s, d, 20)(VectorSearch.normalizeScoresIP(_, 2))
-        .select(col("vec_id"), round(col("s"), 4).as("norm_score"))
-        .orderBy(desc("norm_score"), col("vec_id"))),
-    "v3_margin" -> ((s, d) =>
-      overKnn(s, d, 20)(VectorSearch.marginFilter(_, 2, margin = 0.12, simFloor = 0.1))
-        .select(col("vec_id"), round(col("s"), 4).as("score"))
-        .orderBy(desc("score"), col("vec_id"))),
-    "v4_diversify" -> ((s, d) =>
-      overKnn(s, d, 20)(VectorSearch.diversify(_, _.get(1), 2, 0,
-          perGroupCap = 2, topK = 8))
-        .select(col("vec_id"), col("label"), round(col("s"), 4).as("score"))),
-  )
-
-  /** Time-series pipeline ops (A8 interpolation, A15 trend reduce). */
-  private val timeSeries: Map[String, Q] = Map(
-    "a8_interpolate" -> ((s, d) => {
-      // ONE exchange total (PlanSpec pin, r16 — was two): the
-      // repartition on the series key comes BEFORE the daily agg, and
-      // HashPartitioning(user_id) satisfies the aggregation's
-      // ClusteredDistribution(user_id, day) — a subset partitioning
-      // clusters every (user, day) group — so the agg, the fused
-      // spine (toDailySpine's lead+explode form, r15), and every
-      // interpolation window pass all ride the SAME exchange. The
-      // trade: the agg's map-side combine now runs after the shuffle,
-      // so the raw filtered rows ship instead of partials — here the
-      // purchase × user_id<20 filter already cut ~99.5% of the scan,
-      // and the same subset trick is load-bearing in proximityCount.
-      // r14 paid 4 jobs at x100 (bounds-agg + spine-join on top);
-      // r15's fusion made it 3; this makes it 2 (scan+exchange,
-      // final stage). Output is bounded (20 users × calendar days) →
-      // orderedSmall replaces the global range sort and its
-      // boundary-sampling job (r9 judge item #4).
-      val daily = t(s, d, "events")
-        .filter(col("event_type") === "purchase" && col("user_id") < 20)
-        .repartition(col("user_id"))
-        .groupBy(col("user_id"), TimeSeriesOps.utcDay(col("ts")).as("day"))
-        .agg(count(lit(1)).cast("double").as("v"))
-      val spine = TimeSeriesOps.toDailySpine(daily, Seq("user_id"), "day", "v")
-      orderedSmall(
-        TimeSeriesOps.interpolateGapLimited(spine, Seq("user_id"), "day", "v", 3)
-          .select(col("user_id"), col("day"), round(col("v"), 4).as("v")),
-        "user_id", "day")
-    }),
-    "a15_trend" -> ((s, d) => {
-      // top-3-per-group via a keyed window, NOT collect_list: an
-      // array-of-the-whole-group aggregate is O(group size) state per
-      // key (12.5 s and climbing at the 100× local scale test); the
-      // window sort shuffles the same rows but sorts spillably and
-      // keeps 3 of them
-      val e = t(s, d, "events")
-        .filter(col("value").isNotNull && !isnan(col("value")))
-        .select(col("event_type"), round(col("value"), 2).as("v"))
-      val w = Window.partitionBy("event_type").orderBy(desc("v"))
-      e.withColumn("_rn", row_number().over(w)).filter(col("_rn") <= 3)
-        .groupBy("event_type")
-        .agg(round(sum("v"), 2).as("top3_sum"))
-        .orderBy("event_type")
-    }),
-    "sessionize" -> ((s, d) => {
-      // event sessionization: 30-min-gap sessions per user
-      // (beyond-reference §2.9 capability). Gaps-and-islands form in
-      // pure int64 micros arithmetic: a session starts where the gap
-      // to the previous event exceeds 30 min (STRICTLY — the same
-      // `> INTERVAL 30 MINUTE` rule the oracle runs; session_window's
-      // half-open windows close at ≥, an off-by-one-instant the data
-      // never exercised but the lag form removes). One exchange total:
-      // the lag window hashes on user_id, and both downstream
-      // aggregations cluster on supersets of it, so EnsureRequirements
-      // reuses the window's partitioning — vs session_window's
-      // ObjectHashAggregate doing per-row session-buffer merges
-      // (2.19 s → this form at the 100 M-row point; whole chain stays
-      // in codegen). SessionizeSpec pins the two forms equal.
-      val byUser = Window.partitionBy("user_id").orderBy("tsu")
-      val gapUs = lit(30L * 60 * 1000000)
-      // r20 §2.4: ONE full window pass instead of two, and the
-      // per-session stats come from BOUNDARY ROWS ONLY. The old form
-      // (lag window → running-sum window → groupBy(user, sess_id) →
-      // groupBy(user)) materialized every row through two WindowExec
-      // passes and hash-aggregated every row on (user, sess_id). A
-      // session is a contiguous row_number range between boundaries
-      // (first row, or gap > 30 min — the same STRICT rule), so
-      // lag + row_number + the partition row count all ride one
-      // WindowExec (same partition+order spec, three frames), the
-      // boundary filter drops ~everything, and the lead() that turns
-      // boundary row-numbers into session lengths runs over sessions,
-      // not events, reusing the same hash partitioning (no second
-      // exchange). R20FormsSpec pins this row-equal to the old form;
-      // SessionizeSpec pins the old form against session_window.
-      val whole = byUser.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-      val bounds = t(s, d, "events").filter(col("user_id") < 10)
-        .select(col("user_id"), unix_micros(col("ts")).as("tsu"))
-        .select(col("user_id"), col("tsu"),
-          lag("tsu", 1).over(byUser).as("_prev"),
-          row_number().over(byUser).as("_rn"),
-          count(lit(1)).over(whole).as("_cnt"))
-        .filter(col("_rn") === 1 || (col("tsu") - col("_prev")) > gapUs)
-      bounds
-        .withColumn("_next_rn",
-          lead("_rn", 1).over(Window.partitionBy("user_id").orderBy("_rn")))
-        .select(col("user_id"),
-          (coalesce(col("_next_rn").cast("long"), col("_cnt") + 1L)
-            - col("_rn")).as("n_events"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_sessions"),
-          sum("n_events").cast("bigint").as("total_events"),
-          max("n_events").as("max_session_events"))
-        // bounded output (10 users) → orderedSmall: the plain orderBy
-        // re-ran the whole scan+window chain for its range-sampling
-        // pass (x1000 probe: 2.38 s full vs 1.17 s through the window)
-        .transform(df => orderedSmall(df, "user_id"))
-    }),
-    "ratio_split" -> ((s, d) => {
-      // r19, same subset-partitioning fusion as a8/a9: repartition on
-      // user_id before the (user_id, day) distinct so the dedup agg
-      // and ratioSplit's two user_id windows share ONE exchange (was
-      // two). The user_id<5 filter keeps the shipped raw rows tiny.
-      val daily = t(s, d, "events").filter(col("user_id") < 5)
-        .select(col("user_id"), TimeSeriesOps.utcDay(col("ts")).as("day"))
-        .repartition(col("user_id"))
-        .distinct()
-      orderedSmall(
-        TimeSeriesOps.ratioSplit(daily, Seq("user_id"), "day", (7, 2, 1))
-          .groupBy("user_id", "split").agg(count(lit(1)).as("n_rows")),
-        "user_id", "split")
-    }),
-    "seasonal_naive" -> ((s, d) => {
-      val daily = t(s, d, "events").filter(col("user_id") === 7)
-        .groupBy(TimeSeriesOps.utcDay(col("ts")).as("day")).agg(avg("value").as("v"))
-      TimeSeriesOps.seasonalNaive(daily, Seq.empty, "day", "v", 7)
-        .agg(round(TimeSeriesOps.rmse(col("v"), col("pred")), 4).as("rmse"),
-          round(TimeSeriesOps.smape(col("v"), col("pred")), 4).as("smape"))
-    }),
-    "forecast_ridge" -> ((s, _) => {
-      // Trained-model forecast (SURVEY §7 trained-model slot; ref
-      // modules/price_forecast/train.py): same fixture pipeline as
-      // forecast_pipeline, then a time-ordered 80/20 split, a calendar
-      // ridge fit (ONE Gram-matrix agg pass over the train split,
-      // driver-side 6×6 solve — Forecast.scala scale note) and
-      // row-local scoring of the held-out tail. Deterministic fixture
-      // → metrics pinned as a VALUES oracle. The shared prep chain is
-      // the session-pinned local relation (forecastInterp).
-      val split = TimeSeriesOps.ratioSplit(forecastInterp(s), Seq("fruit"),
-        "day", (0.8, 0.0, 0.2))
-      val beta = graft.operators.Forecast.fitRidgeCalendar(
-        split.filter(col("split") === "train"), "day", "avg_value")
-      split.filter(col("split") === "test")
-        .withColumn("pred",
-          graft.operators.Forecast.predictCalendar(col("day"), beta))
-        .groupBy("fruit")
-        .agg(count(lit(1)).as("n_eval"),
-          round(TimeSeriesOps.rmse(col("avg_value"), col("pred")), 4).as("rmse"),
-          round(TimeSeriesOps.smape(col("avg_value"), col("pred")), 4).as("smape"))
-    }),
-    "quality_classifier" -> ((s, d) =>
-      // see qualityClassifierScored below for the pipeline; the
-      // registry entry is just its held-out aggregate. The hard 0.5
-      // threshold sits on float Gram sums, so QualityClassifierSpec
-      // additionally asserts no held-out score lands NEAR 0.5 — the
-      // pinned counts below are provably stable under summation-order
-      // jitter, not accidentally so.
-      qualityClassifierScored(s, d)
-        .agg(count(lit(1)).as("n_eval"),
-          sum((col("_score") > 0.5).cast("long")).as("n_pred_hq"),
-          round(avg(((col("_score") > 0.5) === (col("_y") === 1.0))
-            .cast("double")), 4).as("accuracy"))),
-    "forecast_ar" -> ((s, _) => {
-      // Sequence-model slot (ref modules/price_forecast/train.py
-      // trains an LSTM over sliding lookback windows, dataset.py:52-58):
-      // an AR(7) ridge over the SAME lag-window encoding — the linear
-      // sequence model, evaluated one-step-ahead on the held-out tail
-      // (teacher forcing, the LSTM eval shape). The fit is PER-KEY
-      // (fitRidgePerKey): Gram sums per group in one keyed agg, the
-      // 8×8 solve inside the task — millions of independent series
-      // would train in one scan at 100 TB; the model row broadcast-
-      // joins back for scoring. Deterministic fixture → pinned oracle.
-      val p = 7
-      val lagged = graft.operators.Forecast.lagFeatures(
-        forecastInterp(s), Seq("fruit"), "day", "avg_value", p)
-      val split = TimeSeriesOps.ratioSplit(lagged, Seq("fruit"), "day",
-        (0.8, 0.0, 0.2))
-      val feats = graft.operators.Forecast.arFeatures(p)
-      val models = graft.operators.Forecast.fitRidgePerKey(
-        split.filter(col("split") === "train"), Seq("fruit"), feats,
-        col("avg_value").cast("double"))
-      // the fixture has ONE constant key, so a model join would
-      // constant-fold its equi-condition and plan a nested loop
-      // (PlanSpec bans it) — fold the single model's coefficients as
-      // plan literals instead (bounded driver scalar); the multi-key
-      // broadcast-join scoring path is ForecastSpec-exercised
-      val beta = models.head().getSeq[Double](1).toArray
-      split.filter(col("split") === "test")
-        .withColumn("pred", graft.operators.Forecast.predictLinear(feats, beta))
-        .groupBy("fruit")
-        .agg(count(lit(1)).as("n_eval"),
-          round(TimeSeriesOps.rmse(col("avg_value"), col("pred")), 4).as("rmse"),
-          round(TimeSeriesOps.smape(col("avg_value"), col("pred")), 4).as("smape"))
-    }),
-    "salted_join" -> ((s, d) => {
-      // skewed fact⋈dim with a payload column — three plans, picked by
-      // measurement (r12 bench attribution + judge item #5):
-      //  (a) profile-gated SALTING (Relational.skewJoin) when BOTH
-      //      sides must shuffle — the 100 TB big⋈big posture, timed on
-      //      a planted-skew corpus in the bench artifact
-      //      (skew_join_planted: straggler spread across salt buckets);
-      //  (b) broadcast hash join when the dim fits the budget — but
-      //      its driver chain is SERIAL: 0.80 s UnsafeRow
-      //      HashedRelation build + 0.26 s transmit of 254 MB for this
-      //      3 M-row (long, priority) dim at the x100 point, ~60% of
-      //      the join's wall;
-      //  (c) what runs here: Relational.denseLookupJoin — the dim's
-      //      key is a dense unique PK and the payload is
-      //      low-cardinality, so the "join" is a broadcast byte array
-      //      of dictionary codes (span bytes ≈ 60 MB, one ~30 ms array
-      //      fill) probed by a codegen dense_lookup fused into the
-      //      lineitem scan: NO join operator, no fact shuffle, skew
-      //      cannot exist because nothing shuffles (PlanSpec pins the
-      //      join-free plan). Result equals the plain inner join
-      //      (RelationalSpec); the r13-r18 bench artifacts A/B the
-      //      old-vs-new walls (bench_history/BENCH_FULL_r18.json).
-      val big = t(s, d, "lineitem").select("l_orderkey", "l_extendedprice")
-      val small = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      Relational.denseLookupJoin(big, small, "l_orderkey", "o_orderkey",
-          "o_orderpriority")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), round(sum("l_extendedprice"), 2).as("revenue"))
-        .orderBy("o_orderpriority")
-    }),
-    "pack_sequences" -> ((s, d) => {
-      // LLM training-data sequence packing: concat-and-split into
-      // 2048-token sequences within 8 deterministic shards — every
-      // shard packs in parallel (Packing.scala scale note)
-      // token count as pure string arithmetic (#separators + 1 ==
-      // size(split(text,' ')) including empties) — stays inside
-      // whole-stage codegen with no per-doc array allocation on the
-      // 100 TB scan path
-      // #spaces + 1 == size(split(text,' ')) incl. empties — counted
-      // in place by the codegen CountByte loop; the earlier
-      // length(translate(·,' ','')) arithmetic allocated a rewritten
-      // copy of every document just to subtract lengths (~40% of the
-      // scan job at x100, r12 job timeline)
-      val docs = tp(s, d, "documents")
-        .select(col("doc_id"), pmod(col("doc_id"), lit(8)).as("shard"),
-          (graft.plans.StringCount.countChar(col("text"), ' ') + 1).as("toks"))
-      // the per-sequence summary is small at bench SF (#tokens/2048
-      // rows) → orderedSmall for the presentation sort; a final global
-      // orderBy re-ran the whole window+agg chain for range sampling
-      // r18 A/B kept the PLAIN window form: the blocked two-level
-      // prefix sum (see the Packing header) was built on the hypothesis
-      // that the 8-shard window serializes the sort — measured FALSE
-      // at x1000 (probe: exchange 1.2 s + WindowExec row processing
-      // 1.6 s dominate; sortWithinPartitions after the exchange is
-      // +0.04 s because scan order is already near-sorted, and a
-      // 97×-finer window partitioning made it SLOWER). The blocked
-      // form pays the exchange class twice and measured 5.3 s vs
-      // 3.8 s (bench_history/BENCH_FULL_r18.json).
-      // r20 §2.1: PIN the pack exchange's partition count. The window's
-      // ENSURE_REQUIREMENTS exchange is AQE-coalescible, and at the
-      // GB points the ~120 MB shuffle coalesces to ~2 partitions under
-      // the 64 MB advisory size — the 8-shard pack window then runs
-      // 2-way, which was most of pack's 3.5 s x1000 wall (stage probes:
-      // exchange 1.0 + sort 1.0 + window 1.7 over a 0.34 s scan). An
-      // explicit-count repartition (REPARTITION_BY_NUM) satisfies the
-      // window's ClusteredDistribution(shard) with no second exchange
-      // and is exempt from AQE coalescing; the count follows the
-      // session's parallelism, not a constant (shard cardinality caps
-      // useful width at 8 either way). x1000: 3.49 → 2.33 s.
-      orderedSmall(
-        graft.operators.Packing.packSequences(
-            docs.repartition(s.sparkContext.defaultParallelism, col("shard")),
-            col("shard"), col("doc_id"), col("toks"), 2048L)
-          .groupBy("shard", "seq_id")
-          .agg(count(lit(1)).as("n_docs"), sum("toks").as("n_tokens")),
-        "shard", "seq_id")
-    }),
-    "w5_windows" -> ((s, d) => {
-      val daily = t(s, d, "events").filter(col("user_id") === 2)
-        .groupBy(TimeSeriesOps.utcDay(col("ts")).as("day"))
-        .agg(round(avg("value"), 4).as("v"))
-      TimeSeriesOps.slidingWindows(daily, Seq.empty, "day", "v", 5, 2)
-        .select(col("day"),
-          round(aggregate(col("features"), lit(0.0), (a, x) => a + x), 4).as("f_sum"),
-          round(aggregate(col("targets"), lit(0.0), (a, x) => a + x), 4).as("t_sum"))
-        .orderBy("day")
-    }),
-  )
-
-  /** Catalog + interleave + L2-branch scoring (S3, W8, A12-L2). */
-  private val engineOps: Map[String, Q] = Map(
-    "s3_catalog" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      s.createDataFrame(Tables.names.sorted.map(Tuple1(_)))
-        .toDF("table_name")
-    }),
-    "sql_knn" -> ((s, d) => {
-      // SQL surface: the registered graft_cosine codegen function via
-      // spark.sql over temp views (requires Sessions.extensions)
-      Tables.registerAll(s, d)
-      s.sql("""SELECT vec_id,
-              |  round(graft_cosine(embedding,
-              |    (SELECT embedding FROM embeddings WHERE vec_id = 0)), 4) AS score
-              |FROM embeddings WHERE vec_id <> 0
-              |ORDER BY score DESC, vec_id LIMIT 10""".stripMargin)
-    }),
-    "w8_roundrobin" -> ((s, d) => {
-      val rr = Relational.topNPerGroup(
-        t(s, d, "orders").filter(col("o_custkey") < 200),
-        Seq(col("o_orderpriority")), Seq(desc("o_totalprice"), col("o_orderkey")), 5)
-      rr.orderBy(col("rn"), col("o_orderpriority"))
-        .select(col("o_orderpriority").as("priority"),
-          col("rn").cast("bigint").as("rn"),
-          col("o_orderkey"), round(col("o_totalprice"), 2).as("total_price"))
-        .limit(15)
-    }),
-    "a12_l2branch" -> ((s, d) => {
-      val q = lit(queryVec(s, d, 0L))
-      t(s, d, "embeddings").filter(col("vec_id") =!= 0)
-        .select(col("vec_id"),
-          round(VectorFunctions.l2ToSimilarity(
-            VectorFunctions.l2DistFast(col("embedding"), q)), 4).as("sim"))
-        .orderBy(desc("sim"), col("vec_id")).limit(10)
-    }),
-  )
-
-  /** §2.1 S8 sources, §2.8 scalar-function surfaces, P9 anchors, J2
-    * context assembly, ST4/ST6 re-framing. */
-  private val sourcesAndScalars: Map[String, Q] = Map(
-    "yahoo_chart" -> ((s, _) => {
-      // S8: nested HTTP-JSON chart → arrays_zip explode → pct change
-      val r = Fixtures.yahooChart(s)
-        .select(element_at(col("chart.result"), 1).as("r"))
-        .select(col("r.timestamp").as("ts"),
-          element_at(col("r.indicators.quote"), 1).getField("close").as("close"))
-        .select(explode(arrays_zip(col("ts"), col("close"))).as("z"))
-        .select(to_date(timestamp_seconds(col("z.ts"))).as("day"),
-          col("z.close").as("close"))
-      val prev = lag("close", 1).over(Window.orderBy("day"))
-      r.withColumn("pct", round((col("close") - prev) / prev * 100, 4))
-        .orderBy("day")
-    }),
-    "s8_randomwalk" -> ((s, _) => {
-      // S8 fallback: deterministic synthetic random walk (LCG steps,
-      // exact integer math → identical in any SQL engine). Generator
-      // runs at fixture scale; the global window is the generator's
-      // sequential nature, not a table op.
-      s.range(1000).toDF("i").withColumn("step",
-          ((col("i") * 1103515245L + 12345L) % 2001L - 1000L) / 100.0)
-        .withColumn("value", round(lit(2500.0) +
-          sum("step").over(Window.orderBy("i")), 2))
-        .select(col("i"), col("value")).orderBy("i")
-    }),
-    "p9_anchor" -> ((s, d) =>
-      // NFKC is identity on the ASCII corpus, so the oracle's plain
-      // contains() matches the NFKC path exactly
-      t(s, d, "documents")
-        .filter(SearchPipeline.strongAnchorPredicate(col("text"), lit(""),
-          Set("spark", "shuffle")))
-        .groupBy("lang").agg(count(lit(1)).as("n")).orderBy("lang")),
-    "j2_context" -> ((s, d) => {
-      val c = t(s, d, "customer").filter(col("c_custkey") < 20)
-      val n = broadcast(t(s, d, "nation"))
-      val o = t(s, d, "orders")
-      val agg = o.groupBy("o_custkey").agg(
-        count(lit(1)).as("n_orders"),
-        max(to_date(col("o_orderdate"))).as("last_order"))
-      c.join(n, c("c_nationkey") === n("n_nationkey"))
-        .join(agg, c("c_custkey") === agg("o_custkey"))
-        .select(col("c_custkey"), concat(col("c_name"), lit(" ["), col("n_name"),
-          lit("] orders="), col("n_orders").cast("string"),
-          lit(" last="), col("last_order").cast("string")).as("context"))
-        .orderBy("c_custkey")
-    }),
-    "date_functions" -> ((s, d) =>
-      // r19: format AFTER the top-50 cut — the select-then-orderBy
-      // form planned Project(date_format×2, date_add) BELOW
-      // TakeOrderedAndProject, paying two per-row DateTimeFormatter
-      // renders + a day-floor for EVERY user-3 row when only 50
-      // survive (plans/r19/date_functions_before.txt). The take
-      // orders on (event_id, ts) rows; the formats run on the 50-row
-      // SinglePartition output, order preserved by the projection.
-      // Values identical — same expressions over the same 50 rows.
-      t(s, d, "events").filter(col("user_id") === 3)
-        .select(col("event_id"), col("ts"))
-        .orderBy("event_id").limit(50)
-        .select(col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("iso"),
-          date_add(TimeSeriesOps.utcDay(col("ts")), 1).as("next_day"),
-          date_format(col("ts"), "HH:mm").as("hhmm"))),
-    "str_functions" -> ((s, d) =>
-      t(s, d, "documents").filter(col("doc_id") < 30)
-        .select(col("doc_id"),
-          upper(substring(col("text"), 1, 10)).as("head10"),
-          TextFunctions.truncateEllipsis(col("text"), 50).as("trunc"),
-          length(col("text")).cast("bigint").as("len"))
-        .orderBy("doc_id")),
-    "st4_rechunk" -> ((s, d) =>
-      graft.streaming.StreamFraming.rechunk(
-        t(s, d, "documents").filter(col("doc_id") < 30).select("doc_id", "text"),
-        col("text"), 100)
-        .groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
-        .orderBy("doc_id")),
-    "st6_accumulate" -> ((s, _) => {
-      import s.implicits._
-      graft.streaming.StreamFraming.accumulate(
-        Fixtures.tokenStream.toDF("session_id", "seq", "chunk"),
-        "session_id", "seq", "chunk").orderBy("session_id")
-    }),
-    "zscore" -> ((s, d) => {
-      // StandardScaler semantics: (x - μ)/σ per event_type
-      // (ref dataset.py:40, predict.py:41 — fit/transform as one agg).
-      // ONE pass, no join-back: z = (x-μ)/σ is monotone in x (σ > 0,
-      // and fl-rounding preserves weak monotonicity), so the extreme
-      // z-scores are the z of the extreme values — max/min fold into
-      // the same groupBy that computes μ/σ, and the x100 point drops
-      // a full fact scan plus the stats join (1.45 s → 0.34 s
-      // measured). Degenerate groups behave identically to the join
-      // form: σ = 0 → ±Infinity/NaN, single-row σ = null → null z.
-      orderedSmall(t(s, d, "events")
-        .filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy("event_type")
-        .agg(avg("value").as("mu"), stddev_samp("value").as("sigma"),
-          max("value").as("mx"), min("value").as("mn"))
-        .select(col("event_type"),
-          round((col("mx") - col("mu")) / col("sigma"), 4).as("max_z"),
-          round((col("mn") - col("mu")) / col("sigma"), 4).as("min_z")),
-        "event_type")
-    }),
-    "ko_format" -> ((s, _) =>
-      // §2.8-str: {:,}원 number formatting + 은/는 particle choice
-      // (ref grocery_rag_service.py:54-60, enhanced:865-874)
-      Fixtures.grocery(s).select(col("product"),
-          explode(col("stores")).as("st"))
-        .groupBy("product").agg(min(col("st.price")).as("lo"))
-        .select(col("product"),
-          concat(col("product"), TextFunctions.koParticle(col("product")),
-            lit(" 최저 "), format_number(col("lo"), 0), lit("원")).as("line"))
-        .orderBy("product")),
-    "array_setops" -> ((s, d) =>
-      // §2.7 array set ops: anchor-style token difference/intersection
-      t(s, d, "documents").filter(col("doc_id") < 20)
-        .select(col("doc_id"),
-          split(lower(col("text")), "\\s+").as("toks"))
-        .select(col("doc_id"),
-          size(array_distinct(col("toks"))).cast("bigint").as("n_distinct"),
-          size(array_intersect(array_distinct(col("toks")),
-            array(lit("the"), lit("and"), lit("of")))).cast("bigint").as("n_stop"),
-          size(array_except(array_distinct(col("toks")),
-            array(lit("the"), lit("and"), lit("of")))).cast("bigint").as("n_content"))
-        .orderBy("doc_id")),
-  )
-
-  /** Fixture-backed queries (oracle = the same rows as VALUES lists):
-    * nested-JSON grocery (S5/A6/W7), news serving filters (P6/P11/P12/
-    * W2), the stateful sentence segmenter golden (ST2), cp949 CSV (S4). */
-  private val fixtureOps: Map[String, Q] = Map(
-    "grocery_minmax" -> ((s, _) =>
-      Fixtures.grocery(s).select(col("category"), col("product"), col("unit"),
-          explode(col("stores")).as("st"))
-        .groupBy("category", "product", "unit")
-        .agg(min(col("st.price")).cast("bigint").as("lo"),
-          max(col("st.price")).cast("bigint").as("hi"))
-        .orderBy("product")),
-    "grocery_beststore" -> ((s, _) => {
-      val st = Fixtures.grocery(s).select(col("product"),
-        explode(col("stores")).as("s"))
-        .select(col("product"), col("s.name").as("store"),
-          col("s.price").cast("bigint").as("price"))
-      Relational.latestPerKey(st, Seq(col("product")),
-          Seq(asc("price"), asc("store")))
-        .orderBy("product")
-    }),
-    "news_top" -> ((s, _) => {
-      val kws = Seq("반도체", "배터리", "금리")
-      Fixtures.news(s)
-        .withColumn("clean", TextFunctions.stripHtml(col("content")))
-        .filter(!col("is_summary") && length(col("clean")) > 30 &&
-          kws.map(k => col("title").contains(k) || col("clean").contains(k))
-            .reduce(_ || _))
-        .select(col("title"), col("published_date"),
-          round(col("score"), 2).as("score"))
-        .orderBy(desc("score"), col("title")).limit(10)
-    }),
-    "st_segment" -> ((s, _) => {
-      import s.implicits._
-      val ds = Fixtures.tokenStream.toDF("session_id", "seq", "chunk")
-        .as[(String, Long, String)]
-      ds.groupByKey(_._1).flatMapGroups { (sid, it) =>
-        SentenceSegmenter.segmentAll(it.toSeq.sortBy(_._2).map(_._3))
-          .zipWithIndex.map { case (sent, i) => (sid, i.toLong, sent) }
-      }.toDF("session_id", "idx", "sentence").orderBy("session_id", "idx")
-    }),
-    "rss_items" -> ((s, _) => {
-      // S6: real RSS XML via from_xml → explode items → HTML-entity
-      // strip + RFC-822 pubDate parse (UTC-normalized)
-      import s.implicits._
-      val schema = "STRUCT<channel: STRUCT<title: STRING, item: ARRAY<STRUCT<" +
-        "title: STRING, link: STRING, description: STRING, " +
-        "pubDate: STRING, category: STRING>>>>"
-      Seq(Fixtures.rssXml).toDF("xml")
-        .select(from_xml(col("xml"), schema,
-          new java.util.HashMap[String, String]()).as("ch"))
-        .select(explode(col("ch.channel.item")).as("it"))
-        .select(col("it.title").as("title"),
-          col("it.category").as("category"),
-          // Spark 3+ can't PARSE day-of-week ("EEE"); drop the prefix
-          date_format(to_timestamp(
-            regexp_replace(col("it.pubDate"), "^[A-Za-z]{3}, ", ""),
-            "dd MMM yyyy HH:mm:ss Z"), "yyyy-MM-dd HH:mm").as("ts"),
-          TextFunctions.stripHtml(col("it.description")).as("description"))
-        .orderBy("ts")
-    }),
-    "fruit_csv" -> ((s, _) =>
-      Fixtures.fruitPrices(s).agg(
-        count(lit(1)).as("n_days"),
-        round(avg("price"), 2).as("avg_price"),
-        date_format(min("date"), "yyyy-MM-dd").as("first_day"),
-        date_format(max("date"), "yyyy-MM-dd").as("last_day"))),
-  )
-
-  /** Ingest/search/multimodal composite pipelines (§2.10) — driven by
-    * the deterministic hash embedder; oracle-exempt (rows-only) where
-    * the JVM hash math has no SQL equivalent. */
-  private val pipelineOps: Map[String, Q] = Map(
-    "ingest_chunks" -> ((s, _) => {
-      val k = Fixtures.knowledge(s)
-      val schema = Ingest.inferSchema(k.columns.toSeq)
-      Ingest.buildIndex(k, schema, "knowledge", dim = 256)
-        .groupBy("save_name")
-        .agg(count(lit(1)).as("n_chunks"), countDistinct("doc_id").as("n_docs"),
-          sum(length(col("content"))).as("total_chars"))
-    }),
-    "webrag_pipeline" -> ((s, _) => {
-      // §3.3 external-web path: landing table → content guards (P11,
-      // P12) → HTML strip → chunk 800/80 → embed → top-8 retrieve →
-      // 500-char doc formatting (rag_service.py:61-202). The chunk
-      // table comes from Fixtures.webragChunks — the SAME definition
-      // materializeForOracle exports — so since r14 the DuckDB oracle
-      // re-runs the retrieve math (IEEE-exact cosine fold + top-8)
-      // itself; only the JVM chunker+embedder stay the boundary.
-      val chunks = Fixtures.webragChunks(s)
-      val qv = graft.ingest.HashEmbedder.embed("query: AI 반도체 시장", 512)
-      chunks
-        .select(col("title"), col("chunk_seq"),
-          VectorFunctions.cosineFast(col("embedding"), lit(qv)).as("score"))
-        .orderBy(desc("score"), col("title"), col("chunk_seq"))
-        .limit(8)
-        .select(col("title"),
-          round(col("score"), 4).as("score"))
-    }),
-    "ingest_bulk" -> ((s, d) => {
-      // §3.2 at corpus scale: schema-infer the documents table itself,
-      // expand → chunk → embed 5k docs (exempt: chunker/embedder are
-      // JVM functions)
-      val docs = tp(s, d, "documents")
-      val schema = Ingest.inferSchema(docs.columns.toSeq)
-      Ingest.buildIndex(docs, schema, "docs_bulk", chunkSize = 700,
-          overlap = 120, dim = 64)
-        .agg(count(lit(1)).as("n_chunks"), countDistinct("doc_id").as("n_docs"),
-          round(avg(length(col("content"))), 2).as("avg_chunk_chars"))
-    }),
-    "forecast_pipeline" -> ((s, _) => {
-      // §3.3 composite: cp949 CSV → daily resample → dense spine →
-      // gap-limited interpolation (14) → seasonal-naive(7) → metrics.
-      // Deterministic fixture → metrics pinned as a VALUES oracle.
-      val daily = TimeSeriesOps.dailyResample(
-        Fixtures.fruitPrices(s).withColumn("fruit", lit("banana")),
-        Seq(col("fruit")), col("date").cast("timestamp"), col("price"))
-      val spine = TimeSeriesOps.toDailySpine(daily, Seq("fruit"), "day", "avg_value")
-      val interp = TimeSeriesOps.interpolateGapLimited(
-        spine, Seq("fruit"), "day", "avg_value", maxGap = 14)
-        .filter(col("avg_value").isNotNull)
-      TimeSeriesOps.seasonalNaive(interp, Seq("fruit"), "day", "avg_value", 7)
-        .groupBy("fruit")
-        .agg(count(lit(1)).as("n_eval"),
-          round(TimeSeriesOps.rmse(col("avg_value"), col("pred")), 4).as("rmse"),
-          round(TimeSeriesOps.smape(col("avg_value"), col("pred")), 4).as("smape"))
-    }),
-    "rag_sources" -> ((s, _) => {
-      val k = Fixtures.knowledge(s)
-      val schema = Ingest.inferSchema(k.columns.toSeq)
-      val idx = Ingest.buildIndex(k, schema, "knowledge", dim = 512)
-      SearchPipeline.sources(
-        SearchPipeline.search(idx, "Self-Attention이 뭐야?", topK = 5,
-          margin = 0.5, simFloor = 0.0, dim = 512))
-        .orderBy("marker")
-    }),
-    "rag_answer_post" -> ((s, _) => {
-      // §3.1 steps 8-9: the answer post-processing chain —
-      // clean_korean_output (NFC, quote strip, spacing/punct fixes,
-      // ref enhanced_internal_db_service.py:890-909) then
-      // ensure_topic_prefix with the EN→KO term table and the 은/는
-      // particle rule (ref :852-888, applied at :669 and :847).
-      // LLM generation is out of scope (SURVEY §7.4), so the raw
-      // answers are fixture strings that each exercise one rule;
-      // deterministic → golden VALUES oracle.
-      import s.implicits._
-      val post = udf((a: String, t: String) =>
-        SearchPipeline.postprocessAnswer(a, t))
-      Seq(
-        (1L, "은 병렬 처리에 강합니다 ,  맞습니다..", "Self-Attention"),
-        (2L, "\"토큰 단위로 처리합니다\"", "token"),
-        (3L, "Attention is all you need .", "attention"),
-        (4L, "( 주의 )  메커니즘 입니다 !!", ""),
-        (5L, "- 그 다음 시퀀스를 정렬합니다", "sequence model"),
-        (6L, "『장기 의존성을 잘 잡습니다』", "model"))
-        .toDF("case_id", "raw", "topic")
-        .select(col("case_id"), post(col("raw"), col("topic")).as("answer"))
-        .orderBy("case_id")
-    }),
-    "langid_confusion" -> ((s, d) => orderedSmall(
-      tp(s, d, "documents")
-        .withColumn("pred", TextAnalysis.langId(col("text")))
-        .groupBy("lang", "pred").agg(count(lit(1)).as("n")),
-      "lang", "pred")),
-    "quality_scores" -> ((s, d) =>
-      tp(s, d, "documents")
-        .withColumn("q", TextAnalysis.qualityScore(col("text")))
-        .groupBy("source").agg(round(avg("q"), 4).as("avg_quality"))
-        .orderBy("source")),
-    "repetition_stats" -> ((s, d) =>
-      tp(s, d, "documents")
-        .select(col("doc_id"), TextAnalysis.repetition(col("text")).as("r"))
-        .select(col("doc_id"), col("r.n_tokens").as("n_tokens"),
-          round(col("r.distinct_ratio"), 4).as("distinct_ratio"),
-          round(col("r.top2_frac"), 4).as("top2_frac"),
-          round(col("r.dup2_frac"), 4).as("dup2_frac"),
-          round(col("r.dup3_frac"), 4).as("dup3_frac"))
-        .orderBy("doc_id")),
-    "lm_score" -> ((s, d) =>
-      // row-local scoring: the unigram log-prob map rides the closure
-      // (vocab-bounded, guarded) — no pair explode/join/groupBy;
-      // LmScoreSpec diffs this form against the broadcast-join form
-      TextAnalysis.corpusLmScoreRowLocal(tp(s, d, "documents"), "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"),
-          round(col("avg_logp"), 4).as("avg_logp"))
-        // pin the narrow scored rows before the output sort: the
-        // range-sort's sampling pass would otherwise re-execute the
-        // whole scoring scan (measured +1.1 s at the 100× point). The
-        // sort itself only exists for deterministic oracle output.
-        .localCheckpoint()
-        .orderBy("doc_id")),
-    "tfidf_terms" -> ((s, d) =>
-      // row-local top-3: the df map rides the closure (vocab-bounded,
-      // guarded), each doc ranks its own tf entries — no (doc,term)
-      // join, no rank-window exchange (TextAnalysisSpec diffs this
-      // form against the window form for equality)
-      TextAnalysis.tfidfTopTermsRowLocal(tp(s, d, "documents"),
-          "doc_id", "text", 3)
-        .select(col("doc_id"), col("rnk").cast("bigint").as("rnk"),
-          col("tok").as("term"), round(col("tfidf"), 4).as("tfidf"))
-        // pin before the output sort — see lm_score
-        .localCheckpoint()
-        .orderBy("doc_id", "rnk")),
-    "bm25_search" -> ((s, d) =>
-      // lexical retrieval: BM25 top-10 for a 3-term query ('dup' is
-      // the one rare vocab term — high idf separates the ranking)
-      TextAnalysis.bm25Rank(tp(s, d, "documents"), "doc_id", "text",
-          Seq("spark", "window", "dup"))
-        .select(col("doc_id"), round(col("bm25"), 4).as("bm25"))
-        .orderBy(desc("bm25"), col("doc_id")).limit(10)),
-    "url_canonical" -> ((s, d) => {
-      // URL canonicalization for dedup prep (the CommonCrawl/CCNet
-      // pre-step: near-identical pages differ only in tracking params,
-      // fragments, host case, www., trailing slash). Deterministic
-      // messy-URL synthesis (like domain_filter/pii_scrub), then a
-      // regexp canonicalization chain both engines run verbatim; the
-      // synthesized junk is all-tracking params, so the strip never
-      // leaves a dangling '?'/'&' (kept-param re-writing is out of
-      // scope). Exact-dup counting by canonical form follows.
-      val hosts = array(lit("News.Example.COM"), lit("blog.example.org"),
-        lit("Docs.Example.IO"), lit("wiki.example.edu"),
-        lit("Shop.Example.CO"))
-      val raw = t(s, d, "documents").select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 2 === 0, lit("HTTPS://")).otherwise(lit("https://")),
-          when(col("doc_id") % 3 === 0, lit("WWW.")).otherwise(lit("")),
-          element_at(hosts, (col("doc_id") % 5).cast("int") + 1),
-          lit("/doc/"), (col("doc_id") % 40).cast("string"),
-          when(col("doc_id") % 7 === 0, lit("/")).otherwise(lit("")),
-          when(col("doc_id") % 2 === 0, lit("?utm_source=feed&utm_campaign=sync"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 5 === 0, concat(lit("&gclid=g"), col("doc_id")))
-            .otherwise(lit("")),
-          when(col("doc_id") % 3 === 1, concat(lit("#sec"), (col("doc_id") % 4).cast("string")))
-            .otherwise(lit(""))).as("url"))
-      // single-pass codegen canonicalizer (r13 judge item #4): the
-      // 5-regexp chain materialized five rewritten copies of every URL
-      // and ran 9.9× DuckDB at x100; UrlCanonicalize is one byte scan
-      // + one host toLowerCase, equal to the chain by property spec
-      // (UrlCanonicalizeSpec) — the DuckDB oracle still runs the
-      // original regex chain, so the equivalence is hash-checked on
-      // every verify run too
-      val canonical = graft.plans.UrlCanonical.canonicalCol(col("url"))
-      // canonical-form groups are enum-sized (5 hosts × 40 ids ×
-      // variant flags) → orderedSmall replaces the global range sort,
-      // whose boundary sampling re-ran the whole canonicalize+agg chain
-      // r20 §2.3/§4: aggregate by RAW url first. `canonical` is a pure
-      // function of `url`, so grouping by url and canonicalizing the
-      // ~10³ distinct urls post-agg computes the identical result while
-      // (a) the per-row hot path hash-aggregates ONE string key instead
-      // of two (the old groupBy(canonical) also carried url inside
-      // count_distinct's dedup key), and (b) the canonicalizer byte
-      // scan runs per distinct url, not per row. n_raw = count(*) of
-      // the url-level rows (url-distinct by construction); n_docs =
-      // sum of per-url counts. Pinned row-equal in R20FormsSpec.
-      orderedSmall(raw
-        .groupBy("url").agg(count(lit(1)).as("_n"))
-        .select(canonical.as("canonical"), col("_n"))
-        .groupBy("canonical")
-        .agg(sum("_n").as("n_docs"), count(lit(1)).as("n_raw")),
-        "canonical")
-    }),
-    "heavy_hitters" -> ((s, d) => {
-      // Misra-Gries frequency sketch (functions/FrequentItems.scala):
-      // O(capacity) state per task, map-side-combined merge of
-      // <=capacity pairs — the 100 TB alternative to shuffling every
-      // distinct key. event_type's 5 distinct keys < capacity 16, so
-      // the sketch is provably exact here and the oracle is the real
-      // GROUP BY (the approximate regime's guarantees are spec-tested
-      // on planted skew in FrequentItemsSpec)
-      // r18: the sketch MERGE is fed from a codegen pre-count instead
-      // of per-row object updates — groupBy(event_type).count() runs
-      // as whole-stage-codegen HashAggregate (map-side-combined longs
-      // through the shuffle), and the Misra-Gries aggregator folds the
-      // resulting ≤|domain| (key, count) pairs as weighted inserts
-      // (associativity + error bound unchanged — FrequentItems
-      // scaladoc; FrequentItemsSpec pins weighted == per-row on
-      // planted skew). The per-row form paid ExpressionEncoder serde +
-      // toString + immutable-Map update per input row: most of the
-      // 1.7 s / 13.9× x1000 standout. For key domains too large to
-      // shuffle distinct keys, FrequentItems.column stays the
-      // single-pass no-pre-count path.
-      import s.implicits._
-      t(s, d, "events").groupBy(col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .as[(String, Long)]
-        .select(graft.functions.FrequentItems.weightedColumn(16).name("hh"))
-        .withColumn("h", explode(col("hh")))
-        .select(col("h._1").as("event_type"), col("h._2").as("est_count"))
-        .orderBy(desc("est_count"), col("event_type"))
-    }),
-    "approx_distinct" -> ((s, d) =>
-      // HLL++ sketch vs exact distinct: at 100 TB the sketch is the
-      // only single-pass no-shuffle-of-values option for cardinality;
-      // the oracle recomputes the exact side and the query asserts the
-      // sketch lands within 5% (rsd 0.02), so a drifting sketch fails
-      // the hash compare rather than passing silently.
-      // Shape note: dedup FIRST, then count+sketch the deduped pairs.
-      // Mixing count_distinct with the sketch in one agg makes Spark's
-      // distinct rewrite key the partial aggregate on (type, user) and
-      // drag a ~400-word HLL buffer per PAIR through the 10⁷-row map
-      // side (measured 2.2 s at the 100× point; this form is 0.75 s).
-      // The HLL estimate is identical either way — sketch state
-      // depends only on the distinct value set — and the dedup shuffle
-      // carries only the post-combine distinct pairs, which is also
-      // exactly what count_distinct would shuffle.
-      orderedSmall(t(s, d, "events")
-        .select("event_type", "user_id").distinct()
-        .groupBy("event_type")
-        .agg(count(col("user_id")).as("exact_users"),
-          approx_count_distinct(col("user_id"), 0.02).as("approx_users"))
-        .select(col("event_type"), col("exact_users"),
-          when(abs(col("approx_users") - col("exact_users")) <=
-            col("exact_users") * 0.05, 1L).otherwise(0L).as("within_5pct")),
-        "event_type")),
-    "domain_filter" -> ((s, d) => {
-      // source-domain blocklist filter: assign each doc a deterministic
-      // URL, extract the host, and drop blocklisted domains with a
-      // BROADCAST left_anti join (a blocklist is always tiny next to a
-      // 100 TB corpus; isin() would inline it into the plan instead of
-      // keeping it a data-driven table)
-      import s.implicits._
-      val hosts = array(
-        lit("news.example.com"), lit("blog.example.org"),
-        lit("spam.example.net"), lit("docs.example.io"),
-        lit("ads.tracker.example"), lit("wiki.example.edu"),
-        lit("shop.example.co"))
-      val urls = tp(s, d, "documents").select(col("doc_id"),
-        concat(lit("https://"),
-          element_at(hosts, (col("doc_id") % 7).cast("int") + 1),
-          lit("/doc/"), col("doc_id")).as("url"))
-      val blocklist = Seq("spam.example.net", "ads.tracker.example")
-        .toDF("domain")
-      urls.withColumn("domain", Pii.domain(col("url")))
-        .join(broadcast(blocklist), Seq("domain"), "left_anti")
-        .groupBy("domain")
-        .agg(count(lit(1)).as("n_docs"), min("doc_id").as("min_doc"))
-        .orderBy("domain")
-    }),
-    "pii_scrub" -> ((s, d) => {
-      // the synthetic corpus carries no PII, so plant deterministic
-      // emails/phones/URLs keyed off doc_id, then verify detection
-      // counts and the exact masked text (md5) against the oracle
-      val withPii = tp(s, d, "documents").select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 3 === 0,
-            concat(lit(" contact user"), col("doc_id"),
-              lit("@example.com for access"))).otherwise(lit("")),
-          when(col("doc_id") % 4 === 0,
-            concat(lit(" call +82-10-"),
-              format_string("%04d", col("doc_id") % 10000),
-              lit("-1234"))).otherwise(lit("")),
-          when(col("doc_id") % 5 === 0,
-            concat(lit(" see https://data.example.org/doc/"), col("doc_id"),
-              lit(" for details"))).otherwise(lit(""))).as("t"))
-      // one compiled traversal per row: counts + masked text together
-      // (the per-kind regexp_* composition re-scanned the text 8×).
-      // Sort-early shape: the global order is established BEFORE the
-      // scanner runs, so the range sampler re-executes only the cheap
-      // synthesis, not the UDF+md5 chain (a final orderBy re-ran the
-      // whole pipeline for boundary sampling — 2.3× slower at the
-      // 100× point). The explicit partition count pins post-shuffle
-      // parallelism: AQE would coalesce the small pre-scan shuffle to
-      // one partition and serialize the CPU-bound scanner stage.
-      withPii
-        .repartitionByRange(
-          s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .select(col("doc_id"), Pii.scrub(col("t")).as("p"))
-        .select(col("doc_id"),
-          col("p._1").as("n_emails"),
-          col("p._2").as("n_phones"),
-          col("p._3").as("n_urls"),
-          length(col("p._4")).cast("bigint").as("masked_len"),
-          md5(col("p._4")).as("masked_md5"))
-    }),
-    "multimodal_decode" -> ((s, d) => {
-      val assets = tp(s, d, "documents")
-        .select(col("doc_id").as("asset_id"),
-          when(col("doc_id") % 3 === 0, "image")
-            .when(col("doc_id") % 3 === 1, "audio").otherwise("video")
-            .as("media_type"),
-          concat(lit("mem://"), col("doc_id")).as("uri"),
-          encode(col("text"), "UTF-8").as("bytes"),
-          map(lit("src"), col("source")).as("meta"))
-      Multimodal.decode(assets)
-        .groupBy("media_type")
-        .agg(count(lit(1)).as("n"),
-          round(avg(col("decoded.width")), 4).as("avg_w"),
-          round(avg(col("decoded.duration_s")), 4).as("avg_dur"))
-        .orderBy("media_type")
-    }),
-    "ann_ivf" -> ((s, d) => {
-      // IVF probe vs exact: recall@10 of the nprobe=4/16 path. The
-      // hash-sampled, value-sorted driver-side fit
-      // (VectorIndex.train — layout/parallelism-independent since r5)
-      // is deterministic, so the recall is pinned as a VALUES oracle
-      // (uniform random vectors are IVF's worst case — 0.6 at 4/16
-      // probes at sf0.01 under that train path; the rerank inside
-      // probed clusters is exact)
-      val emb = t(s, d, "embeddings").filter(col("vec_id") =!= 0)
-      val q = queryVec(s, d, 0L)
-      // maxIter 10 / 5k-sample train: IVF coarse quantizers converge
-      // enough for probing in a few iterations over a sample (recall
-      // is measured right here); a full 20-iteration full-corpus fit
-      // doubles cost for no recall change
-      val model = graft.operators.VectorIndex.train(emb, "embedding", k = 16,
-        maxIter = 10, maxTrainSamples = 5000)
-      val indexed = graft.operators.VectorIndex.assign(emb, "embedding", model)
-      import s.implicits._
-      val exact = graft.operators.VectorSearch
-        .knnExact(emb, "vec_id", "embedding", q.toSeq, 10)
-        .select("vec_id").as[Long].collect().toSeq
-      val approx = graft.operators.VectorIndex
-        .searchApprox(indexed, model, "vec_id", "embedding", q, 10, 4)
-        .select("vec_id").as[Long].collect().toSeq
-      val recall = graft.operators.VectorIndex.recallAtK(exact, approx)
-      s.createDataFrame(Seq((10, 4, 16, recall)))
-        .toDF("k", "nprobe", "clusters", "recall")
-    }),
-    "ann_autoswap" -> ((s, d) => {
-      // §4 stretch, landed: the PLAN-LEVEL probe swap. The caller
-      // writes the cluster-partitioned index once and registers it;
-      // the query itself is the declarative sql_knn shape — ORDER BY
-      // cosine DESC LIMIT k with NO cluster predicate and no
-      // searchApprox call — and RewriteCosineTopKToProbes injects the
-      // `cluster IN (nprobe nearest)` filter, which partition-prunes
-      // the scan (PlanSpec pins the pruned plan). Same train path and
-      // nprobe as ann_ivf → identical probe set → the same 0.6 pinned
-      // recall; an accidentally non-firing rule would return exact
-      // results (recall 1.0) and break the pin.
-      val q = queryVec(s, d, 0L)
-      import s.implicits._
-      // exact baseline over the UNREGISTERED base table (no cluster
-      // column → the rule cannot fire on it by construction)
-      val exact = graft.operators.VectorSearch
-        .knnExact(t(s, d, "embeddings").filter(col("vec_id") =!= 0),
-          "vec_id", "embedding", q.toSeq, 10)
-        .select("vec_id").as[Long].collect().toSeq
-      val approx = annSwappedSearch(s, d)
-        .select("vec_id").as[Long].collect().toSeq
-      val recall = graft.operators.VectorIndex.recallAtK(exact, approx)
-      s.createDataFrame(Seq((10, 4, 16, recall)))
-        .toDF("k", "nprobe", "clusters", "recall")
-    }),
-    "ann_pq" -> ((s, d) => {
-      // IVF-PQ: the memory-scale ANN path — 8-byte codes instead of
-      // 4 KB vectors (512× at 1024-dim), ADC candidate scan over the
-      // code column only, exact rerank of the top-64 ids
-      // (operators/ProductQuantizer.scala; recall pinned like ann_ivf
-      // — same probe set, so the IVF 0.6 recall is the ceiling and the
-      // pin breaks if either the probe or the ADC ordering regresses).
-      // rerank=64 of ~4/16 of the corpus keeps the within-probe
-      // ordering loss near zero on this corpus (measured here).
-      val emb = t(s, d, "embeddings").filter(col("vec_id") =!= 0)
-      val q = queryVec(s, d, 0L)
-      import s.implicits._
-      // train once per embeddings snapshot (as annSwappedSearch's
-      // index): codebook / centroid training is one-time index-build
-      // cost — charging it to every query run misstates the query-time
-      // economics
-      val (ivf, pqm) = EngineState.of(s).getOrBuild(("annPq", d), Seq(embeddingsPath(d))) {
-        (graft.operators.VectorIndex.train(emb, "embedding", k = 16,
-          maxIter = 10, maxTrainSamples = 5000),
-          graft.operators.ProductQuantizer.train(emb, "embedding", m = 8))
-      }
-      val indexed = graft.operators.ProductQuantizer.encodeDf(
-        graft.operators.VectorIndex.assign(emb, "embedding", ivf),
-        "embedding", pqm)
-      val exact = graft.operators.VectorSearch
-        .knnExact(emb, "vec_id", "embedding", q.toSeq, 10)
-        .select("vec_id").as[Long].collect().toSeq
-      val approx = graft.operators.ProductQuantizer
-        .searchPQ(indexed, ivf, pqm, "vec_id", "embedding", q,
-          k = 10, nprobe = 4, rerank = 64)
-        .select("vec_id").as[Long].collect().toSeq
-      val recall = graft.operators.VectorIndex.recallAtK(exact, approx)
-      s.createDataFrame(Seq((10, 4, 8, recall)))
-        .toDF("k", "nprobe", "m", "recall")
-    }),
-    "jaccard_adjacent" -> ((s, d) => {
-      // exact n-gram Jaccard of (doc, doc+1) pairs — equi-join, no
-      // all-pairs; DuckDB rebuilds the same shingle sets independently
-      val sh = t(s, d, "documents").filter(col("doc_id") < 40)
-        .select(col("doc_id"),
-          array_distinct(TextFunctions.shingles(
-            TextFunctions.tokenize(col("text")), 3)).as("sh"))
-      val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sha"))
-      val b = sh.select(col("doc_id").as("id_b"), col("sh").as("shb"))
-      a.join(b, col("id_b") === col("id_a") + 1)
-        .select(col("id_a"), col("id_b"),
-          round(when(size(col("sha")) === 0 && size(col("shb")) === 0, 1.0)
-            .otherwise(size(array_intersect(col("sha"), col("shb"))).cast("double") /
-              size(array_union(col("sha"), col("shb")))), 4).as("jaccard"))
-        .orderBy("id_a")
-    }),
-    "simhash_neardups" -> ((s, d) => // real oracle: all-group-pairs recompute (SketchOracleSql)
-      // group-level pairs between distinct sketches (sketch-identical
-      // docs collapse to a representative before banding — the
-      // clique-free 100 TB shape); n_doc_pairs reconstructs the
-      // cross-group document-pair count from the carried group sizes
-      Dedup.simhashNearDups(
-        tp(s, d, "documents"), "doc_id", "text", maxHamming = 3)
-        .agg(count(lit(1)).as("n_pairs"),
-          round(avg("hamming"), 4).as("avg_hamming"),
-          coalesce(sum(col("sizeA") * col("sizeB")), lit(0L)).as("n_doc_pairs"))),
-    "mm_frames" -> ((s, d) => {
-      // multimodal frame sampling STATS: every-2nd 256-byte frame of
-      // each video asset, counted/sized via Multimodal.frameStats —
-      // the arithmetic projection of the posexplode form (which
-      // materialized ~1/3 of the corpus as 256-byte slices just to
-      // count them; 29.8× the oracle at x1000). The oracle recomputes
-      // the same counts/bytes from octet lengths, so this stays
-      // REAL-oracle checked; the slice-yielding sampleFrames path is
-      // spec-pinned equal in MultimodalSpec.
-      val assets = t(s, d, "documents").filter(col("doc_id") % 3 === 2)
-      Multimodal.frameStats(assets, col("doc_id"),
-          octet_length(col("text")), stride = 2)
-        .orderBy("asset_id").limit(50)
-    }),
-    "stratified_sample" -> ((s, d) =>
-      // training-mix construction: per-language systematic sampling at
-      // fixed per-mille rates — deterministic hash-mod membership the
-      // oracle reproduces with plain integer arithmetic
-      graft.operators.Sampling.systematicSample(
-        t(s, d, "documents"), col("doc_id"), col("lang"),
-        Map("en" -> 800L, "fr" -> 500L, "es" -> 250L, "de" -> 250L, "zh" -> 100L))
-        // (id folded mod 100003 before the multiply — no 64-bit wrap at
-        // any id range; see Sampling scaladoc)
-        .groupBy("lang").agg(count(lit(1)).as("n_sampled"))
-        .orderBy("lang")),
-    "mix_temperature" -> ((s, d) =>
-      // temperature-flattened mix (w ∝ √n): rates derived from the
-      // data in integer-exact arithmetic, so the oracle recomputes
-      // them independently — a REAL SQL oracle over a data-dependent
-      // sampling policy, not a pin
-      graft.operators.Sampling.temperatureMix(
-        t(s, d, "documents"), col("doc_id"), col("lang"), budget = 150L)
-        .groupBy("lang").agg(count(lit(1)).as("n_sampled"))
-        .orderBy("lang")),
-    "contamination" -> ((s, d) => {
-      // decontamination: corpus docs sharing any word 3-gram with the
-      // (simulated) eval set doc_id<5; real pipelines use 8-13-grams —
-      // 3 here because the synthetic docs are short
-      val docs = tp(s, d, "documents")
-      Dedup.contamination(docs.filter(col("doc_id") >= 5),
-          docs.filter(col("doc_id") < 5), "doc_id", "text", shingleN = 3)
-        .agg(count(lit(1)).as("n_contaminated"),
-          coalesce(sum("n_collisions"), lit(0L)).cast("bigint").as("n_collisions"))
-    }),
-    "minhash_neardups" -> ((s, d) => // real oracle: all-pairs exact-verify recompute (SketchOracleSql)
-      Dedup.minhashNearDups(
-        tp(s, d, "documents").filter(col("doc_id") < 300), "doc_id", "text",
-        shingleN = 3, numHashes = 16, bands = 8, threshold = 0.5)
-        .agg(count(lit(1)).as("n_pairs"),
-          round(avg("jaccard"), 4).as("avg_jaccard"))),
-    "embed_neardups" -> ((s, d) => { // real oracle: bit-exact sign-LSH recompute (SketchOracleSql)
-      // The raw embeddings are random, so no pair clears the cosine
-      // threshold and a bare run would pin n_pairs = 0 — a dedup query
-      // that asserts it finds nothing. Plant near-duplicates instead: a
-      // ±0.3% per-component rescale of each vector (cosine ≈ 1 to the
-      // original) under a shifted id, then assert the sign-LSH bucket
-      // join actually recovers them (n_planted_recovered of 200).
-      val base = t(s, d, "embeddings").filter(col("vec_id") < 200)
-        .select(col("vec_id"), col("embedding"))
-      val planted = base.select((col("vec_id") + 1000).as("vec_id"),
-        transform(col("embedding"), (x, i) =>
-          x * (lit(1.0f) + (pmod(i, lit(7)) - lit(3)).cast("float") * lit(0.001f)))
-          .as("embedding"))
-      Dedup.embeddingNearDups(base.unionByName(planted), "vec_id", "embedding",
-        dim = 64, bits = 8, threshold = 0.8)
-        .agg(count(lit(1)).as("n_pairs"), round(avg("cos"), 4).as("avg_cos"),
-          coalesce(sum(when(col("idB") - col("idA") === 1000, 1L).otherwise(0L)),
-            lit(0L)).as("n_planted_recovered"))
-    }),
-    "dedup_clusters" -> ((s, d) => {
-      // end-to-end dup clustering: LSH candidate pairs → exact verify →
-      // connected components → canonical id (cluster min). The corpus
-      // plants exact copies (+1000 for even ids, +2000 for ids % 4),
-      // and no natural pair clears jaccard 0.9 (measured max 0.03 at
-      // sf0.01) while identical texts always collide in every band, so
-      // the cluster set provably equals DuckDB's GROUP BY text — a
-      // real oracle through a completely different algorithm.
-      val base = tp(s, d, "documents").filter(col("doc_id") < 100)
-        .select(col("doc_id"), col("text"))
-      val corpus = base
-        .unionByName(base.filter(col("doc_id") % 2 === 0)
-          .select((col("doc_id") + 1000).as("doc_id"), col("text")))
-        .unionByName(base.filter(col("doc_id") % 4 === 0)
-          .select((col("doc_id") + 2000).as("doc_id"), col("text")))
-      val pairs = Dedup.minhashNearDups(corpus, "doc_id", "text",
-        shingleN = 3, numHashes = 16, bands = 8, threshold = 0.9)
-      val cc = Dedup.connectedComponents(
-        pairs.select(col("idA").as("src"), col("idB").as("dst")))
-      orderedSmall(corpus.select(col("doc_id").as("id"))
-        .join(cc, Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("id")).as("cluster"))
-        .groupBy("cluster")
-        .agg(count(lit(1)).as("n_members"), max("id").as("max_id")),
-        "cluster")
-    }),
-  )
-
-  /** Round-3 additions: sink/CRUD surfaces (S10/S11), SSE framing +
-    * partial flush + progress staging (ST1/ST3/ST5), the JDBC scan
-    * front door (S2), the watermarked event-time window, incremental
-    * index append + re-dedup, and structured from_json extraction. */
-  private val sinksAndJdbc: Map[String, Q] = Map(
-    "st1_sse" -> ((s, _) => {
-      // ST1: JSON token payload → SSE frame `data: {...}\n\n`
-      // (ref routes.py:316-336)
-      import s.implicits._
-      Fixtures.tokenStream.toDF("session_id", "seq", "chunk")
-        .filter(col("session_id") === "s1")
-        .select(col("seq"),
-          graft.streaming.StreamFraming.sseFrame(
-            to_json(struct(col("chunk").as("token")))).as("frame"))
-        .orderBy("seq")
-    }),
-    "st3_flush" -> ((s, _) => {
-      // ST3: partial-flush heuristic over the token stream — sentences
-      // emit on terminal chars, partials flush on pause punctuation or
-      // ≥20 buffered chars, the flushed buffer clears
-      // (ref streaming_tts_service.py:56-69,153-172)
-      import s.implicits._
-      val ds = Fixtures.tokenStream.toDF("session_id", "seq", "chunk")
-        .as[(String, Long, String)]
-      ds.groupByKey(_._1).flatMapGroups { (sid, it) =>
-        val out = Seq.newBuilder[(String, Long, String, String)]
-        var buf = ""
-        var n = 0L
-        it.toSeq.sortBy(_._2).foreach { c =>
-          val (sentences, partial, nb) = SentenceSegmenter.feedWithPartial(buf, c._3)
-          sentences.foreach { x => out += ((sid, n, "sentence", x)); n += 1 }
-          partial.foreach { p => out += ((sid, n, "partial", p)); n += 1 }
-          buf = nb
-        }
-        if (buf.trim.nonEmpty) out += ((sid, n, "tail", buf.trim))
-        out.result().iterator
-      }.toDF("session_id", "idx", "kind", "text")
-        .orderBy("session_id", "idx")
-    }),
-    "st5_progress" -> ((s, _) =>
-      // ST5: staged progress events (ref routes.py:1316-1371, 5%→100%)
-      graft.streaming.StreamFraming.progressEvents(s, Seq(
-        ("질문 분석", 5), ("문서 검색", 25), ("문맥 구성", 45),
-        ("답변 생성", 70), ("후처리", 90), ("완료", 100)))
-        .select(col("stage").cast("bigint").as("stage"),
-          col("pct").cast("bigint").as("pct"), col("message"))
-        .orderBy("stage")),
-    "s10_append" -> ((s, _) => {
-      // S10: append-mode embedding-index sink — two insertRows batches
-      // land additively (ref rag_service.py:86-95 incremental add)
-      val dir = EngineState.of(s).newDir("s10_") + "/idx"
-      val k = Fixtures.knowledge(s)
-      val schema = Ingest.inferSchema(k.columns.toSeq)
-      val idx = Ingest.buildIndex(k, schema, "knowledge", dim = 64)
-      graft.sources.Sinks.insertRows(s, dir, idx)
-      graft.sources.Sinks.insertRows(s, dir, idx.filter(col("doc_id") <= 2))
-      s.read.parquet(dir).agg(count(lit(1)).as("n_chunks"),
-        countDistinct("doc_id").as("n_docs"))
-    }),
-    "s11_crud" -> ((s, _) => {
-      // S11: insert → update-where → ownership-predicate delete
-      // (ref tool_executor.py:239-285,471-511,525-545)
-      import s.implicits._
-      val dir = EngineState.of(s).newDir("s11_") + "/rows"
-      val rows = Seq((1L, "u1", 10L), (2L, "u1", 20L), (3L, "u2", 30L),
-        (4L, "u2", 40L), (5L, "u1", 50L)).toDF("id", "owner", "qty")
-      graft.sources.Sinks.insertRows(s, dir, rows)
-      graft.sources.Sinks.updateWhere(s, dir, col("id") === 3,
-        Map("qty" -> lit(99L)))
-      graft.sources.Sinks.deleteWhere(s, dir,
-        col("id") === 5 && col("owner") === "u1")
-      s.read.parquet(dir).select("id", "owner", "qty").orderBy("id")
-    }),
-    "s2_jdbc" -> ((s, d) => {
-      // S2: the live-DB ingest front door via spark.read.jdbc against
-      // embedded Derby (ref enhanced_internal_db_service.py:475-510);
-      // the numeric predicate is pushed to the database (PlanSpec
-      // asserts PushedFilters on this exact shape)
-      val url = EngineState.of(s).newDerbyUrl("s2_jdbc_")
-      graft.sources.JdbcSource.writeTable(t(s, d, "nation"), url, "nation")
-      graft.sources.JdbcSource.readTable(s, url, "nation")
-        .filter(col("n_regionkey") < 3)
-        .groupBy(col("n_regionkey").cast("bigint").as("region_key"))
-        .agg(count(lit(1)).as("n_nations"))
-        .orderBy("region_key")
-    }),
-    "s2_mysql_types" -> ((s, _) => {
-      // S2 dialect coverage: the reference's MariaDB serving tables
-      // carry BIT/TINYINT(1) flags, TIME-of-day columns and DATEs that
-      // its Python layer coerces row-by-row (tool_executor.py:156-161,
-      // 227-228; routes.py:2450 medication). Same contract here as
-      // schema-driven column coercions over a JDBC read — Derby
-      // stands in for MariaDB with the same arrival types. Real
-      // recompute since r15: Fixtures.materializeForOracle exports the
-      // raw ARRIVAL rows to parquet and DuckDB re-runs the coercions
-      // itself; the JDBC transport is the declared boundary.
-      graft.sources.MySqlCoercions.normalize(
-          Fixtures.medicationArrival(s),
-          bitCols = Seq("ALARM_ENABLED"), timeCols = Seq("INTAKE_TIME"),
-          dateCols = Seq("REFILL_DATE"))
-        .select(col("MEDICATION_ID").cast("bigint").as("medication_id"),
-          col("NAME").as("name"), col("DOSAGE").as("dosage"),
-          col("INTAKE_TIME").as("intake_time"),
-          col("ALARM_ENABLED").as("alarm_enabled"),
-          col("REFILL_DATE").as("refill_date"))
-        .orderBy("medication_id")
-    }),
-    "st_dedup" -> ((s, d) => {
-      // §2.9: streaming duplicate-arrival dedup as a batch oracle.
-      // At-least-once sources re-deliver events; the engine keeps the
-      // FIRST arrival per event_id (dropDuplicatesWithinWatermark
-      // semantics while state is live). Re-deliveries are synthesized
-      // for every 50th event. StreamingDedupSpec drives the real
-      // withWatermark + dropDuplicatesWithinWatermark path.
-      // r19: the re-delivered arrivals are GENERATED inline (explode
-      // of a 1- or 2-element array) instead of a self-union — one
-      // events scan instead of two for the identical arrival stream
-      // (x1000 A/B: 1.18 s → 0.86 s min-of-5). The r18 _arr scramble
-      // (the arrival-position formula st_watermark uses) is gone with
-      // the row_number window below — the declared counts are
-      // arrival-position-independent; _src still distinguishes the
-      // synthetic re-delivery row.
-      val e = t(s, d, "events").filter(col("user_id") < 8)
-        .select(col("event_id"), col("user_id"))
-      val arrivals = e.select(col("event_id"), col("user_id"),
-        explode(when(col("event_id") % 50 === 0, array(lit(0), lit(1)))
-          .otherwise(array(lit(0)))).as("_src"))
-      // r19: the counts are arrival-order-INDEPENDENT — rn==1 marks
-      // exactly one row per event_id and rn>1 the rest, so per user:
-      // n_unique = #distinct event_ids, n_arrivals = Σ per-event
-      // arrival counts, n_dropped = Σ (cnt−1). Two hash aggregates
-      // (map-side-combined, whole-stage codegen) replace the keyed
-      // Sort+WindowExec pass (the _arr scramble column no longer
-      // ships through the exchange either); exchange count unchanged
-      // (event_id grouping, then user_id), row_number gone.
-      // StreamingDedupSpec pins this form equal to the rn==1 window
-      // form; selection of WHICH arrival survives (first-by-_arr)
-      // still matters in the real stream path, which the spec drives
-      // via withWatermark + dropDuplicatesWithinWatermark.
-      val perEvent = arrivals.groupBy("event_id", "user_id")
-        .agg(count(lit(1)).as("_cnt"))
-      orderedSmall(perEvent
-        .groupBy("user_id")
-        .agg(sum(col("_cnt")).as("n_arrivals"),
-          count(lit(1)).as("n_unique"),
-          sum(col("_cnt") - lit(1L)).as("n_dropped")),
-        "user_id")
-    }),
-    "st_watermark" -> ((s, d) => {
-      // §2.9: watermarked tumbling event-time window as a batch oracle.
-      // The testdata arrives ts-sorted, so out-of-order arrival is
-      // synthesized with a deterministic scramble of event_id (same
-      // formula both engines); watermark = running max event time over
-      // prior arrivals − 7 days; late rows drop before the hourly
-      // count. The unpartitioned running-max window IS the stream's
-      // driver-side watermark state — a batch stand-in, bounded here to
-      // the user_id<8 slice; StreamFramingSpec drives the real
-      // withWatermark path on a MemoryStream.
-      val e = t(s, d, "events").filter(col("user_id") < 8)
-        .withColumn("_arr", (col("event_id") * 2654435761L) % 1000003L)
-      val w = Window.orderBy(col("_arr"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      e.withColumn("_wm", max(col("ts")).over(w) - expr("interval 7 days"))
-        .filter(col("_wm").isNull || col("ts") >= col("_wm"))
-        .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm")
-          .as("win_start"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("win_start")
-    }),
-    "index_append_dedup" -> ((s, _) => {
-      // incremental add then idempotent re-ingest: append a re-ingested
-      // subset, exact-dedup by content hash (ref rag_service.py:86-95)
-      val dir = EngineState.of(s).newDir("apdedup_") + "/idx"
-      val k = Fixtures.knowledge(s)
-      val schema = Ingest.inferSchema(k.columns.toSeq)
-      val idx = Ingest.buildIndex(k, schema, "knowledge", dim = 64)
-      graft.sources.Sinks.insertRows(s, dir, idx)
-      graft.sources.Sinks.insertRows(s, dir, idx.filter(col("doc_id") <= 3))
-      val all = s.read.parquet(dir)
-      // both counts in one aggregation (a crossJoin of two 1-row aggs
-      // would plan a nested-loop join — banned by the PlanSpec sweep)
-      all.select(lit(1L).as("is_raw"))
-        .unionByName(Dedup.exactDedup(all, "content", "chunk_id")
-          .select(lit(0L).as("is_raw")))
-        .agg(sum(col("is_raw")).as("n_raw"),
-          sum(lit(1L) - col("is_raw")).as("n_deduped"))
-    }),
-    "from_json_props" -> ((s, d) =>
-      // §2.8-json: single-path JSON extraction over the events props
-      // column — real DuckDB oracle. History: from_json built a full
-      // parsed struct per row (33× DuckDB at 100×, round-4 audit);
-      // get_json_object dropped Jackson to one field but is a
-      // CodegenFallback with a per-row parser (21× at 10×, round-5
-      // audit). Now a native codegen byte scanner
-      // (plans/JsonExpressions.scala) — no Jackson, no repartition.
-      t(s, d, "events")
-        .select(col("event_type"),
-          graft.functions.JsonFunctions.jsonGet(col("props"), "k")
-            .cast("int").as("k"))
-        .groupBy("event_type")
-        .agg(round(avg("k"), 4).as("avg_k"), max("k").cast("bigint").as("max_k"))
-        .orderBy("event_type")),
-    "tool_calls" -> ((s, _) => {
-      // structured tool-call payload extraction (ref routes.py:2260-
-      // 2274, tool_calling_wrapper.py:110-143): nested from_json,
-      // malformed rows parse to null name and are filtered — the
-      // server's except-branch
-      val schema = "name STRING, arguments STRUCT<`table`: STRING, `limit`: INT>"
-      Fixtures.toolCalls(s)
-        .select(col("call_id"), from_json(col("payload"), lit(schema)).as("p"))
-        .select(col("call_id"), col("p.name").as("tool"),
-          col("p.arguments.table").as("target_table"),
-          col("p.arguments.limit").cast("bigint").as("lim"))
-        .filter(col("tool").isNotNull)
-        .orderBy("call_id")
-    }),
-  )
-
-  def queries: Map[String, Q] =
-    aggregates ++ filters ++ joins ++ windows ++ scalarsAndSets ++ llmOps ++
-      vectorOps ++ timeSeries ++ engineOps ++ fixtureOps ++ pipelineOps ++
-      sourcesAndScalars ++ sinksAndJdbc
-
-  // ---------------------------------------------------------------- //
-
-  private val knnTopSql =
-    """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0),
-      |top AS (SELECT e.vec_id, e.label, list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), qe) AS s
-      |        FROM embeddings e, q WHERE e.vec_id <> 0 ORDER BY s DESC, e.vec_id LIMIT %d)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "a1_sum" -> "SELECT round(sum(l_extendedprice),2) AS total_revenue, round(sum(l_quantity),2) AS total_qty FROM lineitem",
-    "a2_count" -> "SELECT count(*) AS n_rows FROM lineitem",
-    "a3_group_count" -> "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag",
-    "a4_minmaxavg" -> "SELECT round(min(p_retailprice),2) AS min_price, round(max(p_retailprice),2) AS max_price, round(avg(p_retailprice),2) AS avg_price FROM part",
-    "a5_histogram" -> "SELECT CASE WHEN p_size < 10 THEN 'small' WHEN p_size < 25 THEN 'medium' ELSE 'large' END AS bucket, count(*) AS n FROM part GROUP BY bucket ORDER BY bucket",
-    "a6_pricing_summary" -> ("SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty, round(sum(l_extendedprice),2) AS sum_base_price, " +
-      "round(sum(l_extendedprice*(1-l_discount)),2) AS sum_disc_price, round(avg(l_quantity),4) AS avg_qty, round(avg(l_extendedprice),4) AS avg_price, " +
-      "count(*) AS count_order FROM lineitem WHERE l_shipdate <= DATE '2000-12-01' GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"),
-    "a7_daily_resample" -> "SELECT CAST(ts AS DATE) AS day, round(avg(value),4) AS avg_value FROM events GROUP BY day ORDER BY day",
-    "a13_metrics" -> ("WITH m AS (SELECT event_type, avg(value) AS pred FROM events GROUP BY event_type) " +
-      "SELECT round(sqrt(avg(pow(e.value - m.pred, 2))),4) AS rmse, " +
-      "round(1 - sum(pow(e.value - m.pred, 2)) / (var_pop(e.value) * count(e.value)), 6) AS r2, " +
-      "round(avg(2*abs(m.pred - e.value)/greatest(abs(e.value)+abs(m.pred), 1e-8))*100, 4) AS smape " +
-      "FROM events e JOIN m USING (event_type)"),
-    "a9_longest_run" -> ("WITH days AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events WHERE event_type = 'purchase' AND user_id < 50 GROUP BY user_id, day), " +
-      "isl AS (SELECT user_id, day, day - CAST(row_number() OVER (PARTITION BY user_id ORDER BY day) AS INT) AS grp FROM days), " +
-      "runs AS (SELECT user_id, count(*) AS run_len, min(day) AS run_start FROM isl GROUP BY user_id, grp), " +
-      "best AS (SELECT user_id, run_len, run_start, row_number() OVER (PARTITION BY user_id ORDER BY run_len DESC, run_start) AS rn FROM runs) " +
-      "SELECT user_id, run_len, run_start FROM best WHERE rn = 1 ORDER BY user_id"),
-    "a14_budget" -> ("SELECT doc_id, n_chars FROM (SELECT doc_id, n_chars, coalesce(sum(n_chars) OVER (ORDER BY n_chars DESC, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS spent " +
-      "FROM (SELECT doc_id, n_chars FROM documents ORDER BY n_chars DESC, doc_id LIMIT 100)) " +
-      "WHERE spent < 5000 ORDER BY n_chars DESC, doc_id"),
-    "s1_scan" -> "SELECT c_custkey, coalesce(c_name,'') AS name, c_mktsegment FROM customer ORDER BY c_custkey LIMIT 500",
-    "p1_projection" -> "SELECT c_name, round(c_acctbal,2) AS acctbal FROM customer ORDER BY c_name",
-    "p2_rename" -> "SELECT o_orderkey AS order_id, o_orderpriority AS priority FROM orders WHERE o_custkey < 50 ORDER BY order_id",
-    "p3_eq_filter" -> "SELECT o_orderkey, o_custkey, round(o_totalprice,2) AS total_price FROM orders WHERE o_orderstatus = 'F' ORDER BY o_orderkey",
-    "p4_conjunction" -> "SELECT o_orderkey, round(o_totalprice,2) AS total_price FROM orders WHERE o_orderstatus = 'O' AND o_totalprice > 200000 ORDER BY o_orderkey",
-    "p5_date_range" -> "SELECT count(*) AS n, round(sum(l_extendedprice),2) AS revenue FROM lineitem WHERE l_shipdate >= DATE '1998-01-01' AND l_shipdate < DATE '1999-01-01'",
-    "p6_keyword_or" -> "SELECT lang, count(*) AS n FROM documents WHERE contains(lower(text), 'join') OR contains(lower(text), 'window') GROUP BY lang ORDER BY lang",
-    "p7_regex_parse" -> "SELECT CAST(regexp_extract(p_brand, '([0-9]+)', 1) AS INT) AS brand_num, count(*) AS n FROM part GROUP BY brand_num ORDER BY brand_num",
-    "p10_null_mask" -> "SELECT event_type, count(*) AS n FROM events WHERE value IS NOT NULL AND NOT isnan(value) GROUP BY event_type ORDER BY event_type",
-    "p11_length_guard" -> "SELECT source, count(*) AS n, round(avg(n_chars),4) AS avg_chars FROM documents WHERE n_chars > 200 GROUP BY source ORDER BY source",
-    // real oracle for the rolling polynomial hash (base 31, 64-bit
-    // wraparound): DuckDB recomputes it in HUGEINT with an explicit
-    // mod 2^64 per step (BIGINT would raise on overflow where the JVM
-    // wraps), then converts to signed two's complement. Parity caveat:
-    // JVM charAt is a UTF-16 unit, unicode() a codepoint — identical
-    // for all BMP text (the corpus; no surrogate pairs).
-    "doc_fingerprint" -> ("WITH t AS (SELECT doc_id, list_reduce(list_prepend(CAST(0 AS HUGEINT), " +
-      "list_transform(string_split(text, ''), c -> CAST(unicode(c) AS HUGEINT))), " +
-      "(h, c) -> (h * 31 + c) % CAST('18446744073709551616' AS HUGEINT)) AS m FROM documents) " +
-      "SELECT doc_id, CAST(CASE WHEN m >= CAST('9223372036854775808' AS HUGEINT) " +
-      "THEN m - CAST('18446744073709551616' AS HUGEINT) ELSE m END AS BIGINT) AS fp FROM t ORDER BY doc_id"),
-    // real oracle for the langId heuristic: per-language stopword hit
-    // counts, argmax with the engine's tie-break (alphabetically LAST
-    // among tied maxima; 'und' only when every count is 0)
-    "langid_confusion" -> ("WITH t AS (SELECT lang, string_split_regex(lower(text), '\\s+') AS toks FROM documents), " +
-      "h AS (SELECT lang, " +
-      "len(list_filter(toks, t -> t IN ('the','and','of','to','is','a','in','that'))) AS en, " +
-      "len(list_filter(toks, t -> t IN ('le','la','les','et','de','un','une','est'))) AS fr, " +
-      "len(list_filter(toks, t -> t IN ('el','la','los','y','de','que','es','una'))) AS es, " +
-      "len(list_filter(toks, t -> t IN ('der','die','das','und','ist','ein','nicht','mit'))) AS de, " +
-      "len(list_filter(toks, t -> t IN ('的','是','了','在','和','有','我','不'))) AS zh FROM t), " +
-      "p AS (SELECT lang, CASE WHEN greatest(en,fr,es,de,zh) = 0 THEN 'und' " +
-      "WHEN zh = greatest(en,fr,es,de,zh) THEN 'zh' WHEN fr = greatest(en,fr,es,de,zh) THEN 'fr' " +
-      "WHEN es = greatest(en,fr,es,de,zh) THEN 'es' WHEN en = greatest(en,fr,es,de,zh) THEN 'en' " +
-      "ELSE 'de' END AS pred FROM h) " +
-      "SELECT lang, pred, CAST(count(*) AS BIGINT) AS n FROM p GROUP BY 1,2 ORDER BY 1,2"),
-    // real oracle for the composite quality score: same length/punct/
-    // digit/stopword arithmetic re-derived with regexp counts (ASCII
-    // printable punctuation — control chars are absent from the corpus)
-    "quality_scores" -> ("WITH t AS (SELECT source, text, length(text) AS len, " +
-      "length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{-~]', '', 'g')) AS punct, " +
-      "length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS digit, " +
-      "list_filter(string_split_regex(lower(text), '\\s+'), x -> len(x) > 0) AS toks FROM documents), " +
-      "q AS (SELECT source, CASE WHEN text IS NULL OR len = 0 THEN 0.0 ELSE " +
-      "round((least(len / 400.0, 1.0) * 0.3 + " +
-      "least(CASE WHEN len(toks) = 0 THEN 0.0 ELSE CAST(len(list_filter(toks, x -> x IN ('the','and','of','to','is','a','in','that'))) AS DOUBLE) / len(toks) END * 4.0, 1.0) * 0.3 + " +
-      "greatest(0.0, 1.0 - CAST(punct AS DOUBLE) / len * 5.0 - CAST(digit AS DOUBLE) / len * 2.0) * 0.4), 6) END AS q FROM t) " +
-      "SELECT source, round(avg(q), 4) AS avg_quality FROM q GROUP BY source ORDER BY source"),
-    // real oracle for the Gopher-style repetition metrics: n-gram
-    // tables rebuilt with list comprehensions over the same \s+
-    // tokenization (1-based list indexing; range(a,b) is [a,b))
-    "repetition_stats" -> ("WITH toks AS (SELECT doc_id, " +
-      "list_filter(string_split_regex(lower(text), '\\s+'), x -> len(x) > 0) AS l FROM documents), " +
-      "base AS (SELECT doc_id, len(l) AS n_tokens, len(list_distinct(l)) AS n_distinct, " +
-      "list_transform(range(1, len(l)), i -> l[i] || ' ' || l[i+1]) AS g2, " +
-      "list_transform(range(1, len(l) - 1), i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2]) AS g3 FROM toks), " +
-      "c2 AS (SELECT doc_id, g, count(*) AS c FROM (SELECT doc_id, unnest(g2) AS g FROM base) GROUP BY doc_id, g), " +
-      "s2 AS (SELECT doc_id, max(c) AS top_c, coalesce(sum(c) FILTER (WHERE c > 1), 0) AS dup_c, sum(c) AS tot FROM c2 GROUP BY doc_id), " +
-      "c3 AS (SELECT doc_id, g, count(*) AS c FROM (SELECT doc_id, unnest(g3) AS g FROM base) GROUP BY doc_id, g), " +
-      "s3 AS (SELECT doc_id, coalesce(sum(c) FILTER (WHERE c > 1), 0) AS dup_c, sum(c) AS tot FROM c3 GROUP BY doc_id) " +
-      "SELECT b.doc_id, CAST(b.n_tokens AS BIGINT) AS n_tokens, " +
-      "round(CASE WHEN b.n_tokens = 0 THEN 0.0 ELSE CAST(b.n_distinct AS DOUBLE) / b.n_tokens END, 4) AS distinct_ratio, " +
-      "round(CASE WHEN coalesce(s2.tot, 0) = 0 THEN 0.0 ELSE CAST(coalesce(s2.top_c, 0) AS DOUBLE) / s2.tot END, 4) AS top2_frac, " +
-      "round(CASE WHEN coalesce(s2.tot, 0) = 0 THEN 0.0 ELSE CAST(s2.dup_c AS DOUBLE) / s2.tot END, 4) AS dup2_frac, " +
-      "round(CASE WHEN coalesce(s3.tot, 0) = 0 THEN 0.0 ELSE CAST(s3.dup_c AS DOUBLE) / s3.tot END, 4) AS dup3_frac " +
-      "FROM base b LEFT JOIN s2 USING (doc_id) LEFT JOIN s3 USING (doc_id) ORDER BY b.doc_id"),
-    // real oracle for the corpus-unigram LM score: same tokenization,
-    // same cnt/total log-prob (both engines do IEEE double division
-    // and natural log on identical integer counts)
-    "lm_score" -> ("WITH toks AS (SELECT doc_id, unnest(list_filter(" +
-      "string_split_regex(lower(text), '\\s+'), x -> len(x) > 0)) AS tok FROM documents), " +
-      "v AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok), " +
-      "tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM v) " +
-      "SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens, " +
-      "round(avg(ln(CAST(v.cnt AS DOUBLE) / tot.total)), 4) AS avg_logp " +
-      "FROM toks t JOIN v USING (tok) CROSS JOIN tot " +
-      "GROUP BY t.doc_id ORDER BY t.doc_id"),
-    // real oracle for tf-idf keywords: same tokenization, same
-    // tf·ln(N/df) arithmetic, same (tfidf DESC, term) tie-break
-    "tfidf_terms" -> ("WITH toks AS (SELECT doc_id, unnest(list_filter(" +
-      "string_split_regex(lower(text), '\\s+'), x -> len(x) > 0)) AS tok FROM documents), " +
-      "tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY doc_id, tok), " +
-      "dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok), " +
-      "n AS (SELECT count(*) AS n FROM documents), " +
-      "s AS (SELECT tf.doc_id, tf.tok, tf.tf * ln(CAST(n.n AS DOUBLE) / dfreq.df) AS tfidf " +
-      "FROM tf JOIN dfreq USING (tok) CROSS JOIN n), " +
-      "r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, tok) AS rnk FROM s) " +
-      "SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, tok AS term, round(tfidf, 4) AS tfidf " +
-      "FROM r WHERE rnk <= 3 ORDER BY doc_id, rnk"),
-    // real BM25 oracle: same tokenization, same k1=1.2/b=0.75
-    // arithmetic in the same association order ((1-b) + (b/avgdl)*dl),
-    // same rounded-score ordering
-    "bm25_search" -> ("WITH toks AS (SELECT doc_id, unnest(list_filter(" +
-      "string_split_regex(lower(text), '\\s+'), x -> len(x) > 0)) AS tok FROM documents), " +
-      "dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1), " +
-      "st AS (SELECT (SELECT count(*) FROM documents) AS n, " +
-      "(SELECT CAST(count(*) AS DOUBLE) FROM toks) / (SELECT count(*) FROM documents) AS avgdl), " +
-      "tf AS (SELECT doc_id, tok AS term, count(*) AS tf FROM toks " +
-      "WHERE tok IN ('spark', 'window', 'dup') GROUP BY 1, 2), " +
-      "dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1), " +
-      "s AS (SELECT tf.doc_id, sum(ln(1 + (st.n - dfq.df + 0.5) / (dfq.df + 0.5)) " +
-      "* tf.tf * 2.2 / (tf.tf + 1.2 * (0.25 + (0.75 / st.avgdl) * dl.dl))) AS bm25 " +
-      "FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN st GROUP BY 1) " +
-      "SELECT doc_id, round(bm25, 4) AS bm25 FROM s " +
-      "ORDER BY bm25 DESC, doc_id LIMIT 10"),
-    // real oracle for URL canonicalization: same deterministic messy
-    // synthesis, same regexp chain (DuckDB needs the 'g' flag; Spark
-    // regexp_replace is global by default)
-    "url_canonical" -> ("WITH u AS (SELECT doc_id, " +
-      "(CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END) || " +
-      "(CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END) || " +
-      "(['News.Example.COM','blog.example.org','Docs.Example.IO','wiki.example.edu','Shop.Example.CO'])[CAST(doc_id % 5 AS INT) + 1] || " +
-      "'/doc/' || CAST(doc_id % 40 AS VARCHAR) || " +
-      "(CASE WHEN doc_id % 7 = 0 THEN '/' ELSE '' END) || " +
-      "(CASE WHEN doc_id % 2 = 0 THEN '?utm_source=feed&utm_campaign=sync' ELSE '' END) || " +
-      "(CASE WHEN doc_id % 5 = 0 THEN '&gclid=g' || CAST(doc_id AS VARCHAR) ELSE '' END) || " +
-      "(CASE WHEN doc_id % 3 = 1 THEN '#sec' || CAST(doc_id % 4 AS VARCHAR) ELSE '' END) AS url " +
-      "FROM documents), c AS (SELECT url, " +
-      "regexp_replace(lower(regexp_extract(s3, '^[a-zA-Z]+://[^/]*', 0)), '^https://www\\.', 'https://') || " +
-      "regexp_replace(s3, '^[a-zA-Z]+://[^/]*', '') AS canonical FROM (" +
-      "SELECT url, regexp_replace(regexp_replace(regexp_replace(url, '#.*$', ''), " +
-      "'[?&](utm_[a-z]+|gclid|fbclid)=[^&#]*', '', 'g'), '/$', '') AS s3 FROM u)) " +
-      "SELECT canonical, CAST(count(*) AS BIGINT) AS n_docs, " +
-      "CAST(count(DISTINCT url) AS BIGINT) AS n_raw " +
-      "FROM c GROUP BY canonical ORDER BY canonical"),
-    // real oracle for the Misra-Gries sketch: exact when capacity >=
-    // distinct (no decrement ever fires), so plain GROUP BY recomputes it
-    "heavy_hitters" -> ("SELECT event_type, CAST(count(*) AS BIGINT) AS est_count " +
-      "FROM events GROUP BY event_type ORDER BY est_count DESC, event_type"),
-    // real oracle for the HLL sketch: DuckDB recomputes the exact
-    // distinct count; within_5pct = 1 is the sketch-accuracy claim
-    "approx_distinct" -> ("SELECT event_type, " +
-      "CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users, " +
-      "CAST(1 AS BIGINT) AS within_5pct " +
-      "FROM events GROUP BY event_type ORDER BY event_type"),
-    // real oracle for the domain blocklist filter: same URL
-    // assignment (1-based list indexing both sides), same host regex,
-    // blocklist as NOT IN
-    "domain_filter" -> ("WITH u AS (SELECT doc_id, 'https://' || " +
-      "(['news.example.com','blog.example.org','spam.example.net','docs.example.io'," +
-      "'ads.tracker.example','wiki.example.edu','shop.example.co'])[CAST(doc_id % 7 AS INT) + 1] " +
-      "|| '/doc/' || doc_id AS url FROM documents), " +
-      "dm AS (SELECT doc_id, regexp_extract(url, 'https?://([^/\\s:?#]+)', 1) AS domain FROM u) " +
-      "SELECT domain, CAST(count(*) AS BIGINT) AS n_docs, CAST(min(doc_id) AS BIGINT) AS min_doc " +
-      "FROM dm WHERE domain NOT IN ('spam.example.net', 'ads.tracker.example') " +
-      "GROUP BY domain ORDER BY domain"),
-    // real oracle for PII scrub: same deterministic injection, same
-    // RE2-compatible patterns (DuckDB regexp_replace needs the 'g'
-    // flag; Spark's is global by default)
-    "pii_scrub" -> ("WITH aug AS (SELECT doc_id, text || " +
-      "CASE WHEN doc_id % 3 = 0 THEN ' contact user' || doc_id || '@example.com for access' ELSE '' END || " +
-      "CASE WHEN doc_id % 4 = 0 THEN ' call +82-10-' || printf('%04d', doc_id % 10000) || '-1234' ELSE '' END || " +
-      "CASE WHEN doc_id % 5 = 0 THEN ' see https://data.example.org/doc/' || doc_id || ' for details' ELSE '' END AS t " +
-      "FROM documents), " +
-      "m AS (SELECT doc_id, t, regexp_replace(regexp_replace(regexp_replace(t, " +
-      "'https?://[^\\s]+', '[URL]', 'g'), " +
-      "'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[EMAIL]', 'g'), " +
-      "'\\+[0-9]{1,3}-[0-9]{2,4}-[0-9]{3,4}-[0-9]{4}', '[PHONE]', 'g') AS masked FROM aug) " +
-      "SELECT doc_id, " +
-      "CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails, " +
-      "CAST(len(regexp_extract_all(t, '\\+[0-9]{1,3}-[0-9]{2,4}-[0-9]{3,4}-[0-9]{4}')) AS BIGINT) AS n_phones, " +
-      "CAST(len(regexp_extract_all(t, 'https?://[^\\s]+')) AS BIGINT) AS n_urls, " +
-      "CAST(length(masked) AS BIGINT) AS masked_len, md5(masked) AS masked_md5 " +
-      "FROM m ORDER BY doc_id"),
-    "j1_equijoin" -> ("SELECT c.c_mktsegment AS segment, count(*) AS n_orders, round(sum(o.o_totalprice),2) AS revenue " +
-      "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey GROUP BY segment ORDER BY segment"),
-    "j2_multiway" -> ("SELECT r_name, count(*) AS n_customers FROM customer JOIN nation ON c_nationkey = n_nationkey " +
-      "JOIN region ON n_regionkey = r_regionkey GROUP BY r_name ORDER BY r_name"),
-    "j4_semijoin" -> "SELECT count(*) AS n FROM lineitem WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')",
-    // cross-algorithm oracle: DuckDB's NATIVE ASOF LEFT JOIN vs the
-    // engine's union+running-window formulation
-    "asof_join" -> ("WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase' AND user_id < 4), " +
-      "c AS (SELECT user_id, ts AS c_ts, max(event_id) AS click_id FROM events WHERE event_type = 'click' GROUP BY 1, 2) " +
-      "SELECT p.event_id, p.user_id, c.click_id, " +
-      "(epoch_us(p.ts) - epoch_us(c.c_ts)) // 1000000 AS lag_s " +
-      "FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.c_ts " +
-      "ORDER BY p.event_id"),
-    // the oracle states the range predicate directly (DuckDB may
-    // nested-loop it at sf scale); the engine's bucketed equi-join must
-    // produce the identical pair set
-    "range_join" -> ("WITH p AS (SELECT event_id AS p_id, ts AS p_ts FROM events WHERE event_type = 'purchase'), " +
-      "e AS (SELECT event_id AS e_id, ts AS e_ts FROM events WHERE event_type = 'error') " +
-      "SELECT CAST(p_ts AS DATE) AS day, count(*) AS n_pairs, " +
-      "count(DISTINCT p_id) AS n_purchases " +
-      "FROM p JOIN e ON abs(epoch_us(p_ts) - epoch_us(e_ts)) <= 300000000 " +
-      "GROUP BY 1 ORDER BY 1"),
-    "q3_shipping" -> ("SELECT l.l_orderkey, CAST(o.o_orderdate AS DATE) AS order_date, o.o_orderpriority, " +
-      "round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue " +
-      "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey JOIN customer c ON o.o_custkey = c.c_custkey " +
-      "WHERE c.c_mktsegment = 'BUILDING' AND o.o_orderdate < DATE '1995-03-15' AND l.l_shipdate > DATE '1995-03-15' " +
-      "GROUP BY 1, 2, 3 ORDER BY revenue DESC, l.l_orderkey LIMIT 10"),
-    "w9_distribution" -> ("SELECT o_custkey, o_orderkey, " +
-      "CAST(ntile(4) OVER w AS BIGINT) AS quartile, round(percent_rank() OVER w, 6) AS pct_rank, round(cume_dist() OVER w, 6) AS cdist " +
-      "FROM orders WHERE o_custkey < 10 " +
-      "WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey) " +
-      "ORDER BY o_custkey, o_orderkey"),
-    "cube_stats" -> ("SELECT lang, source, count(*) AS n, round(avg(n_chars), 4) AS avg_chars FROM documents " +
-      "GROUP BY CUBE (lang, source) ORDER BY lang NULLS FIRST, source NULLS FIRST"),
-    "j3_date_spine" -> ("WITH d AS (SELECT CAST(ts AS DATE) AS day, count(*) AS cnt FROM events WHERE user_id = 1 GROUP BY day), " +
-      "b AS (SELECT min(day) AS d0, max(day) AS d1 FROM d), " +
-      "spine AS (SELECT unnest(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS day FROM b) " +
-      "SELECT s.day, coalesce(d.cnt, 0) AS n FROM spine s LEFT JOIN d USING (day) ORDER BY day"),
-    "w1_topk" -> "SELECT o_orderkey, round(o_totalprice,2) AS total_price FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10",
-    "w2_topn_docs" -> "SELECT doc_id, n_chars FROM documents ORDER BY n_chars DESC, doc_id LIMIT 10",
-    "w3_latest_per_key" -> ("SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS order_date FROM " +
-      "(SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders WHERE o_custkey < 100) " +
-      "WHERE rn = 1 ORDER BY o_custkey"),
-    "w4_recent_n" -> ("SELECT o_custkey, o_orderkey, rn FROM " +
-      "(SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders WHERE o_custkey < 30) " +
-      "WHERE rn <= 3 ORDER BY o_custkey, rn"),
-    "w5_sliding" -> ("SELECT user_id, event_id, round(avg(value) OVER (PARTITION BY user_id ORDER BY event_id ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS ma7 " +
-      "FROM events WHERE user_id < 5 ORDER BY user_id, event_id"),
-    "w6_lag_trend" -> ("WITH d AS (SELECT CAST(ts AS DATE) AS day, avg(value) AS v FROM events GROUP BY day), " +
-      "l AS (SELECT day, v, lag(v) OVER (ORDER BY day) AS prev FROM d) " +
-      "SELECT day, round(v,4) AS avg_value, CASE WHEN prev IS NULL THEN 'new' WHEN v > prev THEN 'up' WHEN v < prev THEN 'down' ELSE 'flat' END AS trend " +
-      "FROM l ORDER BY day"),
-    "w7_rank_per_group" -> ("SELECT p_brand, p_partkey, round(p_retailprice,2) AS price, rn FROM " +
-      "(SELECT *, row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS rn FROM part) " +
-      "WHERE rn <= 3 ORDER BY p_brand, rn"),
-    "sort_multikey" -> "SELECT o_orderkey, CAST(o_orderdate AS DATE) AS order_date, o_orderstatus FROM orders ORDER BY o_orderdate, o_orderkey LIMIT 50",
-    "set_distinct" -> "SELECT DISTINCT lang, source FROM documents ORDER BY lang, source",
-    "set_union" -> ("SELECT lang, count(*) AS n FROM (SELECT doc_id, lang FROM documents WHERE lang = 'en' " +
-      "UNION ALL SELECT doc_id, lang FROM documents WHERE n_chars > 300 AND lang <> 'en') GROUP BY lang ORDER BY lang"),
-    "json_extract" -> ("SELECT event_type, round(avg(CAST(regexp_extract(props, '\"k\":\\s*([0-9]+)', 1) AS INT)),4) AS avg_k " +
-      "FROM events GROUP BY event_type ORDER BY event_type"),
-    "date_parts" -> "SELECT year(l_shipdate) AS y, month(l_shipdate) AS m, count(*) AS n, round(sum(l_quantity),2) AS qty FROM lineitem GROUP BY y, m ORDER BY y, m",
-    "seasonal_features" -> ("SELECT day, round(sin(dayofyear(day)*2*pi()/365.25),6) AS doy_sin, round(cos(dayofyear(day)*2*pi()/365.25),6) AS doy_cos " +
-      "FROM (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events) ORDER BY day"),
-    "dedup_exact" -> "SELECT count(*) AS n_rows, count(DISTINCT md5(text)) AS n_unique FROM documents",
-    "percentiles" -> ("SELECT lang, round(quantile_cont(n_chars, 0.5), 4) AS p50, " +
-      "round(quantile_cont(n_chars, 0.9), 4) AS p90 FROM documents GROUP BY lang ORDER BY lang"),
-    "rollup_stats" -> ("SELECT lang, source, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars FROM documents " +
-      "GROUP BY ROLLUP (lang, source) ORDER BY lang NULLS FIRST, source NULLS FIRST"),
-    "text_tokens" -> "SELECT lang, CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens, count(*) AS n_docs FROM documents GROUP BY lang ORDER BY lang",
-    "text_quality" -> ("SELECT source, round(sum(length(replace(text, ' ', ''))) / CAST(sum(len(string_split(text, ' '))) AS DOUBLE), 6) AS mean_word_len " +
-      "FROM documents GROUP BY source ORDER BY source"),
-    "lang_stopwords" -> ("SELECT lang, CAST(sum(len(list_filter(string_split(lower(text), ' '), t -> t IN ('the','and','of','to','is','a','in','that')))) AS BIGINT) AS en_hits " +
-      "FROM documents GROUP BY lang ORDER BY lang"),
-    "chunk_count" -> ("SELECT source, CAST(sum(n_chunks) AS BIGINT) AS total_chunks FROM " +
-      "(SELECT source, 1 + CASE WHEN length(text) > 41 THEN CAST(floor((length(text)-41)/160.0) AS BIGINT) ELSE 0 END AS n_chunks FROM documents) " +
-      "GROUP BY source ORDER BY source"),
-    "v1_knn" -> (knnTopSql.format(10) +
-      " SELECT vec_id, round(s,4) AS score FROM top ORDER BY score DESC, vec_id"),
-    "v2_knn_norm" -> (knnTopSql.format(20) +
-      ", n AS (SELECT vec_id, s, greatest(1.0, max(s) OVER ()) AS hi, least(-1.0, min(s) OVER ()) AS lo FROM top) " +
-      "SELECT vec_id, round((s - lo)/(hi - lo), 4) AS norm_score FROM n ORDER BY norm_score DESC, vec_id"),
-    "v3_margin" -> (knnTopSql.format(20) +
-      ", m AS (SELECT vec_id, s, max(s) OVER () AS best FROM top) " +
-      "SELECT vec_id, round(s,4) AS score FROM m WHERE s >= 0.1 AND s >= greatest(best - 0.12, best * 0.88) ORDER BY score DESC, vec_id"),
-    "a8_interpolate" -> ("WITH d AS (SELECT user_id, CAST(ts AS DATE) AS day, CAST(count(*) AS DOUBLE) AS v FROM events WHERE event_type = 'purchase' AND user_id < 20 GROUP BY 1, 2), " +
-      "b AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM d GROUP BY 1), " +
-      "spine AS (SELECT user_id, unnest(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS day FROM b), " +
-      "s AS (SELECT sp.user_id, sp.day, d.v FROM spine sp LEFT JOIN d USING (user_id, day)), " +
-      "w AS (SELECT *, " +
-      "last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv, " +
-      "last_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pd, " +
-      "first_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv, " +
-      "first_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd " +
-      "FROM s) " +
-      "SELECT user_id, day, round(CASE WHEN v IS NOT NULL THEN v " +
-      "WHEN NOT ((pd IS NOT NULL AND day - pd <= 3) OR (nd IS NOT NULL AND nd - day <= 3)) THEN NULL " +
-      "WHEN pd IS NOT NULL AND nd IS NOT NULL THEN pv + (nv - pv) * (day - pd) / (nd - pd) " +
-      "WHEN nd IS NOT NULL THEN nv ELSE pv END, 4) AS v FROM w ORDER BY user_id, day"),
-    "a15_trend" -> ("SELECT event_type, round(list_sum(list_slice(list(round(value,2) ORDER BY round(value,2) DESC), 1, 3)), 2) AS top3_sum " +
-      "FROM events WHERE value IS NOT NULL AND NOT isnan(value) GROUP BY event_type ORDER BY event_type"),
-    "w5_windows" -> ("WITH d AS (SELECT CAST(ts AS DATE) AS day, round(avg(value),4) AS v FROM events WHERE user_id = 2 GROUP BY day), " +
-      "w AS (SELECT day, " +
-      "sum(v) OVER (ORDER BY day ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS fs, " +
-      "count(*) OVER (ORDER BY day ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS fc, " +
-      "sum(v) OVER (ORDER BY day ROWS BETWEEN 1 FOLLOWING AND 2 FOLLOWING) AS ts, " +
-      "count(*) OVER (ORDER BY day ROWS BETWEEN 1 FOLLOWING AND 2 FOLLOWING) AS tc FROM d) " +
-      "SELECT day, round(fs,4) AS f_sum, round(ts,4) AS t_sum FROM w WHERE fc = 5 AND tc = 2 ORDER BY day"),
-    "s3_catalog" -> ("SELECT * FROM (VALUES ('customer'),('documents'),('embeddings'),('events'),('lineitem')," +
-      "('nation'),('orders'),('part'),('region'),('supplier')) AS t(table_name) ORDER BY table_name"),
-    "w8_roundrobin" -> ("SELECT o_orderpriority AS priority, rn, o_orderkey, round(o_totalprice,2) AS total_price FROM " +
-      "(SELECT *, row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rn " +
-      "FROM orders WHERE o_custkey < 200) WHERE rn <= 5 ORDER BY rn, priority LIMIT 15"),
-    "a12_l2branch" -> ("WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0) " +
-      "SELECT vec_id, round(1.0/(1.0 + list_distance(CAST(e.embedding AS DOUBLE[]), qe)), 4) AS sim " +
-      "FROM embeddings e, q WHERE e.vec_id <> 0 ORDER BY sim DESC, vec_id LIMIT 10"),
-    // REAL recomputes since r13 (were VALUES-pinned): DuckDB re-runs
-    // the min/max aggregation and the argmin-by-(price, store) window
-    // over the materialized grocery store rows (the JSON explode is
-    // upstream of the materialized input; the aggregation/window
-    // semantics are what these queries exist to check)
-    "grocery_minmax" -> (s"WITH s AS (SELECT * FROM read_parquet('${graft.fixtures.Fixtures.oracleFixtureDir}/grocery_stores.parquet/*.parquet')) " +
-      "SELECT category, product, unit, CAST(min(price) AS BIGINT) AS lo, CAST(max(price) AS BIGINT) AS hi " +
-      "FROM s GROUP BY category, product, unit ORDER BY product"),
-    "grocery_beststore" -> (s"WITH r AS (SELECT product, store, price, row_number() OVER (PARTITION BY product ORDER BY price, store) AS rn " +
-      s"FROM read_parquet('${graft.fixtures.Fixtures.oracleFixtureDir}/grocery_stores.parquet/*.parquet')) " +
-      "SELECT product, store, CAST(price AS BIGINT) AS price FROM r WHERE rn = 1 ORDER BY product"),
-    // real recompute since r14: DuckDB reads the exported news landing
-    // table and re-runs the HTML strip (same regex, 'g'), the summary/
-    // length guards and the keyword-OR rank itself
-    "news_top" -> (s"WITH n AS (SELECT * FROM read_parquet('${graft.fixtures.Fixtures.oracleFixtureDir}/news.parquet/*.parquet')), " +
-      "c AS (SELECT title, published_date, score, is_summary, " +
-      "regexp_replace(content, '<[^<]+?>', '', 'g') AS clean FROM n) " +
-      "SELECT title, published_date, round(score, 2) AS score FROM c " +
-      "WHERE NOT is_summary AND length(clean) > 30 AND " +
-      "(title LIKE '%반도체%' OR clean LIKE '%반도체%' OR title LIKE '%배터리%' " +
-      "OR clean LIKE '%배터리%' OR title LIKE '%금리%' OR clean LIKE '%금리%') " +
-      "ORDER BY score DESC, title LIMIT 10"),
-    "yahoo_chart" -> ("WITH s AS (SELECT i, 1735689600 + i*86400 AS ts, 2450.0 + i*3 - (i % 3)*7 AS close FROM range(10) t(i)), " +
-      "l AS (SELECT *, lag(close) OVER (ORDER BY i) AS prev FROM s) " +
-      "SELECT CAST(to_timestamp(ts) AS DATE) AS day, close, round((close - prev)/prev*100, 4) AS pct FROM l ORDER BY day"),
-    "s8_randomwalk" -> ("WITH s AS (SELECT i, ((i*1103515245 + 12345) % 2001 - 1000)/100.0 AS step FROM range(1000) t(i)) " +
-      "SELECT i, round(2500 + sum(step) OVER (ORDER BY i), 2) AS value FROM s ORDER BY i"),
-    "p9_anchor" -> ("SELECT lang, count(*) AS n FROM documents " +
-      "WHERE contains(lower(replace(text, 'passage:', ' ')), 'spark') OR contains(lower(replace(text, 'passage:', ' ')), 'shuffle') " +
-      "GROUP BY lang ORDER BY lang"),
-    "j2_context" -> ("SELECT c_custkey, c_name || ' [' || n_name || '] orders=' || CAST(n_orders AS VARCHAR) || ' last=' || CAST(last_order AS VARCHAR) AS context " +
-      "FROM (SELECT c.c_custkey, c.c_name, n.n_name, count(*) AS n_orders, CAST(max(o.o_orderdate) AS DATE) AS last_order " +
-      "FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey JOIN orders o ON o.o_custkey = c.c_custkey " +
-      "WHERE c.c_custkey < 20 GROUP BY 1, 2, 3) ORDER BY c_custkey"),
-    "date_functions" -> ("SELECT event_id, strftime(ts, '%Y-%m-%dT%H:%M:%S') AS iso, " +
-      "CAST(CAST(ts AS DATE) + INTERVAL 1 DAY AS DATE) AS next_day, strftime(ts, '%H:%M') AS hhmm " +
-      "FROM events WHERE user_id = 3 ORDER BY event_id LIMIT 50"),
-    "str_functions" -> ("SELECT doc_id, upper(substring(text, 1, 10)) AS head10, " +
-      "CASE WHEN length(text) > 50 THEN substring(text, 1, 50) || '...' ELSE text END AS trunc, " +
-      "length(text) AS len FROM documents WHERE doc_id < 30 ORDER BY doc_id"),
-    "st4_rechunk" -> ("SELECT doc_id, CAST(floor((length(text)-1)/100) + 1 AS BIGINT) AS n_chunks " +
-      "FROM documents WHERE doc_id < 30 ORDER BY doc_id"),
-    "jaccard_adjacent" -> ("WITH t AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(toks)-2, 0)), i -> array_to_string(toks[i:i+2], ' '))) AS sh " +
-      "FROM (SELECT doc_id, regexp_extract_all(lower(text), '[가-힣a-z0-9][가-힣a-z0-9\\-_/]+') AS toks FROM documents WHERE doc_id < 40)) " +
-      "SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
-      "round(CASE WHEN len(a.sh) = 0 AND len(b.sh) = 0 THEN 1.0 " +
-      "ELSE len(list_intersect(a.sh, b.sh)) / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE) END, 4) AS jaccard " +
-      "FROM t a JOIN t b ON b.doc_id = a.doc_id + 1 ORDER BY id_a"),
-    "sessionize" -> ("WITH e AS (SELECT user_id, ts, CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 30 MINUTE " +
-      "OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL THEN 1 ELSE 0 END AS new_s " +
-      "FROM events WHERE user_id < 10), " +
-      "s AS (SELECT user_id, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM e), " +
-      "g AS (SELECT user_id, sid, count(*) AS n_events FROM s GROUP BY 1, 2) " +
-      "SELECT user_id, count(*) AS n_sessions, CAST(sum(n_events) AS BIGINT) AS total_events, max(n_events) AS max_session_events " +
-      "FROM g GROUP BY user_id ORDER BY user_id"),
-    "ratio_split" -> ("WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events WHERE user_id < 5), " +
-      "w AS (SELECT user_id, day, row_number() OVER (PARTITION BY user_id ORDER BY day) AS pos, count(*) OVER (PARTITION BY user_id) AS n FROM d) " +
-      "SELECT user_id, CASE WHEN pos <= floor(n * 0.7) THEN 'train' WHEN pos <= floor(n * 0.9) THEN 'val' ELSE 'test' END AS split, count(*) AS n_rows " +
-      "FROM w GROUP BY 1, 2 ORDER BY user_id, split"),
-    "seasonal_naive" -> ("WITH d AS (SELECT CAST(ts AS DATE) AS day, avg(value) AS v FROM events WHERE user_id = 7 GROUP BY 1), " +
-      "l AS (SELECT day, v, lag(v, 7) OVER (ORDER BY day) AS pred FROM d) " +
-      "SELECT round(sqrt(avg(pow(v - pred, 2))), 4) AS rmse, " +
-      "round(avg(2*abs(pred - v)/greatest(abs(v)+abs(pred), 1e-8))*100, 4) AS smape FROM l WHERE pred IS NOT NULL"),
-    "salted_join" -> ("SELECT o.o_orderpriority, count(*) AS n, round(sum(l.l_extendedprice), 2) AS revenue " +
-      "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey " +
-      "WHERE o.o_orderpriority = '1-URGENT' GROUP BY 1 ORDER BY 1"),
-    "sql_knn" -> (knnTopSql.format(10) +
-      " SELECT vec_id, round(s, 4) AS score FROM top ORDER BY score DESC, vec_id"),
-    "stratified_sample" -> ("SELECT lang, count(*) AS n_sampled FROM documents " +
-      "WHERE ((doc_id % 100003) * 2654435761) % 1000 < CASE lang WHEN 'en' THEN 800 WHEN 'fr' THEN 500 WHEN 'es' THEN 250 WHEN 'de' THEN 250 WHEN 'zh' THEN 100 ELSE 0 END " +
-      "GROUP BY lang ORDER BY lang"),
-    // recomputes the temperature rates independently: integer sqrt of
-    // the per-domain counts, one integer division — bit-identical to
-    // the Scala derivation, then the same portable hash-mod rule
-    "mix_temperature" -> ("WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang), " +
-      "w AS (SELECT lang, n, CAST(floor(sqrt(n)) AS BIGINT) AS sw FROM c), " +
-      "r AS (SELECT lang, least(1000, (150 * 1000 * sw) // (CAST((SELECT sum(sw) FROM w) AS BIGINT) * n)) AS rate FROM w) " +
-      "SELECT d.lang, count(*) AS n_sampled FROM documents d JOIN r ON d.lang = r.lang " +
-      "WHERE ((d.doc_id % 100003) * 2654435761) % 1000 < r.rate " +
-      "GROUP BY d.lang ORDER BY d.lang"),
-    "contamination" -> ("WITH t AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(toks)-2, 0)), i -> array_to_string(toks[i:i+2], ' '))) AS sh " +
-      "FROM (SELECT doc_id, regexp_extract_all(lower(text), '[가-힣a-z0-9][가-힣a-z0-9\\-_/]+') AS toks FROM documents)), " +
-      "ev AS (SELECT DISTINCT unnest(sh) AS s FROM t WHERE doc_id < 5), " +
-      "corpus AS (SELECT doc_id, unnest(sh) AS s FROM t WHERE doc_id >= 5) " +
-      "SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_contaminated, count(*) AS n_collisions FROM corpus JOIN ev USING (s)"),
-    "mm_frames" -> ("WITH d AS (SELECT doc_id AS asset_id, octet_length(encode(text)) AS nb FROM documents WHERE doc_id % 3 = 2 AND octet_length(encode(text)) > 0), " +
-      "c AS (SELECT asset_id, nb, CAST(ceil(nb/256.0) AS BIGINT) AS nchunks FROM d), " +
-      "f AS (SELECT asset_id, nb, nchunks, CAST(ceil(nchunks/2.0) AS BIGINT) AS n_frames FROM c) " +
-      "SELECT asset_id, n_frames, CAST(256*(n_frames-1) + CASE WHEN 2*(n_frames-1) = nchunks-1 THEN nb - 256*(nchunks-1) ELSE 256 END AS BIGINT) AS frame_bytes " +
-      "FROM f ORDER BY asset_id LIMIT 50"),
-    "pack_sequences" -> ("WITH d AS (SELECT doc_id, doc_id % 8 AS shard, CAST(len(string_split(text, ' ')) AS BIGINT) AS toks FROM documents), " +
-      "w AS (SELECT *, coalesce(sum(toks) OVER (PARTITION BY shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tokens_before FROM d) " +
-      "SELECT shard, CAST(floor(tokens_before / 2048) AS BIGINT) AS seq_id, count(*) AS n_docs, CAST(sum(toks) AS BIGINT) AS n_tokens " +
-      "FROM w GROUP BY 1, 2 ORDER BY shard, seq_id"),
-    "zscore" -> ("WITH e AS (SELECT event_type, value FROM events WHERE value IS NOT NULL AND NOT isnan(value)), " +
-      "s AS (SELECT event_type, avg(value) AS mu, stddev_samp(value) AS sigma FROM e GROUP BY 1) " +
-      "SELECT e.event_type, round(max((value - mu)/sigma), 4) AS max_z, round(min((value - mu)/sigma), 4) AS min_z " +
-      "FROM e JOIN s USING (event_type) GROUP BY e.event_type ORDER BY e.event_type"),
-    // REAL recompute since r13 (was VALUES-pinned): DuckDB re-derives
-    // the min price AND the Korean formatting — format('{:,}') for the
-    // thousands grouping and the 은/는 particle from the hangul
-    // final-consonant rule ((codepoint − 0xAC00) % 28 ≠ 0 → 은) —
-    // over the materialized grocery store rows
-    "ko_format" -> (s"WITH g AS (SELECT product, min(price) AS lo FROM read_parquet('${graft.fixtures.Fixtures.oracleFixtureDir}/grocery_stores.parquet/*.parquet') GROUP BY product) " +
-      "SELECT product, product || (CASE WHEN (unicode(right(product,1)) - 44032) % 28 <> 0 THEN '은' ELSE '는' END) " +
-      "|| ' 최저 ' || format('{:,}', CAST(lo AS BIGINT)) || '원' AS line FROM g ORDER BY product"),
-    "array_setops" -> ("WITH d AS (SELECT doc_id, list_distinct(regexp_split_to_array(lower(text), '\\s+')) AS toks FROM documents WHERE doc_id < 20) " +
-      "SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_distinct, " +
-      "CAST(len(list_intersect(toks, ['the','and','of'])) AS BIGINT) AS n_stop, " +
-      "CAST(len(toks) - len(list_intersect(toks, ['the','and','of'])) AS BIGINT) AS n_content FROM d ORDER BY doc_id"),
-    "st6_accumulate" -> ("SELECT * FROM (VALUES " +
-      "('s1','안녕하세요. 오늘은 날씨가 좋습니다! 내일은 비가 온다고 합니다. 우산을 챙기세요')," +
-      "('s2','First sentence here. Second one continues, with a comma pause that runs long enough to flush. And a tail without end')) " +
-      "AS t(session_id,text) ORDER BY session_id"),
-    "rss_items" -> ("SELECT * FROM (VALUES " +
-      "('코스피 상승 마감','economy','2025-07-30 00:30','코스피가 외국인 매수에 힘입어 상승 마감했다.')," +
-      "('환율 변동성 확대','economy','2025-07-31 05:00','원달러 환율이 급등락을 반복하고 있다.')," +
-      "('반도체 수출 호조','it','2025-07-31 23:15','반도체 수출이 3개월 연속 증가했다.')) " +
-      "AS t(title,category,ts,description) ORDER BY ts"),
-    // Deterministic fixture-pipeline goldens (hash embedder / chunker /
-    // decode stub are pure JVM functions; rows recorded once and pinned):
-    "fruit_csv" -> ("SELECT * FROM (VALUES (CAST(71 AS BIGINT), CAST(3046.68 AS DOUBLE), '2025-01-01', '2025-04-30')) " +
-      "AS t(n_days, avg_price, first_day, last_day)"),
-    "ingest_chunks" -> ("SELECT * FROM (VALUES ('knowledge', CAST(7 AS BIGINT), CAST(7 AS BIGINT), CAST(3243 AS BIGINT))) " +
-      "AS t(save_name, n_chunks, n_docs, total_chars)"),
-    "forecast_pipeline" -> ("SELECT * FROM (VALUES ('banana', CAST(113 AS BIGINT), CAST(18.2045 AS DOUBLE), CAST(0.4724 AS DOUBLE))) " +
-      "AS t(fruit, n_eval, rmse, smape)"),
-    "forecast_ridge" -> ("SELECT * FROM (VALUES ('banana', CAST(24 AS BIGINT), CAST(26.2627 AS DOUBLE), CAST(0.7533 AS DOUBLE))) " +
-      "AS t(fruit, n_eval, rmse, smape)"),
-    // AR(7) one-step-ahead on the same fixture: the sequence model
-    // beats the calendar ridge (rmse 7.28 vs 26.26) as the lookback
-    // window carries the local level the seasonal features can't
-    "forecast_ar" -> ("SELECT * FROM (VALUES ('banana', CAST(23 AS BIGINT), CAST(7.2784 AS DOUBLE), CAST(0.1777 AS DOUBLE))) " +
-      "AS t(fruit, n_eval, rmse, smape)"),
-    // rule-distillation linear probe: 94 held-out docs, 50 predicted
-    // high-quality, 93.6% agreement with the nonlinear teacher rule
-    // (majority-class base rate at this threshold is ~55%)
-    "quality_classifier" -> ("SELECT * FROM (VALUES (CAST(94 AS BIGINT), CAST(50 AS BIGINT), CAST(0.9362 AS DOUBLE))) " +
-      "AS t(n_eval, n_pred_hq, accuracy)"),
-    "ingest_bulk" -> ("SELECT * FROM (VALUES (CAST(1553 AS BIGINT), CAST(500 AS BIGINT), CAST(439.59 AS DOUBLE))) " +
-      "AS t(n_chunks, n_docs, avg_chunk_chars)"),
-    // real recompute since r14: DuckDB reads the exported post-embedder
-    // chunk table and re-runs the RETRIEVE math itself — the codegen
-    // cosine is a sequential double fold over float inputs, which
-    // list_reduce reproduces bit-exactly (same technique as
-    // embed_neardups), so score, top-8 cut and tie-breaks all recompute;
-    // the JVM chunker+HashEmbedder remain the declared boundary
-    "webrag_pipeline" -> {
-      val qv = graft.ingest.HashEmbedder.embed("query: AI 반도체 시장", 512)
-      val qd = qv.map(_.toDouble.toString).mkString("[", ",", "]")
-      def fold(expr: String) =
-        s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, len(ea)+1), i -> $expr)), (a,x) -> a+x)"
-      val score = "CASE WHEN sqrt(nx) * sqrt(ny) = 0 THEN 0.0 ELSE dot / (sqrt(nx) * sqrt(ny)) END"
-      s"WITH q AS MATERIALIZED (SELECT $qd AS qv), " +
-        s"c AS (SELECT title, chunk_seq, embedding AS ea FROM read_parquet('${graft.fixtures.Fixtures.oracleFixtureDir}/webrag_chunks.parquet/*.parquet')), " +
-        s"s AS (SELECT title, chunk_seq, ${fold("CAST(ea[i] AS DOUBLE) * qv[i]")} AS dot, " +
-        s"${fold("CAST(ea[i] AS DOUBLE) * CAST(ea[i] AS DOUBLE)")} AS nx, " +
-        s"${fold("qv[i] * qv[i]")} AS ny FROM c CROSS JOIN q) " +
-        s"SELECT title, round($score, 4) AS score FROM " +
-        s"(SELECT * FROM s ORDER BY $score DESC, title, chunk_seq LIMIT 8) t " +
-        // the outer SELECT repeats the inner (unrounded) ordering: SQL
-        // guarantees nothing about subquery row order surviving the
-        // outer projection, and the driver compares rows in emitted
-        // order — without this a DuckDB planner change could reorder
-        // tied rows into a spurious mismatch (r14 advisory)
-        s"ORDER BY $score DESC, title, chunk_seq"
-    },
-    // golden outputs recorded from the pure postprocess chain (pure
-    // JVM string functions, deterministic): EN→KO topic translation +
-    // 은/는 particle + prefix guarantee + clean_korean_output fixes
-    "rag_answer_post" -> ("SELECT * FROM (VALUES " +
-      "(CAST(1 AS BIGINT), '셀프-어텐션은 병렬 처리에 강합니다, 맞습니다.'), " +
-      "(CAST(2 AS BIGINT), '토큰 단위로 처리합니다'), " +
-      "(CAST(3 AS BIGINT), 'Attention is all you need.'), " +
-      "(CAST(4 AS BIGINT), '(주의) 메커니즘 입니다!'), " +
-      "(CAST(5 AS BIGINT), '시퀀스 모델은 - 그 다음 시퀀스를 정렬합니다'), " +
-      "(CAST(6 AS BIGINT), '모델은 장기 의존성을 잘 잡습니다')) " +
-      "AS t(case_id, answer) ORDER BY case_id"),
-    "rag_sources" -> ("SELECT * FROM (VALUES ('S1','2','Self-Attention','Self-Attention',CAST(0.5 AS DOUBLE))," +
-      "('S2','4','Transformer','Transformer',0.4892),('S3','1','어텐션 메커니즘','어텐션 메커니즘',0.4606)) " +
-      "AS t(marker,id,title,oo,score) ORDER BY marker"),
-    // real recompute since r15: the decode under test is the
-    // DOCUMENTED deterministic stub, so DuckDB re-runs the byte fold +
-    // finalizer + modular features itself (SketchOracleSql) — the pin
-    // is gone
-    "multimodal_decode" -> SketchOracleSql.multimodalDecode,
-    "st_segment" -> ("SELECT * FROM (VALUES ('s1',CAST(0 AS BIGINT),'안녕하세요.')," +
-      "('s1',1,'오늘은 날씨가 좋습니다!'),('s1',2,'내일은 비가 온다고 합니다.'),('s1',3,'우산을 챙기세요')," +
-      "('s2',0,'First sentence here.')," +
-      "('s2',1,'Second one continues, with a comma pause that runs long enough to flush.')," +
-      "('s2',2,'And a tail without end')) AS t(session_id,idx,sentence) ORDER BY session_id, idx"),
-    "st1_sse" -> ("SELECT CAST(seq AS BIGINT) AS seq, 'data: {\"token\":\"' || tok || '\"}' || chr(10) || chr(10) AS frame FROM (VALUES " +
-      "(0, '안녕하세요. 오늘'),(1, '은 날씨가 좋'),(2, '습니다! 내일은 비'),(3, '가 온다고 합니다'),(4, '. 우산을 챙기세요')) " +
-      "AS t(seq, tok) ORDER BY seq"),
-    "st3_flush" -> ("SELECT session_id, CAST(idx AS BIGINT) AS idx, kind, text FROM (VALUES " +
-      "('s1', 0, 'sentence', '안녕하세요.'),('s1', 1, 'sentence', '오늘은 날씨가 좋습니다!')," +
-      "('s1', 2, 'sentence', '내일은 비가 온다고 합니다.'),('s1', 3, 'tail', '우산을 챙기세요')," +
-      "('s2', 0, 'sentence', 'First sentence here.')," +
-      "('s2', 1, 'partial', 'Second one continues, with a comma pause that runs long enough to flush')," +
-      "('s2', 2, 'sentence', '.'),('s2', 3, 'partial', 'And a tail without end')) " +
-      "AS t(session_id, idx, kind, text) ORDER BY session_id, idx"),
-    "st5_progress" -> ("SELECT CAST(stage AS BIGINT) AS stage, CAST(pct AS BIGINT) AS pct, message FROM (VALUES " +
-      "(0, 5, '질문 분석'),(1, 25, '문서 검색'),(2, 45, '문맥 구성'),(3, 70, '답변 생성'),(4, 90, '후처리'),(5, 100, '완료')) " +
-      "AS t(stage, pct, message) ORDER BY stage"),
-    "s10_append" -> ("SELECT * FROM (VALUES (CAST(9 AS BIGINT), CAST(7 AS BIGINT))) AS t(n_chunks, n_docs)"),
-    "s11_crud" -> ("SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'u1', CAST(10 AS BIGINT))," +
-      "(2, 'u1', 20),(3, 'u2', 99),(4, 'u2', 40)) AS t(id, owner, qty) ORDER BY id"),
-    // deterministic Derby fixture → pinned rows; the coercions under
-    // test (BIT→bool, TIME→'HH:MM' seconds-dropped, DATE→ISO) are the
-    // reference's serving-layer semantics
-    // real recompute since r15: DuckDB reads the exported raw JDBC
-    // arrival rows and re-runs the dialect coercions itself — the
-    // TIME→"HH:MM" seconds-drop, the TINYINT(1)→bool '≠0', the
-    // DATE→ISO formatting (the contract MySqlCoercions implements)
-    "s2_mysql_types" -> {
-      s"SELECT CAST(MEDICATION_ID AS BIGINT) AS medication_id, NAME AS name, " +
-        "DOSAGE AS dosage, strftime(INTAKE_TIME, '%H:%M') AS intake_time, " +
-        "(ALARM_ENABLED <> 0) AS alarm_enabled, " +
-        "strftime(REFILL_DATE, '%Y-%m-%d') AS refill_date " +
-        s"FROM read_parquet('${graft.fixtures.Fixtures.oracleFixtureDir}/medication_arrival.parquet/*.parquet') " +
-        "ORDER BY medication_id"
-    },
-    "s2_jdbc" -> ("SELECT CAST(n_regionkey AS BIGINT) AS region_key, count(*) AS n_nations " +
-      "FROM nation WHERE n_regionkey < 3 GROUP BY 1 ORDER BY 1"),
-    "st_dedup" -> ("WITH e AS (SELECT event_id, user_id FROM events WHERE user_id < 8), " +
-      "a AS (SELECT event_id, user_id, 0 AS src FROM e " +
-      "UNION ALL SELECT event_id, user_id, 1 FROM e WHERE event_id % 50 = 0), " +
-      "r AS (SELECT *, row_number() OVER (PARTITION BY event_id " +
-      "ORDER BY (event_id * 2654435761) % 1000003 + src * 2000000) AS rn FROM a) " +
-      "SELECT user_id, count(*) AS n_arrivals, " +
-      "CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique, " +
-      "CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped " +
-      "FROM r GROUP BY user_id ORDER BY user_id"),
-    "st_watermark" -> ("WITH a AS (SELECT event_id, ts, (event_id * 2654435761) % 1000003 AS arr FROM events WHERE user_id < 8), " +
-      "w AS (SELECT *, max(ts) OVER (ORDER BY arr, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) - INTERVAL 7 DAY AS wm FROM a) " +
-      "SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS win_start, count(*) AS n " +
-      "FROM w WHERE wm IS NULL OR ts >= wm GROUP BY 1 ORDER BY 1"),
-    "index_append_dedup" -> ("SELECT * FROM (VALUES (CAST(10 AS BIGINT), CAST(7 AS BIGINT))) AS t(n_raw, n_deduped)"),
-    // The five sketch oracles are REAL DuckDB recomputations since
-    // round 11 — HUGEINT mod-2^64 arithmetic re-derives every text
-    // sketch, and embed_neardups' sign-LSH buckets come from IEEE-
-    // deterministic double folds (see SketchOracleSql's scaladoc for
-    // the per-query equivalence arguments). The ann_* pins remain:
-    // the seeded k-means fit has no bit-exact SQL form.
-    "minhash_bands" -> SketchOracleSql.minhashBands,
-    "minhash_neardups" -> SketchOracleSql.minhashNearDups,
-    "simhash_neardups" -> SketchOracleSql.simhashNearDups,
-    "embed_neardups" -> SketchOracleSql.embedNearDups,
-    // real oracle for LSH→connected-components clustering: identical
-    // planting, but clusters recomputed as exact-content groups (the
-    // two are provably equal — see the query comment)
-    "dedup_clusters" -> ("WITH corpus AS (" +
-      "SELECT doc_id, text FROM documents WHERE doc_id < 100 " +
-      "UNION ALL SELECT doc_id + 1000, text FROM documents WHERE doc_id < 100 AND doc_id % 2 = 0 " +
-      "UNION ALL SELECT doc_id + 2000, text FROM documents WHERE doc_id < 100 AND doc_id % 4 = 0) " +
-      "SELECT min(doc_id) AS cluster, CAST(count(*) AS BIGINT) AS n_members, " +
-      "CAST(max(doc_id) AS BIGINT) AS max_id " +
-      "FROM corpus GROUP BY text ORDER BY cluster"),
-    // recall re-pinned after the layout-independent train() sample
-    // (hash-selected + value-sorted — round-4 advisory): 0.3 → 0.6
-    "ann_ivf" -> ("SELECT * FROM (VALUES (CAST(10 AS INT), CAST(4 AS INT), CAST(16 AS INT), CAST(0.6 AS DOUBLE))) AS t(k, nprobe, clusters, recall)"),
-    // same train path + nprobe as ann_ivf → same probe set → same
-    // recall; a silently non-firing swap returns exact results
-    // (recall 1.0) and breaks this pin
-    "ann_autoswap" -> ("SELECT * FROM (VALUES (CAST(10 AS INT), CAST(4 AS INT), CAST(16 AS INT), CAST(0.6 AS DOUBLE))) AS t(k, nprobe, clusters, recall)"),
-    // pinned: measured at sf0.01 under the deterministic train paths
-    // (hash-sampled value-sorted fits); rerank=64 keeps IVF-PQ at the
-    // IVF probe ceiling, so the pin equals ann_ivf's
-    "ann_pq" -> ("SELECT * FROM (VALUES (CAST(10 AS INT), CAST(4 AS INT), CAST(8 AS INT), CAST(0.6 AS DOUBLE))) AS t(k, nprobe, m, recall)"),
-    "simhash_sketch" -> SketchOracleSql.simhashSketch,
-    "from_json_props" -> ("SELECT event_type, round(avg(CAST(json_extract_string(props, '$.k') AS INT)), 4) AS avg_k, " +
-      "CAST(max(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS max_k " +
-      "FROM events GROUP BY event_type ORDER BY event_type"),
-    // REAL recompute since r13 (was VALUES-pinned): the raw payload
-    // strings are materialized to parquet by
-    // Fixtures.materializeForOracle, and DuckDB re-runs the actual
-    // JSON extraction with ITS OWN parser — try_cast(… AS JSON)
-    // nulls the malformed row exactly like from_json's except-branch
-    (("tool_calls": String) -> (s"WITH src AS (SELECT * FROM read_parquet('${graft.fixtures.Fixtures.oracleFixtureDir}/tool_calls.parquet/*.parquet')), " +
-      "p AS (SELECT call_id, try_cast(payload AS JSON) AS j FROM src) " +
-      "SELECT CAST(call_id AS BIGINT) AS call_id, j->>'$.name' AS tool, " +
-      "j->>'$.arguments.table' AS target_table, CAST(j->>'$.arguments.limit' AS BIGINT) AS lim " +
-      "FROM p WHERE (j->>'$.name') IS NOT NULL ORDER BY call_id")),
-    "v4_diversify" -> (knnTopSql.format(20) +
-      ", capped AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY label ORDER BY s DESC, vec_id) AS gr FROM top) WHERE gr <= 2), " +
-      "g AS (SELECT *, min(pos) OVER (PARTITION BY label) AS gpos FROM (SELECT *, row_number() OVER (ORDER BY s DESC, vec_id) AS pos FROM capped)) " +
-      "SELECT vec_id, label, round(s,4) AS score FROM g ORDER BY gr, gpos, s DESC, vec_id LIMIT 8"),
-  )
+  def oracleSql: Map[String, String] = specs.map(q => q.name -> q.oracle).toMap
 }

@@ -44,15 +44,6 @@ object TextFunctions {
   def tokenize(c: Column): Column =
     regexp_extract_all(lower(c), lit("[가-힣a-z0-9][가-힣a-z0-9\\-_/]+"), lit(0))
 
-  /** Simple whitespace token count (LLM-pipeline token stats). */
-  def tokenCount(c: Column): Column =
-    size(filter(split(c, "\\s+"), t => length(t) > 0))
-
-  /** BPE-ish subword count: words + digits + punctuation runs, the
-    * standard cheap proxy for tokenizer load estimation. */
-  def subwordCount(c: Column): Column =
-    size(regexp_extract_all(c, lit("[A-Za-z가-힣]+|[0-9]+|[^A-Za-z가-힣0-9\\s]"), lit(0)))
-
   /** Truncate with ellipsis. Ref: rag_service.py:153-156 (500 chars),
     * enhanced_internal_db_service.py:805 (900). */
   def truncateEllipsis(c: Column, maxLen: Int): Column =

@@ -154,33 +154,6 @@ object Dedup {
     h ^= (h >>> 33); h
   }
 
-  def minhashSigUdf(shingleN: Int, numHashes: Int) = udf((tokens: Seq[String]) => {
-    val seeds = Array.tabulate(numHashes)(i => mix64(0x9e3779b97f4a7c15L * (i + 1)))
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    if (tokens != null && tokens.length >= shingleN) {
-      var i = 0
-      while (i <= tokens.length - shingleN) {
-        var h = 1125899906842597L
-        var j = 0
-        while (j < shingleN) {
-          val t = tokens(i + j)
-          var k = 0
-          while (k < t.length) { h = h * 31L + t.charAt(k); k += 1 }
-          h = h * 31L + ' '
-          j += 1
-        }
-        var s = 0
-        while (s < numHashes) {
-          val v = mix64(h ^ seeds(s))
-          if (v < mins(s)) mins(s) = v
-          s += 1
-        }
-        i += 1
-      }
-    }
-    mins.toSeq
-  })
-
   /** Whole LSH banding from the raw text in one compiled pass
     * (tokenize → signature → band buckets): the column-composed
     * variant below re-evaluates the signature expression once per band

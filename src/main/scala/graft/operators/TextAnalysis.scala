@@ -26,88 +26,23 @@ object TextAnalysis {
     * ([[graft.plans.TextScan.stopwordHits]]) — the r18 UDF form paid a
     * full UTF8String→String decode + toLowerCase copy + split array
     * per row, which WAS lang_stopwords' 6.2×/4.8 s wall at the 17 GB
-    * point. [[stopwordHitsUdf]] keeps the old pipeline as the
-    * reference semantics; TextScanSpec fuzz-pins the two equal. */
+    * point. The test-scope TextReference.stopwordHitsUdf keeps the
+    * old pipeline as the reference semantics; TextScanSpec fuzz-pins
+    * the two equal. */
   def stopwordHits(text: Column, lang: String): Column =
     // coalesce preserves the UDF's null contract (null text → 0 hits)
     coalesce(graft.plans.TextScan.stopwordCount(text, stopwords(lang)), lit(0))
 
-  /** The original compiled-UDF stopword counter, kept verbatim as the
-    * spec's reference semantics for [[stopwordHits]]. */
-  def stopwordHitsUdf(lang: String): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val set = stopwords(lang).toSet
-    udf((s: String) =>
-      if (s == null) 0
-      else {
-        val toks = s.toLowerCase(java.util.Locale.ROOT).split("\\s+")
-        var hits = 0
-        var i = 0
-        while (i < toks.length) { if (set.contains(toks(i))) hits += 1; i += 1 }
-        hits
-      })
-  }
-
-  /** Language-ID heuristic: argmax over per-language stopword hit
-    * counts; 'und' when nothing matches; ties break to the
-    * lexicographically larger code (array_max-on-struct semantics,
-    * kept for output stability). One compiled pass — the HOF
-    * formulation re-split the text once per language after
-    * project-collapse (21 s → sub-second on the sf0.1 corpus). */
-  private[graft] val langIdUdf = {
-    val table: Map[String, Seq[String]] = stopwords
-    udf((text: String) => {
-      if (text == null) "und"
-      else {
-        val toks = text.toLowerCase.split("\\s+")
-        var bestLang = "und"
-        var bestHits = 0
-        table.toSeq.sortBy(_._1).foreach { case (lang, sw) =>
-          val set = sw.toSet
-          var hits = 0
-          var i = 0
-          while (i < toks.length) { if (set.contains(toks(i))) hits += 1; i += 1 }
-          if (hits > bestHits || (hits == bestHits && hits > 0 && lang > bestLang)) {
-            bestHits = hits; bestLang = lang
-          }
-        }
-        bestLang
-      }
-    })
-  }
-
   /** r20 (guide §4): ONE in-place token pass with a combined
     * (token → language bitmask) lookup instead of the UDF's per-doc
     * text lower+split plus five set passes with per-doc set
-    * construction. [[langIdUdf]] stays as the reference semantics
-    * (TfidfKernelSpec fuzz-pins the two equal, including the
-    * lex-larger tie rule and the null→'und' contract). */
+    * construction. Argmax over per-language stopword hit counts;
+    * 'und' when nothing matches; ties break to the lexicographically
+    * larger code. The test-scope TextReference.langIdUdf is the
+    * reference semantics (TfidfKernelSpec fuzz-pins the two equal,
+    * including the tie rule and the null→'und' contract). */
   def langId(text: Column): Column =
     coalesce(graft.plans.Tfidf.langIdCol(text, stopwords), lit("und"))
-
-  /** Quality signals (length / punctuation / stopword / digit ratios)
-    * — the standard cheap pre-training text filters. */
-  def punctRatio(text: Column): Column =
-    size(regexp_extract_all(text, lit("[\\p{Punct}]"), lit(0))).cast("double") /
-      greatest(length(text).cast("double"), lit(1.0))
-
-  def digitRatio(text: Column): Column =
-    size(regexp_extract_all(text, lit("[0-9]"), lit(0))).cast("double") /
-      greatest(length(text).cast("double"), lit(1.0))
-
-  def meanWordLength(text: Column): Column = {
-    val toks = filter(split(text, "\\s+"), t => length(t) > 0)
-    when(size(toks) === 0, 0.0).otherwise(
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-        size(toks).cast("double"))
-  }
-
-  def stopwordRatio(text: Column, lang: String = "en"): Column = {
-    val toks = filter(split(lower(text), "\\s+"), t => length(t) > 0)
-    val sw = array(stopwords(lang).map(lit): _*)
-    when(size(toks) === 0, 0.0).otherwise(
-      size(filter(toks, t => array_contains(sw, t))).cast("double") /
-        size(toks).cast("double"))
-  }
 
   /** Composite quality score in [0,1]: rewards sentence-like length
     * and stopword presence, penalizes punct/digit noise. Weights are
@@ -314,68 +249,14 @@ object TextAnalysis {
 
   private val tfPairsUdf = udf(tfProfile _)
 
-  /** Vocabulary fold over per-doc tf profiles as a typed Aggregator:
-    * ONE corpus pass builds the full (token → Σtf) or (token → df)
-    * map with NO pair explode, no wide shuffle (per-partition map
-    * buffers, single-partition merge) and no `limit(...).collect()` —
-    * CollectLimit's incremental scale-up re-ran the whole agg in up
-    * to 4 sequential jobs (measured ~1.0 s for a 0.5 s pass at the
-    * 100× point). The vocab bound is enforced INSIDE reduce/merge, so
-    * an open vocabulary fails loudly in the executor before any
-    * oversized buffer is built or shipped — strictly earlier (and
-    * cheaper) than the old post-collect `require`.
-    *
-    * Buffer is an immutable Map: per-token update is O(log n) HAMT —
-    * fine to the enforced bound; the merge ships ≤ one vocab-sized
-    * buffer per partition. */
-  private final class VocabFold(maxVocab: Int, weighted: Boolean)
-      extends Aggregator[String, Map[String, Long], Map[String, Long]] {
-    private def bounded(m: Map[String, Long]): Map[String, Long] = {
-      require(m.size <= maxVocab,
-        s"vocabulary exceeds maxVocab=$maxVocab; " +
-          "use the distributed (join/window) form for open vocabularies")
-      m
-    }
-    override def zero: Map[String, Long] = Map.empty
-    override def reduce(b: Map[String, Long], text: String): Map[String, Long] = {
-      // fold the profile straight off the text — no intermediate
-      // profile-array encode/decode between tokenizer and aggregate
-      val prof = tfProfile(text)
-      var acc = b
-      var i = 0
-      while (i < prof.length) {
-        val (tok, tf) = prof(i)
-        acc = acc.updated(tok, acc.getOrElse(tok, 0L) + (if (weighted) tf else 1L))
-        i += 1
-      }
-      bounded(acc)
-    }
-    override def merge(x: Map[String, Long],
-                       y: Map[String, Long]): Map[String, Long] =
-      bounded(y.foldLeft(x) { case (acc, (tok, c)) =>
-        acc.updated(tok, acc.getOrElse(tok, 0L) + c)
-      })
-    override def finish(r: Map[String, Long]): Map[String, Long] = r
-    override def bufferEncoder: Encoder[Map[String, Long]] =
-      ExpressionEncoder[Map[String, Long]]()
-    override def outputEncoder: Encoder[Map[String, Long]] =
-      ExpressionEncoder[Map[String, Long]]()
-  }
-
-  /** Vocab fold as a bare aggregate column: the reference semantics
-    * TfidfKernelSpec pins the kernel fold against. */
-  private[graft] def vocabFoldCol(text: Column, maxVocab: Int,
-                                  weighted: Boolean): Column =
-    udaf(new VocabFold(maxVocab, weighted), Encoders.STRING)(text)
-
-  /** [[vocabFoldCol]] over the r20 kernel fold (the committed path). */
+  /** The vocab fold ([[VocabKernelFold]]) as a bare aggregate column. */
   private[graft] def vocabKernelCol(text: Column, maxVocab: Int,
                                     weighted: Boolean): Column =
     udaf(new VocabKernelFold(maxVocab, weighted), Encoders.STRING)(text)
 
   /** Open-addressing (lowered token → count) accumulator for
     * [[VocabKernelFold]] — the r20 per-token-allocation fix (guide
-    * §4): the [[VocabFold]] immutable-Map buffer paid substring +
+    * §4): the immutable-Map buffer it replaced paid substring +
     * toLowerCase + boxing + a HAMT `updated` PER TOKEN OCCURRENCE
     * (~250 M allocations over the x1000 corpus, most of the fold's
     * 3.2 s). Here a token allocates ONCE per distinct token per
@@ -386,7 +267,8 @@ object TextAnalysis {
     * [[tfProfile]]: same ASCII `\s` delimiting; ASCII chars fold in
     * place, non-ASCII tokens fall back to
     * `String.toLowerCase(Locale.ROOT)` (the TextScan house
-    * contract; TfidfKernelSpec fuzz-pins fold == VocabFold). */
+    * contract; TfidfKernelSpec fuzz-pins the fold against the
+    * test-scope TextReference.VocabFold). */
   private[operators] final class VocabAcc(var maxVocab: Int,
                                           var weighted: Boolean)
       extends Serializable {
@@ -533,9 +415,17 @@ object TextAnalysis {
     }
   }
 
-  /** [[VocabFold]] semantics over the [[VocabAcc]] kernel buffer —
-    * same loud maxVocab bound, same (token → df | Σtf) result; the
-    * buffer serializes via kryo only at partial-merge boundaries. */
+  /** Vocabulary fold over per-doc tf profiles as a typed Aggregator:
+    * ONE corpus pass builds the full (token → Σtf) or (token → df)
+    * map with NO pair explode, no wide shuffle (per-partition map
+    * buffers, single-partition merge) and no `limit(...).collect()` —
+    * CollectLimit's incremental scale-up re-ran the whole agg in up
+    * to 4 sequential jobs (measured ~1.0 s for a 0.5 s pass at the
+    * 100× point). The vocab bound is enforced INSIDE reduce/merge, so
+    * an open vocabulary fails loudly in the executor before any
+    * oversized buffer is built or shipped. The buffer is the
+    * [[VocabAcc]] kernel; it serializes via kryo only at partial-merge
+    * boundaries. */
   private final class VocabKernelFold(maxVocab: Int, weighted: Boolean)
       extends Aggregator[String, VocabAcc, Map[String, Long]] {
     override def zero: VocabAcc = new VocabAcc(maxVocab, weighted)
@@ -555,8 +445,7 @@ object TextAnalysis {
 
   /** One-job driver-side vocab map: token → Σtf (`weighted`) or
     * token → document frequency (profiles hold distinct tokens).
-    * r20: kernel fold ([[VocabAcc]]); [[VocabFold]] stays as the
-    * spec-pinned reference form. */
+    * r20: kernel fold ([[VocabAcc]]). */
   private def vocabMap(docs: DataFrame, textCol: String, maxVocab: Int,
                        weighted: Boolean): Map[String, Long] = {
     val fold = udaf(new VocabKernelFold(maxVocab, weighted), Encoders.STRING)
@@ -671,33 +560,13 @@ object TextAnalysis {
     // by folded bytes. Bit-identity preserved (same StrictMath.log op
     // sequence per token, same (score desc, token asc) total order);
     // TfidfKernelSpec fuzz-pins kernel == the UDF form this replaces,
-    // and the tfProfile-based UDF stays below as the spec reference.
+    // the test-scope TextReference.tfidfTopKUdfReference.
     docs.select(col(idCol),
         explode(graft.plans.Tfidf.topKCol(col(textCol),
           new graft.plans.TokenDfMap(dfMap), nD, k)).as("t"))
       .select(col(idCol), col("t._2").as("tok"), col("t._3").as("tf"),
         col("t._4").as("tfidf"), col("t._1").as("rnk"))
   }
-
-  /** The scalar-UDF top-k scorer the r20 kernel replaced — kept as
-    * the executable reference semantics (TfidfKernelSpec pins the
-    * kernel against it on fuzzed corpora). */
-  private[graft] def tfidfTopKUdfReference(dfMap: Map[String, Long],
-                                           nD: Double, k: Int) =
-    udf((text: String) => {
-      val scored = tfProfile(text).toSeq.map { case (tok, tf) =>
-        val df = dfMap.getOrElse(tok, throw new IllegalStateException(
-          s"tfidfTopTermsRowLocal: token '$tok' absent from the vocab pass — " +
-            "the input must be deterministic across scans (sample()/limit()/" +
-            "unstable shuffle break this); use the join form tfidfTopTerms"))
-        (tok, tf, tf * java.lang.StrictMath.log(nD / df))
-      }.sortWith { case ((ta, _, sa), (tb, _, sb)) =>
-        if (sa != sb) sa > sb else ta < tb
-      }
-      scored.take(k).zipWithIndex.map { case ((tok, tf, s), i) =>
-        (i + 1, tok, tf, s)
-      }
-    })
 
   /** [[corpusLmScore]] with the scoring computed ROW-LOCALLY: the
     * unigram log-probs ride the closure as a map (vocab-bounded,
@@ -732,7 +601,7 @@ object TextAnalysis {
     // used scala-HashMap order — both arbitrary; the sums agree to
     // reassociation ulps and the DECLARED contract (the lm_score
     // query, the DuckDB oracle, LmScoreSpec) compares at round(·, 4).
-    // The UDF form stays below as the executable reference.
+    // The UDF form is the test-scope TextReference.lmScoreUdfReference.
     // empty-doc drop BEFORE the scorer: filtering on r._1 > 0 after
     // would push `lm_score(text)._1 > 0` below the projection and
     // evaluate the kernel twice per row (§4.4 — seen live in the
@@ -745,28 +614,6 @@ object TextAnalysis {
           new graft.plans.TokenDfMap(logpBits)).as("r"))
       .select(col(idCol), col("r._1").as("n_tokens"), col("r._2").as("avg_logp"))
   }
-
-  /** The scalar-UDF LM scorer the r20 kernel replaced — kept as the
-    * executable reference semantics (TfidfKernelSpec pins the kernel
-    * against it: n_tokens exact, avg_logp to reassociation ulps and
-    * equal after the query's round-4). */
-  private[graft] def lmScoreUdfReference(logp: Map[String, Double]) =
-    udf((text: String) => {
-      val prof = tfProfile(text)
-      var n = 0L
-      var s = 0.0
-      var i = 0
-      while (i < prof.length) {
-        val (tok, tf) = prof(i)
-        n += tf
-        s += tf * logp.getOrElse(tok, throw new IllegalStateException(
-          s"corpusLmScoreRowLocal: token '$tok' absent from the vocab pass — " +
-            "the input must be deterministic across scans (sample()/limit()/" +
-            "unstable shuffle break this); use the join form corpusLmScore"))
-        i += 1
-      }
-      (n, s / n)
-    })
 
   /** One compiled pass per document: doc length + per-query-term
     * counts. A HOF formulation (size(filter(ts, ...)) per term) would
@@ -832,11 +679,4 @@ object TextAnalysis {
     prof.filter(terms.indices.map(i => col(s"tf_$i") > 0).reduce(_ || _))
       .select(col(idCol), col("dl"), score.as("bm25"))
   }
-
-  /** Per-document stat projection used by the corpus-stats queries. */
-  def docStats(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("n_tokens", tokenCount(col(textCol)))
-      .withColumn("n_subwords", subwordCount(col(textCol)))
-      .withColumn("mean_word_len", meanWordLength(col(textCol)))
-      .withColumn("punct_ratio", punctRatio(col(textCol)))
 }

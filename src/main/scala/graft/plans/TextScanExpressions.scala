@@ -167,7 +167,6 @@ final class StopwordSet(needles: Array[String]) extends Serializable {
     needles.foreach(s.add)
     s
   }
-  private[plans] val asSeq: Seq[String] = needles.toIndexedSeq
 
   def matchesAsciiFold(s: UTF8String, start: Int, len: Int): Boolean = {
     var ni = 0

@@ -1,15 +1,31 @@
 package graft
 
-/** Driver-contract shape guards: every oracle entry pairs with a
-  * registered query, names stay unique, and no query exposes
-  * duplicate or helper (_-prefixed) column names — the compare sorts
-  * columns by name, so a stray helper column silently breaks hashing. */
+/** Driver-contract shape guards: names stay unique across the family
+  * lists, the oracle dump covers exactly the registered queries, and
+  * no query exposes duplicate or helper (_-prefixed) column names —
+  * the compare sorts columns by name, so a stray helper column
+  * silently breaks hashing. */
 class ContractSpec extends SparkSpec {
+  import scala.jdk.CollectionConverters._
 
-  test("every oracleSql key has a registered query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle entries without queries: $missing")
+  test("query names are unique across the family lists") {
+    // a duplicate would silently shadow a body in the name-keyed maps
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.diff(names.distinct).isEmpty,
+      s"duplicate query names: ${names.diff(names.distinct)}")
   }
+
+  test("oracle_sql.json names exactly the registered queries") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Verify.oracleSqlJson)
+    val keys = json.fieldNames().asScala.toSet
+    assert(keys == SparkEntry.queries.keySet,
+      s"only in the oracle dump: ${keys -- SparkEntry.queries.keySet}; " +
+        s"only registered: ${SparkEntry.queries.keySet -- keys}")
+  }
+
+  private def pinnedNames: Seq[String] =
+    SparkEntry.specs.filter(_.pinned).map(_.name).sorted
 
   test("query schemas have unique, non-helper column names") {
     val dir = "/root/testdata/sf0.001"
@@ -33,7 +49,7 @@ class ContractSpec extends SparkSpec {
     // judge's spot-check
     val doc = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("PINNED.md")), "UTF-8")
-    val undocumented = PinnedList.pinnedNames.filterNot(n => doc.contains(s"`$n`"))
+    val undocumented = pinnedNames.filterNot(n => doc.contains(s"`$n`"))
     assert(undocumented.isEmpty,
       s"pinned oracles missing a PINNED.md row: $undocumented")
   }
@@ -42,11 +58,11 @@ class ContractSpec extends SparkSpec {
     // r14 shipped a headline saying 24 while a paragraph still said 26
     // (stale prose survived a regeneration). Every number PINNED.md
     // states — the remaining-pin count and the real-recompute count —
-    // must equal what PinnedList computes, so the doc can never
+    // must equal what QuerySpec.pinned computes, so the doc can never
     // contradict itself or reality.
     val doc = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("PINNED.md")), "UTF-8")
-    val nPinned = PinnedList.pinnedNames.size
+    val nPinned = pinnedNames.size
     val nReal = SparkEntry.oracleSql.size - nPinned
     assert(doc.contains(s"remaining **$nPinned**"),
       s"PINNED.md headline must say 'remaining **$nPinned**'")

@@ -10,9 +10,10 @@ class PinnedOracleSpec extends SparkSpec {
 
   // any oracle whose rows come from a VALUES list (with or without a
   // projection over it) — all must be plain ANSI SQL both engines parse.
-  // The predicate lives in PinnedList (single source of truth) so this
+  // The predicate is QuerySpec.pinned (single source of truth) so this
   // replay audits exactly the set the PINNED.md ContractSpec guards.
-  private lazy val pinned: Map[String, String] = PinnedList.pinnedOracles
+  private lazy val pinned: Map[String, String] =
+    SparkEntry.specs.filter(_.pinned).map(q => q.name -> q.oracle).toMap
 
   test("pinned VALUES oracles match their live queries") {
     assert(pinned.nonEmpty)

@@ -80,7 +80,7 @@ class TextScanSpec extends SparkSpec {
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val sw = docs.select(
       graft.operators.TextAnalysis.stopwordHits(col("text"), "en").as("a"),
-      graft.operators.TextAnalysis.stopwordHitsUdf("en")(col("text")).as("b"))
+      graft.operators.TextReference.stopwordHitsUdf("en")(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(sw == 0L, s"$sw rows disagree on stopword hits")
     val sh = docs.select(

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.operators.TextAnalysis
+import graft.operators.{TextAnalysis, TextReference}
 import org.apache.spark.sql.functions._
 
 /** Fuzz-pins the r20 tf-idf kernels bit-identical to the UDF /
@@ -38,7 +38,7 @@ class TfidfKernelSpec extends SparkSpec {
       val kernel = docs.select(TextAnalysis
         .vocabKernelCol(col("text"), 1 << 20, weighted).as("m"))
         .head.getMap[String, Long](0).toMap
-      val old = docs.select(TextAnalysis
+      val old = docs.select(TextReference
         .vocabFoldCol(col("text"), 1 << 20, weighted).as("m"))
         .head.getMap[String, Long](0).toMap
       assert(kernel == old, s"weighted=$weighted")
@@ -47,7 +47,7 @@ class TfidfKernelSpec extends SparkSpec {
 
   test("topK kernel equals the scalar-UDF scorer row-for-row") {
     val n = docs.count()
-    val dfMap = docs.select(TextAnalysis
+    val dfMap = docs.select(TextReference
       .vocabFoldCol(col("text"), 1 << 20, weighted = false).as("m"))
       .head.getMap[String, Long](0).toMap
     for (k <- Seq(1, 3, 7)) {
@@ -56,7 +56,7 @@ class TfidfKernelSpec extends SparkSpec {
             new TokenDfMap(dfMap), n.toDouble, k)).as("t"))
         .select(col("doc_id"), col("t._1"), col("t._2"), col("t._3"), col("t._4"))
         .as[(Long, Int, String, Long, Double)].collect().sortBy(r => (r._1, r._2))
-      val udfRef = TextAnalysis.tfidfTopKUdfReference(dfMap, n.toDouble, k)
+      val udfRef = TextReference.tfidfTopKUdfReference(dfMap, n.toDouble, k)
       val old = docs.select(col("doc_id"),
           explode(udfRef(col("text"))).as("t"))
         .select(col("doc_id"), col("t._1"), col("t._2"), col("t._3"), col("t._4"))
@@ -67,7 +67,7 @@ class TfidfKernelSpec extends SparkSpec {
   }
 
   test("lmScore kernel equals the scalar-UDF scorer (exact n, ulp-close sum)") {
-    val vocab = docs.select(TextAnalysis
+    val vocab = docs.select(TextReference
       .vocabFoldCol(col("text"), 1 << 20, weighted = true).as("m"))
       .head.getMap[String, Long](0).toMap
     val total = vocab.valuesIterator.sum.toDouble
@@ -82,7 +82,7 @@ class TfidfKernelSpec extends SparkSpec {
       .filter(col("r._1") > 0L)
       .select(col("doc_id"), col("r._1"), col("r._2"))
       .as[(Long, Long, Double)].collect().sortBy(_._1)
-    val udfRef = TextAnalysis.lmScoreUdfReference(logp)
+    val udfRef = TextReference.lmScoreUdfReference(logp)
     val old = docs.select(col("doc_id"), udfRef(col("text")).as("r"))
       .filter(col("r._1") > 0L)
       .select(col("doc_id"), col("r._1"), col("r._2"))
@@ -110,7 +110,7 @@ class TfidfKernelSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val got = d2.select(col("doc_id"), TextAnalysis.langId(col("text")))
       .as[(Long, String)].collect().sortBy(_._1).toSeq
-    val old = d2.select(col("doc_id"), TextAnalysis.langIdUdf(col("text")))
+    val old = d2.select(col("doc_id"), TextReference.langIdUdf(col("text")))
       .as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(got == old)
   }
