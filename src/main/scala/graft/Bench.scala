@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
 
@@ -426,7 +427,7 @@ object Bench {
       }
     }
     val good = outSeq.filter(_.ok)
-    val qs = good.map(r => s""""${r.name}":${"%.3f".format(r.sec)}""")
+    val qs = good.map(r => s""""${r.name}":${"%.3f".formatLocal(Locale.ROOT, r.sec)}""")
       .mkString("{", ",", "}")
     // errors = failures of the authoritative sequential pass; a query
     // that only failed under concurrency is disclosed separately, never
@@ -494,7 +495,7 @@ object Bench {
       }
       val curve = Seq(1, 2, 4, 8, 16, 32).map { np =>
         val r = mq.map(mRecall(_, np)).sum / mq.length
-        s""""nprobe$np":${"%.3f".format(r)}"""
+        s""""nprobe$np":${"%.3f".formatLocal(Locale.ROOT, r)}"""
       }.mkString("{", ",", "}")
       mog.unpersist(); mIdx.unpersist()
 
@@ -521,7 +522,7 @@ object Bench {
       val tIvf1e5 = (System.nanoTime() - t3) / 1e9
       val recall1e5 = graft.operators.VectorIndex.recallAtK(exact1e5, approx1e5)
       corpus1e5.unpersist(); idx1e5.unpersist()
-      s""","vector_n10k_dim1024":{"knn_codegen_sec":${"%.3f".format(tKnn)},"ivf_probe4of32_sec":${"%.3f".format(tIvf)},"ivf_recall_at10":${"%.2f".format(recall)}},"vector_n100k_dim1024":{"knn_codegen_sec":${"%.3f".format(tKnn1e5)},"ivf_probe4of32_sec":${"%.3f".format(tIvf1e5)},"ivf_recall_at10":${"%.2f".format(recall1e5)}},"ivf_clustered_recall_at10_mog10k_dim64_k32":$curve"""
+      s""","vector_n10k_dim1024":{"knn_codegen_sec":${"%.3f".formatLocal(Locale.ROOT, tKnn)},"ivf_probe4of32_sec":${"%.3f".formatLocal(Locale.ROOT, tIvf)},"ivf_recall_at10":${"%.2f".formatLocal(Locale.ROOT, recall)}},"vector_n100k_dim1024":{"knn_codegen_sec":${"%.3f".formatLocal(Locale.ROOT, tKnn1e5)},"ivf_probe4of32_sec":${"%.3f".formatLocal(Locale.ROOT, tIvf1e5)},"ivf_recall_at10":${"%.2f".formatLocal(Locale.ROOT, recall1e5)}},"ivf_clustered_recall_at10_mog10k_dim64_k32":$curve"""
     } catch { case e: Throwable =>
       System.err.println(s"[bench] vector bench FAILED: ${e.getMessage}"); ""
     }
@@ -567,7 +568,7 @@ object Bench {
           big, small, "k", saltFactor = 8, hotKeys = Some(Seq(0L))))
         plainS; saltedS // warm pass, discarded
         val (p, sl) = (plainS, saltedS)
-        s""","skew_join_planted_20m_hotkey_half":{"plain_shuffle_sec":${"%.3f".format(p)},"salted_sec":${"%.3f".format(sl)},"speedup":${"%.2f".format(p / sl)}}"""
+        s""","skew_join_planted_20m_hotkey_half":{"plain_shuffle_sec":${"%.3f".formatLocal(Locale.ROOT, p)},"salted_sec":${"%.3f".formatLocal(Locale.ROOT, sl)},"speedup":${"%.2f".formatLocal(Locale.ROOT, p / sl)}}"""
       } finally {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
         spark.conf.set("spark.sql.adaptive.enabled", prevA)
@@ -619,7 +620,7 @@ object Bench {
       val rawShare = priced / math.max(wallSeq, 1e-9)
       val floorSuspect = rawShare > 1.0
       val share = math.min(rawShare, 1.0)
-      s""","suite_fixed_cost":{"jobs_seq_pass":$suiteJobsSeq,"jobs_timed":${durs.length},"job_floor_nofile_s":${"%.4f".format(floorNoFile)},"job_floor_inwindow_s":${floorInWindow.map(f => "%.4f".format(f)).getOrElse("null")},"job_floor_s":${"%.4f".format(jobFloor)},"priced_fixed_s":${"%.3f".format(priced)},"wall_seq_warm_s":${"%.3f".format(wallSeq)},"fixed_share_raw":${"%.2f".format(rawShare)},"fixed_share_of_wall":${"%.2f".format(share)},"floor_suspect":$floorSuspect,"note":"jobs counted+timed across the committed warm PAR=1 pass; floor = min(post-suite min-of-3 no-file job, 5th-smallest in-window job); priced = sum over jobs of min(dur, floor), clamped share"}"""
+      s""","suite_fixed_cost":{"jobs_seq_pass":$suiteJobsSeq,"jobs_timed":${durs.length},"job_floor_nofile_s":${"%.4f".formatLocal(Locale.ROOT, floorNoFile)},"job_floor_inwindow_s":${floorInWindow.map(f => "%.4f".formatLocal(Locale.ROOT, f)).getOrElse("null")},"job_floor_s":${"%.4f".formatLocal(Locale.ROOT, jobFloor)},"priced_fixed_s":${"%.3f".formatLocal(Locale.ROOT, priced)},"wall_seq_warm_s":${"%.3f".formatLocal(Locale.ROOT, wallSeq)},"fixed_share_raw":${"%.2f".formatLocal(Locale.ROOT, rawShare)},"fixed_share_of_wall":${"%.2f".formatLocal(Locale.ROOT, share)},"floor_suspect":$floorSuspect,"note":"jobs counted+timed across the committed warm PAR=1 pass; floor = min(post-suite min-of-3 no-file job, 5th-smallest in-window job); priced = sum over jobs of min(dur, floor), clamped share"}"""
     } catch { case e: Throwable =>
       System.err.println(s"[bench] suite fixed-cost FAILED: ${e.getMessage}"); ""
     }
@@ -660,7 +661,7 @@ object Bench {
           graft.operators.Relational.bloomSemiJoin(
             li, urgent, "l_orderkey", "o_orderkey",
             expectedKeys = math.max(1L, nKeys)))
-        s""","probe_degradation":{"key_rows":$nKeys,"dense_default":{"wall_s":${"%.3f".format(tDense)},"n_out":$nDense},"sparse_longset_forced":{"wall_s":${"%.3f".format(tSparse)},"n_out":$nSparse},"bloom_exact_verify":{"wall_s":${"%.3f".format(tBloom)},"n_out":$nBloom},"all_equal":${nDense == nSparse && nSparse == nBloom},"note":"same semi join through all three structures at this scale, construction included; sparse forced via an 8-byte bitmap budget (the documented span-overflow degradation)"}"""
+        s""","probe_degradation":{"key_rows":$nKeys,"dense_default":{"wall_s":${"%.3f".formatLocal(Locale.ROOT, tDense)},"n_out":$nDense},"sparse_longset_forced":{"wall_s":${"%.3f".formatLocal(Locale.ROOT, tSparse)},"n_out":$nSparse},"bloom_exact_verify":{"wall_s":${"%.3f".formatLocal(Locale.ROOT, tBloom)},"n_out":$nBloom},"all_equal":${nDense == nSparse && nSparse == nBloom},"note":"same semi join through all three structures at this scale, construction included; sparse forced via an 8-byte bitmap budget (the documented span-overflow degradation)"}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] probe degradation FAILED: ${e.getMessage}"); ""
       }
@@ -697,7 +698,7 @@ object Bench {
       val stRows = st.map(_.numRowsTotal).getOrElse(-1L)
       val stBytes = st.map(_.memoryUsedBytes).getOrElse(-1L)
       val perKey = if (stRows > 0) stBytes / stRows else -1L
-      s""","segmenter_sustained_rate_10k_sessions":{"input_rows":$rows,"rows_per_sec":${"%.0f".format(if (secs > 0) rows / secs else -1.0)},"batches":${warm.length},"state_rows":$stRows,"state_bytes":$stBytes,"state_bytes_per_session":$perKey,"buffer_bound_chars":${graft.streaming.SentenceSegmenter.DefaultMaxBufferChars}}"""
+      s""","segmenter_sustained_rate_10k_sessions":{"input_rows":$rows,"rows_per_sec":${"%.0f".formatLocal(Locale.ROOT, if (secs > 0) rows / secs else -1.0)},"batches":${warm.length},"state_rows":$stRows,"state_bytes":$stBytes,"state_bytes_per_session":$perKey,"buffer_bound_chars":${graft.streaming.SentenceSegmenter.DefaultMaxBufferChars}}"""
     } catch { case e: Throwable =>
       System.err.println(s"[bench] segmenter bench FAILED: ${e.getMessage}"); ""
     }
@@ -779,8 +780,8 @@ object Bench {
         val wall = "\"duckdb_wall_warm_sec\"\\s*:\\s*([0-9.]+)".r
           .findFirstMatchIn(json).map(_.group(1).toDouble)
         duckWarmWall = wall
-        val ratioPar = wall.map(w => "%.2f".format(wallPar / w)).getOrElse("null")
-        val ratioSeq = wall.map(w => "%.2f".format(wallSeq / w)).getOrElse("null")
+        val ratioPar = wall.map(w => "%.2f".formatLocal(Locale.ROOT, wallPar / w)).getOrElse("null")
+        val ratioSeq = wall.map(w => "%.2f".formatLocal(Locale.ROOT, wallSeq / w)).getOrElse("null")
         // comparable subset: queries whose oracle is REAL SQL over the
         // same tables. VALUES-pinned oracles cost DuckDB ~1 ms while
         // the engine does the actual pipeline work (index build,
@@ -807,8 +808,8 @@ object Bench {
         val subset =
           if (duckReal > 0) {
             subsetSummary =
-              s""","real_oracle_subset":{"n":${both.size},"ratio":${"%.2f".format(sparkReal / duckReal)}}"""
-            s""","real_oracle_subset":{"n":${both.size},"excluded_side_effecting":${sideEffecting.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"spark_seq_sum_sec":${"%.3f".format(sparkReal)},"duckdb_sum_sec":${"%.3f".format(duckReal)},"ratio":${"%.2f".format(sparkReal / duckReal)}}"""
+              s""","real_oracle_subset":{"n":${both.size},"ratio":${"%.2f".formatLocal(Locale.ROOT, sparkReal / duckReal)}}"""
+            s""","real_oracle_subset":{"n":${both.size},"excluded_side_effecting":${sideEffecting.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"spark_seq_sum_sec":${"%.3f".formatLocal(Locale.ROOT, sparkReal)},"duckdb_sum_sec":${"%.3f".formatLocal(Locale.ROOT, duckReal)},"ratio":${"%.2f".formatLocal(Locale.ROOT, sparkReal / duckReal)}}"""
           } else ""
         // SELF-CERTIFYING weak set (round-12 judge item #1): the rule
         // and the set derived from THIS artifact's committed per-query
@@ -821,7 +822,7 @@ object Bench {
           .filter { case (_, sp, du) => sp >= 1.0 && sp > 2.0 * du }
           .sortBy(-_._2)
         val weakJson = weak.map { case (n, sp, du) =>
-          s""""$n":{"spark_s":${"%.3f".format(sp)},"duckdb_s":${"%.3f".format(du)},"ratio":${"%.1f".format(sp / math.max(du, 1e-9))}}"""
+          s""""$n":{"spark_s":${"%.3f".formatLocal(Locale.ROOT, sp)},"duckdb_s":${"%.3f".formatLocal(Locale.ROOT, du)},"ratio":${"%.1f".formatLocal(Locale.ROOT, sp / math.max(du, 1e-9))}}"""
         }.mkString("{", ",", "}")
         val weakBlock =
           s""","weak_set_rule":"real-oracle queries with committed seq seconds >= 1.0 and spark > 2x duckdb (per-query min-of-3 for all slots >= 0.8s)","weak_set_n":${weak.size},"weak_set":$weakJson"""
@@ -848,7 +849,7 @@ object Bench {
             val iso = (1 to 3).map(_ => once).min
             isolatedBySec += n -> iso
             val isoRatio = iso / math.max(du, 1e-9)
-            s""""$n":{"committed_s":${"%.3f".format(sp)},"isolated_s":${"%.3f".format(iso)},"duckdb_s":${"%.3f".format(du)},"isolated_ratio":${"%.1f".format(isoRatio)},"tail_s":${"%.3f".format(sp - iso)},"tail_only_conviction":${isoRatio <= 2.0}}"""
+            s""""$n":{"committed_s":${"%.3f".formatLocal(Locale.ROOT, sp)},"isolated_s":${"%.3f".formatLocal(Locale.ROOT, iso)},"duckdb_s":${"%.3f".formatLocal(Locale.ROOT, du)},"isolated_ratio":${"%.1f".formatLocal(Locale.ROOT, isoRatio)},"tail_s":${"%.3f".formatLocal(Locale.ROOT, sp - iso)},"tail_only_conviction":${isoRatio <= 2.0}}"""
           }
           s""","weak_set_isolated":{"methodology":"same-jvm post-suite solo re-runs, idle-gated, min-of-3, construction included","entries":${per.mkString("{", ",", "}")}}"""
         } catch { case e: Throwable =>
@@ -901,7 +902,7 @@ object Bench {
               else if (gcShare >= 0.5) "tail is GC left by suite neighbors (gc_ms covers >=50% of it)"
               else if (followsOrder) "tail follows schedule position (neighbor wake: page cache/thread-pool wind-down), not the plan"
               else "tail not explained by GC or schedule position at this point"
-            s""""$n":{"committed_s":${"%.3f".format(sp)},"isolated_s":${"%.3f".format(iso)},"tail_s":${"%.3f".format(tail)},"committed_gc_ms":$gcMs,"committed_jit_ms":$jitMs,"wall_reverse_order_s":${rv.map(r => "%.3f".format(r.sec)).getOrElse("null")},"wall_hash_order_s":${hs.map(r => "%.3f".format(r.sec)).getOrElse("null")},"slot_committed":${slotOf(heavy, n)},"slot_reverse":${slotOf(orderRev, n)},"slot_hash":${slotOf(orderHash, n)},"cross_order_spread_s":${"%.3f".format(spread)},"follows_order":$followsOrder,"verdict":"$verdict"}"""
+            s""""$n":{"committed_s":${"%.3f".formatLocal(Locale.ROOT, sp)},"isolated_s":${"%.3f".formatLocal(Locale.ROOT, iso)},"tail_s":${"%.3f".formatLocal(Locale.ROOT, tail)},"committed_gc_ms":$gcMs,"committed_jit_ms":$jitMs,"wall_reverse_order_s":${rv.map(r => "%.3f".formatLocal(Locale.ROOT, r.sec)).getOrElse("null")},"wall_hash_order_s":${hs.map(r => "%.3f".formatLocal(Locale.ROOT, r.sec)).getOrElse("null")},"slot_committed":${slotOf(heavy, n)},"slot_reverse":${slotOf(orderRev, n)},"slot_hash":${slotOf(orderHash, n)},"cross_order_spread_s":${"%.3f".formatLocal(Locale.ROOT, spread)},"follows_order":$followsOrder,"verdict":"$verdict"}"""
           }
           s""","tail_attribution":{"methodology":"per-query GC/JIT deltas during the committed PAR=1 min run, plus two full sequential re-passes in reverse-alphabetical and hash-shuffled schedules","entries":${per.mkString("{", ",", "}")}}"""
         } catch { case e: Throwable =>
@@ -937,7 +938,7 @@ object Bench {
           .flatMap(r => base.get(r.name).map(b => (r.name, r.sec, b, r.sec - b)))
           .sortBy(-_._4).take(5)
           .map { case (n, t, b, d) =>
-            s""""$n":{"p200_s":${"%.3f".format(t)},"p32_s":${"%.3f".format(b)},"delta_s":${"%.3f".format(d)}}""" }
+            s""""$n":{"p200_s":${"%.3f".formatLocal(Locale.ROOT, t)},"p32_s":${"%.3f".formatLocal(Locale.ROOT, b)},"delta_s":${"%.3f".formatLocal(Locale.ROOT, d)}}""" }
           .mkString("{", ",", "}")
         val pins = Seq(
           ("j4_semijoin", "bitmap_contains"),
@@ -946,7 +947,7 @@ object Bench {
             .queryExecution.executedPlan.toString
           s""""$n":{"probe_live":${p.contains(marker)},"join_free":${!p.contains("Join")}}"""
         }.mkString("{", ",", "}")
-        s""","cluster_shape_probe":{"shuffle_partitions":200,"driver_mem":"unchanged (JVM-fixed at launch)","wall_par${par}_sec":${"%.3f".format(wallP200)},"wall_seq_sec":${"%.3f".format(wallS200)},"top5_seq_deltas_vs_p32":$deltas,"plan_pins":$pins}"""
+        s""","cluster_shape_probe":{"shuffle_partitions":200,"driver_mem":"unchanged (JVM-fixed at launch)","wall_par${par}_sec":${"%.3f".formatLocal(Locale.ROOT, wallP200)},"wall_seq_sec":${"%.3f".formatLocal(Locale.ROOT, wallS200)},"top5_seq_deltas_vs_p32":$deltas,"plan_pins":$pins}"""
       } finally spark.conf.set(key, prev)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] cluster-shape probe FAILED: ${e.getMessage}"); ""
@@ -1103,13 +1104,13 @@ object Bench {
                         .sortBy { case (_, sd, dd) => -(math.abs(sd) + math.abs(dd)) }
                         .take(10)
                         .map { case (n, sd, dd) =>
-                          s""""$n":{"spark_prior_s":${"%.3f".format(pSpark(n))},"spark_this_s":${"%.3f".format(sparkPer(n))},"spark_delta_s":${"%.3f".format(sd)},"duckdb_prior_s":${"%.3f".format(pDuckQ(n))},"duckdb_this_s":${"%.3f".format(dd + pDuckQ(n))},"duckdb_delta_s":${"%.3f".format(dd)}}"""
+                          s""""$n":{"spark_prior_s":${"%.3f".formatLocal(Locale.ROOT, pSpark(n))},"spark_this_s":${"%.3f".formatLocal(Locale.ROOT, sparkPer(n))},"spark_delta_s":${"%.3f".formatLocal(Locale.ROOT, sd)},"duckdb_prior_s":${"%.3f".formatLocal(Locale.ROOT, pDuckQ(n))},"duckdb_this_s":${"%.3f".formatLocal(Locale.ROOT, dd + pDuckQ(n))},"duckdb_delta_s":${"%.3f".formatLocal(Locale.ROOT, dd)}}"""
                         }.mkString("{", ",", "}")
                       val thisRatioStr =
                         "\"ratio\"\\s*:\\s*([0-9.]+)".r
                           .findFirstMatchIn(subsetSummary).map(_.group(1))
                           .getOrElse("null")
-                      s""","subset_decomposition":{"prior":"bench_history/BENCH_FULL_r$prn.json","prior_subset_ratio":${pRatio.map("%.2f".format(_)).getOrElse("null")},"this_subset_ratio":$thisRatioStr,"common_n":${common.size},"members_added_this_round":${addedM.map("\"" + _ + "\"").mkString("[", ",", "]")},"common_spark_delta_sum_s":${"%.3f".format(sDelta)},"common_duckdb_delta_sum_s":${"%.3f".format(dDelta)},"top_movers":$movers,"note":"deltas over members present in BOTH rounds; members_added plus duckdb-side deltas are the composition/oracle share of a subset-ratio move"}"""
+                      s""","subset_decomposition":{"prior":"bench_history/BENCH_FULL_r$prn.json","prior_subset_ratio":${pRatio.map("%.2f".formatLocal(Locale.ROOT, _)).getOrElse("null")},"this_subset_ratio":$thisRatioStr,"common_n":${common.size},"members_added_this_round":${addedM.map("\"" + _ + "\"").mkString("[", ",", "]")},"common_spark_delta_sum_s":${"%.3f".formatLocal(Locale.ROOT, sDelta)},"common_duckdb_delta_sum_s":${"%.3f".formatLocal(Locale.ROOT, dDelta)},"top_movers":$movers,"note":"deltas over members present in BOTH rounds; members_added plus duckdb-side deltas are the composition/oracle share of a subset-ratio move"}"""
                     }
                 }
               } catch { case e: Throwable =>
@@ -1119,7 +1120,7 @@ object Bench {
             (pSeq, pDuck, duckWarmWall) match {
               case (Some(ps), Some(pd), Some(dw)) =>
                 val base =
-                  s""","prior_round_comparison":{"prior":"BENCH_r$rn.json","prior_wall_seq_s":${"%.3f".format(ps)},"this_wall_seq_s":${"%.3f".format(wallSeq)},"seq_delta_pct":${"%.1f".format((wallSeq - ps) / ps * 100)},"prior_duckdb_warm_s":${"%.3f".format(pd)},"this_duckdb_warm_s":${"%.3f".format(dw)},"structural_changes":"$changes""""
+                  s""","prior_round_comparison":{"prior":"BENCH_r$rn.json","prior_wall_seq_s":${"%.3f".formatLocal(Locale.ROOT, ps)},"this_wall_seq_s":${"%.3f".formatLocal(Locale.ROOT, wallSeq)},"seq_delta_pct":${"%.1f".formatLocal(Locale.ROOT, (wallSeq - ps) / ps * 100)},"prior_duckdb_warm_s":${"%.3f".formatLocal(Locale.ROOT, pd)},"this_duckdb_warm_s":${"%.3f".formatLocal(Locale.ROOT, dw)},"structural_changes":"$changes""""
                 val sweepKeys = sweepSeq.map { case (sw, swHead) =>
                   val dThis = (wallSeq - ps) / ps
                   val dSweep = (sw - ps) / ps
@@ -1131,7 +1132,7 @@ object Bench {
                   val fresh = swHead.exists(sourceUnchangedSince)
                   val agree =
                     if (fresh) (dThis * dSweep >= 0).toString else "null"
-                  s""","sweep_wall_seq_s":${"%.3f".format(sw)},"sweep_vs_prior_delta_pct":${"%.1f".format(dSweep * 100)},"sweep_head":${swHead.map("\"" + _ + "\"").getOrElse("null")},"sweep_stale":${!fresh},"signs_agree_with_sweep":$agree,"note":"both deltas are vs the prior round; the agreement flag is null unless src/main+build.sbt are diff-identical between BENCH_SCALE.json's head and this run's HEAD — disagreement then marks one of the two same-code runs as box noise"""".stripMargin
+                  s""","sweep_wall_seq_s":${"%.3f".formatLocal(Locale.ROOT, sw)},"sweep_vs_prior_delta_pct":${"%.1f".formatLocal(Locale.ROOT, dSweep * 100)},"sweep_head":${swHead.map("\"" + _ + "\"").getOrElse("null")},"sweep_stale":${!fresh},"signs_agree_with_sweep":$agree,"note":"both deltas are vs the prior round; the agreement flag is null unless src/main+build.sbt are diff-identical between BENCH_SCALE.json's head and this run's HEAD — disagreement then marks one of the two same-code runs as box noise"""".stripMargin
                 }.getOrElse("")
                 base + sweepKeys + subsetCmp + "}"
               case _ => ""
@@ -1158,7 +1159,7 @@ object Bench {
     val treeDirty = sourceDirty()
     val runHead = if (treeDirty) None else gitHead()
     val headline =
-      s""""value":${"%.3f".format(wallPar)},"unit":"sec","schema_version":8,"run_head":${runHead.map("\"" + _ + "\"").getOrElse("null")},"run_tree_dirty":$treeDirty,"wall_par${par}_postwarm_sec":${"%.3f".format(wallPar)},"wall_par${par}_coldplans_sec":${"%.3f".format(wallParCold)},"wall_seq_warm_sec":${"%.3f".format(wallSeq)},"sum_query_sec":${"%.3f".format(good.map(_.sec).sum)},"parallelism":$par,"n_queries":${outSeq.size},"queries_methodology":"seq_warm_par1_min2_min3_top15_and_ge0p8","jvm_max_heap_mb":${Runtime.getRuntime.maxMemory() >> 20},"idle_gate":$gate,"load_before":$loadBefore,"load_after":$loadAfter"""
+      s""""value":${"%.3f".formatLocal(Locale.ROOT, wallPar)},"unit":"sec","schema_version":8,"run_head":${runHead.map("\"" + _ + "\"").getOrElse("null")},"run_tree_dirty":$treeDirty,"wall_par${par}_postwarm_sec":${"%.3f".formatLocal(Locale.ROOT, wallPar)},"wall_par${par}_coldplans_sec":${"%.3f".formatLocal(Locale.ROOT, wallParCold)},"wall_seq_warm_sec":${"%.3f".formatLocal(Locale.ROOT, wallSeq)},"sum_query_sec":${"%.3f".formatLocal(Locale.ROOT, good.map(_.sec).sum)},"parallelism":$par,"n_queries":${outSeq.size},"queries_methodology":"seq_warm_par1_min2_min3_top15_and_ge0p8","jvm_max_heap_mb":${Runtime.getRuntime.maxMemory() >> 20},"idle_gate":$gate,"load_before":$loadBefore,"load_after":$loadAfter"""
     val json =
       s"""{"metric":"total",$headline,"queries":$qs,"errors":$errs,"errors_par_only":$parOnlyErrs,"excluded_queries":$excludedJson$onlyJson,"skipped_blocks":${skippedBlocks.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}$duck$vector$skew$probeDegrade$segTp$stState$clusterProbe$suiteFixedCost$priorCmp,"sf":"$sfDir"}"""
     Files.writeString(
@@ -1185,12 +1186,12 @@ object Bench {
     // BENCH_LOCAL.json copy; the compact line carries the headline
     // numbers plus the slowest queries, with the truncation disclosed.
     val duckKeys = duckWarmWall.map { w =>
-      s""","duckdb_wall_warm_sec":${"%.3f".format(w)},"ratio_wall_par_vs_duckdb":${"%.2f".format(wallPar / w)},"ratio_wall_seq_vs_duckdb":${"%.2f".format(wallSeq / w)}$subsetSummary"""
+      s""","duckdb_wall_warm_sec":${"%.3f".formatLocal(Locale.ROOT, w)},"ratio_wall_par_vs_duckdb":${"%.2f".formatLocal(Locale.ROOT, wallPar / w)},"ratio_wall_seq_vs_duckdb":${"%.2f".formatLocal(Locale.ROOT, wallSeq / w)}$subsetSummary"""
     }.getOrElse("")
     val slowest = good.sortBy(-_.sec)
     def compactLine(k: Int): String = {
       val topQ = slowest.take(k)
-        .map(r => s""""${r.name}":${"%.3f".format(r.sec)}""")
+        .map(r => s""""${r.name}":${"%.3f".formatLocal(Locale.ROOT, r.sec)}""")
         .mkString("{", ",", "}")
       s"""{"metric":"total",$headline,"queries":$topQ,"queries_shown":${math.min(k, slowest.size)},"queries_full":"BENCH_LOCAL.json","n_errors":${seqFailed.size}$duckKeys,"sf":"$sfDir"}"""
     }

@@ -101,7 +101,8 @@ object TextFunctions {
     if (topic == null || topic.isEmpty) return answer
     val topicKo = replaceEnToKo(topic)
     val s0 = answer.trim
-    if (s0.startsWith(topicKo) || s0.toLowerCase.startsWith(topic.toLowerCase)) s0
+    if (s0.startsWith(topicKo) || s0.toLowerCase(java.util.Locale.ROOT)
+      .startsWith(topic.toLowerCase(java.util.Locale.ROOT))) s0
     else {
       val s = s0.replaceFirst("^[,\\s\\-–—]*[은는]\\b", "")
         .replaceFirst("^\\s+", "")

@@ -46,7 +46,7 @@ object HashEmbedder extends Embedder {
   }
 
   def tokensOf(text: String): Seq[String] =
-    tokenRe.findAllIn(text.toLowerCase).toSeq
+    tokenRe.findAllIn(text.toLowerCase(java.util.Locale.ROOT)).toSeq
 
   /** Embed one text into a unit-length `dim`-vector. */
   def embed(text: String, dim: Int = DefaultDim): Array[Float] = {

@@ -32,10 +32,11 @@ object Ingest {
   def inferSchema(columns: Seq[String], idCol: Option[String] = None,
                   titleCol: Option[String] = None,
                   textCols: Option[Seq[String]] = None): IngestSchema = {
-    def pick(cands: Set[String]) = columns.find(c => cands.contains(c.toLowerCase))
+    def lower(c: String) = c.toLowerCase(java.util.Locale.ROOT)
+    def pick(cands: Set[String]) = columns.find(c => cands.contains(lower(c)))
     val id = idCol.orElse(pick(IdCandidates)).orElse(columns.headOption)
     val title = titleCol.orElse(pick(TitleCandidates))
-    val texts0 = textCols.getOrElse(columns.filter(c => TextCandidates.contains(c.toLowerCase)))
+    val texts0 = textCols.getOrElse(columns.filter(c => TextCandidates.contains(lower(c))))
     val texts = if (texts0.nonEmpty) texts0 else columns.filterNot(title.contains)
     IngestSchema(id, title, texts, columns)
   }

@@ -71,8 +71,7 @@ object Dedup {
     if (!ascii) return tokenHashesRegex(text)
     var out = new Array[Long](16)
     var cnt = 0
-    @inline def fold(c: Char): Char =
-      if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+    @inline def fold(c: Char): Char = graft.plans.TokenScan.fold(c).toChar
     @inline def isStart(c: Char): Boolean =
       (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
     @inline def isCont(c: Char): Boolean =

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TextFunctions._
+import graft.plans.{TokenScan, TokenTable}
 
 /** Text-analysis operators for a training-data pipeline (north-star
   * requirement): language-ID heuristic, quality scoring, token stats,
@@ -46,38 +48,22 @@ object TextAnalysis {
 
   /** Composite quality score in [0,1]: rewards sentence-like length
     * and stopword presence, penalizes punct/digit noise. Weights are
-    * engine policy (no reference counterpart). Single compiled pass
-    * over the text — the HOF composition re-tokenized per metric. */
-  private val enStops = stopwords("en").toSet
-  private val qualityUdf = udf((s: String) => {
-    if (s == null || s.isEmpty) 0.0
-    else {
-      val len = s.length
-      var punct = 0; var digit = 0
-      var i = 0
-      while (i < len) {
-        val c = s.charAt(i)
-        if (c >= '0' && c <= '9') digit += 1
-        else if (c < 128 && !Character.isLetterOrDigit(c) && !Character.isWhitespace(c)) punct += 1
-        i += 1
-      }
-      val toks = s.toLowerCase.split("\\s+").filter(_.nonEmpty)
-      val swRatio = if (toks.isEmpty) 0.0
-        else toks.count(enStops.contains).toDouble / toks.length
-      val lenScore = math.min(len / 400.0, 1.0)
-      val sw = math.min(swRatio * 4.0, 1.0)
-      val noise = math.max(0.0,
-        1.0 - punct.toDouble / len * 5.0 - digit.toDouble / len * 2.0)
-      math.round((lenScore * 0.3 + sw * 0.3 + noise * 0.4) * 1e6) / 1e6
-    }
-  })
-  def qualityScore(text: Column): Column = qualityUdf(text)
+    * engine policy (no reference counterpart). It is the teacher field
+    * of [[qualitySignals]]; null and empty text score 0.0. */
+  def qualityScore(text: Column): Column =
+    coalesce(qualitySignals(text).getField("_6"), lit(0.0))
 
   /** The linear quality-probe's stopword set (a deliberately tiny
-    * 8-token probe, distinct from [[enStops]] which feeds the teacher
-    * rule — the probe must learn from RAW signals, not the rule's own
-    * vocabulary). */
+    * 8-token probe, kept apart from the teacher rule's English list —
+    * the probe must learn from RAW signals, not the rule's own
+    * vocabulary; today the two hold the same words). One table for
+    * both: payload bit 0 = probe, bit 1 = teacher. */
   private val probeStops = Set("the", "and", "of", "to", "is", "a", "in", "that")
+  private val signalStops: TokenTable = {
+    val en = stopwords("en").toSet
+    TokenTable.of((probeStops ++ en).toSeq.map(w =>
+      w -> ((if (probeStops(w)) 1L else 0L) | (if (en(w)) 2L else 0L))))
+  }
 
   /** ONE compiled pass computing every signal the rule-distillation
     * quality classifier needs — the five raw probe features AND the
@@ -88,12 +74,12 @@ object TextAnalysis {
     * 100× point for quality_classifier). Char-scan counts reproduce
     * the regex classes exactly: punct_re = the ASCII printable ranges
     * `[!-/:-@\[-`{-~]`, digits `[0-9]`, whitespace = Java `\s`
-    * (space, TAB..CR — [[isWs]]); the teacher's noise term keeps its
-    * OWN punct definition (ASCII non-alnum non-ws INCLUDING control
-    * chars), so both counters run in the same scan. Token boundaries
-    * and lowercasing match `lower(text) split \s+` (whitespace is
-    * case-stable). Returns a positional tuple (janino struct-codegen
-    * caveat, see repetitionUdf): _1 lenScore, _2 stopRatio,
+    * ([[TokenScan.isWs]]); the teacher's noise term keeps its OWN
+    * punct definition (ASCII non-alnum non-ws INCLUDING control
+    * chars), so both counters run in the same scan. Tokens are
+    * [[TokenScan]]'s, probed against one stopword table. Returns a
+    * positional tuple (janino struct-codegen caveat, see
+    * repetitionUdf): _1 lenScore, _2 stopRatio,
     * _3 punctRatio, _4 digitRatio, _5 meanWordLen, _6 teacher score;
     * null text → null (ridge drops null-feature rows, unchanged). */
   private val qualitySignalsUdf = udf((s: String) => {
@@ -110,20 +96,17 @@ object TextAnalysis {
           !Character.isWhitespace(c)) punctQ += 1
         if ((c >= '!' && c <= '/') || (c >= ':' && c <= '@') ||
             (c >= '[' && c <= '`') || (c >= '{' && c <= '~')) punctRe += 1
-        if (isWs(c)) ws += 1
+        if (TokenScan.isWs(c)) ws += 1
         i += 1
       }
       var nToks = 0; var stopProbe = 0; var stopEn = 0
-      i = 0
-      while (i < len) {
-        while (i < len && isWs(s.charAt(i))) i += 1
-        if (i < len) {
-          val start = i
-          while (i < len && !isWs(s.charAt(i))) i += 1
-          nToks += 1
-          val tok = s.substring(start, i).toLowerCase
-          if (probeStops.contains(tok)) stopProbe += 1
-          if (enStops.contains(tok)) stopEn += 1
+      val tok = new TokenScan.Cursor(UTF8String.fromString(s))
+      while (tok.next()) {
+        nToks += 1
+        val m = signalStops.get(tok)
+        if (m != TokenTable.ABSENT) {
+          if ((m & 1L) != 0L) stopProbe += 1
+          if ((m & 2L) != 0L) stopEn += 1
         }
       }
       val lenD = len.toDouble
@@ -161,7 +144,7 @@ object TextAnalysis {
   private val repetitionUdf = udf((text: String) => {
     if (text == null) (0L, 0.0, 0.0, 0.0, 0.0)
     else {
-      val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+      val toks = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
       val n = toks.length
       // (top occurrence count, occurrences of repeated grams, total grams)
       def gramStats(k: Int): (Int, Int, Int) = {
@@ -210,246 +193,68 @@ object TextAnalysis {
   def repetitionKeep(rep: Column): Column =
     rep.getField("top2_frac") <= 0.2 && rep.getField("dup3_frac") <= 0.5
 
-  /** Per-document term-frequency pairs in ONE compiled pass: tokenize
-    * once, count in a local hash map, emit distinct (token, tf). The
-    * corpus-wide formulation (explode every token occurrence, then
+  /** Per-document term-frequency pairs in ONE compiled pass: one
+    * [[TokenTable.scan]] of the text, emitted as distinct (token, tf).
+    * The corpus-wide formulation (explode every token occurrence, then
     * groupBy(doc, tok)) shuffles one row per token OCCURRENCE and
     * re-tokenizes per consumer; this projection shuffles nothing and
     * is the single corpus scan every tf-derived stat hangs off. */
-  /** Java-`\s` whitespace (ASCII-only, matching the regex the
-    * tokenizer replaced): space or TAB..CR. */
-  @inline private def isWs(c: Char): Boolean =
-    c == ' ' || (c >= '\t' && c <= '\r')
-
-  private[operators] def tfProfile(text: String): Array[(String, Long)] = {
-    // single char scan, no regex, no intermediate token array — the
-    // same rewrite that took the PII scanner from 6.3× to 2.1× DuckDB.
-    // Token stream is identical to `text.toLowerCase.split("\\s+")`
-    // (whitespace chars are case-stable, so lowering per token after
-    // splitting sees the same boundaries the old code saw after
-    // lowering the whole text). Measured 1.8× faster at the 100×
-    // point (0.42 s vs 0.76 s for the tokenize pass).
+  private def tfProfile(text: String): Array[(String, Long)] =
     if (text == null) Array.empty[(String, Long)]
-    else {
-      val m = scala.collection.mutable.HashMap.empty[String, Long]
-      val n = text.length
-      var i = 0
-      while (i < n) {
-        while (i < n && isWs(text.charAt(i))) i += 1
-        if (i < n) {
-          val start = i
-          while (i < n && !isWs(text.charAt(i))) i += 1
-          val tok = text.substring(start, i).toLowerCase
-          m.update(tok, m.getOrElse(tok, 0L) + 1L)
-        }
-      }
-      m.toArray
-    }
-  }
+    else TokenTable.scan(UTF8String.fromString(text)).pairs
 
   private val tfPairsUdf = udf(tfProfile _)
 
-  /** The vocab fold ([[VocabKernelFold]]) as a bare aggregate column. */
+  /** The vocab fold ([[VocabKernelFold]]) as a bare aggregate column.
+    * The text enters as its UTF-8 bytes: the binary cast is one copy
+    * per document, where a String input decodes it. */
   private[graft] def vocabKernelCol(text: Column, maxVocab: Int,
                                     weighted: Boolean): Column =
-    udaf(new VocabKernelFold(maxVocab, weighted), Encoders.STRING)(text)
+    udaf(new VocabKernelFold(maxVocab, weighted), Encoders.BINARY)(text.cast("binary"))
 
-  /** Open-addressing (lowered token → count) accumulator for
-    * [[VocabKernelFold]] — the r20 per-token-allocation fix (guide
-    * §4): the immutable-Map buffer it replaced paid substring +
-    * toLowerCase + boxing + a HAMT `updated` PER TOKEN OCCURRENCE
-    * (~250 M allocations over the x1000 corpus, most of the fold's
-    * 3.2 s). Here a token allocates ONCE per distinct token per
-    * partition (its stored lowered key); every later occurrence
-    * hashes and compares fold-on-the-fly with zero allocation.
-    * Distinct-per-doc counting (df mode) uses a per-slot doc stamp
-    * instead of a per-doc set. Tokenizer and lowering parity with
-    * [[tfProfile]]: same ASCII `\s` delimiting; ASCII chars fold in
-    * place, non-ASCII tokens fall back to
-    * `String.toLowerCase(Locale.ROOT)` (the TextScan house
-    * contract; TfidfKernelSpec fuzz-pins the fold against the
-    * test-scope TextReference.VocabFold). */
-  private[operators] final class VocabAcc(var maxVocab: Int,
-                                          var weighted: Boolean)
-      extends Serializable {
-    var keys: Array[String] = new Array[String](128)
-    var vals: Array[Long] = new Array[Long](128)
-    var stamps: Array[Int] = new Array[Int](128)
-    var size: Int = 0
-    var doc: Int = 0
-
-    @inline private def isWs(c: Char): Boolean =
-      c == ' ' || (c >= '\t' && c <= '\r')
-    @inline private def foldC(c: Char): Char =
-      if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-
-    private def hashKey(k: String): Int = {
-      var h = -2128831035
-      var i = 0
-      while (i < k.length) { h = (h ^ k.charAt(i)) * 16777619; i += 1 }
-      h & 0x7fffffff
-    }
-    private def hashFolded(t: String, start: Int, end: Int): Int = {
-      var h = -2128831035
-      var i = start
-      while (i < end) { h = (h ^ foldC(t.charAt(i))) * 16777619; i += 1 }
-      h & 0x7fffffff
-    }
-
-    private def grow(): Unit = {
-      val ok = keys; val ov = vals; val os = stamps
-      keys = new Array[String](ok.length << 1)
-      vals = new Array[Long](ok.length << 1)
-      stamps = new Array[Int](ok.length << 1)
+  /** Vocabulary fold as a typed Aggregator: ONE corpus pass builds the
+    * full (token → Σtf) or (token → df) map with NO pair explode, no
+    * wide shuffle (per-partition buffers, single-partition merge) and
+    * no `limit(...).collect()` — CollectLimit's incremental scale-up
+    * re-ran the whole agg in up to 4 sequential jobs (measured ~1.0 s
+    * for a 0.5 s pass at the 100× point). The buffer is a
+    * [[TokenTable]]: each document is scanned into its own table, and
+    * each of its distinct tokens is added to the partition's — delta 1
+    * for df, delta tf for Σtf. A key is copied once per partition, when
+    * first inserted; the kryo buffer holds owned keys only. The vocab
+    * bound is enforced INSIDE reduce/merge, so an open vocabulary fails
+    * loudly in the executor before any oversized buffer is shipped. */
+  private final class VocabKernelFold(maxVocab: Int, weighted: Boolean)
+      extends Aggregator[Array[Byte], TokenTable, Map[String, Long]] {
+    private def addAll(into: TokenTable, from: TokenTable,
+                       once: Boolean): TokenTable = {
       var e = 0
-      while (e < ok.length) {
-        if (ok(e) != null) {
-          val mask = keys.length - 1
-          var i = hashKey(ok(e)) & mask
-          while (keys(i) != null) i = (i + 1) & mask
-          keys(i) = ok(e); vals(i) = ov(e); stamps(i) = os(e)
-        }
+      while (e < from.capacity) {
+        if (from.occupied(e)) into.add(from, e, if (once) 1L else from.value(e))
         e += 1
       }
-    }
-
-    private def bound(): Unit =
-      require(size <= maxVocab,
+      require(into.size <= maxVocab,
         s"vocabulary exceeds maxVocab=$maxVocab; " +
           "use the distributed (join/window) form for open vocabularies")
-
-    /** Add `delta` for a stored lowered key (merge path / fallback). */
-    def addKey(k: String, delta: Long, distinctThisDoc: Boolean): Unit = {
-      if ((size + 1) * 2 > keys.length) grow()
-      val mask = keys.length - 1
-      var i = hashKey(k) & mask
-      while (keys(i) != null) {
-        if (keys(i) == k) {
-          if (distinctThisDoc) {
-            if (stamps(i) != doc) { vals(i) += delta; stamps(i) = doc }
-          } else vals(i) += delta
-          return
-        }
-        i = (i + 1) & mask
-      }
-      keys(i) = k; vals(i) = delta; stamps(i) = doc
-      size += 1
-      bound()
+      into
     }
-
-    /** Zero-allocation hit path for an ASCII token of `t`. */
-    private def addAsciiRange(t: String, start: Int, end: Int,
-                              distinctThisDoc: Boolean): Unit = {
-      if ((size + 1) * 2 > keys.length) grow()
-      val mask = keys.length - 1
-      val len = end - start
-      var i = hashFolded(t, start, end) & mask
-      while (keys(i) != null) {
-        val k = keys(i)
-        if (k.length == len) {
-          var j = 0
-          var eq = true
-          while (eq && j < len) {
-            if (k.charAt(j) != foldC(t.charAt(start + j))) eq = false
-            j += 1
-          }
-          if (eq) {
-            if (distinctThisDoc) {
-              if (stamps(i) != doc) { vals(i) += 1L; stamps(i) = doc }
-            } else vals(i) += 1L
-            return
-          }
-        }
-        i = (i + 1) & mask
-      }
-      // first sighting: materialize the folded key once
-      val a = new Array[Char](len)
-      var j = 0
-      while (j < len) { a(j) = foldC(t.charAt(start + j)); j += 1 }
-      keys(i) = new String(a); vals(i) = 1L; stamps(i) = doc
-      size += 1
-      bound()
-    }
-
-    /** Fold one document's text. */
-    def foldText(t: String): Unit = {
-      doc += 1
-      val distinct = !weighted
-      val n = t.length
-      var i = 0
-      while (i < n) {
-        while (i < n && isWs(t.charAt(i))) i += 1
-        if (i < n) {
-          val start = i
-          var ascii = true
-          while (i < n && !isWs(t.charAt(i))) {
-            if (t.charAt(i) >= 0x80) ascii = false
-            i += 1
-          }
-          if (ascii) addAsciiRange(t, start, i, distinct)
-          else addKey(t.substring(start, i)
-            .toLowerCase(java.util.Locale.ROOT), 1L, distinct)
-        }
-      }
-    }
-
-    def mergeFrom(o: VocabAcc): Unit = {
-      // counts are final per-partition — stamps no longer matter
-      doc += 1
-      var e = 0
-      while (e < o.keys.length) {
-        if (o.keys(e) != null) addKey(o.keys(e), o.vals(e),
-          distinctThisDoc = false)
-        e += 1
-      }
-    }
-
-    def toMap: Map[String, Long] = {
-      val b = Map.newBuilder[String, Long]
-      var e = 0
-      while (e < keys.length) {
-        if (keys(e) != null) b += keys(e) -> vals(e)
-        e += 1
-      }
-      b.result()
-    }
-  }
-
-  /** Vocabulary fold over per-doc tf profiles as a typed Aggregator:
-    * ONE corpus pass builds the full (token → Σtf) or (token → df)
-    * map with NO pair explode, no wide shuffle (per-partition map
-    * buffers, single-partition merge) and no `limit(...).collect()` —
-    * CollectLimit's incremental scale-up re-ran the whole agg in up
-    * to 4 sequential jobs (measured ~1.0 s for a 0.5 s pass at the
-    * 100× point). The vocab bound is enforced INSIDE reduce/merge, so
-    * an open vocabulary fails loudly in the executor before any
-    * oversized buffer is built or shipped. The buffer is the
-    * [[VocabAcc]] kernel; it serializes via kryo only at partial-merge
-    * boundaries. */
-  private final class VocabKernelFold(maxVocab: Int, weighted: Boolean)
-      extends Aggregator[String, VocabAcc, Map[String, Long]] {
-    override def zero: VocabAcc = new VocabAcc(maxVocab, weighted)
-    override def reduce(b: VocabAcc, text: String): VocabAcc = {
-      if (text != null) b.foldText(text)
-      b
-    }
-    override def merge(x: VocabAcc, y: VocabAcc): VocabAcc = {
-      x.mergeFrom(y)
-      x
-    }
-    override def finish(r: VocabAcc): Map[String, Long] = r.toMap
-    override def bufferEncoder: Encoder[VocabAcc] = Encoders.kryo[VocabAcc]
+    override def zero: TokenTable = TokenTable.empty
+    override def reduce(b: TokenTable, text: Array[Byte]): TokenTable =
+      if (text == null) b
+      else addAll(b, TokenTable.scan(UTF8String.fromBytes(text)), once = !weighted)
+    override def merge(x: TokenTable, y: TokenTable): TokenTable =
+      addAll(x, y, once = false)
+    override def finish(r: TokenTable): Map[String, Long] = r.pairs.toMap
+    override def bufferEncoder: Encoder[TokenTable] = Encoders.kryo[TokenTable]
     override def outputEncoder: Encoder[Map[String, Long]] =
       ExpressionEncoder[Map[String, Long]]()
   }
 
   /** One-job driver-side vocab map: token → Σtf (`weighted`) or
-    * token → document frequency (profiles hold distinct tokens).
-    * r20: kernel fold ([[VocabAcc]]). */
+    * token → document frequency ([[VocabKernelFold]]). */
   private def vocabMap(docs: DataFrame, textCol: String, maxVocab: Int,
                        weighted: Boolean): Map[String, Long] = {
-    val fold = udaf(new VocabKernelFold(maxVocab, weighted), Encoders.STRING)
-    try docs.select(fold(col(textCol)).as("vocab"))
+    try docs.select(vocabKernelCol(col(textCol), maxVocab, weighted).as("vocab"))
       .head.getMap[String, Long](0).toMap
     catch { case e: Throwable =>
       // surface the in-executor bound violation as the same loud
@@ -563,7 +368,7 @@ object TextAnalysis {
     // the test-scope TextReference.tfidfTopKUdfReference.
     docs.select(col(idCol),
         explode(graft.plans.Tfidf.topKCol(col(textCol),
-          new graft.plans.TokenDfMap(dfMap), nD, k)).as("t"))
+          TokenTable.of(dfMap), nD, k)).as("t"))
       .select(col(idCol), col("t._2").as("tok"), col("t._3").as("tf"),
         col("t._4").as("tfidf"), col("t._1").as("rnk"))
   }
@@ -611,7 +416,7 @@ object TextAnalysis {
     docs.filter(graft.plans.Tfidf.hasTokenCol(col(textCol)))
       .select(col(idCol),
         graft.plans.Tfidf.lmScoreCol(col(textCol),
-          new graft.plans.TokenDfMap(logpBits)).as("r"))
+          TokenTable.of(logpBits)).as("r"))
       .select(col(idCol), col("r._1").as("n_tokens"), col("r._2").as("avg_logp"))
   }
 
@@ -629,7 +434,7 @@ object TextAnalysis {
       val tf = new Array[Long](idx.size)
       var dl = 0L
       if (text != null)
-        text.toLowerCase.split("\\s+").foreach { t =>
+        text.toLowerCase(java.util.Locale.ROOT).split("\\s+").foreach { t =>
           if (t.nonEmpty) {
             dl += 1
             idx.get(t) match { case Some(i) => tf(i) += 1; case None => }

@@ -32,16 +32,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * ASCII text — ContainsIgnoreCaseSpec fuzzes the equivalence
   * including İ/K adversarial inputs.
   *
-  * LOCALE ASSUMPTION (r18 advisory): the argued equivalence is to
-  * `lower()` under the ROOT locale. Spark's `lower` delegates to
-  * `String.toLowerCase()` — the JVM DEFAULT locale — for strings
+  * LOCALE CONTRACT: the argued equivalence is to `lower()` under the
+  * ROOT locale — DuckDB's `lower()` and the rule every text kernel
+  * lowers by ([[TokenScan]]). This scan holds it whatever the JVM's
+  * default locale. Spark's own `lower` delegates to
+  * `String.toLowerCase()` — the DEFAULT locale — for strings
   * containing any non-ASCII character, so under a Turkish/Azeri
-  * default locale `"JOİN".toLowerCase == "join"` matches an ASCII
-  * needle while this byte-fold scan (correctly, per ROOT rules)
-  * does not. The İ/K needle validation above is the ROOT-locale
-  * analysis; run the JVM with a non-Turkish default locale (any
-  * `Sessions`-built JVM in this repo does) or pin
-  * `Locale.setDefault(Locale.ROOT)` if that cannot be guaranteed.
+  * default `contains(lower(text), kw)` can differ from this scan
+  * (`lower("JOİN")` is then "join"); `Sessions` sets no locale, so
+  * that composition is the one to distrust, not this expression.
   */
 object ContainsIgnoreCase {
 
@@ -58,9 +57,7 @@ object ContainsIgnoreCase {
       var j = 0
       var ok = true
       while (ok && j < m) {
-        var c = s.getByte(i + j)
-        if (c >= 'A' && c <= 'Z') c = (c + 32).toByte
-        if (c != needleLower.getByte(j)) ok = false
+        if (TokenScan.fold(s.getByte(i + j)) != needleLower.getByte(j)) ok = false
         j += 1
       }
       if (ok) return true

@@ -17,57 +17,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * the dominant residual of simhash's 3.9 s (95 % sketch scan in the
   * r18 x1000 stage cuts, bench_history/BENCH_FULL_r18.json).
   *
-  * LOCALE: non-ASCII fallbacks lower with Locale.ROOT, same contract
-  * as [[graft.operators.Dedup.tokenHashes]] (r18 advisory) and the
-  * [[ContainsIgnoreCase]] scaladoc.
+  * LOCALE: tokens lower by [[TokenScan]]'s one rule (ASCII folded in
+  * place, anything else with Locale.ROOT), the same contract as
+  * [[graft.operators.Dedup.tokenHashes]] and [[ContainsIgnoreCase]].
   */
 object TextScan {
-
-  /** `\s` in Java regex is exactly [ \t\n\x0B\f\r] — all ASCII, and
-    * UTF-8 continuation bytes are ≥ 0x80, so byte-level delimiting is
-    * exact for EVERY input, not just ASCII text. */
-  @inline private def isWs(b: Byte): Boolean =
-    b == ' ' || (b >= 0x09 && b <= 0x0D)
-
-  @inline private def foldB(b: Byte): Byte =
-    if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+  import TokenScan.fold
 
   /** Count of whitespace-delimited tokens equal (case-folded) to one
-    * of `set`'s needles. Exactly `text.toLowerCase.split("\\s+")` +
-    * set-membership counting (the reference UDF semantics,
-    * TextScanSpec fuzz-pins the equivalence): case mappings never
-    * produce or consume whitespace, so lowering per-token equals
-    * lowering the whole string first; ASCII tokens compare byte-folded
-    * in place, any token containing a non-ASCII byte falls back to the
-    * real `String.toLowerCase(Locale.ROOT)`. */
-  def stopwordHits(s: UTF8String, set: StopwordSet): Int = {
-    val n = s.numBytes()
-    var i = 0
+    * of `set`'s needles. Exactly `text.toLowerCase(Locale.ROOT)
+    * .split("\\s+")` + set-membership counting (the reference UDF
+    * semantics; TextScanSpec fuzz-pins the equivalence). */
+  def stopwordHits(s: UTF8String, set: TokenTable): Int = {
+    val c = new TokenScan.Cursor(s)
     var hits = 0
-    while (i < n) {
-      if (isWs(s.getByte(i))) i += 1
-      else {
-        val start = i
-        var ascii = true
-        while (i < n && !isWs(s.getByte(i))) {
-          if ((s.getByte(i) & 0x80) != 0) ascii = false
-          i += 1
-        }
-        val len = i - start
-        if (ascii) {
-          if (set.matchesAsciiFold(s, start, len)) hits += 1
-        } else {
-          // rare path: copy the token's bytes (UTF8String.substring is
-          // CHAR-indexed — byte offsets need a manual slice)
-          val tok = new Array[Byte](len)
-          var j = 0
-          while (j < len) { tok(j) = s.getByte(start + j); j += 1 }
-          if (set.matchesLowered(
-              new String(tok, java.nio.charset.StandardCharsets.UTF_8)))
-            hits += 1
-        }
-      }
-    }
+    while (c.next()) if (set.get(c) != TokenTable.ABSENT) hits += 1
     hits
   }
 
@@ -110,21 +74,21 @@ object TextScan {
       total += 1L
     }
     if (ascii) {
-      @inline def isStart(c: Byte): Boolean =
+      @inline def isStart(c: Int): Boolean =
         (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-      @inline def isCont(c: Byte): Boolean =
+      @inline def isCont(c: Int): Boolean =
         isStart(c) || c == '-' || c == '_' || c == '/'
       i = 0
       while (i < n) {
-        val c0 = foldB(s.getByte(i))
-        if (isStart(c0) && i + 1 < n && isCont(foldB(s.getByte(i + 1)))) {
+        val c0 = fold(s.getByte(i))
+        if (isStart(c0) && i + 1 < n && isCont(fold(s.getByte(i + 1)))) {
           var h = 1125899906842597L * 31L + c0
           i += 1
-          var c = foldB(s.getByte(i))
+          var c = fold(s.getByte(i))
           while (isCont(c)) {
             h = h * 31L + c
             i += 1
-            c = if (i < n) foldB(s.getByte(i)) else ' '
+            c = if (i < n) fold(s.getByte(i)) else ' '
           }
           add(h)
         } else i += 1
@@ -152,46 +116,6 @@ object TextScan {
   def simhash(text: Column): Column = toCol(SimHash64Expr(expression(text)))
 }
 
-/** Prepared needle set shipped into codegen by reference: the byte
-  * form for the in-place ASCII fold compare, the string form for the
-  * non-ASCII-token fallback. Needles must be lower-case (they are
-  * compared against folded/lowered tokens). */
-final class StopwordSet(needles: Array[String]) extends Serializable {
-  require(needles.nonEmpty, "StopwordSet: empty needle list")
-  require(needles.forall(w => w == w.toLowerCase(java.util.Locale.ROOT)),
-    "StopwordSet: needles must be lower-case (tokens compare folded)")
-  private val bytes: Array[Array[Byte]] =
-    needles.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  private val strSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    needles.foreach(s.add)
-    s
-  }
-
-  def matchesAsciiFold(s: UTF8String, start: Int, len: Int): Boolean = {
-    var ni = 0
-    while (ni < bytes.length) {
-      val nb = bytes(ni)
-      if (nb.length == len) {
-        var j = 0
-        var ok = true
-        while (ok && j < len) {
-          var c = s.getByte(start + j)
-          if (c >= 'A' && c <= 'Z') c = (c + 32).toByte
-          if (c != nb(j)) ok = false
-          j += 1
-        }
-        if (ok) return true
-      }
-      ni += 1
-    }
-    false
-  }
-
-  def matchesLowered(token: String): Boolean =
-    strSet.contains(token.toLowerCase(java.util.Locale.ROOT))
-}
-
 /** `StopwordCountExpr(text, needles)`: INT count of whitespace
   * tokens of `text` whose lower-cased form is in `needles`. Codegen
   * emits a call to the static in-place scanner — no per-row String
@@ -208,14 +132,18 @@ case class StopwordCountExpr(child: Expression, needles: Seq[String])
         s"argument must be string, got ${child.dataType}")
     else TypeCheckResult.TypeCheckSuccess
 
-  @transient private lazy val set = new StopwordSet(needles.toArray)
+  @transient private lazy val set: TokenTable = {
+    require(needles.forall(w => w == w.toLowerCase(java.util.Locale.ROOT)),
+      "stopword needles must be lower-case (tokens compare folded)")
+    TokenTable.of(needles.map(_ -> 1L))
+  }
 
   override def nullSafeEval(str: Any): Any =
     TextScan.stopwordHits(str.asInstanceOf[UTF8String], set)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("stopwordSet", set,
-      classOf[StopwordSet].getName)
+      classOf[TokenTable].getName)
     nullSafeCodeGen(ctx, ev, s =>
       s"${ev.value} = graft.plans.TextScan.stopwordHits($s, $ref);")
   }

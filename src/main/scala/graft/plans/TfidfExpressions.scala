@@ -16,15 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * 8 s; each tokenized the corpus through per-token substring +
   * toLowerCase + boxed map updates).
   *
-  * The kernels read the UTF-8 buffer in place: whitespace delimiting
-  * at byte level (exact for all UTF-8 — see [[TextScan]]), ASCII
-  * tokens fold in place with zero allocation, non-ASCII tokens fall
-  * back to `String.toLowerCase(Locale.ROOT)` (house contract, r18
-  * advisory). Per-document term frequencies accumulate in
-  * [[TokenTfTable]], a small open-addressing table keyed by the
-  * token's LOWERED bytes (ASCII entries reference the text buffer and
-  * fold on compare; fallback entries own their lowered bytes), so the
-  * common path allocates only the output rows.
+  * The kernels read the UTF-8 buffer in place through [[TokenScan]]'s
+  * cursor (byte-level whitespace delimiting, ASCII tokens folded in
+  * place, non-ASCII tokens lowered with `Locale.ROOT`). Per-document
+  * term frequencies accumulate in a [[TokenTable]] whose ASCII keys
+  * borrow the text buffer, so the common path allocates only the
+  * output rows; the df, log-prob and language-mask tables are
+  * TokenTables of owned keys, probed by folded bytes.
   *
   * Scoring parity:
   *  - tf-idf is bit-identical to the UDF it replaces: score = tf ·
@@ -43,24 +41,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Tfidf {
 
-  @inline private[plans] def isWs(b: Byte): Boolean =
-    b == ' ' || (b >= 0x09 && b <= 0x0D)
-
-  @inline private[plans] def foldB(b: Byte): Byte =
-    if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
-
-  private[plans] def hashBytes(a: Array[Byte]): Int = {
-    var h = -2128831035 // FNV-1a 32-bit
-    var i = 0
-    while (i < a.length) { h = (h ^ (a(i) & 0xff)) * 16777619; i += 1 }
-    h & 0x7fffffff
-  }
-
   /** Top-k (rank, token, tf, tf·idf) rows for one document — the
     * scalar UDF's exact tuple shape, ready for explode. */
-  def topK(s: UTF8String, df: TokenDfMap, nD: Double, k: Int): ArrayData = {
-    val t = new TokenTfTable(s)
-    t.fill()
+  def topK(s: UTF8String, df: TokenTable, nD: Double, k: Int): ArrayData = {
+    val t = TokenTable.scan(s)
     if (t.size == 0) return new GenericArrayData(Array.empty[Any])
 
     val kk = math.min(k, t.size)
@@ -68,15 +52,15 @@ object Tfidf {
     val topS = new Array[Double](kk)
     var m = 0
     var e = 0
-    while (e < t.cap) {
-      if (t.used(e)) {
-        val dfv = t.lookup(e, df)
-        if (dfv < 0L) throw new IllegalStateException(
+    while (e < t.capacity) {
+      if (t.occupied(e)) {
+        val dfv = df.get(t, e)
+        if (dfv == TokenTable.ABSENT) throw new IllegalStateException(
           s"tfidfTopTermsRowLocal: token '${t.entryString(e)}' absent from " +
             "the vocab pass — the input must be deterministic across scans " +
             "(sample()/limit()/unstable shuffle break this); use the join " +
             "form tfidfTopTerms")
-        val score = t.tf(e) * java.lang.StrictMath.log(nD / dfv)
+        val score = t.value(e) * java.lang.StrictMath.log(nD / dfv)
         // insertion position: past every slot that beats e
         var p = m
         while (p > 0 && (score > topS(p - 1) ||
@@ -97,7 +81,7 @@ object Tfidf {
     while (r < m) {
       val en = topE(r)
       out(r) = new GenericInternalRow(Array[Any](
-        r + 1, UTF8String.fromBytes(t.entryBytes(en)), t.tf(en), topS(r)))
+        r + 1, UTF8String.fromBytes(t.entryBytes(en)), t.value(en), topS(r)))
       r += 1
     }
     new GenericArrayData(out)
@@ -106,22 +90,21 @@ object Tfidf {
   /** (n_tokens, Σ tf·logp / n_tokens) for one document — the LM
     * scorer UDF's tuple shape. `logpBits` maps lowered token bytes to
     * `doubleToRawLongBits(ln(cnt/total))`. */
-  def lmScore(s: UTF8String, logpBits: TokenDfMap): InternalRow = {
-    val t = new TokenTfTable(s)
-    t.fill()
+  def lmScore(s: UTF8String, logpBits: TokenTable): InternalRow = {
+    val t = TokenTable.scan(s)
     var n = 0L
     var acc = 0.0
     var e = 0
-    while (e < t.cap) {
-      if (t.used(e)) {
-        val bits = t.lookup(e, logpBits)
-        if (bits == TokenDfMap.ABSENT) throw new IllegalStateException(
+    while (e < t.capacity) {
+      if (t.occupied(e)) {
+        val bits = logpBits.get(t, e)
+        if (bits == TokenTable.ABSENT) throw new IllegalStateException(
           s"corpusLmScoreRowLocal: token '${t.entryString(e)}' absent from " +
             "the vocab pass — the input must be deterministic across scans " +
             "(sample()/limit()/unstable shuffle break this); use the join " +
             "form corpusLmScore")
-        n += t.tf(e)
-        acc += t.tf(e) * java.lang.Double.longBitsToDouble(bits)
+        n += t.value(e)
+        acc += t.value(e) * java.lang.Double.longBitsToDouble(bits)
       }
       e += 1
     }
@@ -129,7 +112,7 @@ object Tfidf {
   }
 
   /** Language-ID argmax in ONE pass: every stopword list is folded
-    * into a single (lowered token → language bitmask) map, each token
+    * into a single (lowered token → language bitmask) table, each token
     * occurrence bumps the hit counter of every language whose list
     * contains it, and the argmax applies the reference UDF's exact
     * rule (most hits; ties at >0 hits break to the lexicographically
@@ -137,38 +120,18 @@ object Tfidf {
     * the text and rebuilt each language's needle SET per document —
     * five token passes plus per-doc set allocation. Languages are
     * passed pre-sorted by code. */
-  def langId(s: UTF8String, masks: TokenDfMap, langs: Array[UTF8String],
+  def langId(s: UTF8String, masks: TokenTable, langs: Array[UTF8String],
              und: UTF8String): UTF8String = {
     val hits = new Array[Int](langs.length)
-    val n = s.numBytes()
-    var i = 0
-    while (i < n) {
-      if (isWs(s.getByte(i))) i += 1
-      else {
-        val start = i
-        var ascii = true
-        while (i < n && !isWs(s.getByte(i))) {
-          if ((s.getByte(i) & 0x80) != 0) ascii = false
-          i += 1
-        }
-        val len = i - start
-        var mask =
-          if (ascii) masks.getAsciiFolded(s, start, len)
-          else {
-            val raw = new Array[Byte](len)
-            var j = 0
-            while (j < len) { raw(j) = s.getByte(start + j); j += 1 }
-            masks.get(new String(raw, java.nio.charset.StandardCharsets.UTF_8)
-              .toLowerCase(java.util.Locale.ROOT)
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-        if (mask != TokenDfMap.ABSENT) {
-          var l = 0
-          while (mask != 0L) {
-            if ((mask & 1L) != 0L) hits(l) += 1
-            mask >>>= 1
-            l += 1
-          }
+    val c = new TokenScan.Cursor(s)
+    while (c.next()) {
+      var mask = masks.get(c)
+      if (mask != TokenTable.ABSENT) {
+        var l = 0
+        while (mask != 0L) {
+          if ((mask & 1L) != 0L) hits(l) += 1
+          mask >>>= 1
+          l += 1
         }
       }
     }
@@ -189,256 +152,28 @@ object Tfidf {
     if (best < 0) und else langs(best)
   }
 
-  /** true iff the text contains at least one token (a non-whitespace
-    * byte) — the cheap pre-filter equivalent of `n_tokens > 0`, so
-    * callers can drop empty docs BEFORE an expensive scorer instead
-    * of filtering on the scorer's output (which re-evaluates the
-    * kernel per row when the predicate is pushed below the
-    * projection — the §4.4 duplication hazard, observed live in
-    * lm_score's plan: `Filter (lm_score(text)._1 > 0)` under
-    * `Project [lm_score(text) AS r]`). Early-exits on the first
-    * non-ws byte. */
-  def hasToken(s: UTF8String): Boolean = {
-    val n = s.numBytes()
-    var i = 0
-    while (i < n) {
-      if (!isWs(s.getByte(i))) return true
-      i += 1
-    }
-    false
-  }
-
-  /** Column forms. */
+  /** Column forms. [[HasTokenExpr]] is the cheap pre-filter equivalent
+    * of `n_tokens > 0`, so callers can drop empty docs BEFORE an
+    * expensive scorer instead of filtering on the scorer's output
+    * (which re-evaluates the kernel per row when the predicate is
+    * pushed below the projection — the §4.4 duplication hazard,
+    * observed live in lm_score's plan: `Filter (lm_score(text)._1 > 0)`
+    * under `Project [lm_score(text) AS r]`). */
   def hasTokenCol(text: Column): Column =
     toCol(HasTokenExpr(expression(text)))
-  def topKCol(text: Column, df: TokenDfMap, nD: Double, k: Int): Column =
+  def topKCol(text: Column, df: TokenTable, nD: Double, k: Int): Column =
     toCol(TfidfTopKExpr(expression(text), df, nD, k))
-  def lmScoreCol(text: Column, logpBits: TokenDfMap): Column =
+  def lmScoreCol(text: Column, logpBits: TokenTable): Column =
     toCol(LmScoreExpr(expression(text), logpBits))
   def langIdCol(text: Column, table: Map[String, Seq[String]]): Column =
     toCol(LangIdExpr(expression(text), table))
-}
-
-/** Per-document distinct-token tf table over one UTF8String: open
-  * addressing keyed by the token's lowered bytes. ASCII entries
-  * reference the text buffer (fold on compare — zero allocation);
-  * non-ASCII tokens own their lowered bytes (rare path). */
-private[plans] final class TokenTfTable(s: UTF8String) {
-  import Tfidf.{foldB, hashBytes, isWs}
-
-  var cap = 64
-  private var mask = cap - 1
-  private var starts = new Array[Int](cap)
-  private var lens = new Array[Int](cap)
-  private var owned = new Array[Array[Byte]](cap)
-  private var hash = new Array[Int](cap)
-  var tf = new Array[Long](cap)
-  var used = new Array[Boolean](cap)
-  var size = 0
-
-  @inline def entryLen(e: Int): Int =
-    if (owned(e) != null) owned(e).length else lens(e)
-  @inline def entryByte(e: Int, i: Int): Byte =
-    if (owned(e) != null) owned(e)(i) else foldB(s.getByte(starts(e) + i))
-
-  def entryBytes(e: Int): Array[Byte] = {
-    val l = entryLen(e)
-    val a = new Array[Byte](l)
-    var j = 0
-    while (j < l) { a(j) = entryByte(e, j); j += 1 }
-    a
-  }
-
-  def entryString(e: Int): String =
-    new String(entryBytes(e), java.nio.charset.StandardCharsets.UTF_8)
-
-  def lookup(e: Int, m: TokenDfMap): Long =
-    if (owned(e) != null) m.get(owned(e))
-    else m.getAsciiFolded(s, starts(e), lens(e))
-
-  private def entryAscii(e: Int): Boolean = {
-    if (owned(e) == null) true
-    else {
-      val a = owned(e)
-      var j = 0
-      while (j < a.length) { if ((a(j) & 0x80) != 0) return false; j += 1 }
-      true
-    }
-  }
-
-  /** (token asc) of the UDF's sortWith: byte order == `String.<` for
-    * pure-ASCII pairs; String compare otherwise. */
-  def tokLess(a: Int, b: Int): Boolean = {
-    if (entryAscii(a) && entryAscii(b)) {
-      val la = entryLen(a); val lb = entryLen(b)
-      var j = 0
-      val m = math.min(la, lb)
-      while (j < m) {
-        val ca = entryByte(a, j) & 0xff
-        val cb = entryByte(b, j) & 0xff
-        if (ca != cb) return ca < cb
-        j += 1
-      }
-      la < lb
-    } else entryString(a).compareTo(entryString(b)) < 0
-  }
-
-  private def hashFolded(start: Int, len: Int): Int = {
-    var h = -2128831035
-    var i = 0
-    while (i < len) {
-      h = (h ^ (foldB(s.getByte(start + i)) & 0xff)) * 16777619
-      i += 1
-    }
-    h & 0x7fffffff
-  }
-
-  private def grow(): Unit = {
-    val oc = cap
-    cap <<= 1; mask = cap - 1
-    val os = starts; val ol = lens; val oo = owned; val oh = hash
-    val ot = tf; val ou = used
-    starts = new Array[Int](cap); lens = new Array[Int](cap)
-    owned = new Array[Array[Byte]](cap); hash = new Array[Int](cap)
-    tf = new Array[Long](cap); used = new Array[Boolean](cap)
-    var e = 0
-    while (e < oc) {
-      if (ou(e)) {
-        var i = oh(e) & mask
-        while (used(i)) i = (i + 1) & mask
-        starts(i) = os(e); lens(i) = ol(e); owned(i) = oo(e)
-        hash(i) = oh(e); tf(i) = ot(e); used(i) = true
-      }
-      e += 1
-    }
-  }
-
-  /** candidate = folded range [cs, cs+cl) when cb == null, else cb */
-  private def bump(cb: Array[Byte], cs: Int, cl: Int, h: Int): Unit = {
-    if ((size + 1) * 2 > cap) grow()
-    var i = h & mask
-    while (used(i)) {
-      if (hash(i) == h && entryLen(i) == (if (cb != null) cb.length else cl)) {
-        var j = 0
-        val el = entryLen(i)
-        var eq = true
-        while (eq && j < el) {
-          val c = if (cb != null) cb(j) else foldB(s.getByte(cs + j))
-          if (entryByte(i, j) != c) eq = false
-          j += 1
-        }
-        if (eq) { tf(i) += 1L; return }
-      }
-      i = (i + 1) & mask
-    }
-    starts(i) = cs; lens(i) = cl; owned(i) = cb; hash(i) = h
-    tf(i) = 1L; used(i) = true
-    size += 1
-  }
-
-  /** Tokenize the text into the table. */
-  def fill(): Unit = {
-    val n = s.numBytes()
-    var i = 0
-    while (i < n) {
-      if (isWs(s.getByte(i))) i += 1
-      else {
-        val start = i
-        var ascii = true
-        while (i < n && !isWs(s.getByte(i))) {
-          if ((s.getByte(i) & 0x80) != 0) ascii = false
-          i += 1
-        }
-        val len = i - start
-        if (ascii) bump(null, start, len, hashFolded(start, len))
-        else {
-          val raw = new Array[Byte](len)
-          var j = 0
-          while (j < len) { raw(j) = s.getByte(start + j); j += 1 }
-          val lowered = new String(raw, java.nio.charset.StandardCharsets.UTF_8)
-            .toLowerCase(java.util.Locale.ROOT)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          bump(lowered, 0, lowered.length, hashBytes(lowered))
-        }
-      }
-    }
-  }
-}
-
-object TokenDfMap {
-  /** Sentinel for "key absent" — outside doubleToRawLongBits' range
-    * of real log-probs (it is NaN's bit pattern with a sign twist)
-    * and never a document frequency. */
-  val ABSENT: Long = java.lang.Long.MIN_VALUE + 1
-}
-
-/** Read-only open-addressing lookup from LOWERED token bytes to a
-  * long payload (document frequency, or raw double bits for the LM
-  * log-probs). Built once on the driver from the vocab map; ships
-  * into codegen as a reference object (StopwordSet pattern). Probes
-  * fold ASCII in place — no allocation. */
-final class TokenDfMap(entries: Map[String, Long]) extends Serializable {
-  private val cap = math.max(8,
-    Integer.highestOneBit(math.max(1, entries.size)) << 2)
-  private val mask = cap - 1
-  private val keys = new Array[Array[Byte]](cap)
-  private val vals = new Array[Long](cap)
-  entries.foreach { case (tok, v) =>
-    val kb = tok.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = Tfidf.hashBytes(kb) & mask
-    while (keys(i) != null && !java.util.Arrays.equals(keys(i), kb))
-      i = (i + 1) & mask
-    require(keys(i) == null, s"TokenDfMap: duplicate key '$tok'")
-    keys(i) = kb; vals(i) = v
-  }
-  def size: Int = entries.size
-
-  /** value for `kb` (already-lowered bytes); ABSENT if missing. */
-  def get(kb: Array[Byte]): Long = {
-    var i = Tfidf.hashBytes(kb) & mask
-    while (keys(i) != null) {
-      if (java.util.Arrays.equals(keys(i), kb)) return vals(i)
-      i = (i + 1) & mask
-    }
-    TokenDfMap.ABSENT
-  }
-
-  /** value for the ASCII token at s[start, start+len), folded on the
-    * fly; ABSENT if missing. */
-  def getAsciiFolded(s: UTF8String, start: Int, len: Int): Long = {
-    var h = -2128831035
-    var j = 0
-    while (j < len) {
-      var c = s.getByte(start + j)
-      if (c >= 'A' && c <= 'Z') c = (c + 32).toByte
-      h = (h ^ (c & 0xff)) * 16777619
-      j += 1
-    }
-    var i = (h & 0x7fffffff) & mask
-    while (keys(i) != null) {
-      val kb = keys(i)
-      if (kb.length == len) {
-        var j2 = 0
-        var eq = true
-        while (eq && j2 < len) {
-          var c = s.getByte(start + j2)
-          if (c >= 'A' && c <= 'Z') c = (c + 32).toByte
-          if (c != kb(j2)) eq = false
-          j2 += 1
-        }
-        if (eq) return vals(i)
-      }
-      i = (i + 1) & mask
-    }
-    TokenDfMap.ABSENT
-  }
 }
 
 /** `TfidfTopKExpr(text)`: array<struct<_1:int,_2:string,_3:bigint,
   * _4:double>> of the doc's top-k (rank, token, tf, tf·idf) — the
   * row-local scorer's UDF tuple shape, computed by the in-place
   * kernel. */
-case class TfidfTopKExpr(child: Expression, dfMap: TokenDfMap,
+case class TfidfTopKExpr(child: Expression, dfMap: TokenTable,
                          nD: Double, k: Int) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -459,7 +194,7 @@ case class TfidfTopKExpr(child: Expression, dfMap: TokenDfMap,
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("tfidfDfMap", dfMap,
-      classOf[TokenDfMap].getName)
+      classOf[TokenTable].getName)
     nullSafeCodeGen(ctx, ev, s =>
       s"${ev.value} = graft.plans.Tfidf.topK($s, $ref, ${nD}D, $k);")
   }
@@ -484,11 +219,11 @@ case class HasTokenExpr(child: Expression) extends UnaryExpression {
     else TypeCheckResult.TypeCheckSuccess
 
   override def nullSafeEval(str: Any): Any =
-    Tfidf.hasToken(str.asInstanceOf[UTF8String])
+    TokenScan.hasToken(str.asInstanceOf[UTF8String])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.plans.Tfidf.hasToken($s);")
+      s"${ev.value} = graft.plans.TokenScan.hasToken($s);")
 
   override def toString: String = s"has_token($child)"
 
@@ -513,7 +248,7 @@ case class LangIdExpr(child: Expression, table: Map[String, Seq[String]])
 
   @transient private lazy val langs: Array[UTF8String] =
     table.keys.toArray.sorted.map(UTF8String.fromString)
-  @transient private lazy val masks: TokenDfMap = {
+  @transient private lazy val masks: TokenTable = {
     val sorted = table.keys.toArray.sorted
     val m = scala.collection.mutable.Map.empty[String, Long]
     sorted.zipWithIndex.foreach { case (lang, i) =>
@@ -522,7 +257,7 @@ case class LangIdExpr(child: Expression, table: Map[String, Seq[String]])
         m.update(k, m.getOrElse(k, 0L) | (1L << i))
       }
     }
-    new TokenDfMap(m.toMap)
+    TokenTable.of(m)
   }
   @transient private lazy val und = UTF8String.fromString("und")
 
@@ -531,7 +266,7 @@ case class LangIdExpr(child: Expression, table: Map[String, Seq[String]])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mRef = ctx.addReferenceObj("langMasks", masks,
-      classOf[TokenDfMap].getName)
+      classOf[TokenTable].getName)
     val lRef = ctx.addReferenceObj("langCodes", langs,
       "org.apache.spark.unsafe.types.UTF8String[]")
     val uRef = ctx.addReferenceObj("langUnd", und,
@@ -548,7 +283,7 @@ case class LangIdExpr(child: Expression, table: Map[String, Seq[String]])
 
 /** `LmScoreExpr(text)`: struct<_1:bigint,_2:double> of (n_tokens,
   * avg log-prob) — the LM scorer's UDF tuple shape. */
-case class LmScoreExpr(child: Expression, logpBits: TokenDfMap)
+case class LmScoreExpr(child: Expression, logpBits: TokenTable)
     extends UnaryExpression {
 
   override def dataType: DataType = StructType(Seq(
@@ -567,7 +302,7 @@ case class LmScoreExpr(child: Expression, logpBits: TokenDfMap)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("lmLogpMap", logpBits,
-      classOf[TokenDfMap].getName)
+      classOf[TokenTable].getName)
     nullSafeCodeGen(ctx, ev, s =>
       s"${ev.value} = graft.plans.Tfidf.lmScore($s, $ref);")
   }

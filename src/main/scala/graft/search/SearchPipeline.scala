@@ -1,6 +1,7 @@
 package graft.search
 
 import java.text.Normalizer
+import java.util.Locale
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
@@ -39,14 +40,14 @@ object SearchPipeline {
   private val wordRe = "[가-힣a-z0-9][가-힣a-z0-9\\-_/]+".r
 
   private def nfkcLower(s: String): String =
-    Normalizer.normalize(s, Normalizer.Form.NFKC).toLowerCase
+    Normalizer.normalize(s, Normalizer.Form.NFKC).toLowerCase(Locale.ROOT)
 
   /** Strong/weak anchor extraction from the query (ref :729-755):
     * NFKC-normalized ≥2-char tokens minus interrogative stop-terms,
     * plus the reference's domain synonym expansions. Driver-side pure
     * function — the query string is a scalar. */
   def anchorsFromQuery(q: String): Anchors = {
-    val words = wordRe.findAllIn(q.toLowerCase).map(w => nfkcLower(w).trim)
+    val words = wordRe.findAllIn(q.toLowerCase(Locale.ROOT)).map(w => nfkcLower(w).trim)
       .filter(_.length >= 2).toSet
     var strong = words -- weakKo -- weakEn
     val weak = words & (weakKo ++ weakEn)
@@ -94,7 +95,7 @@ object SearchPipeline {
     if (ascii) {
       anchors.exists(a => asciiContainsIgnoreCase(s, a))
     } else {
-      val n = Normalizer.normalize(s, Normalizer.Form.NFKC).toLowerCase
+      val n = nfkcLower(s)
       anchors.exists(n.contains(_))
     }
   }
@@ -110,9 +111,8 @@ object SearchPipeline {
       var j = 0
       var ok = true
       while (ok && j < n) {
-        var c = s.charAt(i + j)
-        if (c >= 'A' && c <= 'Z') c = (c + 32).toChar
-        if (c != needle.charAt(j)) ok = false else j += 1
+        if (graft.plans.TokenScan.fold(s.charAt(i + j)) != needle.charAt(j)) ok = false
+        else j += 1
       }
       if (ok) return true
       i += 1
@@ -168,7 +168,8 @@ object SearchPipeline {
         val snippet = text.take(math.min(900, remain)) +
           (if (text.length > 900) "…" else "")
         total += snippet.length
-        buf += f"《S${i + 1}》 [id=$id] [title=$title] [OO=$oo] score=$score%.4f%n$snippet%n"
+        buf += "《S%d》 [id=%s] [title=%s] [OO=%s] score=%.4f%n%s%n"
+          .formatLocal(Locale.ROOT, i + 1, id, title, oo, score, snippet)
       }
     }
     buf += "</CONTEXT>"

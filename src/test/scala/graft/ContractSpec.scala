@@ -71,4 +71,26 @@ class ContractSpec extends SparkSpec {
     assert(doc.contains(s"**${SparkEntry.oracleSql.size - nPinned} are real recomputations**"),
       s"PINNED.md must state '$nReal are real recomputations'")
   }
+
+  test("every String case mapping in src/main names Locale.ROOT") {
+    // a default-locale toLowerCase lowers "I" to dotless "ı" under a
+    // tr/az default, so the text paths would tokenize apart; the one
+    // exception is UrlCanonicalize's UTF8String.toLowerCase, whose
+    // contract is Spark's own lower()
+    val allowed = Set("UrlCanonicalize.scala" -> "UTF8String.fromBytes(out, 0, h).toLowerCase")
+    val call = """\.(toLowerCase|toUpperCase)\b(?!\((java\.util\.)?Locale\.ROOT\))""".r
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.nonEmpty)
+    val hits = for {
+      f <- sources
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.replaceAll("(^|\\s)//.*$", "")
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      if call.findFirstIn(code).isDefined
+      if !allowed.exists { case (file, expr) =>
+        f.getFileName.toString == file && code.contains(expr) }
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("case mappings without Locale.ROOT:\n", "\n", ""))
+  }
 }

@@ -5,13 +5,36 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions._
 
-import TextAnalysis.{stopwords, tfProfile}
+import TextAnalysis.stopwords
 
 /** The row-local UDF and Aggregator forms that [[TextAnalysis]]'s
   * codegen kernels replaced, kept as the executable reference
   * semantics the fuzz specs (TextScanSpec, TfidfKernelSpec) pin the
   * kernels against. */
 object TextReference {
+  /** Per-document (token, tf) pairs by a char scan over the String —
+    * the tokenizer the kernels replaced, kept independent of
+    * graft.plans.TokenScan so the fuzz pins compare two tokenizers:
+    * Java-`\s` delimiting, each token lowered with `Locale.ROOT`. */
+  def tfProfile(text: String): Array[(String, Long)] =
+    if (text == null) Array.empty[(String, Long)]
+    else {
+      def isWs(c: Char) = c == ' ' || (c >= '\t' && c <= '\r')
+      val m = scala.collection.mutable.HashMap.empty[String, Long]
+      val n = text.length
+      var i = 0
+      while (i < n) {
+        while (i < n && isWs(text.charAt(i))) i += 1
+        if (i < n) {
+          val start = i
+          while (i < n && !isWs(text.charAt(i))) i += 1
+          val tok = text.substring(start, i).toLowerCase(java.util.Locale.ROOT)
+          m.update(tok, m.getOrElse(tok, 0L) + 1L)
+        }
+      }
+      m.toArray
+    }
+
   /** The original compiled-UDF stopword counter, kept verbatim as the
     * spec's reference semantics for [[TextAnalysis.stopwordHits]]. */
   def stopwordHitsUdf(lang: String): UserDefinedFunction = {
@@ -38,7 +61,7 @@ object TextReference {
     udf((text: String) => {
       if (text == null) "und"
       else {
-        val toks = text.toLowerCase.split("\\s+")
+        val toks = text.toLowerCase(java.util.Locale.ROOT).split("\\s+")
         var bestLang = "und"
         var bestHits = 0
         table.toSeq.sortBy(_._1).foreach { case (lang, sw) =>

@@ -7,7 +7,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Pins the r19 codegen scan kernels (TextScan.stopwordHits /
   * TextScan.simhash64) to the UDF pipelines they replaced — on the
   * real sf0.001 corpus AND on fuzzed mixed-script strings, the same
-  * discipline as the r18 tokenHashes/ContainsIgnoreCase pins. */
+  * discipline as the r18 tokenHashes/ContainsIgnoreCase pins. The
+  * stopword kernel runs on TokenScan's cursor and a TokenTable set;
+  * its reference is `toLowerCase(Locale.ROOT).split("\\s+")`. */
 class TextScanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -63,8 +65,8 @@ class TextScanSpec extends SparkSpec {
   test("stopwordHits kernel == toLowerCase+split reference on fuzzed mixed-script strings") {
     fuzzStrings.foreach { s =>
       val got = TextScan.stopwordHits(
-        UTF8String.fromString(s), new StopwordSet(
-          graft.operators.TextAnalysis.stopwords("en").toArray))
+        UTF8String.fromString(s), TokenTable.of(
+          graft.operators.TextAnalysis.stopwords("en").map(_ -> 1L)))
       assert(got == refStopwordHits(s), s"mismatch on ${s.take(80).toList}")
     }
   }

@@ -4,12 +4,15 @@ import graft.SparkSpec
 import graft.operators.{TextAnalysis, TextReference}
 import org.apache.spark.sql.functions._
 
-/** Fuzz-pins the r20 tf-idf kernels bit-identical to the UDF /
+/** Fuzz-pins the tf-idf kernels bit-identical to the UDF /
   * Aggregator forms they replaced:
-  *  - [[Tfidf.topK]] (in-place byte scan, folded-byte df probes,
-  *    top-k insertion) == the scalar-UDF tokenize+score+rank;
-  *  - VocabKernelFold (open-addressing char fold) == VocabFold
-  *    (immutable-Map fold), df and Σtf modes.
+  *  - [[Tfidf.topK]] (TokenScan's in-place byte cursor, a per-document
+  *    TokenTable, folded-byte df probes, top-k insertion) == the
+  *    scalar-UDF tokenize+score+rank;
+  *  - VocabKernelFold (per-document TokenTables added into a partition
+  *    TokenTable) == VocabFold (immutable-Map fold), df and Σtf modes.
+  * The references tokenize Strings on their own (TextReference's char
+  * scan, ROOT-lowered), so they do not share the kernels' scanner.
   * The corpora mix scripts, case, whitespace runs, score ties (shared
   * tokens across docs) and case-folding edge tokens (Kelvin sign
   * lowers to ASCII 'k'). */
@@ -53,7 +56,7 @@ class TfidfKernelSpec extends SparkSpec {
     for (k <- Seq(1, 3, 7)) {
       val kernel = docs.select(col("doc_id"),
           explode(Tfidf.topKCol(col("text"),
-            new TokenDfMap(dfMap), n.toDouble, k)).as("t"))
+            TokenTable.of(dfMap), n.toDouble, k)).as("t"))
         .select(col("doc_id"), col("t._1"), col("t._2"), col("t._3"), col("t._4"))
         .as[(Long, Int, String, Long, Double)].collect().sortBy(r => (r._1, r._2))
       val udfRef = TextReference.tfidfTopKUdfReference(dfMap, n.toDouble, k)
@@ -78,7 +81,7 @@ class TfidfKernelSpec extends SparkSpec {
       (t, java.lang.Double.doubleToRawLongBits(p))
     }
     val kernel = docs.select(col("doc_id"),
-        Tfidf.lmScoreCol(col("text"), new TokenDfMap(logpBits)).as("r"))
+        Tfidf.lmScoreCol(col("text"), TokenTable.of(logpBits)).as("r"))
       .filter(col("r._1") > 0L)
       .select(col("doc_id"), col("r._1"), col("r._2"))
       .as[(Long, Long, Double)].collect().sortBy(_._1)
@@ -116,7 +119,7 @@ class TfidfKernelSpec extends SparkSpec {
   }
 
   test("topK kernel fails loudly on a token absent from the vocab") {
-    val partial = new TokenDfMap(Map("the" -> 5L))
+    val partial = TokenTable.of(Map("the" -> 5L))
     val bad = Seq((1L, "the unknown")).toDF("doc_id", "text")
     val e = intercept[Exception] {
       bad.select(explode(Tfidf.topKCol(col("text"), partial, 2.0, 3)))
