@@ -48,7 +48,7 @@ idle_wait
 # disclosed in-artifact: range_join's pair enumeration grows
 # ~min(N,30)*N (hours in DuckDB here) and the four r4 lambda-heavy
 # oracles are interpreter-bound over 5 M docs; scale-independent extra
-# blocks (vector/skew/streaming, already measured at the other points)
+# blocks (vector/streaming, already measured at the other points)
 # and the two-extra-seq-pass tail attribution are skipped to keep the
 # point's runtime bounded.
 # 32 GiB heap for this point only (disclosed via the artifact's
@@ -62,7 +62,7 @@ idle_wait
 SPARK_DRIVER_MEM=32g \
 SPARK_GRAFT_PROBE_DEGRADE=1 \
 SPARK_GRAFT_EXCLUDE=range_join,contamination,doc_fingerprint,langid_confusion,quality_scores \
-SPARK_GRAFT_SKIP_BLOCKS=vector,skew_join_planted,segmenter_sustained,streaming_state_sustained,tail_attribution \
+SPARK_GRAFT_SKIP_BLOCKS=vector,segmenter_sustained,streaming_state_sustained,tail_attribution \
   run_point /tmp/scale/x1000 /tmp/scale/bench_x1000.json
 
 # x2000 (~34 GB, r19): the BIGGER-THAN-HEAP point (r17/r18 wishlist
@@ -78,7 +78,7 @@ if [ -d /tmp/scale/x2000 ]; then
   idle_wait
   SPARK_DRIVER_MEM=32g \
   SPARK_GRAFT_ONLY=salted_join,q3_shipping,pack_sequences,minhash_neardups,simhash_neardups,minhash_bands,dedup_clusters,lang_stopwords,sessionize,a6_pricing_summary,heavy_hitters,a1_sum \
-  SPARK_GRAFT_SKIP_BLOCKS=vector,skew_join_planted,segmenter_sustained,streaming_state_sustained,tail_attribution \
+  SPARK_GRAFT_SKIP_BLOCKS=vector,segmenter_sustained,streaming_state_sustained,tail_attribution \
     run_point /tmp/scale/x2000 /tmp/scale/bench_x2000.json
   X2000_POINT="2000x sf0.1 (34 GB, heavy family, input > heap)=/tmp/scale/bench_x2000.json"
 else

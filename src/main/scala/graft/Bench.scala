@@ -74,8 +74,8 @@ object Bench {
   /** Keys of the extra-measurement blocks SPARK_GRAFT_SKIP_BLOCKS can
     * skip. The scale sweep skips the scale-independent vector and
     * streaming re-measurements; the artifact discloses the list. */
-  val BlockKeys: Set[String] = Set("vector", "skew_join_planted",
-    "segmenter_sustained", "streaming_state_sustained", "tail_attribution")
+  val BlockKeys: Set[String] =
+    Set("vector", "segmenter_sustained", "streaming_state_sustained", "tail_attribution")
 
   /** Parses a SPARK_GRAFT_SKIP_BLOCKS value (comma list of block keys).
     * A key that names no block fails the run at start-up: a silently
@@ -219,9 +219,6 @@ object Bench {
         org.apache.spark.sql.expressions.Window
           .partitionBy("n_regionkey").orderBy("n_nationkey")))
       .agg(max("rn")).collect()
-    // table statistics (hot-key profiles) belong to corpus load, not
-    // to the first query that happens to need them
-    SparkEntry.warmTableStats(spark, sfDir)
     // oracle-readable fixture inputs for bench_oracle.py's replay of
     // the tool_calls / grocery-family REAL oracles (untimed: fixture
     // registration, not query work)
@@ -525,56 +522,6 @@ object Bench {
       s""","vector_n10k_dim1024":{"knn_codegen_sec":${"%.3f".formatLocal(Locale.ROOT, tKnn)},"ivf_probe4of32_sec":${"%.3f".formatLocal(Locale.ROOT, tIvf)},"ivf_recall_at10":${"%.2f".formatLocal(Locale.ROOT, recall)}},"vector_n100k_dim1024":{"knn_codegen_sec":${"%.3f".formatLocal(Locale.ROOT, tKnn1e5)},"ivf_probe4of32_sec":${"%.3f".formatLocal(Locale.ROOT, tIvf1e5)},"ivf_recall_at10":${"%.2f".formatLocal(Locale.ROOT, recall1e5)}},"ivf_clustered_recall_at10_mog10k_dim64_k32":$curve"""
     } catch { case e: Throwable =>
       System.err.println(s"[bench] vector bench FAILED: ${e.getMessage}"); ""
-    }
-
-    // Planted-skew A/B: the salting win as WALL-CLOCK, not just the
-    // partition-distribution assert RelationalSpec pins (r9 judge
-    // item #2). Key 0 carries half of 20 M rows; under a plain
-    // shuffle join those all land in one partition — the straggler
-    // task that bounds stage wall at scale — while skewJoin spreads
-    // them across 8 salt buckets. Broadcast is disabled (at scale
-    // both sides exceed the budget — that case is exactly what
-    // salting is FOR; the driver-fit dim case is the scan-fused
-    // probe family) and AQE
-    // is off: AQE's skew-split is the first line of defense, salting
-    // the explicit second for plans AQE can't re-split. Second of two
-    // runs reported (first warms codegen for both shapes). The A/B
-    // waits for the suite's load wake to decay first: measured right
-    // after the concurrent passes (loadavg ~18) the straggler signal
-    // drowns in scheduler contention — the r10 sf0.1 point read 1.03×
-    // where a calm box reads ~1.8× for the identical corpus.
-    val skew = if (!blockOn("skew_join_planted")) "" else try {
-      import org.apache.spark.sql.functions._
-      awaitCalm(maxLoad = 2.0, budgetSec = 240)
-      val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevA = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val n = 20000000L
-        val big = spark.range(n).select(
-          when(col("id") % 2 === 0, 0L).otherwise(col("id") % 1000 + 1).as("k"),
-          col("id").cast("double").as("v"))
-        val small = spark.range(1001).select(col("id").as("k"),
-          concat(lit("t"), col("id")).as("tag"))
-        def timed(df: => org.apache.spark.sql.DataFrame): Double = {
-          val t0 = System.nanoTime()
-          df.groupBy("tag").agg(count(lit(1)), sum("v")).write
-            .mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        def plainS = timed(big.join(small, Seq("k")))
-        def saltedS = timed(graft.operators.Relational.skewJoin(
-          big, small, "k", saltFactor = 8, hotKeys = Some(Seq(0L))))
-        plainS; saltedS // warm pass, discarded
-        val (p, sl) = (plainS, saltedS)
-        s""","skew_join_planted_20m_hotkey_half":{"plain_shuffle_sec":${"%.3f".formatLocal(Locale.ROOT, p)},"salted_sec":${"%.3f".formatLocal(Locale.ROOT, sl)},"speedup":${"%.2f".formatLocal(Locale.ROOT, p / sl)}}"""
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-        spark.conf.set("spark.sql.adaptive.enabled", prevA)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] skew bench FAILED: ${e.getMessage}"); ""
     }
 
     // Suite-level fixed-cost pricing (r16 judge item #4): the warm seq
@@ -1161,7 +1108,7 @@ object Bench {
     val headline =
       s""""value":${"%.3f".formatLocal(Locale.ROOT, wallPar)},"unit":"sec","schema_version":8,"run_head":${runHead.map("\"" + _ + "\"").getOrElse("null")},"run_tree_dirty":$treeDirty,"wall_par${par}_postwarm_sec":${"%.3f".formatLocal(Locale.ROOT, wallPar)},"wall_par${par}_coldplans_sec":${"%.3f".formatLocal(Locale.ROOT, wallParCold)},"wall_seq_warm_sec":${"%.3f".formatLocal(Locale.ROOT, wallSeq)},"sum_query_sec":${"%.3f".formatLocal(Locale.ROOT, good.map(_.sec).sum)},"parallelism":$par,"n_queries":${outSeq.size},"queries_methodology":"seq_warm_par1_min2_min3_top15_and_ge0p8","jvm_max_heap_mb":${Runtime.getRuntime.maxMemory() >> 20},"idle_gate":$gate,"load_before":$loadBefore,"load_after":$loadAfter"""
     val json =
-      s"""{"metric":"total",$headline,"queries":$qs,"errors":$errs,"errors_par_only":$parOnlyErrs,"excluded_queries":$excludedJson$onlyJson,"skipped_blocks":${skippedBlocks.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}$duck$vector$skew$probeDegrade$segTp$stState$clusterProbe$suiteFixedCost$priorCmp,"sf":"$sfDir"}"""
+      s"""{"metric":"total",$headline,"queries":$qs,"errors":$errs,"errors_par_only":$parOnlyErrs,"excluded_queries":$excludedJson$onlyJson,"skipped_blocks":${skippedBlocks.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}$duck$vector$probeDegrade$segTp$stState$clusterProbe$suiteFixedCost$priorCmp,"sf":"$sfDir"}"""
     Files.writeString(
       Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")), json)
     // committed full-artifact sidecar (r16 judge item #3): the driver's

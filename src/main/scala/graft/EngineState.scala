@@ -11,10 +11,10 @@ import org.apache.spark.sql.SparkSession
 import graft.operators.VectorIndex
 
 /** The engine's derived state for one `SparkSession`: loaded tables,
-  * query vectors, table statistics, built probes, ANN indexes and
-  * fixtures, plus the temp dirs and embedded Derby databases they
-  * live in. Reached through [[EngineState.of]]; released by
-  * [[close]], which also runs when the session's `SparkContext` stops.
+  * query vectors, built probes, ANN indexes and fixtures, plus the
+  * temp dirs and embedded Derby databases they live in. Reached
+  * through [[EngineState.of]]; released by [[close]], which also runs
+  * when the session's `SparkContext` stops.
   *
   * Every entry is keyed by its logical key plus a snapshot of its
   * input files (name, size and mtime of each, listed through Hadoop's
@@ -93,10 +93,15 @@ final class EngineState private (spark: SparkSession) {
       catch { case _: java.io.FileNotFoundException => Seq((p, -1L, -1L)) }
     }
 
-  /** A new empty dir under this state's temp root, deleted by [[close]]. */
+  /** A new empty dir under this state's temp root, deleted by [[close]].
+    * The root is `graft_state_<pid>_…`; making it first sweeps the
+    * roots that dead processes left beside it. */
   def newDir(prefix: String): String = synchronized {
     requireOpen()
-    if (root == null) root = Files.createTempDirectory("graft_state_")
+    if (root == null) {
+      root = Files.createTempDirectory(s"${EngineState.RootPrefix}${ProcessHandle.current.pid}_")
+      EngineState.sweepStaleRoots(root.getParent)
+    }
     Files.createTempDirectory(root, prefix).toString
   }
 
@@ -155,6 +160,22 @@ final class EngineState private (spark: SparkSession) {
 }
 
 object EngineState {
+  private val RootPrefix = "graft_state_"
+  private val StampedRoot = s"$RootPrefix(\\d+)_.*".r
+
+  /** Deletes the `graft_state_<pid>_*` dirs in `parent` whose pid names
+    * no live process: roots left by a JVM that ended without stopping
+    * its `SparkContext`. A root whose pid is alive, or whose name
+    * carries no pid, is kept. */
+  private def sweepStaleRoots(parent: Path): Unit =
+    Option(parent.toFile.listFiles()).toSeq.flatten.foreach { dir =>
+      dir.getName match {
+        case StampedRoot(pid) if pid.toLongOption.exists(ProcessHandle.of(_).isEmpty) =>
+          org.apache.commons.io.FileUtils.deleteQuietly(dir)
+        case _ => ()
+      }
+    }
+
   // guarded by itself; SparkSession keeps identity equality
   private val states = new java.util.HashMap[SparkSession, EngineState]()
 

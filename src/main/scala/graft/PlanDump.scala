@@ -42,8 +42,8 @@ object PlanDump {
       "pass): per-partition local codes arrays with insertion-order local " +
       "dictionaries, merged with code remapping on the driver — never a " +
       "dim row, never a distinct job). " +
-      "Skew cannot exist because nothing shuffles; the big-x-big skew case " +
-      "remains Relational.skewJoin, timed by skew_join_planted."),
+      "Skew cannot exist because nothing shuffles; in a big-x-big shuffle " +
+      "join, AQE's skew-join split owns skew."),
     "v1_knn" -> ("Brute-force kNN: pruned parquet scan (ReadSchema = id+embedding " +
       "only), the query vector inlined as a plan literal, native codegen " +
       "`cosinesimilarity`, and TakeOrderedAndProject — per-partition top-k, " +

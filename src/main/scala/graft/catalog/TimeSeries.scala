@@ -239,27 +239,21 @@ object TimeSeries {
       ("SELECT * FROM (VALUES ('banana', CAST(23 AS BIGINT), CAST(7.2784 AS DOUBLE), CAST(0.1777 AS DOUBLE))) " +
         "AS t(fruit, n_eval, rmse, smape)")),
     QuerySpec("salted_join", ((s, d) => {
-      // skewed fact⋈dim with a payload column — three plans, picked by
-      // measurement (r12 bench attribution + judge item #5):
-      //  (a) profile-gated SALTING (Relational.skewJoin) when BOTH
-      //      sides must shuffle — the 100 TB big⋈big posture, timed on
-      //      a planted-skew corpus in the bench artifact
-      //      (skew_join_planted: straggler spread across salt buckets);
-      //  (b) broadcast hash join when the dim fits the budget — but
-      //      its driver chain is SERIAL: 0.80 s UnsafeRow
-      //      HashedRelation build + 0.26 s transmit of 254 MB for this
-      //      3 M-row (long, priority) dim at the x100 point, ~60% of
-      //      the join's wall;
-      //  (c) what runs here: Relational.denseLookupJoin — the dim's
-      //      key is a dense unique PK and the payload is
-      //      low-cardinality, so the "join" is a broadcast byte array
-      //      of dictionary codes (span bytes ≈ 60 MB, one ~30 ms array
-      //      fill) probed by a codegen dense_lookup fused into the
-      //      lineitem scan: NO join operator, no fact shuffle, skew
-      //      cannot exist because nothing shuffles (PlanSpec pins the
-      //      join-free plan). Result equals the plain inner join
-      //      (RelationalSpec); the r13-r18 bench artifacts A/B the
-      //      old-vs-new walls (bench_history/BENCH_FULL_r18.json).
+      // skewed fact⋈dim with a payload column. A shuffle join leaves
+      // the skew to AQE's skew-join split (RelationalSpec plants a hot
+      // key); a broadcast hash join's driver chain is SERIAL: 0.80 s
+      // UnsafeRow HashedRelation build + 0.26 s transmit of 254 MB for
+      // this 3 M-row (long, priority) dim at the x100 point, ~60% of
+      // the join's wall (r12 bench attribution). What runs here:
+      // Relational.denseLookupJoin — the dim's key is a dense unique
+      // PK and the payload is low-cardinality, so the "join" is a
+      // broadcast byte array of dictionary codes (span bytes ≈ 60 MB,
+      // one ~30 ms array fill) probed by a codegen dense_lookup fused
+      // into the lineitem scan: NO join operator, no fact shuffle, skew
+      // cannot exist because nothing shuffles (PlanSpec pins the
+      // join-free plan). Result equals the plain inner join
+      // (RelationalSpec); the r13-r18 bench artifacts A/B the
+      // old-vs-new walls (bench_history/BENCH_FULL_r18.json).
       val big = t(s, d, "lineitem").select("l_orderkey", "l_extendedprice")
       val small = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_orderpriority"))

@@ -41,106 +41,6 @@ object Relational {
       when(pred, lit(name)).otherwise(acc)
     }
 
-  /** Skew-safe equi-join: salt the big side's key deterministically
-    * (hash-mod, no rand — reproducible plans) and replicate the small
-    * side across the salt range. Use when one key carries a hot spot
-    * AQE's skew-join split can't absorb; the result equals the plain
-    * inner join. One extra `explode` on the small side, shuffle keys
-    * become (key, salt). */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 saltFactor: Int): DataFrame = {
-    val saltedBig = big.withColumn("_salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(saltFactor)).cast("int"))
-    val saltedSmall = small.withColumn("_salt",
-      explode(sequence(lit(0), lit(saltFactor - 1))))
-    saltedBig.join(saltedSmall, Seq(key, "_salt")).drop("_salt")
-  }
-
-  /** Skew join, hot-keys-only refinement of [[saltedJoin]]: salt ONLY
-    * the keys that actually carry the skew; cold keys take a constant
-    * salt (AQE handles mild residual skew). Uniform salting replicates
-    * the small side `saltFactor`× for EVERY key — at 100 TB that
-    * multiplies the small side's shuffle for the 99.9% of keys that
-    * never needed it. Hot and cold rows share ONE join on (key, salt),
-    * so the big side is scanned and shuffled exactly once — the earlier
-    * plain∪salted union scanned it twice (round-4 audit: 12 s vs 1.1 s
-    * DuckDB at the 100× point). Result equals the plain inner join
-    * (spec-asserted).
-    *
-    * Hot keys come from `hotKeys` when the caller already knows them
-    * (table statistics / a prior profiling pass — the production path);
-    * otherwise one seeded sample-count job over the big side's key
-    * column finds them (column-pruned: reads only `key`).
-    *
-    * Salting is GATED on measured skew: a sampled key only counts as
-    * hot when its sampled frequency is ≥ `skewThreshold` × the mean
-    * sampled key frequency AND ≥ `minSampledCount` occurrences. Both
-    * bounds are needed: on a near-unique key space (mean ≈ 1), sample
-    * noise over millions of keys ALWAYS produces a few keys at 4-6×
-    * the mean — five sampled rows is not evidence of partition-scale
-    * skew, and without the absolute floor the uniform 100× bench
-    * corpus salted eight phantom hot keys. On a uniform corpus the
-    * profile therefore comes back empty and the result is the
-    * untouched plain join plan — salting is never free (wider shuffle
-    * key, small-side replication), so it must not engage without
-    * evidence (round-6 audit: uniform-key salted_join ran 6.8× DuckDB
-    * for zero benefit).
-    *
-    * Sample floor: a key is only DETECTABLE when its true frequency
-    * is ≳ `minSampledCount / sampleFraction` rows (a few hundred at
-    * the defaults) — far below anything that can skew a shuffle
-    * partition. Callers profiling corpora where a "hot" key is still
-    * rare in absolute terms must raise `sampleFraction` (or pass
-    * `hotKeys` from real table statistics) or the gate silently (and
-    * harmlessly — the result is identical either way) falls back to
-    * the plain join.
-    *
-    * `broadcastSmall`: when the CALLER knows the small side fits the
-    * executor broadcast budget (a filtered dimension, a pre-aggregated
-    * key list), the whole skew problem dissolves — a broadcast-hash
-    * join never shuffles the big side, so no key can concentrate in
-    * one partition and salting would only add a wider key plus
-    * small-side replication for zero benefit. The profile/salt
-    * machinery is skipped outright; the big side streams through one
-    * map-side join. Salting exists for the big⋈big case where BOTH
-    * sides must shuffle (r9 audit: the empty-hot-set fallback
-    * full-shuffled 60 M rows against a ~3 M-row side that q3_shipping
-    * broadcasts — 12.65 s vs 1.69 s for the same-shape equijoin). */
-  def skewJoin(big: DataFrame, small: DataFrame, key: String,
-               saltFactor: Int, sampleFraction: Double = 0.01,
-               hotKeyCount: Int = 16, seed: Long = 42L,
-               hotKeys: Option[Seq[Any]] = None,
-               skewThreshold: Double = 4.0,
-               minSampledCount: Long = 16L,
-               broadcastSmall: Boolean = false): DataFrame = {
-    if (broadcastSmall) return big.join(broadcast(small), Seq(key))
-    val hot = hotKeys.getOrElse {
-      val prof = big.sample(withReplacement = false, sampleFraction, seed)
-        .groupBy(key).count()
-      // two bounded driver results: the mean sampled frequency (one
-      // distributed agg) and the gated top-k (distributed TakeOrdered)
-      val mean = prof.agg(avg("count")).collect().headOption
-        .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Double]))
-        .getOrElse(0.0)
-      prof.filter(col("count") >= lit(math.max(mean * skewThreshold,
-          minSampledCount.toDouble)))
-        .orderBy(desc("count"), col(key))
-        .limit(hotKeyCount)
-        .select(key).collect().map(_.get(0)).toSeq
-    }
-    if (hot.isEmpty) big.join(small, Seq(key))
-    else {
-      val saltedBig = big.withColumn("_salt",
-        when(col(key).isin(hot: _*),
-          pmod(xxhash64(monotonically_increasing_id()), lit(saltFactor)).cast("int"))
-          .otherwise(lit(0)))
-      val saltedSmall = small.withColumn("_salt",
-        explode(when(col(key).isin(hot: _*),
-          sequence(lit(0), lit(saltFactor - 1))).otherwise(array(lit(0)))))
-      saltedBig.join(saltedSmall, Seq(key, "_salt")).drop("_salt")
-    }
-  }
-
   /** Exact semi-join on an integral key via a broadcast BITMAP instead
     * of a broadcast hash relation. Result equals
     * `fact.join(broadcast(keys), fact(factKey) === keys(keyCol), "left_semi")`
@@ -634,12 +534,12 @@ object Relational {
       pre(factKey).cast("long") === col("_blm_key"), "left_semi")
   }
 
-  /** Phase 1 of [[bloomSemiJoin]], exposed for composition and for the
-    * property spec's false-positive-rate measurement: the fact rows
-    * whose key MIGHT be in `keys` (exact negatives, ~fpp false
-    * positives). APPROXIMATE — callers needing semi-join semantics
-    * must verify, as [[bloomSemiJoin]] does. */
-  def bloomPrefilter(fact: DataFrame, keys: DataFrame, factKey: String,
+  /** Phase 1 of [[bloomSemiJoin]]: the fact rows whose key MIGHT be in
+    * `keys` (exact negatives, ~fpp false positives). APPROXIMATE, so
+    * not a semi join until verified, which [[bloomSemiJoin]] does;
+    * package-visible for the property spec's false-positive-rate
+    * measurement only. */
+  private[operators] def bloomPrefilter(fact: DataFrame, keys: DataFrame, factKey: String,
                      keyCol: String, expectedKeys: Long,
                      fpp: Double = 0.01): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge

@@ -42,8 +42,7 @@ object Sampling {
     * upsampled relative to their share so the mix isn't dominated by
     * the largest source. Per-stratum counts come from ONE aggregation
     * (the stratum count is bounded — languages/sources, not rows, so
-    * the collect is a bounded driver scalar like the hot-key
-    * profile); the per-mille rates are then derived in INTEGER-EXACT
+    * the collect is a bounded driver scalar); the per-mille rates are then derived in INTEGER-EXACT
     * arithmetic — integer sqrt and a single integer division — so an
     * independent engine recomputing them from the same counts gets
     * bit-identical rates (no float-summation-order hazard), and

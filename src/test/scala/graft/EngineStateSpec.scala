@@ -28,15 +28,13 @@ class EngineStateSpec extends SparkSpec {
     try withSession { s =>
       import s.implicits._
       val emb = s.read.parquet(s"$sf/embeddings.parquet")
-      def writeAll(shift: Long, hot: Long): Unit = {
+      def writeAll(shift: Long, keysFrom: Long): Unit = {
         // vec 0 (the queryVec probe) takes vec `shift`'s embedding
         emb.withColumn("vec_id",
             when(col("vec_id") === 0L, shift).when(col("vec_id") === shift, 0L)
               .otherwise(col("vec_id")))
           .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-        (s.range(2000).select(lit(hot).as("k")) union s.range(100, 2100).select(col("id").as("k")))
-          .write.mode("overwrite").parquet(s"$dir/hot.parquet")
-        s.range(hot, hot + 10).select(col("id").as("kk"))
+        s.range(keysFrom, keysFrom + 10).select(col("id").as("kk"))
           .write.mode("overwrite").parquet(s"$dir/keys.parquet")
       }
       val fact = s.range(40).select(col("id").as("k"))
@@ -46,17 +44,15 @@ class EngineStateSpec extends SparkSpec {
       def knn(session: SparkSession): Seq[String] =
         rows(SparkEntry.queries("v2_knn_norm")(session, dir))
 
-      writeAll(shift = 1L, hot = 1L)
+      writeAll(shift = 1L, keysFrom = 1L)
       val knn1 = knn(s)
-      assert(SparkEntry.hotKeyProfile(s, dir, "hot", "k") == Seq(1L))
       assert(probe() == (1L to 10L))
 
-      writeAll(shift = 2L, hot = 20L)
+      writeAll(shift = 2L, keysFrom = 20L)
       assert(Tables.load(s, dir, "keys").as[Long].collect().toSeq.sorted == (20L to 29L))
       val knn2 = knn(s)
       assert(knn2 != knn1, "the probe vector changed, so must the neighbours")
       withSession(cold => assert(knn2 == knn(cold)))
-      assert(SparkEntry.hotKeyProfile(s, dir, "hot", "k") == Seq(20L))
       assert(probe() == (20L to 29L))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
@@ -83,6 +79,24 @@ class EngineStateSpec extends SparkSpec {
     }
     assert(!(EngineState.of(s) eq state), "a closed state is not handed out again")
     EngineState.of(s).close()
+  }
+
+  test("a new temp root sweeps the roots of dead processes and keeps live ones") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    val dead = Files.createTempDirectory(tmp, s"graft_state_${child.pid}_")
+    Files.createFile(dead.resolve("left_behind"))
+    val live = Files.createTempDirectory(tmp, s"graft_state_${ProcessHandle.current.pid}_")
+    val unstamped = Files.createTempDirectory(tmp, "graft_state_")
+    try withSession { s =>
+      val made = Paths.get(EngineState.of(s).newDir("sweep_"))
+      assert(made.getParent.getFileName.toString
+        .startsWith(s"graft_state_${ProcessHandle.current.pid}_"))
+      assert(!Files.exists(dead), s"$dead survived the sweep")
+      assert(Files.isDirectory(live) && Files.isDirectory(unstamped))
+    } finally Seq(dead, live, unstamped).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
   }
 
   test("8 threads asking for one ANN index see exactly one build") {

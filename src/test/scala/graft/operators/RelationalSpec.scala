@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 class RelationalSpec extends SparkSpec {
   import spark.implicits._
@@ -31,123 +32,60 @@ class RelationalSpec extends SparkSpec {
     assert(out.toSeq == Seq("small", "medium", "large"))
   }
 
-  test("saltedJoin equals the plain inner join") {
-    val big = (1 to 100).map(i => (i % 3 + 1L, i.toDouble)).toDF("k", "v")
-    val small = Seq((1L, "a"), (2L, "b")).toDF("k", "tag")
-    val salted = Relational.saltedJoin(big, small, "k", saltFactor = 4)
-      .groupBy("tag").count().as[(String, Long)].collect().toMap
-    val plain = big.join(small, "k")
-      .groupBy("tag").count().as[(String, Long)].collect().toMap
-    assert(salted == plain)
+  /** Runs `body` with the given session confs, restoring each after. */
+  private def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
-  test("skewJoin equals the plain inner join on skewed data (hot keys salted, cold plain)") {
-    // key 7 carries 500 rows (hot), keys 100..149 one row each (cold);
-    // the seeded 50% sample cannot miss the hot key
-    val big = ((1 to 500).map(_ => 7L) ++ (100L to 149L))
-      .zipWithIndex.map { case (k, i) => (k, i.toDouble) }.toDF("k", "v")
-    val small = (Seq(7L) ++ (100L to 149L)).map(k => (k, s"t$k")).toDF("k", "tag")
-    val skew = Relational.skewJoin(big, small, "k", saltFactor = 4,
-        sampleFraction = 0.5, hotKeyCount = 2)
-      .groupBy("tag").agg(count(lit(1)).as("n"), sum("v").as("sv"))
-      .as[(String, Long, Double)].collect().toSet
-    val plain = big.join(small, "k")
-      .groupBy("tag").agg(count(lit(1)).as("n"), sum("v").as("sv"))
-      .as[(String, Long, Double)].collect().toSet
-    assert(skew == plain)
-    assert(skew.exists { case (tag, n, _) => tag == "t7" && n == 500 })
-
-    // caller-provided hot keys (the table-statistics path) skip the
-    // sample job and produce the same result
-    val preStats = Relational.skewJoin(big, small, "k", saltFactor = 4,
-        hotKeys = Some(Seq(7L)))
-      .groupBy("tag").agg(count(lit(1)).as("n"), sum("v").as("sv"))
-      .as[(String, Long, Double)].collect().toSet
-    assert(preStats == plain)
-  }
-
-  test("skewJoin gates salting on measured skew: uniform keys emit the plain join plan") {
-    // 50 keys × 8 rows each — no key can reach 4× the mean sampled
-    // frequency (max possible count 8 < 4×mean 16), so the profile is
-    // empty for ANY sample outcome and the plan must be the untouched
-    // plain join: no _salt column, no small-side explode
-    val big = (1 to 400).map(i => (i % 50 + 1L, i.toDouble)).toDF("k", "v")
-    val small = (1L to 50L).map(k => (k, s"t$k")).toDF("k", "tag")
-    val gated = Relational.skewJoin(big, small, "k", saltFactor = 4,
-      sampleFraction = 0.5)
-    val plan = gated.queryExecution.analyzed.toString
-    assert(!plan.contains("_salt") && !plan.toLowerCase.contains("explode"))
-    val out = gated.groupBy("tag").count().as[(String, Long)].collect().toMap
-    val plain = big.join(small, "k").groupBy("tag").count()
-      .as[(String, Long)].collect().toMap
-    assert(out == plain)
-  }
-
-  test("skewJoin broadcastSmall emits a broadcast join, skips salting, and equals the plain join") {
-    val big = (1 to 200).map(i => (i % 5 + 1L, i.toDouble)).toDF("k", "v")
-    val small = (1L to 5L).map(k => (k, s"t$k")).toDF("k", "tag")
-    val bc = Relational.skewJoin(big, small, "k", saltFactor = 4,
-      hotKeys = Some(Seq(1L)), broadcastSmall = true)
-    // plan: broadcast-hash join, no _salt machinery anywhere
-    val phys = bc.queryExecution.executedPlan.toString
-    assert(phys.contains("BroadcastHashJoin"), s"expected BroadcastHashJoin in:\n$phys")
-    assert(!phys.contains("_salt"), "broadcastSmall must bypass salting entirely")
-    val got = bc.groupBy("tag").agg(count(lit(1)).as("n"), sum("v").as("sv"))
-      .as[(String, Long, Double)].collect().toSet
-    val want = big.join(small, "k")
-      .groupBy("tag").agg(count(lit(1)).as("n"), sum("v").as("sv"))
-      .as[(String, Long, Double)].collect().toSet
-    assert(got == want)
-  }
-
-  test("skewJoin balances the planted-hot-key shuffle (the win salting buys at scale)") {
-    // Planted skew: key 0 carries HALF the corpus. Under a plain
-    // shuffle join every key-0 row lands in ONE shuffle partition —
-    // the straggler task that stalls a 1000-executor stage — while the
-    // salted plan spreads them over saltFactor buckets. The assert is
-    // on the post-join partition row distribution (deterministic),
-    // which is exactly the quantity that decides wall-clock at scale.
-    // AQE and auto-broadcast are disabled for the measurement: AQE's
-    // size-based coalesce would legitimately re-merge these tiny test
-    // partitions, and a broadcast join would dodge the shuffle the
-    // test is about (at scale both sides exceed the broadcast bar).
-    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevP = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // enough shuffle partitions that 8 salt buckets rarely share one
-    // (the spec session runs with partitions = cores = 4)
-    spark.conf.set("spark.sql.shuffle.partitions", "64")
-    try {
+  test("AQE splits the planted-hot-key join partition") {
+    // Planted skew: key 0 carries HALF the corpus. With AQE off, a
+    // shuffle join puts every key-0 row in ONE join partition — the
+    // straggler task that bounds stage wall-clock at scale. With AQE
+    // on (Sessions.local's setting) the skew-join rule splits that
+    // partition by map output. Its threshold and the advisory size
+    // drop to 16 KB here so a 100k-row corpus crosses them; at the
+    // 256 MB default AQE leaves this corpus unsplit. Broadcast is off: a broadcast join never shuffles the
+    // big side, so no key could concentrate. 64 shuffle partitions
+    // keep the hot one far above the median (the spec session runs
+    // with partitions = cores = 4).
+    withConf(SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.key -> "-1",
+        SQLConf.SHUFFLE_PARTITIONS.key -> "64",
+        SQLConf.SKEW_JOIN_SKEWED_PARTITION_THRESHOLD.key -> "16k",
+        SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key -> "16k") {
       val n = 100000L
       val big = spark.range(n).select(
         when(col("id") % 2 === 0, 0L).otherwise(col("id") % 1000 + 1).as("k"),
         col("id").cast("double").as("v"))
       val small = spark.range(1001).select(col("id").as("k"),
         concat(lit("t"), col("id")).as("tag"))
-      // straggler metric: the HOT key's rows in the fullest join
-      // partition — the task that bounds stage wall-clock at scale
-      def hotMax(df: org.apache.spark.sql.DataFrame): Long =
-        df.filter(col("k") === 0L)
-          .groupBy(spark_partition_id().as("p")).count()
-          .agg(max("count")).head().getLong(0)
-      val plain = big.join(small, Seq("k"))
-      val salted = Relational.skewJoin(big, small, "k", saltFactor = 8,
-        hotKeys = Some(Seq(0L)))
-      val plainMax = hotMax(plain)
-      val saltedMax = hotMax(salted)
+      val joined = big.join(small, Seq("k"))
+      // per join partition: the HOT key's rows (the straggler metric),
+      // all rows and Σv, from one pass over the whole join output. A
+      // filter on the key would be pushed below the join, so only the
+      // hot rows would shuffle; and with `v` pruned the hot key's
+      // shuffle blocks compress to almost nothing. Either way AQE
+      // would see no skew to split.
+      def profile(): (Long, Long, Double) = {
+        val r = joined.withColumn("p", spark_partition_id())
+          .groupBy("p").agg(sum(when(col("k") === 0L, 1L).otherwise(0L)).as("hot"),
+            count(lit(1)).as("n"), sum("v").as("sv"))
+          .agg(max("hot"), sum("n"), round(sum("sv"), 2)).head()
+        (r.getLong(0), r.getLong(1), r.getDouble(2))
+      }
+      val (plainMax, plainN, plainSum) =
+        withConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false")(profile())
+      val (aqeMax, aqeN, aqeSum) =
+        withConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "true")(profile())
       assert(plainMax >= n / 2, s"expected the hot key in one partition, got $plainMax")
-      assert(saltedMax <= plainMax / 3,
-        s"salted hot-key straggler $saltedMax not meaningfully below plain $plainMax")
-      // and the rebalanced plan is still the same join
-      val pAgg = plain.agg(count(lit(1)), round(sum("v"), 2)).head()
-      val sAgg = salted.agg(count(lit(1)), round(sum("v"), 2)).head()
-      assert(pAgg == sAgg)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      spark.conf.set("spark.sql.adaptive.enabled", prevA)
-      spark.conf.set("spark.sql.shuffle.partitions", prevP)
+      assert(aqeMax <= plainMax / 3,
+        s"AQE hot-key straggler $aqeMax not meaningfully below plain $plainMax")
+      // and the split plan is still the same join
+      assert((aqeN, aqeSum) == (plainN, plainSum))
     }
   }
 
