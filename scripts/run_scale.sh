@@ -33,24 +33,16 @@ run_point /root/testdata/sf0.1 /tmp/scale/bench_sf01.json
 idle_wait
 run_point /tmp/scale/x10      /tmp/scale/bench_x10.json
 idle_wait
-# the x100 point also runs the cluster-shape rehearsal (suite re-run at
-# shuffle.partitions=200 — plan-degeneracy check at a realistic task count)
-SPARK_GRAFT_CLUSTER_PROBE=1 run_point /tmp/scale/x100 /tmp/scale/bench_x100.json
+run_point /tmp/scale/x100     /tmp/scale/bench_x100.json
 idle_wait
 # x1000 (~17 GB, r15): the point where the dense probe contracts BREAK
 # on purpose — the 150 M-key orders span exceeds denseLookupJoin's
 # maxCodesBytes, so salted_join runs the out-of-contract fallback for
 # real (since the r16 budget a shuffle-hash join, not a broadcast
-# join; `graft.ProfileQuery salted_join` shows the executed plan), and
-# SPARK_GRAFT_PROBE_DEGRADE exercises the
-# dense->sparse->bloom degradation chain of bitmapSemiJoin on the real
-# 30 M-key urgent set with count-equality asserted. REDUCED suite,
-# disclosed in-artifact: range_join's pair enumeration grows
-# ~min(N,30)*N (hours in DuckDB here) and the four r4 lambda-heavy
-# oracles are interpreter-bound over 5 M docs; scale-independent extra
-# blocks (vector/streaming, already measured at the other points)
-# and the two-extra-seq-pass tail attribution are skipped to keep the
-# point's runtime bounded.
+# join; `graft.ProfileQuery salted_join` shows the executed plan).
+# REDUCED suite, disclosed in-artifact: range_join's pair enumeration
+# grows ~min(N,30)*N (hours in DuckDB here) and the four r4
+# lambda-heavy oracles are interpreter-bound over 5 M docs.
 # 32 GiB heap for this point only (disclosed via the artifact's
 # jvm_max_heap_mb key): r15 needed 64 GiB to survive the then-
 # unbudgeted fallback's 3.2 GB / 30 M-row driver-built HashedRelation;
@@ -60,9 +52,7 @@ idle_wait
 # shuffles, and the DuckDB-comparable page cache in one heap — a real
 # cluster spreads this across executors.
 SPARK_DRIVER_MEM=32g \
-SPARK_GRAFT_PROBE_DEGRADE=1 \
 SPARK_GRAFT_EXCLUDE=range_join,contamination,doc_fingerprint,langid_confusion,quality_scores \
-SPARK_GRAFT_SKIP_BLOCKS=vector,segmenter_sustained,streaming_state_sustained,tail_attribution \
   run_point /tmp/scale/x1000 /tmp/scale/bench_x1000.json
 
 # x2000 (~34 GB, r19): the BIGGER-THAN-HEAP point (r17/r18 wishlist
@@ -73,12 +63,11 @@ SPARK_GRAFT_SKIP_BLOCKS=vector,segmenter_sustained,streaming_state_sustained,tai
 # 130-query suite's DuckDB side would run for hours at 34 GB, and the
 # point exists to exercise the heavy operators' memory posture, not to
 # re-measure the fixed-cost tail. Data: scripts/gen_scale.py x2000
-# (same production layout); every extra block skipped.
+# (same production layout).
 if [ -d /tmp/scale/x2000 ]; then
   idle_wait
   SPARK_DRIVER_MEM=32g \
   SPARK_GRAFT_ONLY=salted_join,q3_shipping,pack_sequences,minhash_neardups,simhash_neardups,minhash_bands,dedup_clusters,lang_stopwords,sessionize,a6_pricing_summary,heavy_hitters,a1_sum \
-  SPARK_GRAFT_SKIP_BLOCKS=vector,segmenter_sustained,streaming_state_sustained,tail_attribution \
     run_point /tmp/scale/x2000 /tmp/scale/bench_x2000.json
   X2000_POINT="2000x sf0.1 (34 GB, heavy family, input > heap)=/tmp/scale/bench_x2000.json"
 else

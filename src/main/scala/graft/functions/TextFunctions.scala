@@ -80,9 +80,6 @@ object TextFunctions {
   def replaceEnToKo(s: String): String =
     enKoPatterns.foldLeft(s) { case (acc, (pat, ko)) => acc.replaceAll(pat, ko) }
 
-  def replaceEnToKoCol(c: Column): Column =
-    enKoPatterns.foldLeft(c) { case (acc, (pat, ko)) => regexp_replace(acc, pat, ko) }
-
   /** 은/는 particle for a word (pure; see [[koParticle]] for the
     * Column form). Ref: :865-874. */
   def pickEunNeun(word: String): String =
@@ -130,16 +127,6 @@ object TextFunctions {
   }
 
   val cleanKoreanOutputUdf = udf(cleanKoreanOutput _)
-
-  /** Korean output cleanup pipeline: collapse whitespace, strip stray
-    * markup/bullets, trim. Ref: enhanced_internal_db_service.py:890-909
-    * (7-regex chain, re-expressed). */
-  def koClean(c: Column): Column = {
-    val noHtml = stripHtml(c)
-    val noBullet = regexp_replace(noHtml, "(?m)^[\\-\\*•>\\s]+", "")
-    val noRepeatPunct = regexp_replace(noBullet, "([.!?。！？]){2,}", "$1")
-    trim(regexp_replace(noRepeatPunct, "[ \\t]{2,}", " "))
-  }
 
   /** Fixed-size overlapping chunker (size/overlap, stride =
     * size-overlap). Deterministic substring windows; the reference's

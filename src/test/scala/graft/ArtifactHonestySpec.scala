@@ -33,9 +33,9 @@ class ArtifactHonestySpec extends AnyFunSuite {
       val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
       assert(node.has("points") && node.get("points").isArray,
         "BENCH_SCALE.json has no points array")
-      // a sweep without a head key cannot be told apart from a stale
-      // one — Bench's prior_round_comparison marks such sweeps stale,
-      // and regenerating via scripts/run_scale.sh embeds the key
+      // a sweep without a head key names no code it measured, so its
+      // numbers cannot be tied to a commit; regenerating via
+      // scripts/run_scale.sh embeds the key (compose_scale.py)
       assert(node.has("head") && !node.get("head").isNull &&
         node.get("head").asText().matches("[0-9a-f]{40}"),
         "BENCH_SCALE.json carries no git head — regenerate with scripts/run_scale.sh " +

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Physical-plan assertions: the shapes that must hold at 100 TB —
   * predicate pushdown into the parquet scan, column pruning, broadcast
@@ -12,6 +13,17 @@ class PlanSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+
+  /** The plan of `name` at the session's shuffle partition count and
+    * again at 200, a many-executor task count: a probe that only holds
+    * while shuffles stay narrow would fall back to a join at the
+    * second. The setting is restored in `finally`. */
+  private def plansAtShuffleWidths(name: String): Seq[String] = {
+    val key = SQLConf.SHUFFLE_PARTITIONS.key
+    val prev = spark.conf.get(key)
+    try Seq(prev, "200").map { n => spark.conf.set(key, n); plan(name) }
+    finally spark.conf.set(key, prev)
+  }
 
   // queries that execute driver-side work at plan-build time (k-means
   // fit, collect) — excluded from the sweep, covered by their own specs
@@ -48,9 +60,10 @@ class PlanSpec extends SparkSpec {
     // dense TPC-H orderkey space must NOT take the join fallback):
     // the probe is a codegen filter on the lineitem scan, the fact is
     // never shuffled, and the only exchange is the final count's
-    val p = plan("j4_semijoin")
-    assert(p.contains("bitmap_contains"), p.take(2000))
-    assert(!p.contains("Join"), p.take(2000))
+    for (p <- plansAtShuffleWidths("j4_semijoin")) {
+      assert(p.contains("bitmap_contains"), p.take(2000))
+      assert(!p.contains("Join"), p.take(2000))
+    }
   }
 
   test("salted_join plans as a scan-fused dense lookup — no join operator at all") {
@@ -60,9 +73,10 @@ class PlanSpec extends SparkSpec {
     // unique PK + low-cardinality payload plan as a broadcast byte
     // array probed by a codegen dense_lookup in the lineitem scan —
     // a silent fallback to the broadcast join fails this suite
-    val p = plan("salted_join")
-    assert(p.contains("dense_lookup"), p.take(2000))
-    assert(!p.contains("Join"), p.take(2000))
+    for (p <- plansAtShuffleWidths("salted_join")) {
+      assert(p.contains("dense_lookup"), p.take(2000))
+      assert(!p.contains("Join"), p.take(2000))
+    }
   }
 
   test("global top-k plans as TakeOrderedAndProject, not full sort (w1)") {

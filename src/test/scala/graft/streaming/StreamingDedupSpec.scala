@@ -3,11 +3,28 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Real streaming path behind the st_dedup batch stand-in:
   * withWatermark + dropDuplicatesWithinWatermark keyed on event_id. */
 class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Adds one batch whose event time (10:40) moves the 10-minute
+    * watermark past the expiry of every key seen so far (the latest,
+    * 10:04, expires at 10:14), and asserts that the state operator
+    * holds fewer rows afterwards: state stays bounded by the
+    * watermark, not by stream length. */
+  private def assertEvictsBehindWatermark(
+      input: MemoryStream[(Long, java.sql.Timestamp)], q: StreamingQuery): Unit = {
+    def stateRows = q.lastProgress.stateOperators.head.numRowsTotal
+    val before = stateRows
+    input.addData((4L, java.sql.Timestamp.valueOf("2025-01-01 10:40:00")))
+    q.processAllAvailable()
+    val after = stateRows
+    assert(after < before,
+      s"state rows $before -> $after: keys behind the watermark were not evicted")
+  }
 
   test("re-delivered events dedup across micro-batches while state is live") {
     implicit val sqlCtx = spark.sqlContext
@@ -27,15 +44,15 @@ class StreamingDedupSpec extends SparkSpec {
       val ids = spark.table("dedup_out").select("event_id")
         .as[Long].collect().sorted.toSeq
       assert(ids == Seq(1L, 2L, 3L))
+      assertEvictsBehindWatermark(input, q)
     } finally q.stop()
   }
 
   test("same dedup semantics on the RocksDB state-store provider") {
     // the 100 TB posture: heap HDFSBackedStateStore holds every live
     // key as JVM objects; RocksDB keeps state off-heap. The provider
-    // is a per-query conf — semantics must be identical (the sustained
-    // -rate evidence lives in the bench's streaming_state_sustained
-    // block; this spec makes the provider swap durable in CI).
+    // is a per-query conf — semantics, eviction included, must be
+    // identical (this spec makes the provider swap durable in CI).
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, java.sql.Timestamp)]
     val deduped = input.toDS().toDF("event_id", "ts")
@@ -66,6 +83,7 @@ class StreamingDedupSpec extends SparkSpec {
         .customMetrics.keySet().toArray.map(String.valueOf)
       assert(metrics.exists(_.toLowerCase.contains("rocksdb")),
         s"expected RocksDB custom metrics, got ${metrics.mkString(",")}")
+      assertEvictsBehindWatermark(input, q)
     } finally {
       q.stop()
       prev match {
