@@ -28,6 +28,13 @@ def load(p):
         return json.load(f)
 
 
+def load_bench(p):
+    """A bench artifact's result object: the driver's BENCH_r{N}.json
+    wraps it as `parsed` next to the run's exit code and output tail."""
+    d = load(p)
+    return d["parsed"] if isinstance(d.get("parsed"), dict) else d
+
+
 def fmt_ratio(x):
     return f"{x:.1f}×" if x >= 1 else f"{x:.2f}×"
 
@@ -100,19 +107,22 @@ def main():
                 f"{len(over2)} still >2× isolated. "
                 f"Largest: {top}.")
 
-    def newest(pattern, base=root):
-        cands = sorted(base.glob(pattern),
-                       key=lambda p: int(re.search(r"r(\d+)", p.name)
-                                         .group(1)))
-        return cands[-1] if cands else None
+    def newest(prefix, base=root):
+        """The `<prefix>r<N>.json` in `base` with the largest N; other
+        names (`BENCH_r20_c8.json`, `BENCH_FULL_latest.json`) are not
+        round artifacts."""
+        rounds = [(int(m.group(1)), p) for p in base.iterdir()
+                  for m in [re.fullmatch(re.escape(prefix) + r"r(\d+)\.json",
+                                         p.name)] if m]
+        return max(rounds)[1] if rounds else None
 
-    driver = newest("BENCH_r*.json")
+    driver = newest("BENCH_")
     if driver is not None:
-        out.append(sf01_bullet(load(driver), driver.name,
+        out.append(sf01_bullet(load_bench(driver), driver.name,
                                "Driver (per-round gate)"))
-    builder = newest("bench_history/BENCH_FULL_r*.json")
+    builder = newest("BENCH_FULL_", root / "bench_history")
     if builder is not None:
-        out.append(sf01_bullet(load(builder), builder.name,
+        out.append(sf01_bullet(load_bench(builder), builder.name,
                                "Builder idle re-run"))
     print("\n".join(out) if out else "(no artifacts found)")
 

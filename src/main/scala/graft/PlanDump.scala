@@ -21,10 +21,8 @@ object PlanDump {
       "the broadcast LEFT SEMI whose serial driver-side HashedRelation " +
       "build was 75% of the wall at the 100x point (r12 bench " +
       "attribution); the r12 eager driver collect (~0.85 s of j4's wall) is gone " +
-      "too. Sparse/overflow key spans switch to an exact open-addressing " +
-      "long set (`longset_contains`) — still join-free, count-guarded by " +
-      "maxKeys; beyond driver memory: bloomSemiJoin (distributed build + " +
-      "scan-fused prefilter + exact verify join)."),
+      "too. A key span past the bitmap budget (maxBitmapBytes) hands the " +
+      "semi join to Spark's planner: a plain LeftSemi join."),
     "salted_join" -> ("Dense dictionary-lookup join (r13): fact x dim on a dense " +
       "unique PK with a low-cardinality payload plans as a codegen " +
       "`dense_lookup` probe of a broadcast BIT-PACKED codes array (r19: width " +

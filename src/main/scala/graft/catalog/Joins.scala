@@ -53,8 +53,8 @@ object Joins {
       // build). Existence needs no hash table: the same collect feeds
       // a ~15 ms bitset OR-build, the broadcast is 7.5 MB, and the
       // probe fuses into the fact scan as a codegen filter — no join
-      // operator, fact never shuffled. Sparse key spaces fall back to
-      // the broadcast semi join inside the operator.
+      // operator, fact never shuffled. A key span past the bitmap
+      // budget falls back to Spark's semi join inside the operator.
       val li = t(s, d, "lineitem")
       val urgent = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey")
@@ -155,9 +155,8 @@ object Joins {
       // brief with the probe doing the semi, it now wins (r14 stage
       // timings, HISTORY.md round 14).
       // Scale posture: both bitmaps grow with the key SPAN (bits),
-      // not row count; past maxBitmapBytes the build degrades
-      // sparse→loud guard, and the orderkey side beyond that belongs
-      // to bloomSemiJoin — x1000 sweep exercises exactly that edge.
+      // not row count; past maxBitmapBytes (64 MB: a 512 M-key span)
+      // the operator hands that cut to Spark's own semi join.
       val c = t(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
       val o = t(s, d, "orders")
         .filter(col("o_orderdate") < lit("1995-03-15").cast("date"))

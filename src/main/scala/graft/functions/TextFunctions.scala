@@ -126,8 +126,6 @@ object TextFunctions {
     s.trim
   }
 
-  val cleanKoreanOutputUdf = udf(cleanKoreanOutput _)
-
   /** Fixed-size overlapping chunker (size/overlap, stride =
     * size-overlap). Deterministic substring windows; the reference's
     * RecursiveCharacterTextSplitter (700/120,

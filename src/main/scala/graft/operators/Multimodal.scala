@@ -26,14 +26,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Asset table schema: media as binary + typed metadata. */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false), // image|audio|video
-    StructField("uri", StringType),
-    StructField("bytes", BinaryType),
-    StructField("meta", MapType(StringType, StringType))))
-
   /** Deterministic fake decode: width/height/duration derived from a
     * 64-bit mix of the bytes — a stand-in with the exact signature a
     * real decoder would have (bytes → struct). */

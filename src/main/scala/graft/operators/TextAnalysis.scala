@@ -53,17 +53,11 @@ object TextAnalysis {
   def qualityScore(text: Column): Column =
     coalesce(qualitySignals(text).getField("_6"), lit(0.0))
 
-  /** The linear quality-probe's stopword set (a deliberately tiny
-    * 8-token probe, kept apart from the teacher rule's English list —
-    * the probe must learn from RAW signals, not the rule's own
-    * vocabulary; today the two hold the same words). One table for
-    * both: payload bit 0 = probe, bit 1 = teacher. */
-  private val probeStops = Set("the", "and", "of", "to", "is", "a", "in", "that")
-  private val signalStops: TokenTable = {
-    val en = stopwords("en").toSet
-    TokenTable.of((probeStops ++ en).toSeq.map(w =>
-      w -> ((if (probeStops(w)) 1L else 0L) | (if (en(w)) 2L else 0L))))
-  }
+  /** The English stopword table [[qualitySignals]] probes: the linear
+    * quality-probe's stop-ratio feature and the teacher rule count the
+    * same `stopwords("en")` hits. */
+  private val signalStops: TokenTable =
+    TokenTable.of(stopwords("en").map(_ -> 1L))
 
   /** ONE compiled pass computing every signal the rule-distillation
     * quality classifier needs — the five raw probe features AND the
@@ -99,15 +93,11 @@ object TextAnalysis {
         if (TokenScan.isWs(c)) ws += 1
         i += 1
       }
-      var nToks = 0; var stopProbe = 0; var stopEn = 0
+      var nToks = 0; var stopEn = 0
       val tok = new TokenScan.Cursor(UTF8String.fromString(s))
       while (tok.next()) {
         nToks += 1
-        val m = signalStops.get(tok)
-        if (m != TokenTable.ABSENT) {
-          if ((m & 1L) != 0L) stopProbe += 1
-          if ((m & 2L) != 0L) stopEn += 1
-        }
+        if (signalStops.get(tok) != TokenTable.ABSENT) stopEn += 1
       }
       val lenD = len.toDouble
       val nT = math.max(nToks, 1).toDouble
@@ -119,7 +109,7 @@ object TextAnalysis {
           1.0 - punctQ.toDouble / len * 5.0 - digit.toDouble / len * 2.0)
         math.round((lenScore * 0.3 + sw * 0.3 + noise * 0.4) * 1e6) / 1e6
       }
-      (lenScore, stopProbe.toDouble / nT, punctRe.toDouble / math.max(lenD, 1.0),
+      (lenScore, stopEn.toDouble / nT, punctRe.toDouble / math.max(lenD, 1.0),
         digit.toDouble / math.max(lenD, 1.0), (lenD - ws) / nT, quality)
     }
   })

@@ -58,81 +58,6 @@ case class BitmapContains(child: Expression,
     copy(child = newChild)
 }
 
-/** `LongSetContains(key, table, hasZero)`: exact membership probe
-  * against a broadcast open-addressing long hash set — the SPARSE-key
-  * sibling of [[BitmapContains]] (round-12 judge item #4: sparse or
-  * wide key ranges used to fall back to the broadcast hash semi join,
-  * i.e. the exact serial-build floor the bitmap was built to kill).
-  *
-  * `table` is a power-of-two `long[]` with linear probing and 0 as
-  * the empty sentinel (the key 0 itself is carried out-of-band in
-  * `hasZero`), filled to ≤50% load at build time. The driver build is
-  * a single array-fill pass (~30 ms for 3 M keys vs the ~1.0 s
-  * UnsafeRow HashedRelation build it replaces), the broadcast is
-  * 16 bytes/key worst case, and the probe — a murmur-finalizer hash
-  * plus an expected ~1.3 linear-probe steps at this load factor —
-  * fuses into the fact scan exactly like the bitmap: no join operator
-  * in the plan, no fact shuffle. Unlike a Bloom filter this is EXACT
-  * (semi-join semantics need no verification pass). Null keys yield
-  * null via the standard null-propagating wrapper. */
-case class LongSetContains(child: Expression,
-                           table: Broadcast[Array[Long]],
-                           hasZero: Boolean)
-    extends UnaryExpression with Predicate {
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(key: Any): Any = {
-    val k = key.asInstanceOf[Long]
-    if (k == 0L) hasZero
-    else {
-      val t = table.value
-      val mask = t.length - 1
-      var h = k
-      h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
-      h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
-      h ^= h >>> 33
-      var pos = (h & mask).toInt
-      var cur = t(pos)
-      while (cur != 0L && cur != k) { pos = (pos + 1) & mask; cur = t(pos) }
-      cur == k
-    }
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("longSetBc", table,
-      classOf[Broadcast[Array[Long]]].getName)
-    val t = ctx.addMutableState("long[]", "longSetTable",
-      v => s"$v = (long[]) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, k => {
-      val h = ctx.freshName("h")
-      val pos = ctx.freshName("pos")
-      val cur = ctx.freshName("cur")
-      val mask = ctx.freshName("mask")
-      s"""
-         |if ($k == 0L) { ${ev.value} = $hasZero; } else {
-         |  int $mask = $t.length - 1;
-         |  long $h = $k;
-         |  $h ^= $h >>> 33; $h *= 0xff51afd7ed558ccdL;
-         |  $h ^= $h >>> 33; $h *= 0xc4ceb9fe1a85ec53L;
-         |  $h ^= $h >>> 33;
-         |  int $pos = (int) ($h & $mask);
-         |  long $cur = $t[$pos];
-         |  while ($cur != 0L && $cur != $k) {
-         |    $pos = ($pos + 1) & $mask; $cur = $t[$pos];
-         |  }
-         |  ${ev.value} = ($cur == $k);
-         |}
-       """.stripMargin
-    })
-  }
-
-  override def toString: String = s"longset_contains($child)"
-
-  override protected def withNewChildInternal(newChild: Expression): LongSetContains =
-    copy(child = newChild)
-}
-
 /** `DensePackedLookup(key, codes, min, width)`: dictionary-CODE
   * lookup against a broadcast BIT-PACKED dense array — the
   * value-attaching sibling of [[BitmapContains]], probe side of
@@ -197,43 +122,5 @@ case class DensePackedLookup(child: Expression,
   override def toString: String = s"dense_lookup($child)"
 
   override protected def withNewChildInternal(newChild: Expression): DensePackedLookup =
-    copy(child = newChild)
-}
-
-/** `BloomMightContainLong(key, bloom)`: scan-fused probe of a
-  * broadcast [[org.apache.spark.util.sketch.BloomFilter]] — the
-  * 100 TB-scale runtime-filter shape (Spark's own InjectRuntimeFilter
-  * technique) for key sides TOO LARGE to collect to the driver at
-  * all. The filter is built DISTRIBUTED (`DataFrame.stat.bloomFilter`,
-  * a treeAggregate: the driver only ever holds the filter bits, never
-  * the keys), so unlike [[BitmapContains]]/[[LongSetContains]] there
-  * is no driver-fit contract on the key side.
-  *
-  * APPROXIMATE by construction — `true` may be a false positive at
-  * the configured fpp, `false` is always exact — so this is a
-  * PREFILTER: [[graft.operators.Relational.bloomSemiJoin]] composes
-  * it with an exact semi join over the (now tiny) survivor set. Null
-  * keys yield null via the null-propagating wrapper. */
-case class BloomMightContainLong(child: Expression,
-                                 bloom: Broadcast[org.apache.spark.util.sketch.BloomFilter])
-    extends UnaryExpression with Predicate {
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(key: Any): Any =
-    bloom.value.mightContainLong(key.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("bloomBc", bloom,
-      classOf[Broadcast[org.apache.spark.util.sketch.BloomFilter]].getName)
-    val bf = ctx.addMutableState("org.apache.spark.util.sketch.BloomFilter",
-      "bloomFilter",
-      v => s"$v = (org.apache.spark.util.sketch.BloomFilter) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, k => s"${ev.value} = $bf.mightContainLong($k);")
-  }
-
-  override def toString: String = s"bloom_might_contain($child)"
-
-  override protected def withNewChildInternal(newChild: Expression): BloomMightContainLong =
     copy(child = newChild)
 }

@@ -14,9 +14,6 @@ object StreamFraming {
   def sseFrame(payload: Column): Column =
     concat(lit("data: "), payload, lit("\n\n"))
 
-  /** ST1 final frame (done marker). */
-  val sseDone: Column = lit("data: [DONE]\n\n")
-
   /** ST4: fixed-size re-chunking of a text column into `n`-char
     * pieces, one row per (idx, piece) after posexplode (ref
     * routes.py:438-449 — 10-char chunks; the 50 ms pacing is sink

@@ -144,9 +144,8 @@ class ReadmeUsageSpec extends SparkSpec {
     // is a codegen filter fused into the fact scan (no join operator, no
     // serial driver-side hash-relation build, range/8-byte broadcast),
     // and the bitset is built DISTRIBUTED (per-partition OR + treeReduce:
-    // the driver never holds a key). Sparse/overflow key spans switch to
-    // an exact open-addressing long set (same join-free plan) under a
-    // loud maxKeys count guard; beyond that: bloomSemiJoin (below)
+    // the driver never holds a key). A key span past maxBitmapBytes
+    // (64 MB of bitset) hands the semi join to Spark's own planner
     // --- end README ---
     val viaJoin = li.join(broadcast(urgent),
       li("l_orderkey") === urgent("o_orderkey"), "left_semi").count()
@@ -154,7 +153,7 @@ class ReadmeUsageSpec extends SparkSpec {
     assert(viaJoin > 0)
   }
 
-  test("README example 7: denseLookupJoin + bloomSemiJoin (dimension lookup family)") {
+  test("README example 7: denseLookupJoin (dimension lookup without a join)") {
     import graft.operators.Relational
     // --- as printed in README.md (Library usage, example 7) ---
     val lines = Tables.load(spark, dir, "lineitem")
@@ -165,14 +164,10 @@ class ReadmeUsageSpec extends SparkSpec {
     val priced = Relational.denseLookupJoin(lines, urgentDim,
       factKey = "l_orderkey", keyCol = "o_orderkey",
       valueCol = "o_orderpriority")
-    val flagged = Relational.bloomSemiJoin(lines, urgentDim,
-      factKey = "l_orderkey", keyCol = "o_orderkey",
-      expectedKeys = 100000L, fpp = 0.01)
     // --- end README ---
     val viaJoin = lines.join(broadcast(urgentDim),
       lines("l_orderkey") === urgentDim("o_orderkey"))
     assert(priced.count() == viaJoin.count())
-    assert(flagged.count() == viaJoin.count()) // semi join: dim PK unique
     assert(priced.count() > 0)
   }
 }

@@ -1,25 +1,30 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Property test: `Relational.bitmapSemiJoin` must equal the plain
   * broadcast left-semi join on RANDOMIZED key spaces — negative keys,
   * duplicate keys, null fact keys, keys straddling zero, and spans
-  * chosen to exercise BOTH the bitset fast path and the sparse
-  * hash-set path (LongSetContains, including the Long-overflow span
-  * guard and the 0-key sentinel carried out-of-band). Seeded
-  * generation keeps failures reproducible. */
+  * chosen to exercise BOTH the bitset fast path and the fallback to
+  * Spark's semi join past the bitmap budget (including the
+  * Long-overflow span guard, and a span that only passes the budget
+  * when two dense partitions merge). Seeded generation keeps failures
+  * reproducible. */
 class BitmapSemiJoinPropertySpec extends SparkSpec {
   import spark.implicits._
 
   private val rnd = new scala.util.Random(42)
 
   private def check(factKeys: Seq[Option[Long]], keys: Seq[Long],
+                    label: String): Unit =
+    check(factKeys, keys.toDF("kk"), label)
+
+  private def check(factKeys: Seq[Option[Long]], dim: DataFrame,
                     label: String): Unit = {
     val fact = factKeys.zipWithIndex.map { case (k, i) => (k, s"r$i") }
       .toDF("k", "p")
-    val dim = keys.toDF("kk")
     val viaBitmap = Relational.bitmapSemiJoin(fact, dim, "k", "kk")
       .select("p").as[String].collect().toSet
     val viaJoin = fact.join(broadcast(dim), fact("k") === dim("kk"), "left_semi")
@@ -38,10 +43,10 @@ class BitmapSemiJoinPropertySpec extends SparkSpec {
     }
   }
 
-  test("sparse key spaces take the hash-set path, including Long-overflow spans") {
-    // span > maxBitmapBytes*8 → LongSetContains; mn<0 with mx near
+  test("sparse key spaces take Spark's semi join, including Long-overflow spans") {
+    // span > maxBitmapBytes*8 → plain semi join; mn<0 with mx near
     // MaxValue makes (mx-mn) overflow Long — the BigInt guard must
-    // route these to the set, never allocate
+    // route these to the join, never allocate
     val cases = Seq(
       Seq(Long.MinValue + 10, Long.MaxValue - 10),
       Seq(-5L, Long.MaxValue - 3),
@@ -51,12 +56,21 @@ class BitmapSemiJoinPropertySpec extends SparkSpec {
         Seq.fill(50)(Some(rnd.nextLong())) :+ None).reverse
       check(factKeys, keys, s"sparse case $i")
     }
+    // two partitions, each dense on its own ([0, 100) and
+    // [2^40, 2^40 + 100)), whose UNION span passes the default budget:
+    // the overflow is found at the merge, not in a partition
+    val far = 1L << 40
+    val split = spark.range(0, 200, 1, 2).select(
+      when(col("id") < 100, col("id")).otherwise(col("id") - 100 + far).as("kk"))
+    assert(split.rdd.getNumPartitions == 2)
+    check(Seq.tabulate(300)(i => Some(if (i % 2 == 0) i.toLong else far + i - 150)) :+
+      None, split, "dense partitions, sparse union")
   }
 
-  test("random wide sparse key sets (hash-set path, many keys, 0 included)") {
+  test("random wide sparse key sets (Spark semi join, many keys, 0 included)") {
     (1 to 4).foreach { round =>
       // full-width random longs → span always overflows the bitmap
-      // budget; 0L planted so the out-of-band zero sentinel is hit
+      // budget; 0L planted so a zero key is matched too
       val keys = (Seq.fill(200)(rnd.nextLong()) :+ 0L).distinct
       val factKeys =
         Seq.fill(400)(if (rnd.nextInt(10) == 0) None

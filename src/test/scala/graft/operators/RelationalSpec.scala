@@ -120,15 +120,15 @@ class RelationalSpec extends SparkSpec {
     assert(plan.contains("bitmap_contains"))
   }
 
-  test("bitmapSemiJoin sparse key ranges stay JOIN-FREE via the hash-set probe") {
+  test("bitmapSemiJoin past the bitmap budget hands the semi join to Spark") {
     // two keys 2^62 apart: the bitset would span ~2^59 bytes — the
-    // operator must switch to the open-addressing set, not allocate
-    // (and not fall back to the serial-build broadcast semi join the
-    // probe family exists to kill — r12 judge item #4). 0L is among
-    // the keys, so the out-of-band zero sentinel is exercised too.
+    // operator must fall back to a plain left-semi join, not allocate.
+    // 0L is among the keys, so a zero key is matched on that path too.
     val fact = Seq((0L, "a"), (1L << 62, "b"), (42L, "c")).toDF("k", "p")
     val keys = Seq(0L, 1L << 62).toDF("kk")
     val out = Relational.bitmapSemiJoin(fact, keys, "k", "kk")
+    val viaJoin = fact.join(keys, fact("k") === keys("kk"), "left_semi")
+    assert(out.collect().map(_.toSeq).toSet == viaJoin.collect().map(_.toSeq).toSet)
     assert(out.select("p").as[String].collect().toSet == Set("a", "b"))
     // plan pin needs a parquet fact (a LocalRelation would be
     // constant-folded through the filter at optimization time)
@@ -136,110 +136,10 @@ class RelationalSpec extends SparkSpec {
     fact.write.mode("overwrite").parquet(tmp)
     val plan = Relational.bitmapSemiJoin(spark.read.parquet(tmp), keys, "k", "kk")
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), s"expected no join operator, got:\n$plan")
-    assert(plan.contains("longset_contains"), s"expected the set probe, got:\n$plan")
-  }
-
-  test("bitmapSemiJoin sparse-path maxKeys guard fails loudly BEFORE any driver materialization") {
-    // the DENSE path builds distributed (no key-count contract at
-    // all); only the sparse hash-set path is broadcast-class. A wide
-    // key spacing (2^40 apart) forces the sparse path. Since the r14
-    // single-pass build, the guard can trip in the TASK (a partition's
-    // key buffer caps at maxKeys — even earlier than the r13 driver
-    // count-probe) or in the driver merge; bitmapSemiJoin unwraps the
-    // SparkException task wrapper, so callers see a DIRECT
-    // IllegalArgumentException either way (r14 advisory — a wrapped
-    // exception silently broke caller catch blocks written for r13).
-    val fact = Seq((1L << 40, "a")).toDF("k", "p")
-    val sparseKeys = spark.range(100)
-      .select((col("id") * lit(1L << 40)).as("kk"))
-    val e = intercept[IllegalArgumentException] {
-      Relational.bitmapSemiJoin(fact, sparseKeys, "k", "kk", maxKeys = 10,
-        autoDegrade = false)
-    }
-    val msg = Option(e.getMessage).getOrElse("")
-    assert(msg.contains("maxKeys=10"))
-    assert(msg.contains("bloomSemiJoin"), "error must route the caller")
-    // with autoDegrade (the default) the SAME out-of-contract input
-    // takes the bloom rung automatically and stays exact (r15 judge
-    // item #2: the next rung is wired in, not an error message)
-    val degraded = Relational.bitmapSemiJoin(fact, sparseKeys, "k", "kk",
-      maxKeys = 10)
-    assert(degraded.select("p").as[String].collect().toSeq == Seq("a"))
-    // and a non-matching fact row is still excluded through the rung
-    val fact2 = Seq((1L << 40, "a"), (123L, "nope")).toDF("k", "p")
-    val degraded2 = Relational.bitmapSemiJoin(fact2, sparseKeys, "k", "kk",
-      maxKeys = 10)
-    assert(degraded2.select("p").as[String].collect().toSeq == Seq("a"))
-    // at the boundary the sparse path still works
-    val ok = Relational.bitmapSemiJoin(fact,
-      spark.range(10).select((col("id") * lit(1L << 40)).as("kk")),
-      "k", "kk", maxKeys = 10)
-    assert(ok.select("p").as[String].collect().toSeq == Seq("a"))
-    // and a dense key side LARGER than maxKeys is fine — the bitset
-    // build never lands a key on the driver
-    val dense = Relational.bitmapSemiJoin(
-      Seq((7L, "x")).toDF("k", "p"),
-      spark.range(1000).select(col("id").as("kk")), "k", "kk", maxKeys = 10)
-    assert(dense.select("p").as[String].collect().toSeq == Seq("x"))
-  }
-
-  test("bitmapSemiJoin maxKeys guard counts DISTINCT keys, not occurrences") {
-    // r16 audit (r15 judge advisory surface): the sparse buffers
-    // append per occurrence and partials from different partitions
-    // can carry the same key — a duplicate-heavy key side must NOT
-    // trip the guard (or auto-degrade to bloom) while its distinct
-    // count is within contract. 6 distinct keys 2^40 apart (sparse
-    // path), each repeated 50×: in ONE partition the occurrence cap
-    // trips inside addSparse; across MANY partitions the treeReduce
-    // merge sees the same key in every partial. Both must dedup and
-    // keep the hash-set probe. autoDegrade=false makes any guard trip
-    // a test failure instead of a silent bloom fallback.
-    val fact = Seq((0L, "hit"), (2L << 40, "hit2"), (123L, "miss"))
-      .toDF("k", "p")
-    def dupKeys(parts: Int) = spark.range(300)
-      .repartition(parts)
-      .select(((col("id") % 6) * lit(1L << 40)).as("kk"))
-    for (parts <- Seq(1, 16)) {
-      val out = Relational.bitmapSemiJoin(fact, dupKeys(parts), "k", "kk",
-        maxKeys = 10, autoDegrade = false)
-      assert(out.select("p").as[String].collect().toSet == Set("hit", "hit2"),
-        s"parts=$parts")
-    }
-    // distinct count ABOVE maxKeys still fails loudly (dedup is a
-    // rescue, not a bypass): 100 distinct sparse keys vs maxKeys=10
-    val e = intercept[IllegalArgumentException] {
-      Relational.bitmapSemiJoin(fact,
-        spark.range(300).select(((col("id") % 100) * lit(1L << 40)).as("kk")),
-        "k", "kk", maxKeys = 10, autoDegrade = false)
-    }
-    assert(Option(e.getMessage).getOrElse("").contains("maxKeys=10"))
-  }
-
-  test("bloomSemiJoin equals the exact semi join; prefilter FP rate is bounded") {
-    // 500 keys in [0, 10k); fact keys uniform in [0, 20k) → ~97.5% of
-    // fact rows are true negatives the prefilter must mostly discard
-    val rnd = new scala.util.Random(7)
-    val keys = Seq.fill(500)(rnd.nextInt(10000).toLong).distinct.toDF("kk")
-    val fact = Seq.tabulate(4000)(i =>
-      (rnd.nextInt(20000).toLong, s"r$i")).toDF("k", "p")
-    val exact = fact.join(broadcast(keys), fact("k") === keys("kk"), "left_semi")
-    val viaBloom = Relational.bloomSemiJoin(fact, keys, "k", "kk",
-      expectedKeys = 500, fpp = 0.01)
-    assert(viaBloom.select("p").as[String].collect().toSet ==
-      exact.select("p").as[String].collect().toSet,
-      "bloomSemiJoin must be EXACT (the verify join removes false positives)")
-    // the prefilter alone: every exact match survives (no false
-    // negatives — a Bloom filter guarantee), and false positives stay
-    // within a loose 3× of the configured fpp over the negatives
-    val pre = Relational.bloomPrefilter(fact, keys, "k", "kk", 500, 0.01)
-      .select("p").as[String].collect().toSet
-    val exactSet = exact.select("p").as[String].collect().toSet
-    assert(exactSet.subsetOf(pre), "bloom prefilter must never drop a true match")
-    val negatives = fact.count() - exactSet.size
-    val falsePos = pre.size - exactSet.size
-    assert(falsePos <= math.max(10.0, 3 * 0.01 * negatives),
-      s"false-positive rate out of bound: $falsePos of $negatives negatives")
+    assert(plan.contains("LeftSemi"), s"expected a left-semi join, got:\n$plan")
+    // and no scan-fused probe: `bitmap_contains` or any other
+    // `<kind>_contains(` filter
+    assert(!plan.contains("_contains("), s"expected no scan-fused probe, got:\n$plan")
   }
 
   test("denseLookupJoin equals the broadcast inner join, plan is join-free") {
