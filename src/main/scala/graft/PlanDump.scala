@@ -96,10 +96,13 @@ object PlanDump {
       "searches per probe inside one UDF call per bucket. The qualifying-pair " +
       "set (quadratic in dense windows) never materializes; work is " +
       "O((|L|+|R|) log density)."),
-    "minhash_neardups" -> ("LSH near-dup: signature + banding are row-local " +
-      "(single compiled UDF pass); candidates come from the (band, bucket) " +
+    "minhash_neardups" -> ("LSH near-dup: the shingle set and its band " +
+      "hashes are row-local codegen expressions (`shingle_set`, " +
+      "`minhash_bands`); candidates come from the (band, bucket) " +
       "equi-join — a shuffle join on a compact key, never an all-pairs " +
-      "product; exact verify runs on candidates only."),
+      "product; each pair is kept at its first shared band by a row-local " +
+      "filter (no aggregate on the pair), and exact verify runs on " +
+      "candidates only."),
     "s2_jdbc" -> ("JDBC source: the numeric predicate is pushed into the remote " +
       "database (PushedFilters in the JDBC scan node) — the DB filters, the " +
       "cluster aggregates."),

@@ -8,7 +8,7 @@ package graft
   * independent recomputation, not a stability replay.
   *
   * Why this is expressible at all: every JVM-side hash in
-  * [[operators.Dedup]] is integer arithmetic mod 2^64 (poly-31 char
+  * [[plans.SketchScan]] is integer arithmetic mod 2^64 (poly-31 char
   * fold, FNV-ish shingle combine, the murmur3 finalizer `mix64`).
   * DuckDB has no wrapping 64-bit type, but HUGEINT (int128) holds
   * every intermediate if the two ~2^64 finalizer constants are
@@ -42,10 +42,10 @@ package graft
   *    the band join EQUAL to the all-group-pairs form the oracle
   *    brute-forces (the hot-bucket cap is the one divergence; it
   *    cannot trigger at oracle scales).
-  *  - `minhash_neardups`: the engine's LSH buckets use Spark's
-  *    seeded xxhash64 (not reproducible in DuckDB), but the RESULT is
-  *    the exact-verified pair set; the oracle computes jaccard over
-  *    ALL pairs of the 300-doc slice. LSH can in principle miss a
+  *  - `minhash_neardups`: the engine's LSH buckets are the mix64 band
+  *    hashes `minhash_bands` recomputes, but the RESULT is the
+  *    exact-verified pair set, so the oracle computes jaccard over
+  *    ALL pairs of the 300-doc slice instead. LSH can in principle miss a
   *    qualifying pair (8 bands x 2 rows: P(miss) = (1-j^2)^8), so
   *    this oracle is checked where it is run: at gate scale the only
   *    pairs over the 0.5 threshold are the planted near-copies at
@@ -62,14 +62,14 @@ private[graft] object SketchOracleSql {
   private val PolySeed = "CAST(1125899906842597 AS HUGEINT)"
   private val SignBit = "CAST('9223372036854775808' AS HUGEINT)" // 2^63
   private val LongMax = "9223372036854775807"
-  private val Pat = "[가-힣a-z0-9][가-힣a-z0-9\\-_/]+" // Dedup.tokenPattern
+  private val Pat = "[가-힣a-z0-9][가-힣a-z0-9\\-_/]+" // SketchScan's token rule
 
   /** (a * c) mod 2^64 for a < 2^64 without overflowing int128. */
   private def mulmod(a: String, c: String): String =
     s"((($a) & $Lo32) * CAST('$c' AS HUGEINT) + " +
       s"(((($a) >> 32) * CAST('$c' AS HUGEINT)) & $Lo32) * 4294967296) & $Mask64"
 
-  /** Murmur3 finalizer (= Dedup.mix64) as five MATERIALIZED stages
+  /** Murmur3 finalizer (= SketchScan.mix64) as five MATERIALIZED stages
     * over relation `src(keys..., v)`, final column `out` in
     * `<pfx>_s5`. */
   private def mixCtes(pfx: String, src: String, keys: Seq[String],
@@ -82,12 +82,10 @@ ${pfx}_s4 AS MATERIALIZED (SELECT $k, ${mulmod("a2", C2)} AS b2 FROM ${pfx}_s3),
 ${pfx}_s5 AS MATERIALIZED (SELECT $k, xor(b2, b2 >> 33) AS $out FROM ${pfx}_s4)"""
   }
 
-  /** The 16 LSH seeds, derived with the JVM's own mix64 so the SQL
-    * constants can never drift from Dedup's. */
-  private val seeds: IndexedSeq[String] = (0 until 16).map { i =>
-    java.lang.Long.toUnsignedString(
-      operators.Dedup.mix64(0x9e3779b97f4a7c15L * (i + 1)))
-  }
+  /** The 16 LSH seeds, taken from the engine's own derivation so the
+    * SQL constants can never drift from it. */
+  private val seeds: IndexedSeq[String] =
+    plans.SketchScan.seeds(16).toIndexedSeq.map(java.lang.Long.toUnsignedString)
 
   private val seedValues = seeds.zipWithIndex
     .map { case (s, i) => s"(${i + 1}, CAST('$s' AS HUGEINT))" }
@@ -101,7 +99,7 @@ ${pfx}_s5 AS MATERIALIZED (SELECT $k, xor(b2, b2 >> 33) AS $out FROM ${pfx}_s4)"
       (h, c) -> (h * 31 + c) & $Mask64)"""
 
   /** CTE block computing `sks(doc_id, sketch BIGINT)` — the 64-bit
-    * SimHash of every document (simhashUdf's short xorshift mix:
+    * SimHash of every document (TextScan.simhash64's short xorshift mix:
     * one C1 multiply, not the full finalizer). */
   private val simhashCtes: String = {
     val votes = (0 until 64)
@@ -219,7 +217,7 @@ GROUP BY b.band ORDER BY b.band"""
     val bits = 8
     val planes = for (b <- 0 until bits; j <- 0 until dim) yield
       (java.lang.Math.floorMod(
-        operators.Dedup.mix64(
+        plans.SketchScan.mix64(
           j.toLong * 0x9e3779b97f4a7c15L + (b + 1).toLong * 0xc2b2ae3d27d4eb4fL),
         1000000L).toDouble / 1000000.0) - 0.5
     val pw = planes.map(_.toString).mkString("[", ",", "]")

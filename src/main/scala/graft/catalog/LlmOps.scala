@@ -131,14 +131,13 @@ object LlmOps {
         .sortWithinPartitions("doc_id")
         .select(col("doc_id"), Dedup.simhash(col("text")).as("sketch"))),
       SketchOracleSql.simhashSketch),
-    QuerySpec("minhash_bands", ((s, d) => { // real oracle: DuckDB HUGEINT recompute (SketchOracleSql)
-      val bandsUdf = Dedup.lshBandBucketsUdf(3, 16, 4)
+    QuerySpec("minhash_bands", ((s, d) => // real oracle: DuckDB HUGEINT recompute (SketchOracleSql)
       orderedSmall(tp(s, d, "documents")
-        .select(col("doc_id"), explode(bandsUdf(col("text"))).as("b"))
-        .groupBy(col("b._1").as("band"))
-        .agg(countDistinct(col("b._2")).as("n_buckets"),
-          count(lit(1)).as("n_docs")), "band")
-    }),
+        .select(col("doc_id"), posexplode(Dedup.minhashBands(
+          Dedup.shingleSet(col("text"), 3), 16, 4)).as(Seq("band", "bucket")))
+        .groupBy(col("band"))
+        .agg(countDistinct(col("bucket")).as("n_buckets"),
+          count(lit(1)).as("n_docs")), "band")),
       // The five sketch oracles are REAL DuckDB recomputations since
       // round 11 — HUGEINT mod-2^64 arithmetic re-derives every text
       // sketch, and embed_neardups' sign-LSH buckets come from IEEE-

@@ -4,7 +4,6 @@ package catalog
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Pii, TextAnalysis, TimeSeriesOps}
-import graft.functions.TextFunctions
 import graft.functions.VectorFunctions
 import graft.fixtures.Fixtures
 import graft.ingest.Ingest
@@ -633,17 +632,12 @@ object PipelineOps {
     QuerySpec("jaccard_adjacent", ((s, d) => {
       // exact n-gram Jaccard of (doc, doc+1) pairs — equi-join, no
       // all-pairs; DuckDB rebuilds the same shingle sets independently
-      val sh = t(s, d, "documents").filter(col("doc_id") < 40)
-        .select(col("doc_id"),
-          array_distinct(TextFunctions.shingles(
-            TextFunctions.tokenize(col("text")), 3)).as("sh"))
-      val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sha"))
-      val b = sh.select(col("doc_id").as("id_b"), col("sh").as("shb"))
+      val docs = t(s, d, "documents").filter(col("doc_id") < 40)
+      val a = docs.select(col("doc_id").as("id_a"), col("text").as("ta"))
+      val b = docs.select(col("doc_id").as("id_b"), col("text").as("tb"))
       a.join(b, col("id_b") === col("id_a") + 1)
         .select(col("id_a"), col("id_b"),
-          round(when(size(col("sha")) === 0 && size(col("shb")) === 0, 1.0)
-            .otherwise(size(array_intersect(col("sha"), col("shb"))).cast("double") /
-              size(array_union(col("sha"), col("shb")))), 4).as("jaccard"))
+          round(Dedup.ngramJaccard(col("ta"), col("tb"), 3), 4).as("jaccard"))
         .orderBy("id_a")
     }),
       ("WITH t AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(toks)-2, 0)), i -> array_to_string(toks[i:i+2], ' '))) AS sh " +

@@ -38,12 +38,6 @@ object TextFunctions {
     else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKC))
   def nfkc(c: Column): Column = nfkcUdf(c)
 
-  /** Lowercase word tokenizer mirroring the reference's anchor
-    * tokenizer `[가-힣A-Za-z0-9][가-힣A-Za-z0-9\-_/]+` (2+ chars).
-    * Ref: enhanced_internal_db_service.py:735-739. */
-  def tokenize(c: Column): Column =
-    regexp_extract_all(lower(c), lit("[가-힣a-z0-9][가-힣a-z0-9\\-_/]+"), lit(0))
-
   /** Truncate with ellipsis. Ref: rag_service.py:153-156 (500 chars),
     * enhanced_internal_db_service.py:805 (900). */
   def truncateEllipsis(c: Column, maxLen: Int): Column =
@@ -160,12 +154,4 @@ object TextFunctions {
       h
     })
   def fingerprint(c: Column): Column = fingerprintUdf(c)
-
-  /** Word n-gram shingles over a token array — built-in HOF only (no
-    * UDF): slide an n-window via sequence+transform. */
-  def shingles(tokens: Column, n: Int): Column =
-    when(size(tokens) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(tokens) - n),
-        i => concat_ws(" ", slice(tokens, i + 1, lit(n)))))
 }

@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
+import graft.plans.{MinhashExpr, ShingleSetExpr, SketchHitsExpr}
+import graft.plans.SketchScan.mix64
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression}
 
 /** Large-scale training-data deduplication operators (north-star
   * requirement; no reference counterpart — designed Spark-first).
@@ -31,234 +33,76 @@ object Dedup {
     df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
+  /** Sorted distinct `array<bigint>` of the hashes of `text`'s word
+    * `n`-gram shingles over [[graft.plans.SketchScan]]'s tokens (the
+    * anchor rule on the ROOT-lowered text). Null text gives null. The
+    * one shingle set of the near-duplicate family: the minhash
+    * signature and bands, `minhashNearDups`' and `ngramJaccard`'s
+    * Jaccard and `contamination`'s probe all read it, so each row is
+    * scanned once. */
+  def shingleSet(text: Column, n: Int): Column =
+    toCol(ShingleSetExpr(expression(text), n))
+
   /** MinHash signature over word `n`-gram shingles: `numHashes`
     * independent min-hashes of each shingle under per-seed 64-bit
-    * mixes. One compiled pass per row (tokens → shingles → k mins):
-    * a HOF formulation re-inlines the shingle expression into every
-    * one of the k aggregates after project-collapse, costing k× the
-    * shingling — measured 26 s vs <1 s on the sf0.001 corpus. */
+    * mixes. Null text, or text with fewer than `shingleN` tokens, gives
+    * all-`Long.MaxValue`. */
   def minhashSignature(text: Column, shingleN: Int, numHashes: Int): Column =
-    minhashTextUdf(shingleN, numHashes)(text)
+    minhashBands(shingleSet(text, shingleN), numHashes, 0)
 
-  private val tokenPattern =
-    java.util.regex.Pattern.compile("[가-힣a-z0-9][가-힣a-z0-9\\-_/]+")
-
-  /** Poly-31 token hashes of `text` in ONE in-place pass — the shared
-    * front half of the sketch UDFs (simhash / minhash signature / LSH
-    * banding). Bit-identical to `tokenPattern.matcher(text.toLowerCase)`
-    * + per-char fold: for all-ASCII inputs the manual scanner IS that
-    * regex on the lowered string (a token is `[a-z0-9]` followed by
-    * one or more `[a-z0-9\-_/]`, matched greedily left-to-right, and
-    * Hangul cannot occur), with `A-Z` folded arithmetically instead of
-    * via a full lowered copy; any non-ASCII character falls back to
-    * the original toLowerCase+regex pipeline verbatim (Unicode
-    * lowering is context-sensitive — İ expands — so only the exact old
-    * code is trusted there; DedupSpec fuzzes fast == slow on mixed
-    * corpora). Why it exists: at the 17 GB sweep point the sketch
-    * UDFs' wall was dominated by the per-row lowered String copy, the
-    * regex matcher, and a BOXED ArrayBuffer[Long] of token hashes —
-    * none of which touch the hash math. Primitive array out, grown
-    * geometrically; no allocation beyond it on the fast path. */
-  private[graft] def tokenHashes(text: String): Array[Long] = {
-    if (text == null) return Array.emptyLongArray
-    val n = text.length
-    var ascii = true
-    var i = 0
-    while (ascii && i < n) {
-      if (text.charAt(i) >= 0x80) ascii = false
-      i += 1
-    }
-    if (!ascii) return tokenHashesRegex(text)
-    var out = new Array[Long](16)
-    var cnt = 0
-    @inline def fold(c: Char): Char = graft.plans.TokenScan.fold(c).toChar
-    @inline def isStart(c: Char): Boolean =
-      (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-    @inline def isCont(c: Char): Boolean =
-      isStart(c) || c == '-' || c == '_' || c == '/'
-    i = 0
-    while (i < n) {
-      val c0 = fold(text.charAt(i))
-      if (isStart(c0) && i + 1 < n && isCont(fold(text.charAt(i + 1)))) {
-        var h = 1125899906842597L * 31L + c0
-        i += 1
-        var c = fold(text.charAt(i))
-        while (isCont(c)) {
-          h = h * 31L + c
-          i += 1
-          c = if (i < n) fold(text.charAt(i)) else ' '
-        }
-        if (cnt == out.length) out = java.util.Arrays.copyOf(out, cnt * 2)
-        out(cnt) = h
-        cnt += 1
-      } else i += 1
-    }
-    if (cnt == out.length) out else java.util.Arrays.copyOf(out, cnt)
-  }
-
-  /** The original tokenize-and-hash pipeline, kept as the non-ASCII
-    * fallback (and the spec's reference semantics). Locale.ROOT (r18
-    * advisory): the ASCII fast path folds locale-independently, so the
-    * fallback must too — under a Turkish/Azeri DEFAULT locale a bare
-    * `toLowerCase` maps 'I' to dotless 'ı', making an all-ASCII doc
-    * and a mixed-script doc hash the same ASCII token differently. */
-  private def tokenHashesRegex(text: String): Array[Long] = {
-    val m = tokenPattern.matcher(text.toLowerCase(java.util.Locale.ROOT))
-    var out = new Array[Long](16)
-    var cnt = 0
-    while (m.find()) {
-      val t = m.group()
-      var h = 1125899906842597L
-      var k = 0
-      while (k < t.length) { h = h * 31L + t.charAt(k); k += 1 }
-      if (cnt == out.length) out = java.util.Arrays.copyOf(out, cnt * 2)
-      out(cnt) = h
-      cnt += 1
-    }
-    if (cnt == out.length) out else java.util.Arrays.copyOf(out, cnt)
-  }
-
-  /** Whole signature from the raw string in one compiled pass:
-    * tokenize (same pattern as [[graft.functions.TextFunctions.tokenize]]),
-    * hash each token once, then combine rolling windows of `shingleN`
-    * token hashes — no intermediate shingle strings. */
-  def minhashTextUdf(shingleN: Int, numHashes: Int) = udf((text: String) => {
-    val seeds = Array.tabulate(numHashes)(i => mix64(0x9e3779b97f4a7c15L * (i + 1)))
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    if (text != null) {
-      val tokHashes = tokenHashes(text)
-      if (tokHashes.length >= shingleN) {
-        var i = 0
-        while (i <= tokHashes.length - shingleN) {
-          var h = 1125899906842597L
-          var j = 0
-          while (j < shingleN) { h = h * 0x100000001b3L + tokHashes(i + j); j += 1 }
-          var s = 0
-          while (s < numHashes) {
-            val v = mix64(h ^ seeds(s))
-            if (v < mins(s)) mins(s) = v
-            s += 1
-          }
-          i += 1
-        }
-      }
-    }
-    mins.toSeq
-  })
-
-  private[graft] def mix64(h0: Long): Long = {
-    var h = h0
-    h ^= (h >>> 33); h *= 0xff51afd7ed558ccdL
-    h ^= (h >>> 33); h *= 0xc4ceb9fe1a85ec53L
-    h ^= (h >>> 33); h
-  }
-
-  /** Whole LSH banding from the raw text in one compiled pass
-    * (tokenize → signature → band buckets): the column-composed
-    * variant below re-evaluates the signature expression once per band
-    * after project-collapse (7.3 s → ~1 s on the sf0.1 corpus). */
-  def lshBandBucketsUdf(shingleN: Int, numHashes: Int, bands: Int) = {
-    val rowsPerBand = numHashes / bands
-    udf((text: String) => {
-      val seeds = Array.tabulate(numHashes)(i => mix64(0x9e3779b97f4a7c15L * (i + 1)))
-      val mins = Array.fill(numHashes)(Long.MaxValue)
-      if (text != null) {
-        val tokHashes = tokenHashes(text)
-        var i = 0
-        while (i <= tokHashes.length - shingleN) {
-          var h = 1125899906842597L
-          var j = 0
-          while (j < shingleN) { h = h * 0x100000001b3L + tokHashes(i + j); j += 1 }
-          var s = 0
-          while (s < numHashes) {
-            val v = mix64(h ^ seeds(s))
-            if (v < mins(s)) mins(s) = v
-            s += 1
-          }
-          i += 1
-        }
-      }
-      (0 until bands).map { b =>
-        var h = 1125899906842597L
-        var r = 0
-        while (r < rowsPerBand) { h = h * 0x100000001b3L + mins(b * rowsPerBand + r); r += 1 }
-        (b, mix64(h ^ seeds(b % numHashes)))
-      }
-    })
-  }
-
-  /** LSH banding: split a minhash signature into `bands` bands of
-    * `rowsPerBand` and hash each band → (bandIdx, bandHash) rows.
-    * Docs sharing any band bucket are near-dup candidates. */
-  def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.as("band"),
-        xxhash64(concat_ws(",",
-          transform(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-            x => x.cast("string"))), b).as("bucket")))
+  /** LSH band hashes of a shingle set: the signature split into `bands`
+    * bands of `numHashes / bands` mins, band `b` hashed as
+    * `mix64(fold(band mins) ^ seed(b))`. Docs sharing any band hash are
+    * near-dup candidates. A null or empty set bands its
+    * all-`Long.MaxValue` signature. `bands = 0` gives the signature. */
+  def minhashBands(set: Column, numHashes: Int, bands: Int): Column =
+    toCol(MinhashExpr(expression(set), numHashes, bands))
 
   /** MinHash-LSH near-duplicate candidate pairs with exact Jaccard
     * verification. Returns (idA, idB, jaccard) with idA < idB and
     * jaccard >= threshold. Candidates come ONLY from shared LSH
-    * buckets (equi-join); the exact verify runs on candidates alone. */
+    * buckets (equi-join); the exact verify runs on candidates alone.
+    * A row with no shingle (null text, or fewer than `shingleN`
+    * tokens) takes no part: it has no Jaccard with anything. */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3, numHashes: Int = 16,
                       bands: Int = 4, threshold: Double = 0.7,
                       maxBucketSize: Int = 10000): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val withSets = df.select(
-      col(idCol).as("id"),
-      array_distinct(shingles(tokenize(col(textCol)), shingleN)).as("sh"),
-      minhashSignature(col(textCol), shingleN, numHashes).as("sig"))
-    val bucketed = capBuckets(withSets
+    val withSets = df.select(col(idCol).as("id"),
+        shingleSet(col(textCol), shingleN).as("sh"))
       .select(col("id"), col("sh"),
-        explode(lshBands(col("sig"), bands, rowsPerBand)).as("b"))
-      .select(col("id"), col("sh"), col("b.band"), col("b.bucket")),
+        minhashBands(col("sh"), numHashes, bands).as("bands"))
+    // an empty set explodes no band; the guard sits inside the
+    // generator because a Filter (or the one Spark infers from a bare
+    // `posexplode(bands)`) is pushed below the projection with the
+    // sketch expressions inlined, evaluating them twice per row
+    val bucketed = capBuckets(withSets.select(col("id"), col("sh"), col("bands"),
+        posexplode(when(size(col("sh")) > 0, col("bands"))).as(Seq("band", "bucket"))),
       Seq("band", "bucket"), maxBucketSize, "minhash_neardups_buckets")
-    val a = bucketed.select(col("band"), col("bucket"),
-      col("id").as("idA"), col("sh").as("shA"))
-    val b = bucketed.select(col("band"), col("bucket"),
-      col("id").as("idB"), col("sh").as("shB"))
+    val a = bucketed.select(col("band"), col("bucket"), col("id").as("idA"),
+      col("sh").as("shA"), col("bands").as("bandsA"))
+    val b = bucketed.select(col("band"), col("bucket"), col("id").as("idB"),
+      col("sh").as("shB"), col("bands").as("bandsB"))
+    // A pair that shares k bands is emitted k times by the join. Band b
+    // matches iff bandsA(b) == bandsB(b) — the join condition itself —
+    // so keeping each pair at its first matching band is a row-local
+    // filter, not a dropDuplicates shuffle (as in simhashNearDups, with
+    // the same recall caveat under capBuckets).
+    val firstMatchBand = (0 until bands - 1).foldRight(lit(bands - 1)) { (k, rest) =>
+      when(col("bandsA")(k) === col("bandsB")(k), lit(k)).otherwise(rest)
+    }
     a.join(b, Seq("band", "bucket")).filter(col("idA") < col("idB"))
+      .filter(col("band") === firstMatchBand)
       .select(col("idA"), col("idB"),
         (size(array_intersect(col("shA"), col("shB"))).cast("double") /
           size(array_union(col("shA"), col("shB")))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .dropDuplicates("idA", "idB")
   }
 
-  /** 64-bit SimHash over word tokens: per-bit weighted majority of
-    * token hashes. One compiled pass from the raw string (precompiled
-    * tokenizer, same pattern as TextFunctions.tokenize — avoids the
-    * interpreted regexp_extract_all feeding a UDF boundary). */
-  val simhashUdf = udf((text: String) => {
-    val counts = new Array[Int](64)
-    if (text != null) {
-      val toks = tokenHashes(text) // poly-31 seed 1125899906842597L
-      var ti = 0
-      while (ti < toks.length) {
-        var h = toks(ti)
-        // finalize (xorshift mix) so low bits are well distributed
-        h ^= (h >>> 33); h *= 0xff51afd7ed558ccdL; h ^= (h >>> 33)
-        var b = 0
-        while (b < 64) { if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1; b += 1 }
-        ti += 1
-      }
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
-    out
-  })
-  /** r19: the committed simhash is the codegen in-place expression
-    * ([[graft.plans.TextScan.simhash64]] — byte tokenizer + bit-sliced
-    * ±1 counters, bit-identical by construction and fuzz-pinned in
-    * TextScanSpec); [[simhashUdf]] above stays as the reference
-    * semantics. At x1000 the UDF's per-token 64-iteration counter loop
-    * plus the String decode was 95 % of simhash_neardups' 3.9 s
-    * (r18 stage cuts, bench_history/BENCH_FULL_r18.json). */
+  /** 64-bit SimHash over word tokens, null text → 0: the codegen
+    * in-place expression [[graft.plans.TextScan.simhash64]] over
+    * [[graft.plans.SketchScan]]'s tokens. */
   def simhash(text: Column): Column =
-    // coalesce preserves the UDF's null contract (null text → sketch 0)
     coalesce(graft.plans.TextScan.simhash(text), lit(0L))
 
   /** SimHash near-duplicate candidate pairs: band the 64-bit sketch
@@ -266,8 +110,7 @@ object Dedup {
     * exact Hamming verify ≤ `maxHamming`. Pigeonhole guarantees full
     * recall for maxHamming ≤ 3: four bands can't all absorb three
     * differing bits. (idA < idB; hot buckets capped like the other LSH
-    * paths.) */
-  /** Near-dup pairs between DISTINCT sketches, each represented by its
+    * paths.) Pairs are between DISTINCT sketches, each represented by its
     * minimum id, with group sizes attached (`sizeA`/`sizeB`). Exact
     * copies share a sketch, and a boilerplate-heavy corpus puts
     * thousands of copies behind one sketch — banding the distinct
@@ -319,16 +162,12 @@ object Dedup {
   /** Eval-set decontamination (train-test overlap): corpus docs
     * sharing any word `n`-gram with the eval set, with per-doc
     * collision counts (distinct grams). Eval benchmarks are small and
-    * bounded, so their distinct shingle set is collected (one bounded
-    * driver scalar, same bound a broadcast join would ship) and
-    * broadcast as a hash set; ONE compiled pass per corpus doc then
-    * slides over its tokens counting distinct colliding grams
-    * row-locally — no explode, no join, no aggregation, and the
-    * 100 TB corpus side is touched exactly once. (The earlier
-    * explode→broadcast-join→groupBy shape materialized every corpus
-    * shingle as a row: ~20× slower at the 1.7 GB bench point for
-    * identical results.) Callers drop or flag the returned ids before
-    * training.
+    * bounded, so their distinct shingle hashes are collected (one
+    * bounded driver scalar, same bound a broadcast join would ship),
+    * sorted and broadcast; each corpus doc's shingle set is then probed
+    * row-locally — no explode, no join, no aggregation, and the corpus
+    * side is touched exactly once. Callers drop or flag the returned
+    * ids before training.
     *
     * `maxEvalGrams` bounds the driver/broadcast footprint LOUDLY: an
     * "eval set" that is actually corpus-sized fails with a diagnosis
@@ -339,48 +178,27 @@ object Dedup {
                     textCol: String, shingleN: Int,
                     maxEvalGrams: Int = 1 << 24): DataFrame = {
     val evalGrams = evalSet
-      .select(explode(array_distinct(
-        shingles(tokenize(col(textCol)), shingleN))).as("_sh"))
-      .distinct().limit(maxEvalGrams + 1).collect().map(_.getString(0)).toSet
-    require(evalGrams.size <= maxEvalGrams,
+      .select(explode(shingleSet(col(textCol), shingleN)).as("_sh"))
+      .distinct().limit(maxEvalGrams + 1).collect().map(_.getLong(0))
+    require(evalGrams.length <= maxEvalGrams,
       s"contamination: eval set exceeds maxEvalGrams=$maxEvalGrams distinct " +
         s"$shingleN-grams — that is not an eval benchmark; raise maxEvalGrams " +
         "deliberately or decontaminate with a distributed join instead")
+    java.util.Arrays.sort(evalGrams)
     val bc = evalSet.sparkSession.sparkContext.broadcast(evalGrams)
-    val n = shingleN
-    val hits = udf { toks: Seq[String] =>
-      if (toks == null || toks.length < n) 0L
-      else {
-        val set = bc.value
-        val seen = new java.util.HashSet[String]()
-        val sb = new java.lang.StringBuilder
-        var cnt = 0L
-        var i = 0
-        while (i + n <= toks.length) {
-          sb.setLength(0)
-          var j = 0
-          while (j < n) {
-            if (j > 0) sb.append(' ')
-            sb.append(toks(i + j))
-            j += 1
-          }
-          val g = sb.toString
-          if (set.contains(g) && seen.add(g)) cnt += 1
-          i += 1
-        }
-        cnt
-      }
-    }
     corpus
-      .select(col(idCol), hits(tokenize(col(textCol))).as("n_collisions"))
+      .select(col(idCol),
+        toCol(SketchHitsExpr(expression(shingleSet(col(textCol), shingleN)), bc))
+          .as("n_collisions"))
       .filter(col("n_collisions") > 0)
   }
 
   /** Exact n-gram Jaccard between two text columns (verification
-    * scalar; candidate generation must come from LSH, never this). */
+    * scalar; candidate generation must come from LSH, never this).
+    * Two texts with no shingle have Jaccard 1.0. */
   def ngramJaccard(a: Column, b: Column, n: Int): Column = {
-    val sa = array_distinct(shingles(tokenize(a), n))
-    val sb = array_distinct(shingles(tokenize(b), n))
+    val sa = shingleSet(a, n)
+    val sb = shingleSet(b, n)
     when(size(sa) === 0 && size(sb) === 0, 1.0)
       .otherwise(size(array_intersect(sa, sb)).cast("double") /
         size(array_union(sa, sb)))
@@ -437,11 +255,11 @@ object Dedup {
     * the `<name>` PREFIX, not the exact string) carrying
     * `dropped_rows`, so the loss is visible in query metrics, never
     * silent. Recall note (r12 advisory): downstream row-local
-    * first-matching-band dedup (simhashNearDups) keys on a pair's
-    * EARLIEST matching band — if that band's bucket was capped the
-    * pair is dropped even when a later uncapped band matches, so
-    * capping costs slightly more recall than the per-band drop counts
-    * alone suggest. Capped buckets forfeit the LSH recall guarantee
+    * first-matching-band dedup (simhashNearDups, minhashNearDups)
+    * keys on a pair's EARLIEST matching band — if that band's bucket
+    * was capped the pair is dropped even when a later uncapped band
+    * matches, so capping costs slightly more recall than the per-band
+    * drop counts alone suggest. Capped buckets forfeit the LSH recall guarantee
     * either way; size `cap` so the metric reads 0 on healthy corpora.
     * The window count shuffles on the same key as the
     * candidate join that follows, so the guard adds no extra exchange

@@ -101,24 +101,18 @@ object TemporalJoin {
     * tagging the row as left-only. Payloads are (name, expression)
     * pairs evaluated on the source row.
     *
-    * `rTieBreak = Nil` requires UNIQUE right rows per (keys, ts):
-    * with no tie-break, duplicate right rows at an equal (keys, ts)
-    * sort in nondeterministic relative order and the running `last`
-    * picks an arbitrary one. The base [[asof]] documents the same
-    * uniqueness contract; here the empty case warns loud (same style
-    * as toDailySpine) because the fused form's doc says the tie-break
-    * "replaces" the pre-aggregation — it only does if you pass one.
+    * `rTieBreak` must be non-empty: without one, duplicate right rows
+    * at an equal (keys, ts) sort in nondeterministic relative order and
+    * the running `last` would pick an arbitrary one.
     */
   def asofFused(src: DataFrame, isLeft: Column, isRight: Column,
                 keys: Seq[String], ts: Column,
                 lPayload: Seq[(String, Column)],
                 rPayload: Seq[(String, Column)],
-                rTieBreak: Seq[Column] = Nil): DataFrame = {
-    if (rTieBreak.isEmpty)
-      System.err.println(
-        "[graft] asofFused: empty rTieBreak — duplicate right rows at " +
-          "an equal (keys, ts) match nondeterministically; pass a " +
-          "tie-break or guarantee unique (keys, ts) right rows")
+                rTieBreak: Seq[Column]): DataFrame = {
+    require(rTieBreak.nonEmpty,
+      "asofFused: rTieBreak is empty — duplicate right rows at an equal " +
+        "(keys, ts) would match nondeterministically")
     val lCols = lPayload.map { case (n, c) => c.as(n) }
     val tagged = src
       .filter(isLeft || isRight)

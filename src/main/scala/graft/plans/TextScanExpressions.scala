@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Static per-row scan kernels for the text-sketch expressions below —
   * the r19 instalment of the r18 "codegen scan instead of UDF"
-  * treatment (ContainsIgnoreCase, tokenHashes). Both kernels read the
+  * treatment (ContainsIgnoreCase). Both kernels read the
   * UTF-8 buffer IN PLACE: the UDF forms paid a full UTF8String→String
   * decode-copy per row before doing any work — at the 17 GB sweep
   * point that boundary was ~all of lang_stopwords' 4.8 s (6.2×) and
@@ -19,10 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * LOCALE: tokens lower by [[TokenScan]]'s one rule (ASCII folded in
   * place, anything else with Locale.ROOT), the same contract as
-  * [[graft.operators.Dedup.tokenHashes]] and [[ContainsIgnoreCase]].
+  * [[SketchScan]] and [[ContainsIgnoreCase]].
   */
 object TextScan {
-  import TokenScan.fold
 
   /** Count of whitespace-delimited tokens equal (case-folded) to one
     * of `set`'s needles. Exactly `text.toLowerCase(Locale.ROOT)
@@ -35,35 +34,22 @@ object TextScan {
     hits
   }
 
-  /** 64-bit SimHash over word tokens, bit-identical to
-    * [[graft.operators.Dedup.simhashUdf]] (per-bit ±1 majority of
-    * finalized token hashes) with two structural changes that keep
-    * the math the same:
-    *   - the tokenizer runs directly on the UTF-8 bytes for all-ASCII
-    *     rows (same scanner as Dedup.tokenHashes' fast path — ASCII
-    *     chars ARE their bytes; non-ASCII rows fall back to the
-    *     String pipeline verbatim);
-    *   - the per-bit counters are BIT-SLICED: plane k holds bit k of
-    *     all 64 ones-counters, and adding a token's 64-bit mask is an
-    *     amortized-O(1) ripple-carry increment (~2 plane ops/token)
-    *     instead of the 64-iteration per-token loop — the loop that
-    *     was ~all of the sketch scan's CPU at x1000. Majority test:
-    *     counts(b) = 2·ones(b) − total > 0 ⟺ 2·ones(b) > total.
-    * TextScanSpec fuzz-pins expression == UDF on mixed corpora. */
+  /** 64-bit SimHash over [[SketchScan]]'s tokens: per-bit ±1 majority
+    * of the finalized token hashes. The per-bit counters are
+    * BIT-SLICED: plane k holds bit k of all 64 ones-counters, and adding
+    * a token's 64-bit mask is an amortized-O(1) ripple-carry increment
+    * (~2 plane ops/token) instead of a 64-iteration per-token loop — the
+    * loop that was ~all of the sketch scan's CPU at x1000. Majority
+    * test: counts(b) = 2·ones(b) − total > 0 ⟺ 2·ones(b) > total.
+    * TextScanSpec fuzz-pins it against the counter loop over the regex
+    * tokenizer (TextReference). */
   def simhash64(s: UTF8String): Long = {
     val planes = new Array[Long](33) // total < 2^31 tokens → ≤32 planes
     var total = 0L
-    val n = s.numBytes()
-    var ascii = true
-    var i = 0
-    while (ascii && i < n) {
-      if ((s.getByte(i) & 0x80) != 0) ascii = false
-      i += 1
-    }
-    @inline def add(h0: Long): Unit = {
-      // finalize (xorshift mix) so low bits are well distributed —
-      // identical to the UDF's per-token mix
-      var h = h0
+    val c = new SketchScan.Cursor(s)
+    while (c.next()) {
+      // finalize (xorshift mix) so low bits are well distributed
+      var h = c.hash
       h ^= (h >>> 33); h *= 0xff51afd7ed558ccdL; h ^= (h >>> 33)
       var carry = h
       var k = 0
@@ -72,31 +58,6 @@ object TextScan {
         k += 1
       }
       total += 1L
-    }
-    if (ascii) {
-      @inline def isStart(c: Int): Boolean =
-        (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-      @inline def isCont(c: Int): Boolean =
-        isStart(c) || c == '-' || c == '_' || c == '/'
-      i = 0
-      while (i < n) {
-        val c0 = fold(s.getByte(i))
-        if (isStart(c0) && i + 1 < n && isCont(fold(s.getByte(i + 1)))) {
-          var h = 1125899906842597L * 31L + c0
-          i += 1
-          var c = fold(s.getByte(i))
-          while (isCont(c)) {
-            h = h * 31L + c
-            i += 1
-            c = if (i < n) fold(s.getByte(i)) else ' '
-          }
-          add(h)
-        } else i += 1
-      }
-    } else {
-      val toks = graft.operators.Dedup.tokenHashes(s.toString)
-      var t = 0
-      while (t < toks.length) { add(toks(t)); t += 1 }
     }
     var out = 0L
     var b = 0

@@ -93,4 +93,24 @@ class ContractSpec extends SparkSpec {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("case mappings without Locale.ROOT:\n", "\n", ""))
   }
+
+  test("System.err appears in the engine packages only where allowed") {
+    // an engine decision is a named event, not a stderr line; the one
+    // line left is toDailySpine's, until j3 gets a bounded pass
+    val allowed = "TimeSeriesOps.scala"
+    val dirs = Seq("operators", "plans", "search", "ingest", "sources",
+      "streaming", "functions")
+    val hits = for {
+      d <- dirs
+      f <- java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft", d))
+        .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.replaceAll("(^|\\s)//.*$", "")
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      if code.contains("System.err")
+    } yield (f.getFileName.toString, s"$f:${i + 1}: ${line.trim}")
+    val (ok, bad) = hits.partition(_._1 == allowed)
+    assert(bad.isEmpty, bad.map(_._2).mkString("System.err outside the ratchet:\n", "\n", ""))
+    assert(ok.size <= 1, ok.map(_._2).mkString("more than one System.err in " + allowed + ":\n", "\n", ""))
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{HashEmbedder, Ingest}
-import graft.operators.TextAnalysis
+import graft.operators.{Dedup, TextAnalysis}
 import graft.search.SearchPipeline
 
 /** The lowering contract: every text path lowers with `Locale.ROOT`
@@ -91,6 +91,15 @@ class LocaleSpec extends SparkSpec {
   test("bm25Rank is the same under tr as under ROOT") {
     sameUnderTr(rows(TextAnalysis.bm25Rank(corpus, "doc_id", "text",
       Seq("in", "index"))))
+  }
+
+  test("the near-duplicate sketches are the same under tr as under ROOT") {
+    sameUnderTr(rows(corpus.select(col("doc_id"), Dedup.simhash(col("text")),
+      Dedup.minhashSignature(col("text"), 3, 16), Dedup.shingleSet(col("text"), 3))))
+    val evalSet = Seq((100L, "in the INDEX of ISTANBUL")).toDF("doc_id", "text")
+    val hits = rows(Dedup.contamination(corpus, evalSet, "doc_id", "text", 3))
+    assert(hits.nonEmpty)
+    sameUnderTr(rows(Dedup.contamination(corpus, evalSet, "doc_id", "text", 3)))
   }
 
   test("HashEmbedder.embed is the same under tr as under ROOT") {

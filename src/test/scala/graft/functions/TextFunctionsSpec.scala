@@ -27,14 +27,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(out == "file 123")
   }
 
-  test("tokenize mirrors the reference anchor tokenizer (2+ chars, lowered)") {
-    val out = Seq("Self-Attention은 RAG와 FAISS를 쓴다 x").toDF("t")
-      .select(tokenize($"t")).head.getSeq[String](0)
-    assert(out.contains("self-attention은"))
-    assert(out.contains("rag와"))
-    assert(!out.contains("x")) // single char excluded
-  }
-
   test("koParticle picks 은/는 by final jamo") {
     val df = Seq("어텐션", "메커니즘", "RAG").toDF("t")
       .select($"t", koParticle($"t").as("p")).collect()
@@ -54,15 +46,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(out(1).startsWith(out.head.takeRight(3)))
     // coverage: concatenating chunks minus overlaps rebuilds the string
     assert(out.map(_.drop(3)).mkString.prepended(s.charAt(0)).length >= s.length - 10)
-  }
-
-  test("shingles builds word n-grams; short input → empty") {
-    val out = Seq("a1 b2 c3 d4").toDF("t")
-      .select(shingles(split($"t", " "), 3)).head.getSeq[String](0)
-    assert(out == Seq("a1 b2 c3", "b2 c3 d4"))
-    val short = Seq("a1 b2").toDF("t")
-      .select(shingles(split($"t", " "), 3)).head.getSeq[String](0)
-    assert(short.isEmpty)
   }
 
   test("replaceEnToKo substitutes the reference term table, case-insensitive") {

@@ -1,9 +1,11 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
 
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val base = "the quick brown fox jumps over the lazy dog and keeps " +
@@ -27,6 +29,32 @@ class DedupSpec extends SparkSpec {
     assert(pairs.contains((1L, 2L)))           // identical
     assert(pairs.contains((1L, 3L)) || pairs.contains((2L, 3L))) // near-dup
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))         // unrelated
+  }
+
+  test("minhashNearDups leaves out docs with no shingle instead of dividing 0 by 0") {
+    // docs 1 and 2 have fewer than 3 tokens: both signatures are all
+    // Long.MaxValue, so banding them would pair them with an empty
+    // union (DuckDB's oracle divides to NULL and drops such a pair)
+    val short = Seq((1L, "hi there"), (2L, "ok"), (4L, "the quick brown fox jumps"),
+      (5L, "The quick brown fox jumps")).toDF("id", "text")
+    val pairs = Dedup.minhashNearDups(short, "id", "text", threshold = 0.5)
+      .select("idA", "idB").as[(Long, Long)].collect().toSeq
+    assert(pairs == Seq((4L, 5L)))
+  }
+
+  test("minhashNearDups keeps a pair at its first shared band, with no (idA, idB) aggregate") {
+    val out = Dedup.minhashNearDups(docs, "id", "text",
+      shingleN = 3, numHashes = 16, bands = 8, threshold = 0.5)
+    val pairs = out.select("idA", "idB").as[(Long, Long)].collect().toSeq
+    assert(pairs.contains((1L, 2L)))
+    assert(pairs.distinct == pairs, s"a pair is reported more than once: $pairs")
+    out.collect()
+    val keyed = collect(out.queryExecution.executedPlan) {
+      case a: BaseAggregateExec =>
+        a.groupingExpressions.flatMap(_.references.map(_.name)).toSet
+    }
+    assert(!keyed.exists(k => k.contains("idA") && k.contains("idB")),
+      s"aggregate keyed on the pair: $keyed")
   }
 
   test("minhash signature of identical texts is identical; jaccard of shared bands high") {
@@ -146,41 +174,5 @@ class DedupSpec extends SparkSpec {
     assert(out(0) == out(1))
     // antipodal vector flips every sign bit
     assert((out(0) ^ out(2)) == ((1L << 12) - 1))
-  }
-
-  test("ASCII fast-path tokenizer is bit-identical to the toLowerCase+regex pipeline") {
-    // reference semantics, reimplemented here verbatim from the old
-    // UDF bodies: lowered copy, regex scan, poly-31 hash per token
-    val pat = java.util.regex.Pattern.compile("[가-힣a-z0-9][가-힣a-z0-9\\-_/]+")
-    def reference(text: String): Seq[Long] = {
-      val m = pat.matcher(text.toLowerCase)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (m.find()) {
-        val t = m.group()
-        var h = 1125899906842597L
-        var k = 0
-        while (k < t.length) { h = h * 31L + t.charAt(k); k += 1 }
-        out += h
-      }
-      out.toSeq
-    }
-    val rnd = new scala.util.Random(7)
-    val ascii = "abcXYZ 019-_/.,!\t" * 3
-    val mixed = ascii + "한국어 텍스트 İstanbul KELVINK"
-    val fuzz = (0 until 3000).map { i =>
-      val alpha = if (i % 3 == 0) mixed else ascii
-      (0 until rnd.nextInt(60)).map(_ => alpha(rnd.nextInt(alpha.length))).mkString
-    }
-    val edges = Seq("", "a", "ab", "a b", "ab-", "-ab", "a/b_c-d", "AB",
-      "x" * 500, "end ab", "ab end", "가나", "a가b", "9/11", "A1-B2/c3")
-    (fuzz ++ edges).foreach { s =>
-      val fast = graft.operators.Dedup.tokenHashes(s).toSeq
-      assert(fast == reference(s), s"mismatch on ${s.take(80).inspect()}")
-    }
-    assert(Dedup.tokenHashes(null).isEmpty)
-  }
-
-  private implicit class Insp(s: String) {
-    def inspect(): String = s.map(c => if (c < 128) c.toString else f"\\u${c.toInt}%04x").mkString
   }
 }

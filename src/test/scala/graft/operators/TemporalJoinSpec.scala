@@ -138,6 +138,22 @@ class TemporalJoinSpec extends SparkSpec {
       c.getMessage != null && c.getMessage.contains("overlap")))
   }
 
+  test("asofFused requires a right-side tie-break") {
+    val ev = Seq((1L, 1L, 1700000000000000L, "purchase"))
+      .toDF("event_id", "user_id", "_us", "event_type")
+      .select(col("event_id"), col("user_id"),
+        timestamp_micros(col("_us")).as("ts"), col("event_type"))
+    intercept[IllegalArgumentException] {
+      TemporalJoin.asofFused(ev,
+        isLeft = col("event_type") === "purchase",
+        isRight = col("event_type") === "click",
+        keys = Seq("user_id"), ts = col("ts"),
+        lPayload = Seq("event_id" -> col("event_id")),
+        rPayload = Seq("click_id" -> col("event_id")),
+        rTieBreak = Nil)
+    }
+  }
+
   test("asofFused equals the two-table asof (+ brute force) on a seeded event stream, incl. ties") {
     // a single-source stream of 'purchase' and 'click' rows per user,
     // timestamps drawn from a SMALL grid so exact-tie cases (click at

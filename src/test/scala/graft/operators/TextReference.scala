@@ -173,4 +173,49 @@ object TextReference {
       }
       (n, s / n)
     })
+
+  /** The reference's anchor tokenizer as `java.util.regex` over the
+    * text lowered with `Locale.ROOT`: the semantics
+    * graft.plans.SketchScan implements as a byte scan. */
+  private val sketchPattern =
+    java.util.regex.Pattern.compile("[가-힣a-z0-9][가-힣a-z0-9\\-_/]+")
+
+  def sketchTokens(text: String): Seq[String] = {
+    val m = sketchPattern.matcher(text.toLowerCase(java.util.Locale.ROOT))
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (m.find()) out += m.group()
+    out.toSeq
+  }
+
+  /** Poly-31 hash of a token's UTF-16 units. */
+  def sketchHash(tok: String): Long = {
+    var h = 1125899906842597L
+    var k = 0
+    while (k < tok.length) { h = h * 31L + tok.charAt(k); k += 1 }
+    h
+  }
+
+  def sketchTokenHashes(text: String): Seq[Long] =
+    if (text == null) Nil else sketchTokens(text).map(sketchHash)
+
+  /** The compiled SimHash UDF the bit-sliced kernel replaced: per-bit
+    * ±1 counters over the finalized token hashes, null text → 0. */
+  def simhash(text: String): Long = {
+    val counts = new Array[Int](64)
+    sketchTokenHashes(text).foreach { t =>
+      var h = t
+      h ^= (h >>> 33); h *= 0xff51afd7ed558ccdL; h ^= (h >>> 33)
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
+        b += 1
+      }
+    }
+    var out = 0L
+    var b = 0
+    while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
+    out
+  }
+
+  val simhashUdf: UserDefinedFunction = udf((text: String) => simhash(text))
 }

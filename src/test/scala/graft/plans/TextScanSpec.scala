@@ -7,9 +7,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Pins the r19 codegen scan kernels (TextScan.stopwordHits /
   * TextScan.simhash64) to the UDF pipelines they replaced — on the
   * real sf0.001 corpus AND on fuzzed mixed-script strings, the same
-  * discipline as the r18 tokenHashes/ContainsIgnoreCase pins. The
-  * stopword kernel runs on TokenScan's cursor and a TokenTable set;
-  * its reference is `toLowerCase(Locale.ROOT).split("\\s+")`. */
+  * discipline as the ContainsIgnoreCase pins. The stopword kernel runs
+  * on TokenScan's cursor and a TokenTable set; its reference is
+  * `toLowerCase(Locale.ROOT).split("\\s+")`. The simhash reference is
+  * TextReference's counter loop over the regex tokenizer. */
 class TextScanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -22,29 +23,6 @@ class TextScanSpec extends SparkSpec {
       val toks = s.toLowerCase(java.util.Locale.ROOT).split("\\s+")
       toks.count(enStops.contains)
     }
-
-  private def refSimhash(text: String): Long = {
-    // verbatim port of the r18 simhashUdf body (the spec's reference)
-    val counts = new Array[Int](64)
-    if (text != null) {
-      val toks = graft.operators.Dedup.tokenHashes(text)
-      var ti = 0
-      while (ti < toks.length) {
-        var h = toks(ti)
-        h ^= (h >>> 33); h *= 0xff51afd7ed558ccdL; h ^= (h >>> 33)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
-        ti += 1
-      }
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
 
   private val fuzzAlphabet =
     "ab AB 09-_/ \t\n\f\r the and of to is a in that " +
@@ -74,7 +52,8 @@ class TextScanSpec extends SparkSpec {
   test("simhash64 kernel == per-bit counter reference on fuzzed mixed-script strings") {
     fuzzStrings.foreach { s =>
       val got = TextScan.simhash64(UTF8String.fromString(s))
-      assert(got == refSimhash(s), s"mismatch on ${s.take(80).toList}")
+      assert(got == graft.operators.TextReference.simhash(s),
+        s"mismatch on ${s.take(80).toList}")
     }
   }
 
@@ -87,7 +66,7 @@ class TextScanSpec extends SparkSpec {
     assert(sw == 0L, s"$sw rows disagree on stopword hits")
     val sh = docs.select(
       graft.operators.Dedup.simhash(col("text")).as("a"),
-      graft.operators.Dedup.simhashUdf(col("text")).as("b"))
+      graft.operators.TextReference.simhashUdf(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(sh == 0L, s"$sh rows disagree on simhash")
   }
