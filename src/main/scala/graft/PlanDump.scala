@@ -13,15 +13,16 @@ import org.apache.spark.sql.execution.SimpleMode
 object PlanDump {
 
   private val cases: Seq[(String, String)] = Seq(
-    "j4_semijoin" -> ("Bitmap semi-join: NO join operator in the plan — the " +
-      "existence probe is a codegen `bitmap_contains` filter fused into the " +
-      "lineitem scan. The bitset is built DISTRIBUTED (r13): per-partition " +
-      "OR into local long[] + treeReduce, so the driver never holds a key " +
-      "row — only the range/8-byte bitset it torrent-broadcasts. Replaces " +
+    "j4_semijoin" -> ("Dense-array semi-join: NO join operator in the plan — " +
+      "the existence probe is the codegen filter `dense_lookup(l_orderkey) >= 0` " +
+      "fused into the lineitem scan. The key side is denseLookupJoin's " +
+      "payload-free case: one constant payload, so the dense array is one " +
+      "bit per key of span (a bitset), built in ONE distributed pass " +
+      "(≤ 8 coalesced partial arrays folded on the driver), so the driver " +
+      "never holds a key row — only the span/8-byte array it torrent-broadcasts. Replaces " +
       "the broadcast LEFT SEMI whose serial driver-side HashedRelation " +
       "build was 75% of the wall at the 100x point (r12 bench " +
-      "attribution); the r12 eager driver collect (~0.85 s of j4's wall) is gone " +
-      "too. A key span past the bitmap budget (maxBitmapBytes) hands the " +
+      "attribution). A key span past the budget (maxBitmapBytes) hands the " +
       "semi join to Spark's planner: a plain LeftSemi join."),
     "salted_join" -> ("Dense dictionary-lookup join (r13): fact x dim on a dense " +
       "unique PK with a low-cardinality payload plans as a codegen " +
@@ -39,7 +40,8 @@ object PlanDump {
       "r13 ran a sizing aggregate + a distinct() dictionary job + a fill " +
       "pass): per-partition local codes arrays with insertion-order local " +
       "dictionaries, merged with code remapping on the driver — never a " +
-      "dim row, never a distinct job). " +
+      "dim row, never a distinct job). The one-bit array is " +
+      "the same structure j4_semijoin builds over the same URGENT orderkeys. " +
       "Skew cannot exist because nothing shuffles; in a big-x-big shuffle " +
       "join, AQE's skew-join split owns skew."),
     "v1_knn" -> ("Brute-force kNN: pruned parquet scan (ReadSchema = id+embedding " +
@@ -48,7 +50,7 @@ object PlanDump {
       "k-row driver merge, no shuffle."),
     "q3_shipping" -> ("TPC-H-Q3 shape, ATTACH-AFTER-AGG since r15: selective " +
       "filters pushed to all three scans, BOTH dim cuts are scan-fused " +
-      "`bitmap_contains` probes (customer -> orders because the unique PK " +
+      "one-bit `dense_lookup(...) >= 0` probes (customer -> orders because the unique PK " +
       "makes inner = semi; qualifying orderkeys -> lineitem because the " +
       "(date, priority) payload is only needed for the 10 SURVIVING rows), " +
       "so the fact job is a bare 3-column probe-scan + narrow groupBy on " +
@@ -57,7 +59,7 @@ object PlanDump {
       "as a pushed filter, r16) + a 10-row broadcast join — the r14 " +
       "88.8k-row/12.6 MB oc broadcast, its serial HashedRelation build, " +
       "AND the r15 broadcast-exchange collect are gone. The two eager " +
-      "bitmap builds are memoized in the session's EngineState per " +
+      "dense-array builds are memoized in the session's EngineState per " +
       "canonicalized keys plan plus a snapshot of the keys' input files " +
       "(reuse=true, 8 least-recently-used entries), so a re-constructed " +
       "query over unchanged tables does not re-pay them, and a rewritten " +

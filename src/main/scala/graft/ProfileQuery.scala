@@ -21,9 +21,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * Per rep it prints the wall (DataFrame construction included),
   * construction time, Spark jobs, the union of the job intervals,
-  * stages and tasks. Construction is timed on its own because eager
-  * operators (bitmapSemiJoin, denseLookupJoin) collect and build at
-  * construction.
+  * stages and tasks. Construction is timed on its own because the
+  * scan-fused joins (bitmapSemiJoin, denseLookupJoin) build and
+  * broadcast their dense arrays at construction.
   * `wall - job_union` is driver-only time: planning, eager builds
   * between jobs, broadcast collect/build, commit. On the last rep it
   * prints the executed plan with every operator's non-zero SQL metrics.

@@ -44,17 +44,19 @@ object Joins {
       ("SELECT r_name, count(*) AS n_customers FROM customer JOIN nation ON c_nationkey = n_nationkey " +
         "JOIN region ON n_regionkey = r_regionkey GROUP BY r_name ORDER BY r_name")),
     QuerySpec("j4_semijoin", ((s, d) => {
-      // semi-join existence check via broadcast BITMAP
-      // (Relational.bitmapSemiJoin): the r12 bench attribution showed
-      // the broadcast semi join's wall was 75% driver chain — collect
-      // 0.14 s + SINGLE-THREADED 3M-row LongHashedRelation build
-      // 1.00 s + 254 MB transmit 0.26 s at x100 (and the SHUFFLE_HASH
+      // semi-join existence check via a broadcast one-bit dense array
+      // (Relational.bitmapSemiJoin, denseLookupJoin's payload-free
+      // case): the r12 bench attribution showed the broadcast semi
+      // join's wall was 75% driver chain — collect 0.14 s +
+      // SINGLE-THREADED 3M-row LongHashedRelation build 1.00 s +
+      // 254 MB transmit 0.26 s at x100 (and the SHUFFLE_HASH
       // alternative loses 2.3×: the 60M-row fact exchange dwarfs the
-      // build). Existence needs no hash table: the same collect feeds
-      // a ~15 ms bitset OR-build, the broadcast is 7.5 MB, and the
-      // probe fuses into the fact scan as a codegen filter — no join
-      // operator, fact never shuffled. A key span past the bitmap
-      // budget falls back to Spark's semi join inside the operator.
+      // build). Existence needs no hash table: the keys build a bit
+      // per key of span in one distributed pass, the broadcast is
+      // 7.5 MB, and the probe fuses into the fact scan as the codegen
+      // filter dense_lookup(l_orderkey) >= 0 — no join operator, fact
+      // never shuffled. A key span past the budget falls back to
+      // Spark's semi join inside the operator.
       val li = t(s, d, "lineitem")
       val urgent = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey")
@@ -137,8 +139,9 @@ object Joins {
       // TPC-H-Q3 shape: selective dim filters on both join sides, FK
       // chain customer→orders→lineitem, revenue agg, top-10. The fact
       // (lineitem) is NEVER shuffled — and since r15 it is never
-      // JOINED either: both dim cuts are scan-fused bitmap probes
-      // (customer→orders: c_custkey is a unique PK so inner ≡ semi;
+      // JOINED either: both dim cuts are scan-fused one-bit
+      // dense_lookup probes (customer→orders: c_custkey is a unique PK
+      // so inner ≡ semi;
       // qualifying-orderkey set→lineitem likewise, because the
       // (o_orderdate, o_orderpriority) payload is only needed for the
       // 10 SURVIVING rows, not per fact row). ATTACH-AFTER-AGG: the
@@ -149,12 +152,12 @@ object Joins {
       // aggregated rows into one cheap orders re-scan. This replaces
       // r14's 88,800-row / 12.6 MB oc broadcast (0.105 s driver
       // collect + serial HashedRelation build, r14 bench attribution)
-      // with a bitmap that builds distributed and ships
+      // with a one-bit dense array that builds distributed and ships
       // executor-once. The r13 attach-after A/B that lost (1.29 s vs
-      // 1.24 s) predated the bitmap fact cut — re-tried per the r14
+      // 1.24 s) predated the scan-fused fact cut — re-tried per the r14
       // brief with the probe doing the semi, it now wins (r14 stage
       // timings, HISTORY.md round 14).
-      // Scale posture: both bitmaps grow with the key SPAN (bits),
+      // Scale posture: both arrays grow with the key SPAN (bits),
       // not row count; past maxBitmapBytes (64 MB: a 512 M-key span)
       // the operator hands that cut to Spark's own semi join.
       val c = t(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")

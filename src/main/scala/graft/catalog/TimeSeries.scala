@@ -247,8 +247,10 @@ object TimeSeries {
       // the join's wall (r12 bench attribution). What runs here:
       // Relational.denseLookupJoin — the dim's key is a dense unique
       // PK and the payload is low-cardinality, so the "join" is a
-      // broadcast byte array of dictionary codes (span bytes ≈ 60 MB,
-      // one ~30 ms array fill) probed by a codegen dense_lookup fused
+      // broadcast bit-packed array of dictionary codes (the URGENT
+      // filter leaves one payload value: one bit per key of span,
+      // 7.5 MB at x100 — the same array j4_semijoin builds over the
+      // same orderkeys) probed by a codegen dense_lookup fused
       // into the lineitem scan: NO join operator, no fact shuffle, skew
       // cannot exist because nothing shuffles (PlanSpec pins the
       // join-free plan). Result equals the plain inner join

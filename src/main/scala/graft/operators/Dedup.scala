@@ -91,11 +91,14 @@ object Dedup {
     val firstMatchBand = (0 until bands - 1).foldRight(lit(bands - 1)) { (k, rest) =>
       when(col("bandsA")(k) === col("bandsB")(k), lit(k)).otherwise(rest)
     }
+    // the Jaccard is generated, not projected: a filter on a projected
+    // column is pushed into the join condition with the expression
+    // inlined, and the projection above computes it a second time
     a.join(b, Seq("band", "bucket")).filter(col("idA") < col("idB"))
       .filter(col("band") === firstMatchBand)
       .select(col("idA"), col("idB"),
-        (size(array_intersect(col("shA"), col("shB"))).cast("double") /
-          size(array_union(col("shA"), col("shB")))).as("jaccard"))
+        explode(array(size(array_intersect(col("shA"), col("shB"))).cast("double") /
+          size(array_union(col("shA"), col("shB"))))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -186,9 +189,11 @@ object Dedup {
         "deliberately or decontaminate with a distributed join instead")
     java.util.Arrays.sort(evalGrams)
     val bc = evalSet.sparkSession.sparkContext.broadcast(evalGrams)
+    // generated, not projected, so the filter cannot be pushed below
+    // it with the probe inlined (tokenizing every row twice)
     corpus
-      .select(col(idCol),
-        toCol(SketchHitsExpr(expression(shingleSet(col(textCol), shingleN)), bc))
+      .select(col(idCol), explode(array(
+        toCol(SketchHitsExpr(expression(shingleSet(col(textCol), shingleN)), bc))))
           .as("n_collisions"))
       .filter(col("n_collisions") > 0)
   }

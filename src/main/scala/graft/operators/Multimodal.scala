@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal columns for a training-data pipeline (north-star
   * requirement; no reference counterpart). Media assets ride as opaque
@@ -41,10 +40,6 @@ object Multimodal {
     val dur = 1.0 + java.lang.Math.floorMod(h >>> 16, 600L) / 10.0  // 1..61 s
     (w, ht, dur)
   }
-
-  private val decodedType = StructType(Seq(
-    StructField("width", IntegerType), StructField("height", IntegerType),
-    StructField("duration_s", DoubleType)))
 
   /** Decode pass, emitting typed media metadata next to the original
     * columns.

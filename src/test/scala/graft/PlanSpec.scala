@@ -25,6 +25,10 @@ class PlanSpec extends SparkSpec {
     finally spark.conf.set(key, prev)
   }
 
+  /** `plan` filters on the scan-fused probe `dense_lookup(key) >= 0`. */
+  private def denseProbe(plan: String, key: String): Boolean =
+    s"""dense_lookup\\($key#\\d+L?\\) >= 0""".r.findFirstIn(plan).nonEmpty
+
   // queries that execute driver-side work at plan-build time (k-means
   // fit, collect) — excluded from the sweep, covered by their own specs
   private val buildTimeExec = Set("ann_ivf", "ann_autoswap")
@@ -58,10 +62,11 @@ class PlanSpec extends SparkSpec {
   test("j4 semi-join plans as a scan-fused bitmap probe — no join operator at all") {
     // liveness pin for Relational.bitmapSemiJoin's fast path (the
     // dense TPC-H orderkey space must NOT take the join fallback):
-    // the probe is a codegen filter on the lineitem scan, the fact is
-    // never shuffled, and the only exchange is the final count's
+    // the probe is a codegen `dense_lookup(...) >= 0` filter on the
+    // lineitem scan (a one-bit dense array), the fact is never
+    // shuffled, and the only exchange is the final count's
     for (p <- plansAtShuffleWidths("j4_semijoin")) {
-      assert(p.contains("bitmap_contains"), p.take(2000))
+      assert(denseProbe(p, "l_orderkey"), p.take(2000))
       assert(!p.contains("Join"), p.take(2000))
     }
   }
@@ -125,8 +130,8 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))
     assert(!p.contains("lineitem"),
       s"the attach plan must not re-run the fact side:\n${p.take(2000)}")
-    // the fact side q3 composes: bitmap probe fused into the lineitem
-    // scan with the shipdate filter still pushed down
+    // the fact side q3 composes: both cuts are one-bit dense probes
+    // fused into their scans, with the date filters still pushed down
     val c = Tables.load(spark, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING")
     val o = Tables.load(spark, dir, "orders")
@@ -135,10 +140,14 @@ class PlanSpec extends SparkSpec {
       .filter(col("l_shipdate") > lit("1995-03-15").cast("date"))
     val ocKeys = graft.operators.Relational
       .bitmapSemiJoin(o, c, "o_custkey", "c_custkey").select("o_orderkey")
+    val keysPlan = ocKeys.queryExecution.executedPlan.toString
+    assert(denseProbe(keysPlan, "o_custkey"), keysPlan.take(2000))
+    assert(!keysPlan.contains("Join"),
+      s"keys cut must be scan-fused, join-free:\n${keysPlan.take(2000)}")
     val factPlan = graft.operators.Relational
       .bitmapSemiJoin(l, ocKeys, "l_orderkey", "o_orderkey")
       .queryExecution.executedPlan.toString
-    assert(factPlan.contains("bitmap_contains"), factPlan.take(2000))
+    assert(denseProbe(factPlan, "l_orderkey"), factPlan.take(2000))
     assert(!factPlan.contains("Join"),
       s"fact cut must be scan-fused, join-free:\n${factPlan.take(2000)}")
     assert(factPlan.contains("PushedFilters: [IsNotNull(l_shipdate)") ||

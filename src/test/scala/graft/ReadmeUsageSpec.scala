@@ -141,11 +141,13 @@ class ReadmeUsageSpec extends SparkSpec {
     val urgentLines = Relational.bitmapSemiJoin(li, urgent,
       factKey = "l_orderkey", keyCol = "o_orderkey")
     // equals li.join(broadcast(urgent), ..., "left_semi") — but the probe
-    // is a codegen filter fused into the fact scan (no join operator, no
-    // serial driver-side hash-relation build, range/8-byte broadcast),
-    // and the bitset is built DISTRIBUTED (per-partition OR + treeReduce:
-    // the driver never holds a key). A key span past maxBitmapBytes
-    // (64 MB of bitset) hands the semi join to Spark's own planner
+    // is the codegen filter dense_lookup(l_orderkey) >= 0 fused into the
+    // fact scan (no join operator, no serial driver-side hash-relation
+    // build, span/8-byte broadcast). It is denseLookupJoin's payload-free
+    // case: one constant payload, so the dense array is one bit per key of
+    // span, built DISTRIBUTED (≤ 8 partial arrays folded on the driver,
+    // which never holds a key). A key span past maxBitmapBytes (64 MB of
+    // array) hands the semi join to Spark's own planner
     // --- end README ---
     val viaJoin = li.join(broadcast(urgent),
       li("l_orderkey") === urgent("o_orderkey"), "left_semi").count()

@@ -80,10 +80,28 @@ class BitmapSemiJoinPropertySpec extends SparkSpec {
     }
   }
 
+  test("every key in two partitions: the semi join ignores the duplicates the lookup rejects") {
+    // four partitions, each with distinct keys ([0, 100) and
+    // [100, 200) twice): a duplicate exists only across partitions, so
+    // it is first seen when two partials merge
+    val dim = spark.range(0, 400, 1, 4)
+      .select((col("id") % 200).as("kk"), lit("x").as("tag"))
+    assert(dim.rdd.getNumPartitions == 4)
+    check(Seq.tabulate(300)(i => Some(i.toLong - 50)) :+ None, dim, "keys twice")
+    val fact = Seq((5L, "a")).toDF("k", "p")
+    val e = intercept[IllegalArgumentException](
+      Relational.denseLookupJoin(fact, dim, "k", "kk", "tag"))
+    assert(e.getMessage.contains("duplicate dim key"), e.getMessage)
+  }
+
   test("single-key and all-matching edges") {
     check(Seq(Some(7L), Some(7L), Some(8L), None), Seq(7L), "single key")
     check(Seq(Some(1L), Some(2L), Some(3L)), Seq(1L, 2L, 3L), "all match")
     check(Seq(Some(Long.MinValue), Some(Long.MaxValue)),
       Seq(Long.MinValue), "min-value key")
+    // a fact key 2^38 past the span's base, or one whose distance from
+    // it wraps Long, must miss, not alias onto the array
+    check(Seq(Some(64L), Some(64L + (1L << 38)), Some(Long.MinValue)),
+      Seq(64L), "keys far past the span")
   }
 }

@@ -57,6 +57,17 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"aggregate keyed on the pair: $keyed")
   }
 
+  test("minhashNearDups computes each candidate pair's Jaccard once") {
+    // a parquet input keeps Catalyst from folding the LocalRelation
+    val tmp = tempDir("mhj") + "/docs"
+    docs.write.parquet(tmp)
+    val out = Dedup.minhashNearDups(spark.read.parquet(tmp), "id", "text",
+      shingleN = 3, numHashes = 16, bands = 8, threshold = 0.5)
+    val plan = out.queryExecution.executedPlan.toString
+    assert("array_intersect\\(".r.findAllMatchIn(plan).size == 1, plan)
+    assert(out.select("idA", "idB").as[(Long, Long)].collect().contains((1L, 2L)))
+  }
+
   test("minhash signature of identical texts is identical; jaccard of shared bands high") {
     val sigs = docs.select(Dedup.minhashSignature($"text", 3, 16))
       .collect().map(_.getSeq[Long](0))
@@ -124,6 +135,18 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .as[(Long, Long)].collect().toMap
     assert(out.keySet == Set(1L))
     assert(out(1L) == 2L)
+  }
+
+  test("contamination probes each corpus row once") {
+    val evalSet = Seq((100L, "the quick brown fox jumps high")).toDF("id", "text")
+    val tmp = tempDir("contam") + "/corpus"
+    Seq((1L, "something about the quick brown fox in a field"), (2L, unrelated))
+      .toDF("id", "text").write.parquet(tmp)
+    val out = Dedup.contamination(spark.read.parquet(tmp), evalSet, "id", "text",
+      shingleN = 3)
+    val plan = out.queryExecution.executedPlan.toString
+    assert("sketch_hits\\(".r.findAllMatchIn(plan).size == 1, plan)
+    assert(out.as[(Long, Long)].collect().toMap == Map(1L -> 2L))
   }
 
   test("contamination fails loudly when the eval set exceeds the gram bound") {

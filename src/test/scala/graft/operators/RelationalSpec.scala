@@ -117,7 +117,7 @@ class RelationalSpec extends SparkSpec {
     val plan = Relational.bitmapSemiJoin(spark.read.parquet(tmp), keys, "k", "kk")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"expected no join operator, got:\n$plan")
-    assert(plan.contains("bitmap_contains"))
+    assert(plan.contains("dense_lookup"))
   }
 
   test("bitmapSemiJoin past the bitmap budget hands the semi join to Spark") {
@@ -137,9 +137,8 @@ class RelationalSpec extends SparkSpec {
     val plan = Relational.bitmapSemiJoin(spark.read.parquet(tmp), keys, "k", "kk")
       .queryExecution.executedPlan.toString
     assert(plan.contains("LeftSemi"), s"expected a left-semi join, got:\n$plan")
-    // and no scan-fused probe: `bitmap_contains` or any other
-    // `<kind>_contains(` filter
-    assert(!plan.contains("_contains("), s"expected no scan-fused probe, got:\n$plan")
+    // and no scan-fused `dense_lookup` probe
+    assert(!plan.contains("dense_lookup"), s"expected no scan-fused probe, got:\n$plan")
   }
 
   test("denseLookupJoin equals the broadcast inner join, plan is join-free") {
